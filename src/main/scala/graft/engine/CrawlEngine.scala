@@ -197,16 +197,26 @@ case class EngineConfig(
       * OOM. Tests force 0 to pin driver/distributed parity.
       */
     driverCollectMaxRows: Long = 2000000L,
-    /** Upper bound (rows) for the TINY-wave single-collect superstep path —
-      * the driver loop that replaces ~5 Spark jobs per step (see step()).
-      * Deliberately much tighter than driverCollectMaxRows: the tiny path
-      * also hauls each outcome's spawned-job list through one driver
-      * thread, so a 400-listing wave fanning out 100k spawns would turn a
-      * parallel canonicalize into serial driver work — measured as a
-      * ~1.5% N→4N efficiency tax at bench scale. Toy crawls (waves of
-      * dozens) get the ~3× superstep speedup; anything larger keeps the
-      * round-2 parallel plans. Also caps the frontier size for the wave
-      * collect + narrow-shuffle step conf.
+    /** Upper bound (rows) for the two driver-resident superstep paths.
+      *
+      * The TINY-wave single-collect path: the driver loop that replaces ~5
+      * Spark jobs per step (see step()). Deliberately much tighter than
+      * driverCollectMaxRows: the tiny path also hauls each outcome's
+      * spawned-job list through one driver thread, so a 400-listing wave
+      * fanning out 100k spawns would turn a parallel canonicalize into
+      * serial driver work — measured as a ~1.5% N→4N efficiency tax at
+      * bench scale. Toy crawls (waves of dozens) get the ~3× superstep
+      * speedup; anything larger keeps the round-2 parallel plans.
+      *
+      * The driver-resident FRONTIER: a pending frontier of at most this
+      * many rows lives as a driver array, so the politeness wave, the
+      * empty-wave clock jump, the active-frontier seen probe and the
+      * frontier rewrite run with zero Spark jobs, and neither the frontier
+      * nor the item meta is checkpointed per step. Measured on crawl_deep
+      * (8 hosts × 3 listings × 8 pages, ≤ 216 frontier rows, 4 vCPUs):
+      * foreground jobs per superstep 5 → 2, the Dataset wave alone had
+      * been a 3-stage collect of 0.3–0.7 s per 1.1–1.9 s superstep. Also
+      * sets the narrow-shuffle step conf.
       */
     tinyWaveMaxRows: Long = 256L)
 
@@ -218,7 +228,9 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *
   * Each superstep (one call to [[step]]):
   *
-  *  1. politeness-scheduled wave off the frontier (shuffle 1: by salted host)
+  *  1. politeness-scheduled wave off the frontier (shuffle 1: by salted host;
+  *     a driver-array sort while the frontier fits
+  *     [[EngineConfig.tinyWaveMaxRows]] — see "Driver-sized crawls" below)
   *  2. `mapPartitions` fetch+extract, which WRITES its own outcomes (items
   *     + payload bytes) to the raw step table as it fetches — narrow,
   *     embarrassingly parallel, and the only pass that ever touches bytes
@@ -235,6 +247,18 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   * consumers (merge-on-read). Every commit is a resume point: [[resume]]
   * continues from the latest snapshot with identical results (kill-safe via
   * the store's atomic rename).
+  *
+  * Driver-sized crawls: while the pending frontier has at most
+  * `tinyWaveMaxRows` rows it is a driver array — the wave, the frontier
+  * rewrite and the bloom/item-meta state all stay on the driver, so a
+  * superstep runs two foreground Spark jobs (the fetch write and one
+  * collect of its byte-free outcome metadata) instead of five; measured on
+  * crawl_deep (4 vCPUs) the median superstep fell from ~1.5 s to ~1.1 s.
+  * Larger or unknown frontiers take the Dataset plans above unchanged, and
+  * a frontier that leaves the driver array (it outgrew the bound, or the
+  * engine resumed mid-crawl) stays on them for the rest of the run.
+  * Each manifest also records the exact pending count and run totals, so
+  * resuming a drained crawl runs no Spark job.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -305,37 +329,55 @@ final class CrawlEngine(
     * the in-memory twin of `store.latestVersion`/`stepOf`. */
   private var issuedState: Option[(Int, Int)] = None
   /** version → eagerly-checkpointed frontier of that version: the next
-    * superstep's wave scans memory instead of re-reading the snapshot. */
+    * superstep's wave scans memory instead of re-reading the snapshot. Set
+    * whenever the frontier is not the driver array [[frontierLocal]]. */
   private var frontierCache: Option[(Int, Dataset[CrawlJob])] = None
+  /** version → the unfinished frontier of that version as a driver array,
+    * while it has ≤ tinyCap rows (the driver-resident frontier). The wave,
+    * the empty-wave clock jump, the exact-seen probe of the active frontier
+    * and the frontier rewrite then run with ZERO Spark jobs: on an 8-host
+    * crawl the Dataset wave alone (salted window + host exchange + sort,
+    * one 3-stage collect) cost 0.3–0.7 s of a 1.1–1.9 s superstep over
+    * ≤ 216 rows, and the frontier checkpoint one more job per step. The
+    * commit writes the array as a local relation (same table layout).
+    * Filled by seed() and kept by each step while the next frontier fits;
+    * a frontier that outgrows it (or a resumed one) stays a Dataset.
+    */
+  private var frontierLocal: Option[(Int, Array[CrawlJob])] = None
   /** step → checkpointed (key, phash) of every item delta row up to step —
     * feeds near-dup suppression + created/updated flags without re-scanning
-    * the delta dirs each superstep. Invalidated by [[compactItems]] (which
-    * switches suppression to live-set semantics). */
+    * the delta dirs each superstep. Set only while [[itemMetaLocal]] cannot
+    * hold the rows. Invalidated by [[compactItems]] (which switches
+    * suppression to live-set semantics). */
   private var itemMetaCache: Option[(Int, DataFrame)] = None
-  /** Driver-side mirror of [[itemMetaCache]]'s (key, phash) rows while the
-    * landed-item count stays ≤ driverCollectMaxRows — the tiny-wave
-    * suppression probe then runs with ZERO Spark jobs (the per-step
-    * distributed existing-meta scan was the largest remaining flat cost of
-    * a toy-scale superstep). None above the cap or after a distributed-path
-    * step; the distributed probe takes over with identical semantics.
+  /** step → the same (key, phash) rows as a driver array while they stay
+    * ≤ driverCollectMaxRows — the tiny-wave suppression probe then runs
+    * with ZERO Spark jobs (the per-step distributed existing-meta scan was
+    * the largest remaining flat cost of a toy-scale superstep), and no
+    * per-step checkpoint job keeps a DataFrame twin (its task count grew
+    * with every step). The twin is built from this mirror only on a step
+    * that takes the distributed item plans. None above the cap; the
+    * distributed probe then takes over with identical semantics.
     */
-  private var itemMetaLocal: Option[Array[(String, Long)]] = None
+  private var itemMetaLocal: Option[(Int, Array[(String, Long)])] = None
 
-  /** Row bound of the tiny-wave path (see [[EngineConfig.tinyWaveMaxRows]]);
-    * 0 when driverCollectMaxRows forces everything distributed. */
+  /** Row bound of the tiny-wave path and of the driver-resident frontier
+    * (see [[EngineConfig.tinyWaveMaxRows]]); 0 when driverCollectMaxRows
+    * forces everything distributed. */
   private def tinyCap: Long =
     math.min(cfg.tinyWaveMaxRows, cfg.driverCollectMaxRows / 1024)
 
   // ---- exact driver-side run accounting --------------------------------
-  // Maintained while every superstep since seed() ran in THIS engine
-  // instance on the driver-resident paths: unfinished-frontier count (lets
-  // run() stop without one final empty-wave probe — wave build + count +
-  // pending-min agg, ~1 s of pure flat cost) and the [[RunSummary]] tallies
-  // (fetched = Σ wave sizes; items = Σ created flags, exact because a key
-  // is "created" exactly once; dead letters from the sizing probe). Any
-  // step that can't account exactly (distributed fallback, resume into a
-  // fresh engine) flips the state to unknown and the log-based paths take
-  // over — identical values, a few extra jobs.
+  // Maintained while every superstep since seed() ran on the driver-
+  // resident paths: unfinished-frontier count (lets run() stop without one
+  // final empty-wave probe — wave build + count + pending-min agg, ~1 s of
+  // pure flat cost) and the [[RunSummary]] tallies (fetched = Σ wave sizes;
+  // items = Σ created flags, exact because a key is "created" exactly once;
+  // dead letters from the sizing probe). Every manifest carries the exact
+  // values it has (`pending`, `totals`), so a resume into a fresh engine
+  // restores them. Any step that can't account exactly (distributed
+  // fallback, a manifest without them) flips the state to unknown and the
+  // log-based paths take over — identical values, a few extra jobs.
   private var pendingCount: Long = -1L // unfinished frontier rows; -1 unknown
   private var acctValid = false
   private var fetchedAcc = 0L
@@ -591,15 +633,7 @@ final class CrawlEngine(
 
   def currentVersion: Option[Int] = { awaitCommit(); store.latestVersion }
 
-  private lazy val manifestMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  def stepOf(v: Int): Int = {
-    // structured parse of the store's JSON manifest (it IS JSON — a regex
-    // scrape would silently break when fields are added or reordered)
-    val node = manifestMapper.readTree(store.manifest(v)).get("step")
-    if (node == null || !node.isNumber)
-      throw new IllegalStateException(s"manifest of v$v lacks step")
-    node.asInt()
-  }
+  def stepOf(v: Int): Int = store.manifest(v).step
 
   /** All jobs ever enqueued: the active (unfinished) frontier plus the
     * finished-job archive — the union view matching the reference's single
@@ -663,8 +697,8 @@ final class CrawlEngine(
   private def seedResolved(seeds: Seq[(String, String, Map[String, String])]): Unit =
     withEngineConf {
     awaitCommit()
-    issuedState = None; frontierCache = None; itemMetaCache = None
-    shardCache = None; itemMetaLocal = None
+    issuedState = None; frontierCache = None; frontierLocal = None
+    itemMetaCache = None; shardCache = None; itemMetaLocal = None
     val seedJobs = seeds.toDF("routeId", "rawUrl", "query")
       .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
       .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
@@ -690,7 +724,8 @@ final class CrawlEngine(
       // small-seed fast path: ONE Spark job evaluates the (local-relation)
       // canon/dedup/robots plan; the bloom shards are built driver-side and
       // both state tables land coalesced. The seed ALSO primes the frontier
-      // and shard caches, so step 1 never re-reads the v0 snapshot.
+      // (the driver array when it fits tinyCap) and shard caches, so step 1
+      // never re-reads the v0 snapshot.
       val jobsArr = jobs.collect()
       pendingCount = jobsArr.length
       val byPid = jobsArr.map(_.urlKey)
@@ -700,15 +735,15 @@ final class CrawlEngine(
         .map(sh => byPid.get(sh.pid)
           .map(ks => BloomSeen.insertLocal(sh, ks)).getOrElse(sh))
       val frontierDs = spark.createDataset(jobsArr.toSeq).coalesce(1)
-      store.commit(0, SnapshotStore.manifestJson(
-        "version" -> 0, "step" -> -1, "frontier" -> jobsArr.length)) { dir =>
+      store.commit(0, seedManifest(jobsArr.length)) { dir =>
         inParallel(
           () => frontierDs.write.parquet(s"$dir/frontier"),
           () => spark.createDataset(shards.toSeq).coalesce(1)
             .write.parquet(s"$dir/bloom"))
       }
       shardCache = Some((0, shards))
-      frontierCache = Some((0, frontierDs))
+      if (jobsArr.length <= tinyCap) frontierLocal = Some((0, jobsArr))
+      else frontierCache = Some((0, frontierDs))
     } else {
       val jobsP = jobs.persist(StorageLevel.MEMORY_AND_DISK)
       val n = jobsP.count()
@@ -716,16 +751,41 @@ final class CrawlEngine(
       val bloom = BloomSeen.insert(
         BloomSeen.empty(spark, cfg.bloomPartitions, cfg.bloomCapacityPerShard, cfg.bloomFpp),
         jobsP.map(_.urlKey), cfg.bloomPartitions)
-      store.commit(0, SnapshotStore.manifestJson(
-        "version" -> 0, "step" -> -1, "frontier" -> n)) { dir =>
+      store.commit(0, seedManifest(n)) { dir =>
         jobsP.write.parquet(s"$dir/frontier")
         bloom.write.parquet(s"$dir/bloom")
       }
       jobsP.unpersist()
     }
-    // synchronous commit — the in-memory twin is immediately valid, and its
-    // presence marks this engine as fresh-from-seed (vs resumed from disk)
+    // synchronous commit — the in-memory twin is immediately valid
     issuedState = Some((0, -1))
+    // no item rows exist before step 0 (unless a compacted base does): the
+    // empty mirror spares step 0 the item-meta read of the delta dirs
+    if (latestBaseStep < 0) itemMetaLocal = Some((-1, Array.empty))
+  }
+
+  private def seedManifest(n: Long) = SnapshotStore.Manifest(0, -1, 0L,
+    pending = Some(n), totals = Some(SnapshotStore.Totals(0L, 0L, 0L)))
+
+  /** The in-memory twin of a fresh engine over an existing store (resume),
+    * from the latest manifest. A manifest that carries the exact pending
+    * count and run totals keeps the exact accounting live, so a drained
+    * crawl resumes with zero Spark jobs; the frontier itself is read from
+    * the snapshot (Dataset plans). Without them (an older engine, or a step
+    * that ran the distributed plans) the counts stay unknown and the
+    * log-based paths take over.
+    */
+  private def restore(): (Int, Int) = {
+    val v = currentVersion.getOrElse(
+      throw new IllegalStateException("seed() first — no snapshot"))
+    val m = store.manifest(v)
+    pendingCount = m.pending.getOrElse(-1L)
+    acctValid = m.totals.isDefined
+    m.totals.foreach { t =>
+      fetchedAcc = t.fetched; itemsAcc = t.items; dlAcc = t.deadLettered
+    }
+    issuedState = Some((v, m.step))
+    (v, m.step)
   }
 
   // ---- one superstep --------------------------------------------------
@@ -734,28 +794,26 @@ final class CrawlEngine(
     * eligible work remains — the analogue of the worker's empty-poll exit
     * (reference: src/worker.js:108-110).
     */
-  def step(): Boolean = withStepConf(
-    // tiny pending frontier ⇒ narrow the step's exchanges to ~pendingCount
-    // tasks: full-width 32-task windows over a 20-row frontier cost pure
-    // scheduler latency. Unknown or large pendingCount leaves the session
-    // width untouched (bench/production scale, distributed-forced tests).
-    if (pendingCount > 0 && pendingCount <= math.max(1L, tinyCap))
-      Some(math.min(spark.sessionState.conf.numShufflePartitions.toLong,
-        pendingCount).toInt)
-    else None) {
+  def step(): Boolean = {
     // in-memory twin of the store's (version, step) — valid even while the
-    // previous commit is still in flight; a resumed engine reads disk (and
-    // cannot account exactly — its history is in the logs, not this JVM)
-    val (v, committed) = issuedState.getOrElse {
-      val v0 = currentVersion.getOrElse(
-        throw new IllegalStateException("seed() first — no snapshot"))
-      pendingCount = -1L
-      acctValid = false
-      (v0, stepOf(v0))
-    }
+    // previous commit is still in flight; a resumed engine loads it from
+    // the latest manifest
+    val (v, committed) = issuedState.getOrElse(restore())
     // exact early exit: nothing unfinished in the frontier ⇒ the next wave
     // is empty by construction — skip the wave-build/count/pending probe
-    if (pendingCount == 0L) return false
+    if (pendingCount == 0L) false
+    else withStepConf(
+      // tiny pending frontier ⇒ narrow the step's exchanges to ~pendingCount
+      // tasks: full-width 32-task windows over a 20-row frontier cost pure
+      // scheduler latency. Unknown or large pendingCount leaves the session
+      // width untouched (bench/production scale, distributed-forced tests).
+      if (pendingCount > 0 && pendingCount <= math.max(1L, tinyCap))
+        Some(math.min(spark.sessionState.conf.numShufflePartitions.toLong,
+          pendingCount).toInt)
+      else None)(superstep(v, committed))
+  }
+
+  private def superstep(v: Int, committed: Int): Boolean = {
     var s = committed + 1
     // safe without awaiting the in-flight commit: it writes step=committed
     // dirs, and cleanStale only removes step > committed. The raw outcome
@@ -765,32 +823,35 @@ final class CrawlEngine(
     Seq(rawDir, suppressedDir, archiveDir, logDir("fetchlog"))
       .foreach(cleanStale(_, committed))
 
-    val front = frontierCache match {
-      case Some((`v`, f)) => f
-      case _ => readFrontier(v)
-    }
-    // localCheckpoint (eager) on shared intermediates: truncates lineage so
-    // every downstream action analyzes a shallow scan instead of re-planning
-    // the whole superstep tree — catalyst planning time was ~half of each
-    // superstep's wall clock before this (measured via SparkListener).
-    // A tiny pending frontier ⇒ the wave is driver-sized by construction:
-    // ONE collect job replaces the checkpoint + count pair, and the fetch
-    // stage repartitions a local relation. Unknown/large frontiers keep the
-    // eager checkpoint (truncates lineage so every downstream action
-    // analyzes a shallow scan — catalyst planning was ~half of superstep
-    // wall clock before it) + cheap count.
-    val tinyFrontier =
-      pendingCount > 0 && pendingCount <= math.max(1L, tinyCap)
-    def buildWave(atStep: Int): (Dataset[CrawlJob], Long) = {
-      val plan = Politeness.wave(front, atStep, cfg.hostBudget, routeCaps,
-        cfg.disabledRoutes, cfg.saltBuckets, hooks.jobFilter)
-      if (tinyFrontier) {
-        val arr = plan.collect()
-        (spark.createDataset(arr.toSeq), arr.length.toLong)
-      } else {
-        val w = plan.localCheckpoint(true)
-        (w, w.count())
+    // The pending frontier: the driver array while it fits tinyCap (see
+    // [[frontierLocal]]) — every frontier-side phase below then runs on it
+    // with zero Spark jobs; the Dataset twin is built from it only if a
+    // phase must take the distributed plans. Larger/unknown frontiers use
+    // the checkpointed Dataset (or the snapshot on a cache miss).
+    val frontLocal: Option[Array[CrawlJob]] = frontierLocal.collect { case (`v`, a) => a }
+    lazy val front: Dataset[CrawlJob] = frontLocal match {
+      case Some(a) => spark.createDataset(a.toSeq)
+      case None => frontierCache match {
+        case Some((`v`, f)) => f
+        case _ => readFrontier(v)
       }
+    }
+    // A driver frontier ⇒ the driver wave (the same sequential take as the
+    // Dataset plan) and the fetch stage repartitions a local relation.
+    // Otherwise: localCheckpoint (eager) on the shared wave truncates
+    // lineage so every downstream action analyzes a shallow scan instead of
+    // re-planning the whole superstep tree — catalyst planning time was
+    // ~half of each superstep's wall clock before this (measured via
+    // SparkListener) — plus a cheap count.
+    def buildWave(atStep: Int): (Dataset[CrawlJob], Long) = frontLocal match {
+      case Some(a) =>
+        val w = Politeness.waveLocal(a, atStep, cfg.hostBudget, routeCaps,
+          cfg.disabledRoutes, hooks.jobFilter)
+        (spark.createDataset(w.toSeq), w.length.toLong)
+      case None =>
+        val w = Politeness.wave(front, atStep, cfg.hostBudget, routeCaps,
+          cfg.disabledRoutes, cfg.saltBuckets, hooks.jobFilter).localCheckpoint(true)
+        (w, w.count())
     }
     // The count sizes the superstep: waves under driverCollectMaxRows run
     // the driver-resident plans (wave keys, item summaries, spawn candidates
@@ -803,13 +864,19 @@ final class CrawlEngine(
       // waiting on a future step — jump the clock to the earliest one (the
       // analogue of the reference worker's idle poll-sleep, worker.js:108-110).
       wave.unpersist()
-      val pending = front
-        .filter(!col("state.finished"))
-        .filter(if (cfg.disabledRoutes.isEmpty) lit(true)
-                else !col("routeId").isin(cfg.disabledRoutes.toSeq: _*))
-        .agg(min(col("notBeforeStep"))).head()
-      if (pending.isNullAt(0)) return false
-      val nxt = pending.getInt(0)
+      val pending: Option[Int] = frontLocal match {
+        case Some(a) => a.iterator
+          .filter(j => !j.state.finished && !cfg.disabledRoutes(j.routeId))
+          .map(_.notBeforeStep).minOption
+        case None =>
+          val r = front
+            .filter(!col("state.finished"))
+            .filter(if (cfg.disabledRoutes.isEmpty) lit(true)
+                    else !col("routeId").isin(cfg.disabledRoutes.toSeq: _*))
+            .agg(min(col("notBeforeStep"))).head()
+          if (r.isNullAt(0)) None else Some(r.getInt(0))
+      }
+      val nxt = pending.getOrElse(return false)
       if (nxt <= s) return false // safety: no forward progress possible
       s = nxt
       val (w2, n2) = buildWave(s)
@@ -909,25 +976,35 @@ final class CrawlEngine(
     // window + flag aggregation — same semantics, nothing driver-resident.
     // Every scan below reads only byte-free top-level columns of the raw
     // outcome table (the payload column is never touched).
-    // (key, phash) of every existing item row — cache hit in steady state
-    // (maintained below each step); miss = resume / first step, one
-    // checkpointed read of the delta dirs (awaits any in-flight commit)
-    val existingMetaOpt: Option[DataFrame] = itemMetaCache match {
-      case Some((`committed`, df)) => Some(df)
-      case _ =>
-        itemMetaLocal = None // stale vs the freshly-rebuilt cache
-        awaitCommit()
-        if (graft.state.StateIO.isDir(rawDir) || latestBaseStep >= 0) {
-          val df = readItemDeltas(committed, withBytes = false)
-            .select(col("key"), col("phash"))
-            .toDF().localCheckpoint(true)
-          // resume-time one-off: repopulate the driver mirror while small,
-          // so subsequent tiny steps probe with zero Spark jobs
-          if (tinyWave && df.count() <= cfg.driverCollectMaxRows)
-            itemMetaLocal = Some(df.as[(String, Long)].collect())
-          Some(df)
-        } else None
-    }
+    // (key, phash) of every existing item row — the driver mirror or the
+    // checkpointed DataFrame in steady state (maintained below each step);
+    // miss = resume / first step / after compaction, one checkpointed read
+    // of the delta dirs (awaits any in-flight commit)
+    val (existingLocal: Option[Array[(String, Long)]],
+         existingCkpt: Option[DataFrame]) =
+      (itemMetaLocal, itemMetaCache) match {
+        case (Some((`committed`, a)), _) => (Some(a), None)
+        case (_, Some((`committed`, df))) => (None, Some(df))
+        case _ =>
+          awaitCommit()
+          if (graft.state.StateIO.isDir(rawDir) || latestBaseStep >= 0) {
+            val df = readItemDeltas(committed, withBytes = false)
+              .select(col("key"), col("phash"))
+              .toDF().localCheckpoint(true)
+            // resume-time one-off: repopulate the driver mirror while
+            // small, so subsequent tiny steps probe with zero Spark jobs
+            val local =
+              if (tinyWave && df.count() <= cfg.driverCollectMaxRows)
+                Some(df.as[(String, Long)].collect())
+              else None
+            (local, Some(df))
+          } else (Some(Array.empty[(String, Long)]), None)
+      }
+    // the checkpointed DataFrame, built from the mirror only when a
+    // distributed plan asks for it; None = no items landed yet
+    lazy val existingMetaOpt: Option[DataFrame] = existingCkpt.orElse(
+      existingLocal.filter(_.nonEmpty)
+        .map(_.toSeq.toDF("key", "phash").localCheckpoint(true)))
     // carries the in-page position so the winner pick below uses the ONE
     // canonical ordering (srcJob, image_id, pos) — identical to the
     // read-side re-derivation in readItemDeltas; a divergent tiebreak
@@ -965,11 +1042,7 @@ final class CrawlEngine(
         // else the distributed (key, phash) scan
         val existingSide: Option[Either[Array[(String, Long)], DataFrame]] =
           if (itemTups.isEmpty) None
-          else (itemMetaLocal, existingMetaOpt) match {
-            case (Some(arr), Some(_)) => Some(Left(arr))
-            case (_, Some(df)) => Some(Right(df))
-            case _ => None
-          }
+          else existingLocal.map(Left(_)).orElse(existingMetaOpt.map(Right(_)))
         val (suppressedKeys, existedKeys) = Items.suppressAndSeenSets(
           itemTups.map(t => (t._1, t._3, t._4, t._5)), existingSide,
           cfg.phashThreshold)
@@ -988,11 +1061,10 @@ final class CrawlEngine(
             src -> (created.toLong, (ws.size - created).toLong)
         }
         val nmPairs = winnersFull.iterator.map { case (k, w) => (k, w._4) }.toArray
-        val nm = if (nmPairs.isEmpty) None else Some(nmPairs.toSeq.toDF("key", "phash"))
         val sup =
           if (suppressedKeys.isEmpty) None
           else Some(suppressedKeys.toSeq.toDF("key"))
-        (Left(flagBySrc), None, nm, if (nmPairs.isEmpty) None else Some(nmPairs), sup)
+        (Left(flagBySrc), None, None, Some(nmPairs), sup)
       } else {
         // distributed twin — same outputs, no driver state. The suppressed
         // plan reads only stable inputs (the landed raw table + the meta
@@ -1028,31 +1100,27 @@ final class CrawlEngine(
           if (cfg.phashThreshold < 0) None else Some(suppressed))
       })
 
-    // -- item-meta cache update (backs the next superstep's suppression) --
+    // -- item-meta update (backs the next superstep's suppression) --------
+    // The driver mirror carries it while the merged rows fit (no Spark
+    // job); any case it cannot mirror (distributed-path step, cap breach)
+    // checkpoints the DataFrame twin instead — the distributed probe then
+    // serves subsequent steps with identical semantics.
+    val mergedLocal = for {
+      o <- existingLocal; n <- newMetaLocal
+      if o.length.toLong + n.length <= cfg.driverCollectMaxRows
+    } yield o ++ n
     val (staleMeta: Option[DataFrame], mergedMeta: Option[DataFrame]) =
-      (existingMetaOpt, newMetaOpt) match {
+      if (mergedLocal.isDefined) (existingCkpt, None)
+      else (existingMetaOpt, newMetaOpt.orElse(newMetaLocal.filter(_.nonEmpty)
+          .map(_.toSeq.toDF("key", "phash")))) match {
         case (Some(e), Some(n)) =>
           (Some(e), Some(e.unionByName(n).localCheckpoint(true)))
         case (Some(e), None) => (None, Some(e))
         case (None, Some(n)) => (None, Some(n.localCheckpoint(true)))
         case _ => (None, None)
       }
+    itemMetaLocal = mergedLocal.map((stepNow, _))
     itemMetaCache = mergedMeta.map((stepNow, _))
-    // driver mirror follows the cache exactly; any case it cannot mirror
-    // (distributed-path step, cap breach) drops it — the distributed probe
-    // then serves subsequent steps with identical semantics
-    itemMetaLocal = (existingMetaOpt, newMetaOpt) match {
-      case (Some(_), Some(_)) => (itemMetaLocal, newMetaLocal) match {
-        case (Some(o), Some(n))
-          if o.length.toLong + n.length <= cfg.driverCollectMaxRows =>
-          Some(o ++ n)
-        case _ => None
-      }
-      case (Some(_), None) => itemMetaLocal
-      case (None, Some(_)) =>
-        newMetaLocal.filter(_.length <= cfg.driverCollectMaxRows)
-      case _ => None
-    }
 
     // -- spawned-jobs path (byte-free scans of the landed outcomes; on the
     // tiny path a LOCAL relation off the meta array — the canon/robots/
@@ -1129,8 +1197,8 @@ final class CrawlEngine(
         CrawlJob(k, u, h, r, priority = p, query = q,
           createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
       }
-    // (fresh rows, their keys when driver-resident)
-    val (fresh: Dataset[CrawlJob], freshKeysLocal: Option[Array[Long]]) =
+    // (fresh rows; the same rows as an array when driver-resident)
+    val (fresh: Dataset[CrawlJob], freshLocal: Option[Array[CrawlJob]]) =
       timed("spawn")(shardsLocal match {
         case Some(shards) =>
           // ONE collect serves probe + fresh-job construction: candidates
@@ -1193,12 +1261,15 @@ final class CrawlEngine(
             if (posSet.isEmpty) Set.empty
             else {
               val posSorted = posSet.toArray.sorted
-              val posBc = spark.sparkContext.broadcast(posSorted)
-              val inPos = udf((k: Long) =>
-                java.util.Arrays.binarySearch(posBc.value, k) >= 0)
-              val activeSeen = front.select(col("urlKey"))
-                .filter(inPos(col("urlKey")))
-                .as[Long].collect().toSet
+              val activeSeen: Set[Long] = frontLocal match {
+                case Some(a) => a.iterator.map(_.urlKey).filter(posSet).toSet
+                case None =>
+                  val posBc = spark.sparkContext.broadcast(posSorted)
+                  val inPos = udf((k: Long) =>
+                    java.util.Arrays.binarySearch(posBc.value, k) >= 0)
+                  front.select(col("urlKey")).filter(inPos(col("urlKey")))
+                    .as[Long].collect().toSet
+              }
               awaitCommit()
               val archSeen = archiveProbePlan(posSorted, committed)
                 .map(_.as[Long].collect().toSet)
@@ -1212,8 +1283,8 @@ final class CrawlEngine(
               CrawlJob(k, u, h, r,
                 priority = routes.get(r).map(_.priority).getOrElse(50),
                 query = q, createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
-            }.toSeq
-          (spark.createDataset(freshJobs), Some(freshKeySet.toArray))
+            }.toArray
+          (spark.createDataset(freshJobs.toSeq), Some(freshJobs))
         case None =>
           val allowedJobs = allowedJobsPlan.localCheckpoint(true)
           allowedJobsCkpt = Some(allowedJobs)
@@ -1252,7 +1323,7 @@ final class CrawlEngine(
       })
 
     // -- run accounting update (see fields above) ------------------------
-    val freshN = freshKeysLocal.map(_.length.toLong).getOrElse(-1L)
+    val freshN = freshLocal.map(_.length.toLong).getOrElse(-1L)
     fetchedAcc += waveN
     pendingCount =
       if (pendingCount >= 0L && contStep >= 0L && freshN >= 0L)
@@ -1274,7 +1345,8 @@ final class CrawlEngine(
     // landed table for the state rewrite, the fetch-log write OR the
     // archive write. Distributed path: a byte-free Dataset projection with
     // flags attached by broadcast map or left join.
-    val (updatedWave: Dataset[CrawlJob], stepFetchLog: DataFrame) =
+    val (updatedWave: Dataset[CrawlJob], stepFetchLog: DataFrame,
+         updatedLocal: Option[Array[CrawlJob]]) =
       (metaLocal, flags) match {
         case (Some(rows), Left(flagBySrc)) =>
           val upd = rows.map { r =>
@@ -1289,7 +1361,7 @@ final class CrawlEngine(
               r.hasNextPage, r.spawned.size, c, u)
           }
           (spark.createDataset(upd.toSeq).coalesce(1),
-            spark.createDataset(logs.toSeq).coalesce(1).toDF())
+            spark.createDataset(logs.toSeq).coalesce(1).toDF(), Some(upd))
         case _ =>
           val metaDs = outcomes.select(col("job").as("_1"), col("status").as("_2"),
               col("action").as("_3"), col("hasNextPage").as("_4"),
@@ -1323,50 +1395,63 @@ final class CrawlEngine(
               CrawlEngine.logRow(stepNow, job, status, action, hasNext,
                 nSpawned, created, updated)
           }.toDF()
-          (upd, logDf)
+          (upd, logDf, None)
       }
 
     // -- frontier rewrite + per-host crawl-delay bump --------------------
-    // driver-sized waves: keys broadcast → the frontier is narrowly scanned
-    // and filtered, never shuffled or joined — the rewrite is one codegen'd
-    // pass. Larger waves: plain anti-join, strategy left to Catalyst/AQE.
-    val untouched = {
-      // the fetch stage maps wave rows 1:1 to outcomes, so the tiny path's
-      // meta array already holds every wave key — no collect job needed
-      val waveKeysLocal: Option[Array[Long]] =
-        metaLocal.map(_.map(_.job.urlKey).sorted)
-      if (waveOnDriver) {
-        val waveKeysBc = spark.sparkContext.broadcast(waveKeysLocal.getOrElse(
-          wave.select(col("urlKey")).as[Long].collect().sorted))
-        val notInWave = udf((k: Long) =>
-          java.util.Arrays.binarySearch(waveKeysBc.value, k) < 0)
-        front.filter(notInWave(col("urlKey"))).as[CrawlJob]
-      } else
-        front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
-          .as[CrawlJob]
-    }
+    // robots crawl-delay: bump hosts fetched this wave. The delayed-host
+    // universe is the robots rules table (tiny by design), so the touched∩
+    // delayed set collects driver-side at ANY wave size.
+    val hostNext: Map[String, Int] =
+      if (hostDelay.isEmpty) Map.empty
+      else metaLocal match {
+        case Some(rows) => rows.iterator.map(_.job.host)
+          .filter(hostDelay.contains).distinct
+          .map(h => h -> (stepNow + hostDelay(h))).toMap
+        case None => wave.select(col("host")).distinct()
+          .filter(col("host").isin(hostDelay.keys.toSeq: _*))
+          .as[String].collect()
+          .map(h => h -> (stepNow + hostDelay(h))).toMap
+      }
     // Jobs that finished THIS step leave the hot frontier for the append-
     // only archive (written in the commit below); the versioned frontier —
     // scanned, rewritten and snapshotted every superstep — stays O(pending).
     val archivedWave = updatedWave.filter(col("state.finished"))
-    val frontier2 = untouched
-      .unionByName(updatedWave.filter(!col("state.finished")))
-      .unionByName(fresh)
-    val frontier3 = {
-      // robots crawl-delay: bump hosts fetched this wave. The delayed-host
-      // universe is the robots rules table (tiny by design), so the touched∩
-      // delayed set collects driver-side at ANY wave size.
-      val hostNext: Map[String, Int] =
-        if (hostDelay.isEmpty) Map.empty
-        else metaLocal match {
-          case Some(rows) => rows.iterator.map(_.job.host)
-            .filter(hostDelay.contains).distinct
-            .map(h => h -> (stepNow + hostDelay(h))).toMap
-          case None => wave.select(col("host")).distinct()
-            .filter(col("host").isin(hostDelay.keys.toSeq: _*))
-            .as[String].collect()
-            .map(h => h -> (stepNow + hostDelay(h))).toMap
-        }
+    // Driver frontier + driver job-state updates + driver fresh jobs ⇒ the
+    // rewrite is an array pass (the fetch stage maps wave rows 1:1 to
+    // outcomes, so the updated rows carry every wave key).
+    val nextLocal: Option[Array[CrawlJob]] = for {
+      f <- frontLocal; upd <- updatedLocal; fr <- freshLocal
+    } yield {
+      val waveKeys = upd.iterator.map(_.urlKey).toSet
+      (f.iterator.filterNot(j => waveKeys(j.urlKey)) ++
+        upd.iterator.filterNot(_.state.finished) ++ fr.iterator)
+        .map(j => hostNext.get(j.host) match {
+          case Some(n) if !j.state.finished && n > j.notBeforeStep =>
+            j.copy(notBeforeStep = n)
+          case _ => j
+        }).toArray
+    }
+    // The Dataset rewrite. Driver-sized waves: keys broadcast → the
+    // frontier is narrowly scanned and filtered, never shuffled or joined —
+    // one codegen'd pass. Larger waves: plain anti-join, strategy left to
+    // Catalyst/AQE.
+    def frontierPlan: Dataset[CrawlJob] = {
+      val untouched =
+        if (waveOnDriver) {
+          // the tiny path's meta array already holds every wave key
+          val waveKeysBc = spark.sparkContext.broadcast(
+            metaLocal.map(_.map(_.job.urlKey).sorted).getOrElse(
+              wave.select(col("urlKey")).as[Long].collect().sorted))
+          val notInWave = udf((k: Long) =>
+            java.util.Arrays.binarySearch(waveKeysBc.value, k) < 0)
+          front.filter(notInWave(col("urlKey"))).as[CrawlJob]
+        } else
+          front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
+            .as[CrawlJob]
+      val frontier2 = untouched
+        .unionByName(updatedWave.filter(!col("state.finished")))
+        .unionByName(fresh)
       if (hostNext.isEmpty) frontier2
       else {
         val nextLit = typedLit(hostNext)
@@ -1380,9 +1465,9 @@ final class CrawlEngine(
     }
 
     // -- bloom update -----------------------------------------------------
-    val bloom2 = (shardsLocal, freshKeysLocal) match {
-      case (Some(shards), Some(fk)) =>
-        val byPid = fk.groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
+    val bloom2 = (shardsLocal, freshLocal) match {
+      case (Some(shards), Some(fj)) =>
+        val byPid = fj.map(_.urlKey).groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
         val merged = shards.map(sh =>
           byPid.get(sh.pid).map(ks => BloomSeen.insertLocal(sh, ks)).getOrElse(sh))
         shardCache = Some((v + 1, merged))
@@ -1400,13 +1485,28 @@ final class CrawlEngine(
     // uncompressed: the payload column is already PNG/JPEG-compressed, so
     // parquet snappy only burns CPU on bytes it cannot shrink (the small
     // metadata columns still dictionary/RLE-encode regardless)
-    // The next superstep's wave scans this checkpoint from memory; the
-    // background frontier write below reuses it (no recompute, no re-read
-    // of the snapshot). Byte-free rows — cheap to materialize.
+    // The next superstep's frontier: the driver array while it fits tinyCap.
+    // Otherwise the wave scans an eager checkpoint from memory, which the
+    // background frontier write below reuses (no recompute, no re-read of
+    // the snapshot). Byte-free rows — cheap to materialize.
     val prevFrontCkpt: Option[Dataset[CrawlJob]] =
       frontierCache.collect { case (`v`, f) => f }
-    val frontier3Ckpt = timed("front.ckpt")(frontier3.localCheckpoint(true))
-    frontierCache = Some((v + 1, frontier3Ckpt))
+    val nextFront: Either[Array[CrawlJob], Dataset[CrawlJob]] =
+      timed("front.next")(nextLocal match {
+        case Some(a) if a.length <= tinyCap => Left(a)
+        case Some(a) => Right(spark.createDataset(a.toSeq).localCheckpoint(true))
+        case None => Right(frontierPlan.localCheckpoint(true))
+      })
+    frontierLocal = nextFront.left.toOption.map((v + 1, _))
+    frontierCache = nextFront.toOption.map((v + 1, _))
+    val frontierOut: Dataset[CrawlJob] =
+      nextFront.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity)
+    // this version's manifest — the exact counts, taken now: the next
+    // superstep advances them while this commit may still be in flight
+    val manifest = SnapshotStore.Manifest(v + 1, stepNow, waveN,
+      pending = Some(pendingCount).filter(_ >= 0L),
+      totals = if (acctValid) Some(SnapshotStore.Totals(fetchedAcc, itemsAcc, dlAcc))
+               else None)
 
     // All four superstep writes (delta, fetch log, frontier, bloom) are
     // independent plans over already-checkpointed inputs — submitted from
@@ -1425,15 +1525,14 @@ final class CrawlEngine(
     // and at most one is in flight.
     timed("commit.await")(awaitCommit())
     def commitWork(): Unit = {
-      store.commit(v + 1, SnapshotStore.manifestJson(
-        "version" -> (v + 1), "step" -> stepNow, "fetched" -> waveN)) { dir =>
+      store.commit(v + 1, manifest) { dir =>
         // the item payloads are ALREADY on disk (landed by the fetch job);
         // the commit persists only byte-free state: the step's equality-
         // delete keys, the fetch log, and the versioned frontier + bloom
         inParallel(Seq(
           Some(() => stepFetchLog.drop("step").coalesce(1).write.mode("overwrite")
             .parquet(s"${logDir("fetchlog")}/step=$stepNow")),
-          Some(() => frontier3Ckpt.write.parquet(s"$dir/frontier")),
+          Some(() => frontierOut.write.parquet(s"$dir/frontier")),
           Some(() => bloom2.write.parquet(s"$dir/bloom")),
           Some(() => writeArchive(archivedWave.toDF(), stepNow)),
           suppressedOut.map(sup => () => sup.coalesce(1).write.mode("overwrite")
@@ -1543,8 +1642,11 @@ final class CrawlEngine(
         count(lit(1)),
         coalesce(sum(when(col("status") >= 400 && col("action") === "stop", 1L)
           .otherwise(0L)), lit(0L))).head()
-      val itemCount = itemMetaCache match {
-        case Some((step, df)) if issuedState.exists(_._2 == step) =>
+      val current = issuedState.map(_._2)
+      val itemCount = (itemMetaLocal, itemMetaCache) match {
+        case (Some((step, a)), _) if current.contains(step) =>
+          a.iterator.map(_._1).distinct.size.toLong
+        case (_, Some((step, df))) if current.contains(step) =>
           df.select(col("key")).distinct().count()
         case _ => items.count()
       }

@@ -29,10 +29,58 @@ import graft.model.CrawlJob
   *     by (host, priority desc, createdStep, urlKey), and walk each host's
   *     bounded candidate list once, applying route caps + host budget —
   *     a single narrow pass (mapPartitions), no further ranking windows.
+  *
+  * [[waveLocal]] is the same selection over a driver-resident frontier
+  * array (the engine's tiny-frontier path): one sort, then the SAME
+  * [[takeSequential]] walk. The salted phase 1 is only a truncation — it
+  * drops jobs the walk would skip anyway (a job the walk takes has fewer
+  * than `hostBudget` same-route jobs ahead of it on its host) — so the two
+  * return the same set.
   */
 object Politeness {
 
   val orderCols = Seq(col("priority").desc, col("createdStep").asc, col("urlKey").asc)
+
+  /** The exact sequential take: walks jobs grouped by host and sorted by
+    * (priority desc, createdStep, urlKey) within a host, keeping per host
+    * the first `budget` jobs whose route is still under its cap. Shared by
+    * [[wave]]'s per-partition pass and [[waveLocal]] so the two cannot drift.
+    */
+  private def takeSequential(it: Iterator[CrawlJob], budget: Int,
+      caps: Map[String, Int]): Iterator[CrawlJob] = {
+    var curHost: String = null
+    var taken = 0
+    val routeCount = scala.collection.mutable.Map.empty[String, Int]
+    it.filter { j =>
+      if (j.host != curHost) {
+        curHost = j.host; taken = 0; routeCount.clear()
+      }
+      val cap = caps.getOrElse(j.routeId, -1)
+      val rc = routeCount.getOrElse(j.routeId, 0)
+      if (taken < budget && (cap < 0 || rc < cap)) {
+        taken += 1; routeCount(j.routeId) = rc + 1; true
+      } else false
+    }
+  }
+
+  /** Driver-side twin of [[wave]] over a frontier array: zero Spark jobs. */
+  def waveLocal(
+      frontier: Array[CrawlJob],
+      step: Int,
+      hostBudget: Int,
+      routeCaps: Map[String, Int],
+      disabled: Set[String] = Set.empty,
+      jobFilter: Option[CrawlJob => Boolean] = None): Array[CrawlJob] = {
+    val pre = frontier.filter(j =>
+      !j.state.finished && j.notBeforeStep <= step && !disabled(j.routeId))
+    val ok = jobFilter.fold(pre)(f => pre.filter(f))
+    // host only groups (any total order keeps a host contiguous; Option
+    // admits a null host); within a host the order is the scheduler's
+    // (priority desc, createdStep, urlKey)
+    val sorted = ok.sortBy(j =>
+      (Option(j.host), -j.priority.toLong, j.createdStep, j.urlKey))
+    takeSequential(sorted.iterator, hostBudget, routeCaps).toArray
+  }
 
   def wave(
       frontier: Dataset[CrawlJob],
@@ -72,20 +120,6 @@ object Politeness {
       // size-based coalescing is active for the engine's small state ops.
       .repartition(spark.sessionState.conf.numShufflePartitions, col("host"))
       .sortWithinPartitions(Seq(col("host")) ++ orderCols: _*)
-      .mapPartitions { it =>
-        var curHost: String = null
-        var taken = 0
-        val routeCount = scala.collection.mutable.Map.empty[String, Int]
-        it.filter { j =>
-          if (j.host != curHost) {
-            curHost = j.host; taken = 0; routeCount.clear()
-          }
-          val cap = caps.getOrElse(j.routeId, -1)
-          val rc = routeCount.getOrElse(j.routeId, 0)
-          if (taken < budget && (cap < 0 || rc < cap)) {
-            taken += 1; routeCount(j.routeId) = rc + 1; true
-          } else false
-        }
-      }
+      .mapPartitions(it => takeSequential(it, budget, caps))
   }
 }

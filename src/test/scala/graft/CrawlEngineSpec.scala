@@ -1,9 +1,11 @@
 package graft
 
 import graft.corpus._
-import graft.engine.{CrawlEngine, EngineConfig}
+import graft.engine.{CrawlEngine, EngineConfig, RunSummary}
 import graft.fetch.CorpusFetcher
 import graft.model.RobotsRule
+import graft.state.SnapshotStore
+import graft.state.SnapshotStore.Totals
 
 /** Shared recorder for the rate-limiter test: fetch-start events as
   * (partitionId, host, nanoTime). local[N] executors share the JVM, so a
@@ -211,12 +213,22 @@ class CrawlEngineSpec extends SparkSpec {
     val resumed = new CrawlEngine(spark, routes, fetcher, Nil,
       EngineConfig(statePath = dirA, hostBudget = 2,
         bloomPartitions = 4, bloomCapacityPerShard = 1 << 16))
-    resumed.resume()
+    val resumedSum = resumed.resume()
 
     val dirB = tmpDir("engine-straight")
     val b = newEngine(dirB)
     b.seed(SyntheticCorpus.seeds(specSmall))
-    b.run()
+    val straightSum = b.run()
+
+    // the resumed roll-up covers the whole crawl: it equals the
+    // uninterrupted run's and the log-derived ground truth
+    assert(resumedSum.steps > 0)
+    assert(totalsOf(resumedSum) == totalsOf(straightSum), s"$resumedSum vs $straightSum")
+    assert(totalsOf(resumedSum) == logTotals(resumed), s"$resumedSum vs the logs")
+    // a drained crawl resumes with the same roll-up and runs no superstep
+    val drainedSum = newEngine(dirB).resume()
+    assert(drainedSum.steps == 0)
+    assert(totalsOf(drainedSum) == totalsOf(straightSum), s"$drainedSum vs $straightSum")
 
     val keysA = resumed.items.collect().map(_.key).sorted
     val keysB = b.items.collect().map(_.key).sorted
@@ -228,6 +240,114 @@ class CrawlEngineSpec extends SparkSpec {
     assert(fA.sameElements(fB), "resumed frontier differs from straight run")
   }
 
+  def totalsOf(s: RunSummary): Totals = Totals(s.fetched, s.items, s.deadLettered)
+  /** The run totals recounted from the committed logs and items. */
+  def logTotals(e: CrawlEngine): Totals =
+    Totals(e.fetchLog.count(), e.items.count(), e.deadLetters.count())
+  def manifestOf(dir: String, v: Int): SnapshotStore.Manifest =
+    new SnapshotStore(dir).manifest(v)
+
+  test("every manifest records the exact pending count and the log totals up to its step") {
+    val dir = tmpDir("engine-manifests")
+    val eng = newEngine(dir)
+    eng.seed(SyntheticCorpus.seeds(spec))
+    var checked = 0
+    var more = true
+    while (more) {
+      val v = eng.currentVersion.get // awaits the pipelined commit
+      val m = manifestOf(dir, v)
+      assert(m.totals.contains(logTotals(eng)), s"v$v: $m")
+      assert(m.pending.contains(eng.frontier.filter(!_.state.finished).count()), s"v$v: $m")
+      checked += 1
+      more = eng.step()
+    }
+    assert(checked > 4, s"only $checked versions")
+  }
+
+  test("manifests without pending/totals (older engine) resume through the log-based path") {
+    // rewrite every manifest to the older engine's fields only (through
+    // StateIO, which keeps the local filesystem's checksum files in step)
+    def stripManifests(dir: String): Unit = {
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("v=")).foreach { d =>
+        val f = s"$dir/${d.getName}/_snapshot.json"
+        val o = mapper.readTree(graft.state.StateIO.readString(f))
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        o.remove("pending"); o.remove("totals")
+        graft.state.StateIO.writeString(f, mapper.writeValueAsString(o))
+      }
+    }
+    val dirA = tmpDir("engine-oldmanifest")
+    val a = new CrawlEngine(spark, routes, fetcher, Nil,
+      EngineConfig(statePath = dirA, hostBudget = 2, maxSteps = 3,
+        bloomPartitions = 4, bloomCapacityPerShard = 1 << 16))
+    a.seed(SyntheticCorpus.seeds(spec))
+    a.run()
+    stripManifests(dirA)
+    val resumed = newEngine(dirA)
+    val resumedSum = resumed.resume()
+    val dirB = tmpDir("engine-oldmanifest-straight")
+    val b = newEngine(dirB)
+    b.seed(SyntheticCorpus.seeds(spec))
+    val straightSum = b.run()
+    assert(totalsOf(resumedSum) == totalsOf(straightSum), s"$resumedSum vs $straightSum")
+    val fA = resumed.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
+    val fB = b.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
+    assert(fA.sameElements(fB), "resumed frontier differs from straight run")
+    // a drained crawl with older manifests: no superstep, totals from the logs
+    stripManifests(dirB)
+    val drainedSum = newEngine(dirB).resume()
+    assert(drainedSum.steps == 0)
+    assert(totalsOf(drainedSum) == totalsOf(straightSum), s"$drainedSum vs $straightSum")
+    // the distributed plans record no totals either; resume recounts the logs
+    val dirD = tmpDir("engine-dist-manifest")
+    def distEngine = new CrawlEngine(spark, routes, fetcher, Nil,
+      EngineConfig(statePath = dirD, hostBudget = 2,
+        bloomPartitions = 4, bloomCapacityPerShard = 1 << 16,
+        driverCollectMaxRows = 0L))
+    val d = distEngine
+    d.seed(SyntheticCorpus.seeds(spec))
+    val distSum = d.run()
+    assert(manifestOf(dirD, d.currentVersion.get).totals.isEmpty)
+    val distResumed = distEngine.resume()
+    assert(distResumed.steps == 0)
+    assert(totalsOf(distResumed) == totalsOf(distSum), s"$distResumed vs $distSum")
+    assert(totalsOf(distSum) == totalsOf(straightSum), s"$distSum vs $straightSum")
+  }
+
+  test("driver frontier crossing its bound mid-crawl == default run == forced distributed") {
+    // tinyWaveMaxRows = 4: the 2-row seed frontier starts on the driver, the
+    // listings' spawns push it past the bound (Dataset frontier), and the
+    // drain brings it back under (it stays a Dataset frontier, small enough
+    // for the tiny-wave step paths)
+    def crawl(name: String, tweak: EngineConfig => EngineConfig): (CrawlEngine, String) = {
+      val dir = tmpDir(name)
+      val e = new CrawlEngine(spark, routes, fetcher, Nil, tweak(
+        EngineConfig(statePath = dir, hostBudget = 2, retainSnapshots = 1000,
+          bloomPartitions = 4, bloomCapacityPerShard = 1 << 16)))
+      e.seed(SyntheticCorpus.seeds(spec))
+      e.run()
+      (e, dir)
+    }
+    val (x, dirX) = crawl("engine-crossing", _.copy(tinyWaveMaxRows = 4L))
+    val (t, _) = crawl("engine-cross-default", identity)
+    val (d, _) = crawl("engine-cross-dist", _.copy(driverCollectMaxRows = 0L))
+    val pending = (0 to x.currentVersion.get).map(v => manifestOf(dirX, v).pending.get)
+    val over = pending.indexWhere(_ > 4)
+    assert(pending.head <= 4 && over > 0 && pending.drop(over).exists(p => p > 0 && p <= 4),
+      s"the frontier never crossed the bound both ways: $pending")
+    def itemsOf(e: CrawlEngine) =
+      e.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1).toSeq
+    def frontierOf(e: CrawlEngine) =
+      e.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1).toSeq
+    def logOf(e: CrawlEngine) = e.fetchLog.collect().sortBy(l => (l.step, l.urlKey)).toSeq
+    for ((other, name) <- Seq((t, "default"), (d, "forced-distributed"))) {
+      assert(itemsOf(x) == itemsOf(other), s"items differ from the $name run")
+      assert(frontierOf(x) == frontierOf(other), s"frontier differs from the $name run")
+      assert(logOf(x) == logOf(other), s"fetch log differs from the $name run")
+    }
+  }
+
   test("compaction mid-crawl: identical final state, absorbed deltas dropped") {
     val dirA = tmpDir("engine-compact")
     val a = new CrawlEngine(spark, routes, fetcher, Nil,
@@ -235,11 +355,14 @@ class CrawlEngineSpec extends SparkSpec {
         bloomPartitions = 4, bloomCapacityPerShard = 1 << 16))
     a.seed(SyntheticCorpus.seeds(spec))
     a.run() // 3 supersteps
+    // the item deltas are the raw outcomes plus their equality deletes
+    def deltaDirs(table: String) = Option(new java.io.File(s"$dirA/$table").listFiles())
+      .getOrElse(Array.empty).map(_.getName).filter(_.startsWith("step="))
+    assert(deltaDirs("items_raw").nonEmpty, "no raw outcome dirs before compaction")
     a.compactItems()
     // absorbed step dirs are gone; the base holds the resolved view
-    val deltaDirs = Option(new java.io.File(s"$dirA/items_delta").listFiles())
-      .getOrElse(Array.empty).map(_.getName).filter(_.startsWith("step="))
-    assert(deltaDirs.isEmpty, s"deltas not absorbed: ${deltaDirs.mkString(",")}")
+    for (t <- Seq("items_raw", "items_deletes"))
+      assert(deltaDirs(t).isEmpty, s"$t not absorbed: ${deltaDirs(t).mkString(",")}")
     assert(new java.io.File(s"$dirA/items_base").isDirectory)
     val midKeys = a.items.collect().map(_.key).sorted
 

@@ -5,6 +5,10 @@
 // BOTH levels -- i.e. the box's cores were fine and its memory bandwidth was
 // externally consumed. Usage: javac CpuScale.java && java CpuScale
 public class CpuScale {
+  // every thread's result lands here and main prints its sum, so the JIT
+  // cannot drop the FP loop as dead code
+  static double checksum = 0;
+
   static double run(int threads, long iters) throws Exception {
     Thread[] ts = new Thread[threads];
     final double[] sink = new double[threads*16];
@@ -20,11 +24,13 @@ public class CpuScale {
     }
     for (Thread t : ts) t.join();
     double sec = (System.nanoTime() - t0) / 1e9;
+    for (double x : sink) checksum += x;
     return threads * iters / sec / 1e6;
   }
   public static void main(String[] a) throws Exception {
     run(4, 50_000_000L); // warmup
     for (int th : new int[]{1, 4, 16, 32})
       System.out.printf("threads=%d Mops/s=%.0f%n", th, run(th, 400_000_000L));
+    System.out.printf("checksum=%.6e%n", checksum);
   }
 }
