@@ -1,9 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.canon.UrlCanon
 import graft.corpus.CorpusRow
 import graft.fetch.{CorpusFetcher, FetchStage, Fetcher, StepOutcome}
 import graft.frontier.{BloomSeen, BloomShard, Politeness}
@@ -52,21 +51,59 @@ object CrawlEngine {
     def onStepCommitted(step: Int, stepLog: Dataset[FetchLog]): Unit
   }
 
-  /** Byte-free per-outcome metadata — the single-collect envelope of the
-    * tiny-wave superstep path: one scan of the landed raw table feeds the
-    * sizing stats, item decisions, spawn candidates, job-state updates,
-    * fetch log and archive rows, replacing ~5 driver jobs per superstep.
-    * `itemMeta` rows are (pos, key, image_id, phash).
+  /** A spawned job (or redirect target) after URL resolution and
+    * canonicalization — the element type of the engine's spawn Column. */
+  private[engine] case class SpawnCand(urlKey: Long, url: String, host: String,
+      routeId: String, query: Map[String, String])
+
+  /** Byte-free per-outcome metadata — the driver tier's single-collect
+    * envelope: one scan of the landed raw table feeds the item decisions,
+    * spawn dedup, job-state updates, fetch log, archive rows and frontier.
+    * `nSpawned` is the scraper's raw spawn count (the job stat), `spawns`
+    * its canonical candidates; `itemMeta` rows are (pos, key, image_id, phash).
     */
   private[engine] case class OutcomeMeta(
       job: CrawlJob, status: Int, action: String, hasNextPage: Boolean,
-      newState: Map[String, String], spawned: Seq[SpawnedJob],
+      newState: Map[String, String], nSpawned: Int, spawns: Seq[SpawnCand],
       itemMeta: Seq[(Int, String, String, Long)])
+
+  /** The plans a superstep runs, chosen once per step from its wave size
+    * (see [[EngineConfig.driverCollectMaxRows]]). */
+  private[engine] sealed trait Tier
+  /** A driver-sized wave, with its outcome metadata collected in one job. */
+  private[engine] final case class DriverTier(meta: Array[OutcomeMeta]) extends Tier
+  /** A larger wave: Dataset plans only, no per-step driver state. */
+  private[engine] case object DistributedTier extends Tier
+
+  /** A step's item decisions: per-source created/updated flags (a driver map
+    * on the driver tier, a (srcJob, created, updated) DataFrame on the
+    * distributed tier), the step's suppressed keys — the equality-delete
+    * rows the commit persists so readers drop them from the already-landed
+    * raw outcomes — and checkpoints to release after the commit.
+    */
+  private[engine] final case class ItemDecisions(
+      flags: Either[Map[Long, (Long, Long)], DataFrame],
+      suppressed: Option[DataFrame], release: Seq[Dataset[_]])
+
+  /** A step's fresh jobs (never seen before; the same rows as an array when
+    * the driver tier built them), the next bloom version, and checkpoints
+    * to release after the commit.
+    */
+  private[engine] final case class Spawns(fresh: Dataset[CrawlJob],
+      freshLocal: Option[Array[CrawlJob]], bloom: Dataset[BloomShard],
+      release: Seq[Dataset[_]])
+
+  /** The wave's job-state rewrite and the step's fetch log (both tiers run
+    * [[CrawlEngine.advance]] / [[CrawlEngine.logRow]]); the rewritten rows
+    * as an array on the driver tier.
+    */
+  private[engine] final case class JobUpdates(updated: Dataset[CrawlJob], log: DataFrame,
+      updatedLocal: Option[Array[CrawlJob]])
 
   /** Job-state transition for one fetched job — the reference worker's
     * post-job bookkeeping (pagination worker.js:223-233, finish 137-142,
-    * retry spider.js:226-248), shared verbatim by the tiny-wave driver loop
-    * and the distributed Dataset map so the two paths cannot drift.
+    * retry spider.js:226-248), shared verbatim by the driver tier's loop
+    * and the distributed Dataset map so the two tiers cannot drift.
     */
   private[engine] def advance(job: CrawlJob, action: String,
       hasNextPage: Boolean, newState: Map[String, String], nSpawned: Int,
@@ -101,7 +138,7 @@ object CrawlEngine {
     }
   }
 
-  /** The step's [[FetchLog]] row for one fetched job — shared by both paths. */
+  /** The step's [[FetchLog]] row for one fetched job — shared by both tiers. */
   private[engine] def logRow(stepNow: Int, job: CrawlJob, status: Int,
       action: String, hasNextPage: Boolean, nSpawned: Int,
       created: Long, updated: Long): FetchLog =
@@ -109,6 +146,27 @@ object CrawlEngine {
       job.state.currentPage, status, job.priority, job.createdStep,
       action, job.errorCount, nSpawned, created, updated,
       finished = action != "retry" && !(action == "ok" && hasNextPage))
+
+  /** AQE stays off inside supersteps: it materializes every query stage as
+    * its own job, which at superstep cadence multiplied scheduler+planning
+    * overhead ~2× (measured); skew is already handled structurally by
+    * salting (Politeness phase 1).
+    */
+  private val AqeInSteps = false
+  /** The bloom shards are probed and merged driver-side while their total
+    * size fits this budget (i.e. until the frontier reaches billions of
+    * keys); beyond it the cogroup probe takes over. */
+  private val BloomBroadcastMaxBytes = 256L << 20
+  /** Fetch-stage task count: ~[[FetchPagesPerTask]] pages per task, floored
+    * at min(shuffle partitions, wave size) and capped at partitions × this
+    * factor. Page costs are heavy-tailed (encode/decode varies with format
+    * and content) and big waves otherwise run as few multi-second tasks
+    * whose last scheduling round idles most cores — measured ~20% of fetch
+    * wall at 51k pages on 64 tasks/16 cores. The exchanged rows are
+    * byte-free, so fine tasks cost only launches.
+    */
+  private val FetchTaskFactor = 32
+  private val FetchPagesPerTask = 128
 }
 
 case class EngineConfig(
@@ -154,16 +212,6 @@ case class EngineConfig(
       * the real-time complement for production fetchers.
       */
     hostMinDelayMs: Int = 0,
-    /** Keep AQE on inside supersteps. Default off: AQE materializes every
-      * query stage as its own job, which at superstep cadence multiplies
-      * scheduler+planning overhead ~2× (measured); skew is already handled
-      * structurally by salting (Politeness phase 1). Set true on a real
-      * cluster with multi-minute supersteps where AQE skew-join splitting
-      * pays for itself.
-      */
-    aqeInSteps: Boolean = false,
-    /** probe the seen-set via broadcast sketches while total size fits. */
-    bloomBroadcastMaxBytes: Long = 256L << 20,
     /** Hash buckets (`pmod(urlKey, N)` partition dirs) of the finished-job
       * archive. The bloom-positive exact-seen probe prunes its archive scan
       * to the buckets of the positive keys instead of column-scanning every
@@ -175,50 +223,35 @@ case class EngineConfig(
     /** route every fetch through the dynamic fetcher — the reference's
       * FORCE_DYNAMIC env switch (spider.js:21,52). */
     forceDynamic: Boolean = false,
-    /** Cap on fetch-stage tasks, as a multiple of shuffle partitions. The
-      * actual task count adapts to the wave: ~[[fetchPagesPerTask]] pages
-      * per task, floored at the shuffle-partition count and capped at
-      * partitions × this factor. Page costs are heavy-tailed (encode/decode
-      * varies with format and content) and big waves otherwise run as few
-      * multi-second tasks whose last scheduling round idles most cores —
-      * measured ~20% of fetch wall at 51k pages on 64 tasks/16 cores. The
-      * exchanged rows are byte-free, so fine tasks cost only launches.
-      */
-    fetchTaskFactor: Int = 32,
-    /** Target pages per fetch task (see [[fetchTaskFactor]]). */
-    fetchPagesPerTask: Int = 128,
-    /** Max rows a superstep may collect to the driver (wave keys, item
-      * summaries, spawn candidates). The driver-resident plans cut ~10 Spark
-      * jobs per superstep while the politeness envelope (hosts × budget ×
-      * items/page) is driver-sized; ABOVE this threshold the same superstep
-      * runs on the retained fully-distributed plans (anti-joins + banded
-      * suppression + flag joins) — same semantics, no driver state, so a
-      * 10^6-host frontier degrades to slower supersteps instead of a driver
-      * OOM. Tests force 0 to pin driver/distributed parity.
-      */
-    driverCollectMaxRows: Long = 2000000L,
-    /** Upper bound (rows) for the two driver-resident superstep paths.
+    /** Max rows the engine holds on the driver, and the ONE bound between
+      * its two superstep tiers.
       *
-      * The TINY-wave single-collect path: the driver loop that replaces ~5
-      * Spark jobs per step (see step()). Deliberately much tighter than
-      * driverCollectMaxRows: the tiny path also hauls each outcome's
-      * spawned-job list through one driver thread, so a 400-listing wave
-      * fanning out 100k spawns would turn a parallel canonicalize into
-      * serial driver work — measured as a ~1.5% N→4N efficiency tax at
-      * bench scale. Toy crawls (waves of dozens) get the ~3× superstep
-      * speedup; anything larger keeps the round-2 parallel plans.
+      * A wave of at most `driverCollectMaxRows / 1024` rows runs the DRIVER
+      * tier: one collect of its byte-free outcome metadata (item keys,
+      * job state, and the spawn candidates, canonicalized inside that job's
+      * tasks) feeds driver passes for the item decisions, spawn dedup, job
+      * state, fetch log and frontier — two foreground Spark jobs per
+      * superstep (the fetch write and the collect). The 1024× headroom
+      * covers what a page emits: breaching the bound from there needs more
+      * than 1024 items or links per page on average. A pending frontier of
+      * at most the same row count is a driver array, so the politeness
+      * wave, the empty-wave clock jump, the active-frontier seen probe and
+      * the frontier rewrite run with zero Spark jobs (measured on
+      * crawl_deep, 8 hosts × 3 listings × 8 pages, 4 vCPUs: foreground jobs
+      * per superstep 5 → 2; the Dataset wave alone had been a 3-stage
+      * collect of 0.3–0.7 s per 1.1–1.9 s superstep). The same row bound
+      * picks the seed's single-collect path and narrows a step's shuffle
+      * width to its pending count.
       *
-      * The driver-resident FRONTIER: a pending frontier of at most this
-      * many rows lives as a driver array, so the politeness wave, the
-      * empty-wave clock jump, the active-frontier seen probe and the
-      * frontier rewrite run with zero Spark jobs, and neither the frontier
-      * nor the item meta is checkpointed per step. Measured on crawl_deep
-      * (8 hosts × 3 listings × 8 pages, ≤ 216 frontier rows, 4 vCPUs):
-      * foreground jobs per superstep 5 → 2, the Dataset wave alone had
-      * been a 3-stage collect of 0.3–0.7 s per 1.1–1.9 s superstep. Also
-      * sets the narrow-shuffle step conf.
+      * Larger waves run the DISTRIBUTED tier: anti-joins, banded
+      * suppression, windowed winners, flag joins and the cogroup bloom
+      * probe — same results, no per-step driver state, so a 10^6-host
+      * frontier degrades to slower supersteps instead of a driver OOM.
+      * The item-meta mirror stays on the driver while it has at most
+      * `driverCollectMaxRows` rows. Tests force 0 to pin the distributed
+      * tier against the driver tier and the oracle.
       */
-    tinyWaveMaxRows: Long = 256L)
+    driverCollectMaxRows: Long = 2000000L)
 
 /** Per-run roll-up returned by [[CrawlEngine.run]]. */
 case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long)
@@ -226,11 +259,10 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
 /** The BSP superstep crawl driver — the engine's analogue of the reference's
   * worker pool + poll loop (reference: src/nest.js:47-61, src/worker.js:86-162).
   *
-  * Each superstep (one call to [[step]]):
+  * Each superstep (one call to [[step]]) runs these phases:
   *
   *  1. politeness-scheduled wave off the frontier (shuffle 1: by salted host;
-  *     a driver-array sort while the frontier fits
-  *     [[EngineConfig.tinyWaveMaxRows]] — see "Driver-sized crawls" below)
+  *     a driver-array sort while the frontier is driver-sized)
   *  2. `mapPartitions` fetch+extract, which WRITES its own outcomes (items
   *     + payload bytes) to the raw step table as it fetches — narrow,
   *     embarrassingly parallel, and the only pass that ever touches bytes
@@ -239,8 +271,9 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *     near-dup suppression, persisted as equality-delete keys
   *  4. spawned-job dedup: bloom probe → exact anti-join on the survivors
   *     (shuffle 3: by urlKey)
-  *  5. frontier/state/metrics rewrite + atomic snapshot commit (pipelined —
-  *     overlaps the next superstep's wave + fetch)
+  *  5. job-state + fetch-log rewrite of the wave, the next frontier, and the
+  *     atomic snapshot commit (pipelined — overlaps the next superstep's
+  *     wave + fetch)
   *
   * Three shuffles per superstep, NONE carrying image bytes: payloads go
   * scraper → parquet inside the fetch task and are only re-read by item
@@ -248,17 +281,16 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   * continues from the latest snapshot with identical results (kill-safe via
   * the store's atomic rename).
   *
-  * Driver-sized crawls: while the pending frontier has at most
-  * `tinyWaveMaxRows` rows it is a driver array — the wave, the frontier
-  * rewrite and the bloom/item-meta state all stay on the driver, so a
-  * superstep runs two foreground Spark jobs (the fetch write and one
-  * collect of its byte-free outcome metadata) instead of five; measured on
-  * crawl_deep (4 vCPUs) the median superstep fell from ~1.5 s to ~1.1 s.
-  * Larger or unknown frontiers take the Dataset plans above unchanged, and
-  * a frontier that leaves the driver array (it outgrew the bound, or the
-  * engine resumed mid-crawl) stays on them for the rest of the run.
-  * Each manifest also records the exact pending count and run totals, so
-  * resuming a drained crawl runs no Spark job.
+  * Two tiers, chosen once per step by one bound
+  * ([[EngineConfig.driverCollectMaxRows]] / 1024 rows): a driver-sized wave
+  * collects its byte-free outcome metadata in one job and runs phases 3–5
+  * as driver passes (with the frontier a driver array while it fits the
+  * same bound) — two foreground Spark jobs per superstep; a larger wave
+  * runs the Dataset plans above. A frontier that leaves the driver array
+  * (it outgrew the bound, or the engine resumed mid-crawl) stays a Dataset
+  * for the rest of the run. Each manifest records the exact pending count
+  * and run totals while the driver tier keeps them, so resuming a drained
+  * crawl runs no Spark job.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -270,6 +302,7 @@ final class CrawlEngine(
     listeners: Seq[CrawlEngine.StepListener] = Nil) {
 
   import spark.implicits._
+  import CrawlEngine._
 
   private val store = new SnapshotStore(cfg.statePath)
 
@@ -305,23 +338,24 @@ final class CrawlEngine(
       r
     }
 
-  /** Driver-side cache of the bloom shards (version → shards), valid only on
-    * the broadcast-probe path. Skips the per-superstep parquet read+collect:
-    * the shards written at step s are exactly the ones probed at s+1. Resume
-    * in a fresh engine simply misses the cache and reads the snapshot.
+  /** Driver-side cache of the bloom shards (version → shards), valid only
+    * while the driver tier probes them. Skips the per-superstep parquet
+    * read+collect: the shards written at step s are exactly the ones probed
+    * at s+1. Resume in a fresh engine simply misses the cache and reads the
+    * snapshot.
     */
   private var shardCache: Option[(Int, Array[BloomShard])] = None
 
   // ---- pipelined commit ------------------------------------------------
   // The snapshot commit is crash-resume IO, not a dataflow dependency: the
-  // next superstep plans entirely off in-memory checkpoints (frontier,
-  // item-meta, bloom shards below), so step s+1's wave+fetch overlaps step
-  // s's parquet writes instead of waiting on them. On a real cluster this
-  // hides the object-store commit latency behind the next wave. At most ONE
-  // commit is in flight; every DISK read of engine state awaits it first, so
-  // public accessors and cache-miss paths (resume, distributed fallbacks)
-  // always see the committed view. A background-commit failure surfaces at
-  // the next await (step, accessor, or run() end) and fails the crawl.
+  // next superstep plans entirely off in-memory state (frontier, item-meta,
+  // bloom shards below), so step s+1's wave+fetch overlaps step s's parquet
+  // writes instead of waiting on them. On a real cluster this hides the
+  // object-store commit latency behind the next wave. At most ONE commit is
+  // in flight; every DISK read of engine state awaits it first, so public
+  // accessors and cache-miss paths (resume, distributed fallbacks) always
+  // see the committed view. A background-commit failure surfaces at the
+  // next await (step, accessor, or run() end) and fails the crawl.
 
   /** The previous superstep's commit, if still being written. */
   private var commitInFlight: Option[scala.concurrent.Future[Unit]] = None
@@ -333,15 +367,16 @@ final class CrawlEngine(
     * whenever the frontier is not the driver array [[frontierLocal]]. */
   private var frontierCache: Option[(Int, Dataset[CrawlJob])] = None
   /** version → the unfinished frontier of that version as a driver array,
-    * while it has ≤ tinyCap rows (the driver-resident frontier). The wave,
-    * the empty-wave clock jump, the exact-seen probe of the active frontier
-    * and the frontier rewrite then run with ZERO Spark jobs: on an 8-host
-    * crawl the Dataset wave alone (salted window + host exchange + sort,
-    * one 3-stage collect) cost 0.3–0.7 s of a 1.1–1.9 s superstep over
-    * ≤ 216 rows, and the frontier checkpoint one more job per step. The
-    * commit writes the array as a local relation (same table layout).
-    * Filled by seed() and kept by each step while the next frontier fits;
-    * a frontier that outgrows it (or a resumed one) stays a Dataset.
+    * while it has ≤ [[driverRows]] rows (the driver-resident frontier). The
+    * wave, the empty-wave clock jump, the exact-seen probe of the active
+    * frontier and the frontier rewrite then run with ZERO Spark jobs: on an
+    * 8-host crawl the Dataset wave alone (salted window + host exchange +
+    * sort, one 3-stage collect) cost 0.3–0.7 s of a 1.1–1.9 s superstep
+    * over ≤ 216 rows, and the frontier checkpoint one more job per step.
+    * The commit writes the array as a local relation (same table layout).
+    * Filled by seed() and kept by each driver-tier step while the next
+    * frontier fits; a frontier that outgrows it (or a resumed one) stays a
+    * Dataset.
     */
   private var frontierLocal: Option[(Int, Array[CrawlJob])] = None
   /** step → checkpointed (key, phash) of every item delta row up to step —
@@ -351,33 +386,30 @@ final class CrawlEngine(
     * suppression to live-set semantics). */
   private var itemMetaCache: Option[(Int, DataFrame)] = None
   /** step → the same (key, phash) rows as a driver array while they stay
-    * ≤ driverCollectMaxRows — the tiny-wave suppression probe then runs
+    * ≤ driverCollectMaxRows — the driver tier's suppression probe then runs
     * with ZERO Spark jobs (the per-step distributed existing-meta scan was
     * the largest remaining flat cost of a toy-scale superstep), and no
     * per-step checkpoint job keeps a DataFrame twin (its task count grew
-    * with every step). The twin is built from this mirror only on a step
-    * that takes the distributed item plans. None above the cap; the
-    * distributed probe then takes over with identical semantics.
+    * with every step). None above the cap; the distributed probe then takes
+    * over with identical semantics.
     */
   private var itemMetaLocal: Option[(Int, Array[(String, Long)])] = None
 
-  /** Row bound of the tiny-wave path and of the driver-resident frontier
-    * (see [[EngineConfig.tinyWaveMaxRows]]); 0 when driverCollectMaxRows
-    * forces everything distributed. */
-  private def tinyCap: Long =
-    math.min(cfg.tinyWaveMaxRows, cfg.driverCollectMaxRows / 1024)
+  /** Row bound of the driver tier and of the driver-resident frontier (see
+    * [[EngineConfig.driverCollectMaxRows]]); 0 forces the distributed tier. */
+  private val driverRows: Long = cfg.driverCollectMaxRows / 1024
 
   // ---- exact driver-side run accounting --------------------------------
-  // Maintained while every superstep since seed() ran on the driver-
-  // resident paths: unfinished-frontier count (lets run() stop without one
-  // final empty-wave probe — wave build + count + pending-min agg, ~1 s of
-  // pure flat cost) and the [[RunSummary]] tallies (fetched = Σ wave sizes;
-  // items = Σ created flags, exact because a key is "created" exactly once;
-  // dead letters from the sizing probe). Every manifest carries the exact
+  // Maintained while every superstep since seed() ran the driver tier:
+  // unfinished-frontier count (lets run() stop without one final empty-wave
+  // probe — wave build + count + pending-min agg, ~1 s of pure flat cost)
+  // and the [[RunSummary]] tallies (fetched = Σ wave sizes; items = Σ
+  // created flags, exact because a key is "created" exactly once; dead
+  // letters off the outcome metadata). Every manifest carries the exact
   // values it has (`pending`, `totals`), so a resume into a fresh engine
-  // restores them. Any step that can't account exactly (distributed
-  // fallback, a manifest without them) flips the state to unknown and the
-  // log-based paths take over — identical values, a few extra jobs.
+  // restores them. Any step that can't account exactly (distributed tier, a
+  // manifest without them) flips the state to unknown and the log-based
+  // paths take over — identical values, a few extra jobs.
   private var pendingCount: Long = -1L // unfinished frontier rows; -1 unknown
   private var acctValid = false
   private var fetchedAcc = 0L
@@ -407,20 +439,19 @@ final class CrawlEngine(
     }
   }
 
-  /** Superstep-scoped session conf (restored after): see
-    * [[EngineConfig.aqeInSteps]]. The fetch stage's parallelism is pinned by
-    * an explicit repartition count (Politeness.wave) either way.
-    * `shuffleParts`, when set, also narrows `spark.sql.shuffle.partitions`
-    * for the step — a tiny pending frontier otherwise pays full-width
-    * exchanges (32 near-empty tasks per politeness window) purely in
-    * scheduler latency.
+  /** Superstep-scoped session conf (restored after): see [[AqeInSteps]].
+    * The fetch stage's parallelism is pinned by an explicit repartition
+    * count (Politeness.wave) either way. `shuffleParts`, when set, also
+    * narrows `spark.sql.shuffle.partitions` for the step — a tiny pending
+    * frontier otherwise pays full-width exchanges (32 near-empty tasks per
+    * politeness window) purely in scheduler latency.
     */
   private def withStepConf[T](shuffleParts: Option[Int])(body: => T): T = {
     val aqeKey = "spark.sql.adaptive.enabled"
     val spKey = "spark.sql.shuffle.partitions"
     val prevA = spark.conf.getOption(aqeKey)
     val prevS = spark.conf.getOption(spKey)
-    spark.conf.set(aqeKey, cfg.aqeInSteps.toString)
+    spark.conf.set(aqeKey, AqeInSteps.toString)
     shuffleParts.foreach(p => spark.conf.set(spKey, p.toString))
     def restore(k: String, prev: Option[String]): Unit = prev match {
       case Some(p) => spark.conf.set(k, p)
@@ -531,6 +562,18 @@ final class CrawlEngine(
       a.filter(col("bucket").isin(buckets: _*))
         .select(col("urlKey")).filter(inPos(col("urlKey")))
     }
+
+  /** `urlKey ∈ sorted` as a broadcast binary-search filter over a Dataset
+    * frontier. Kept over an anti-/semi-join against a local relation of
+    * the keys: the join's broadcast exchange runs one more Spark job per
+    * use (measured on Spark 4.1 with AQE off, as in a step), this filter
+    * none.
+    */
+  private def urlKeyIn(sorted: Array[Long]): Column = {
+    val keysBc = spark.sparkContext.broadcast(sorted)
+    udf((k: Long) => java.util.Arrays.binarySearch(keysBc.value, k) >= 0)
+      .apply(col("urlKey"))
+  }
   private def logDir(name: String) = s"${cfg.statePath}/logs/$name"
 
   private val outcomeSchema =
@@ -544,11 +587,6 @@ final class CrawlEngine(
     val steps = graft.state.StateIO.listNames(itemsBaseDir)
       .collect { case n if n.startsWith("step=") => n.substring(5).toInt }
     if (steps.isEmpty) -1 else steps.max
-  }
-
-  private def readStepPartitioned(base: String, upToStep: Int): Option[DataFrame] = {
-    if (graft.state.StateIO.listNames(base).isEmpty) None
-    else Some(spark.read.parquet(base).filter(col("step") <= upToStep))
   }
 
   private def readStepPartitioned(base: String, upToStep: Int,
@@ -703,37 +741,22 @@ final class CrawlEngine(
       .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
       .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
       .withColumn("urlKey", xxhash64(col("url")))
-    val deduped = seedJobs
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("urlKey")).orderBy(col("routeId"))))
-      .filter(col("rn") === 1).drop("rn", "rawUrl")
-    val allowedSeeds = Robots.allowed(deduped, robotsRules)
-    val prioByRoute = typedLit(routes.map { case (k, r) => k -> r.priority })
-    val jobs = allowedSeeds
-      .withColumn("priority", coalesce(element_at(prioByRoute, col("routeId")), lit(50)))
-      .select(col("urlKey").as("_1"), col("url").as("_2"), col("host").as("_3"),
-        col("routeId").as("_4"), col("priority").cast("int").as("_5"),
-        col("query").as("_6"))
-      .as[(Long, String, String, String, Int, Map[String, String])]
-      .map { case (k, u, h, r, p, q) => CrawlJob(k, u, h, r, priority = p, query = q) }
+    val allowedSeeds = Robots.allowed(minRoutePerKey(seedJobs.drop("rawUrl")), robotsRules)
+    val jobs = toJobs(allowedSeeds, 0)
 
     acctValid = true
     fetchedAcc = 0L; itemsAcc = 0L; dlAcc = 0L
-    if (seeds.size <= math.max(1L, cfg.driverCollectMaxRows / 1024)) {
+    if (seeds.size <= math.max(1L, driverRows)) {
       // small-seed fast path: ONE Spark job evaluates the (local-relation)
       // canon/dedup/robots plan; the bloom shards are built driver-side and
       // both state tables land coalesced. The seed ALSO primes the frontier
-      // (the driver array when it fits tinyCap) and shard caches, so step 1
-      // never re-reads the v0 snapshot.
+      // (the driver array when it fits driverRows) and shard caches, so
+      // step 1 never re-reads the v0 snapshot.
       val jobsArr = jobs.collect()
       pendingCount = jobsArr.length
-      val byPid = jobsArr.map(_.urlKey)
-        .groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
-      val shards = BloomSeen
-        .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, cfg.bloomFpp)
-        .map(sh => byPid.get(sh.pid)
-          .map(ks => BloomSeen.insertLocal(sh, ks)).getOrElse(sh))
+      val shards = insertLocal(BloomSeen
+        .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, cfg.bloomFpp),
+        jobsArr.map(_.urlKey))
       val frontierDs = spark.createDataset(jobsArr.toSeq).coalesce(1)
       store.commit(0, seedManifest(jobsArr.length)) { dir =>
         inParallel(
@@ -742,7 +765,7 @@ final class CrawlEngine(
             .write.parquet(s"$dir/bloom"))
       }
       shardCache = Some((0, shards))
-      if (jobsArr.length <= tinyCap) frontierLocal = Some((0, jobsArr))
+      if (jobsArr.length <= driverRows) frontierLocal = Some((0, jobsArr))
       else frontierCache = Some((0, frontierDs))
     } else {
       val jobsP = jobs.persist(StorageLevel.MEMORY_AND_DISK)
@@ -788,6 +811,7 @@ final class CrawlEngine(
     (v, m.step)
   }
 
+
   // ---- one superstep --------------------------------------------------
 
   /** Execute the next superstep. Returns false (and commits nothing) when no
@@ -803,18 +827,18 @@ final class CrawlEngine(
     // is empty by construction — skip the wave-build/count/pending probe
     if (pendingCount == 0L) false
     else withStepConf(
-      // tiny pending frontier ⇒ narrow the step's exchanges to ~pendingCount
-      // tasks: full-width 32-task windows over a 20-row frontier cost pure
-      // scheduler latency. Unknown or large pendingCount leaves the session
-      // width untouched (bench/production scale, distributed-forced tests).
-      if (pendingCount > 0 && pendingCount <= math.max(1L, tinyCap))
+      // driver-sized pending frontier ⇒ narrow the step's exchanges to
+      // ~pendingCount tasks: full-width 32-task windows over a 20-row
+      // frontier cost pure scheduler latency. Unknown or large pendingCount
+      // leaves the session width untouched (bench/production scale,
+      // distributed-forced tests).
+      if (pendingCount > 0 && pendingCount <= math.max(1L, driverRows))
         Some(math.min(spark.sessionState.conf.numShufflePartitions.toLong,
           pendingCount).toInt)
       else None)(superstep(v, committed))
   }
 
   private def superstep(v: Int, committed: Int): Boolean = {
-    var s = committed + 1
     // safe without awaiting the in-flight commit: it writes step=committed
     // dirs, and cleanStale only removes step > committed. The raw outcome
     // dir of the step being built is written BEFORE its commit (by the
@@ -822,83 +846,105 @@ final class CrawlEngine(
     // that this sweep removes on resume.
     Seq(rawDir, suppressedDir, archiveDir, logDir("fetchlog"))
       .foreach(cleanStale(_, committed))
+    val front = new Front(v)
+    wavePhase(front, committed + 1) match {
+      case None => false
+      case Some((wave, waveN, stepNow)) =>
+        val outcomes = fetchPhase(wave, waveN, stepNow)
+        // the step's ONE tier decision (see EngineConfig.driverCollectMaxRows)
+        val tier =
+          if (waveN <= driverRows) DriverTier(timed("meta.collect")(collectMeta(outcomes)))
+          else DistributedTier
+        val items = timed("items")(itemsPhase(tier, outcomes, committed, stepNow))
+        val spawns = timed("spawn")(spawnsPhase(tier, outcomes, front, v, committed, stepNow))
+        val jobs = jobStatePhase(tier, outcomes, items.flags, spawns.freshLocal,
+          waveN, stepNow)
+        val (frontierOut, prevFront) = timed("front.next")(
+          frontierPhase(tier, front, wave, jobs, spawns, v, stepNow))
+        commitPhase(v, stepNow, waveN, jobs, items.suppressed, frontierOut, spawns.bloom,
+          Seq(wave) ++ items.release ++ spawns.release ++ prevFront)
+        true
+    }
+  }
 
-    // The pending frontier: the driver array while it fits tinyCap (see
-    // [[frontierLocal]]) — every frontier-side phase below then runs on it
-    // with zero Spark jobs; the Dataset twin is built from it only if a
-    // phase must take the distributed plans. Larger/unknown frontiers use
-    // the checkpointed Dataset (or the snapshot on a cache miss).
-    val frontLocal: Option[Array[CrawlJob]] = frontierLocal.collect { case (`v`, a) => a }
-    lazy val front: Dataset[CrawlJob] = frontLocal match {
+  /** The pending frontier of version `v`: the driver array while it fits
+    * [[driverRows]] (see [[frontierLocal]]) — the frontier-side phases then
+    * run on it with zero Spark jobs, and its Dataset twin is built only if
+    * a phase asks for it — else the checkpointed Dataset (or the snapshot
+    * on a cache miss).
+    */
+  private final class Front(v: Int) {
+    val local: Option[Array[CrawlJob]] = frontierLocal.collect { case (`v`, a) => a }
+    lazy val ds: Dataset[CrawlJob] = local match {
       case Some(a) => spark.createDataset(a.toSeq)
       case None => frontierCache match {
         case Some((`v`, f)) => f
         case _ => readFrontier(v)
       }
     }
+  }
+
+  /** The politeness wave at the first step ≥ `s` with eligible work, with
+    * its size and that step; None when no work remains.
+    */
+  private def wavePhase(front: Front, s: Int): Option[(Dataset[CrawlJob], Long, Int)] = {
     // A driver frontier ⇒ the driver wave (the same sequential take as the
-    // Dataset plan) and the fetch stage repartitions a local relation.
-    // Otherwise: localCheckpoint (eager) on the shared wave truncates
-    // lineage so every downstream action analyzes a shallow scan instead of
-    // re-planning the whole superstep tree — catalyst planning time was
-    // ~half of each superstep's wall clock before this (measured via
-    // SparkListener) — plus a cheap count.
-    def buildWave(atStep: Int): (Dataset[CrawlJob], Long) = frontLocal match {
+    // Dataset plan) as a local relation. Otherwise: localCheckpoint (eager)
+    // on the shared wave truncates lineage so every downstream action
+    // analyzes a shallow scan instead of re-planning the whole superstep
+    // tree — catalyst planning time was ~half of each superstep's wall
+    // clock before this (measured via SparkListener) — plus a cheap count.
+    def build(atStep: Int): (Dataset[CrawlJob], Long) = front.local match {
       case Some(a) =>
         val w = Politeness.waveLocal(a, atStep, cfg.hostBudget, routeCaps,
           cfg.disabledRoutes, hooks.jobFilter)
         (spark.createDataset(w.toSeq), w.length.toLong)
       case None =>
-        val w = Politeness.wave(front, atStep, cfg.hostBudget, routeCaps,
+        val w = Politeness.wave(front.ds, atStep, cfg.hostBudget, routeCaps,
           cfg.disabledRoutes, cfg.saltBuckets, hooks.jobFilter).localCheckpoint(true)
         (w, w.count())
     }
-    // The count sizes the superstep: waves under driverCollectMaxRows run
-    // the driver-resident plans (wave keys, item summaries, spawn candidates
-    // live driver-side — the exact politeness envelope the broadcast
-    // anti-joins shipped to every executor anyway, ~10 fewer Spark jobs per
-    // superstep); larger waves fall back to the retained distributed plans.
-    var (wave, waveN) = timed("wave")(buildWave(s))
-    if (waveN == 0) {
-      // Nothing eligible *now*, but retry-backoff / crawl-delay jobs may be
-      // waiting on a future step — jump the clock to the earliest one (the
-      // analogue of the reference worker's idle poll-sleep, worker.js:108-110).
-      wave.unpersist()
-      val pending: Option[Int] = frontLocal match {
-        case Some(a) => a.iterator
-          .filter(j => !j.state.finished && !cfg.disabledRoutes(j.routeId))
-          .map(_.notBeforeStep).minOption
-        case None =>
-          val r = front
-            .filter(!col("state.finished"))
-            .filter(if (cfg.disabledRoutes.isEmpty) lit(true)
-                    else !col("routeId").isin(cfg.disabledRoutes.toSeq: _*))
-            .agg(min(col("notBeforeStep"))).head()
-          if (r.isNullAt(0)) None else Some(r.getInt(0))
-      }
-      val nxt = pending.getOrElse(return false)
-      if (nxt <= s) return false // safety: no forward progress possible
-      s = nxt
-      val (w2, n2) = buildWave(s)
-      wave = w2; waveN = n2
-      if (waveN == 0) { wave.unpersist(); return false }
+    val (wave, waveN) = timed("wave")(build(s))
+    if (waveN > 0) return Some((wave, waveN, s))
+    // Nothing eligible *now*, but retry-backoff / crawl-delay jobs may be
+    // waiting on a future step — jump the clock to the earliest one (the
+    // analogue of the reference worker's idle poll-sleep, worker.js:108-110).
+    wave.unpersist()
+    val pending: Option[Int] = front.local match {
+      case Some(a) => a.iterator
+        .filter(j => !j.state.finished && !cfg.disabledRoutes(j.routeId))
+        .map(_.notBeforeStep).minOption
+      case None =>
+        val r = front.ds
+          .filter(!col("state.finished"))
+          .filter(if (cfg.disabledRoutes.isEmpty) lit(true)
+                  else !col("routeId").isin(cfg.disabledRoutes.toSeq: _*))
+          .agg(min(col("notBeforeStep"))).head()
+        if (r.isNullAt(0)) None else Some(r.getInt(0))
     }
-    val stepNow = s
-    val waveOnDriver = waveN <= cfg.driverCollectMaxRows
+    // nxt <= s: no forward progress possible
+    pending.filter(_ > s).flatMap { nxt =>
+      val (w2, n2) = build(nxt)
+      if (n2 > 0) Some((w2, n2, nxt)) else { w2.unpersist(); None }
+    }
+  }
 
-    // -- fetch+extract -----------------------------------------------------
+  /** Fetch+extract the wave; the fetch job lands its own outcomes. Returns
+    * the landed raw table (read back byte-free by every later scan).
+    */
+  private def fetchPhase(wave: Dataset[CrawlJob], waveN: Long, stepNow: Int): DataFrame = {
     // Rebalance the SELECTED wave before fetching (see EngineConfig
     // .fetchSplits): cheap exchange of byte-free rows, caps the placement
     // tail that otherwise sets the fetch stage's wall clock.
     val fetchParts = {
       val base = spark.sessionState.conf.numShufflePartitions
-      val byWave = ((waveN + cfg.fetchPagesPerTask - 1) / cfg.fetchPagesPerTask).toInt
+      val byWave = ((waveN + FetchPagesPerTask - 1) / FetchPagesPerTask).toInt
       // floor at min(base, waveN): a 19-row wave gets ≤19 tasks, not the
       // full shuffle-partition count of near-empty launches (the round-2
       // fixed floor doubled toy-scale superstep cost); big waves keep the
       // adaptive ~pagesPerTask sizing capped at base × factor
       val floor = math.max(1L, math.min(base.toLong, waveN)).toInt
-      math.max(floor, math.min(base * cfg.fetchTaskFactor, byWave))
+      math.max(floor, math.min(base * FetchTaskFactor, byWave))
     }
     val waveFetch = wave.repartition(fetchParts,
       col("host"), pmod(col("urlKey"), lit(cfg.fetchSplits)))
@@ -909,653 +955,490 @@ final class CrawlEngine(
     // column-pruned (the byte column is top-level — see StepOutcome), so
     // "plan the rest of the superstep" costs narrow scans, not a multi-GB
     // in-memory checkpoint. The dir is invisible to readers until the
-    // snapshot commit below (readers filter to committed steps).
+    // snapshot commit (readers filter to committed steps).
     val rawPath = s"$rawDir/step=$stepNow"
     timed("fetch")(
       FetchStage.run(waveFetch, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
           cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits))
         .write.mode("overwrite").option("compression", "uncompressed")
         .parquet(rawPath))
-    val outcomes = spark.read.schema(outcomeSchema).parquet(rawPath)
+    spark.read.schema(outcomeSchema).parquet(rawPath)
+  }
 
-    // -- tiny-wave fast path: waves under tinyCap (≤ tinyWaveMaxRows AND
-    // 1024× under the driver threshold — breaching the envelope from there
-    // would need >1024 items or links per page ON AVERAGE, far outside any
-    // sane scrape) collect the step's ENTIRE byte-free outcome metadata in
-    // ONE job. The
-    // sizing stats, item tuples, spawn candidates, wave keys, job-state
-    // updates, fetch-log and archive rows are all derived from this single
-    // array — at toy wave sizes the superstep's cost is otherwise ~5 extra
-    // scheduler round-trips of flat latency per step (q50 measured ~2×).
-    // Big waves (bench/production scale) keep the round-2 plans unchanged.
-    val tinyWave = waveN <= tinyCap
-    val metaLocal: Option[Array[CrawlEngine.OutcomeMeta]] =
-      if (!tinyWave) None
-      else Some(timed("meta.collect")(outcomes
-        .select(col("job"), col("status"), col("action"), col("hasNextPage"),
-          col("newState"), col("spawned"),
-          expr("transform(items, (it, i) -> named_struct(" +
-            "'_1', i, '_2', it.key, '_3', coalesce(it.image_id, ''), " +
-            "'_4', it.phash))").as("itemMeta"))
-        .as[CrawlEngine.OutcomeMeta].collect()))
-
-    // -- sizing probe: decides driver-resident vs distributed plans for the
-    // item and spawn paths, and (while exact accounting is live) tallies
-    // this step's dead letters + continuing jobs — free off the tiny-path
-    // meta array, one narrow agg otherwise.
-    val (nIncomingItems, nSpawnedUpper, dlStep, contStep) = timed("probe")(
-      metaLocal match {
-        case Some(rows) =>
-          (rows.iterator.map(_.itemMeta.size.toLong).sum,
-            rows.iterator.map(_.spawned.size.toLong).sum,
-            rows.count(r => r.status >= 400 && r.action == "stop").toLong,
-            rows.count(r => r.action == "retry" ||
-              (r.action == "ok" && r.hasNextPage)).toLong)
-        case None =>
-          val r = outcomes.agg(
-            coalesce(sum(size(col("items"))), lit(0L)),
-            coalesce(sum(size(col("spawned"))), lit(0L)),
-            coalesce(sum(when(col("status") >= 400 && col("action") === "stop",
-              1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(when(col("action") === "retry" ||
-              (col("action") === "ok" && col("hasNextPage")), 1L).otherwise(0L)),
-              lit(0L))).head()
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      })
-    val itemsOnDriver = nIncomingItems <= cfg.driverCollectMaxRows
-
-    // -- items path (raw outcomes + equality deletes; merge-on-read) -----
-    // The bytes are already landed; this phase only DECIDES — winner pick,
-    // created-vs-updated flags, phash near-dup suppression — and persists
-    // the decisions as small byte-free side outputs (the winner pick is
-    // re-derived deterministically at read time; suppression lands as the
-    // step's equality-delete keys). Incoming items per superstep are
-    // normally politeness-bounded, so their (srcJob, key, image_id, phash)
-    // summaries live driver-side; above driverCollectMaxRows the same
-    // decisions run distributed: banded suppression join + per-key winner
-    // window + flag aggregation — same semantics, nothing driver-resident.
-    // Every scan below reads only byte-free top-level columns of the raw
-    // outcome table (the payload column is never touched).
-    // (key, phash) of every existing item row — the driver mirror or the
-    // checkpointed DataFrame in steady state (maintained below each step);
-    // miss = resume / first step / after compaction, one checkpointed read
-    // of the delta dirs (awaits any in-flight commit)
-    val (existingLocal: Option[Array[(String, Long)]],
-         existingCkpt: Option[DataFrame]) =
-      (itemMetaLocal, itemMetaCache) match {
-        case (Some((`committed`, a)), _) => (Some(a), None)
-        case (_, Some((`committed`, df))) => (None, Some(df))
-        case _ =>
-          awaitCommit()
-          if (graft.state.StateIO.isDir(rawDir) || latestBaseStep >= 0) {
-            val df = readItemDeltas(committed, withBytes = false)
-              .select(col("key"), col("phash"))
-              .toDF().localCheckpoint(true)
-            // resume-time one-off: repopulate the driver mirror while
-            // small, so subsequent tiny steps probe with zero Spark jobs
-            val local =
-              if (tinyWave && df.count() <= cfg.driverCollectMaxRows)
-                Some(df.as[(String, Long)].collect())
-              else None
-            (local, Some(df))
-          } else (Some(Array.empty[(String, Long)]), None)
-      }
-    // the checkpointed DataFrame, built from the mirror only when a
-    // distributed plan asks for it; None = no items landed yet
-    lazy val existingMetaOpt: Option[DataFrame] = existingCkpt.orElse(
-      existingLocal.filter(_.nonEmpty)
-        .map(_.toSeq.toDF("key", "phash").localCheckpoint(true)))
-    // carries the in-page position so the winner pick below uses the ONE
-    // canonical ordering (srcJob, image_id, pos) — identical to the
-    // read-side re-derivation in readItemDeltas; a divergent tiebreak
-    // (e.g. phash) would let the landed item's phash differ from the one
-    // recorded in the item-meta cache, corrupting later near-dup votes
-    // and breaking resume-identical parity
-    val itemMetaDf = outcomes
-      .select(col("job.urlKey").as("srcJob"), posexplode(expr(
-        "transform(items, it -> named_struct(" +
-          "'key', it.key, 'image_id', it.image_id, 'phash', it.phash))"))
-        .as(Seq("pos", "it")))
-      .select(col("srcJob"), col("pos"), col("it.key").as("key"),
-        coalesce(col("it.image_id"), lit("")).as("image_id"),
-        col("it.phash").as("phash"))
-
-    // (per-src flags: Left = driver map, Right = DataFrame (srcJob,
-    // created, updated); distributed-path winners checkpoint; this step's
-    // landed (key, phash) rows for the item-meta cache; this step's
-    // suppressed keys — the equality-delete rows the commit persists so
-    // readers drop them from the already-landed raw outcomes)
-    val (flags: Either[Map[Long, (Long, Long)], DataFrame],
-         winnersCkpt: Option[DataFrame],
-         newMetaOpt: Option[DataFrame],
-         newMetaLocal: Option[Array[(String, Long)]],
-         suppressedOut: Option[DataFrame]) = timed("items")(
-      if (itemsOnDriver) {
-        // (srcJob, pos, key, image_id, phash) — free off the tiny-path meta
-        // array, one collect of the byte-free item projection otherwise
-        val itemTups: Array[(Long, Int, String, String, Long)] = metaLocal match {
-          case Some(rows) => rows.iterator.flatMap(r => r.itemMeta.iterator
-            .map(m => (r.job.urlKey, m._1, m._2, m._3, m._4))).toArray
-          case None => itemMetaDf.as[(Long, Int, String, String, Long)].collect()
-        }
-        // existing side: the driver mirror when valid (zero Spark jobs),
-        // else the distributed (key, phash) scan
-        val existingSide: Option[Either[Array[(String, Long)], DataFrame]] =
-          if (itemTups.isEmpty) None
-          else existingLocal.map(Left(_)).orElse(existingMetaOpt.map(Right(_)))
-        val (suppressedKeys, existedKeys) = Items.suppressAndSeenSets(
-          itemTups.map(t => (t._1, t._3, t._4, t._5)), existingSide,
-          cfg.phashThreshold)
-        val keepTups = itemTups.filterNot { case (_, _, k, _, _) => suppressedKeys(k) }
-        // one winner per key — lowest (srcJob, image_id, pos): the ONE
-        // canonical ordering, identical to the read-side ranking window
-        // and the distributed twin below
-        val winnersFull: Map[String, (Long, String, Int, Long)] =
-          keepTups.groupBy(_._3).map {
-            case (k, rows) => k -> rows.iterator.map(r => (r._1, r._4, r._2, r._5))
-              .minBy(t => (t._1, t._2, t._3))
-          }
-        val flagBySrc: Map[Long, (Long, Long)] = winnersFull.groupBy(_._2._1).map {
-          case (src, ws) =>
-            val created = ws.count { case (k, _) => !existedKeys(k) }
-            src -> (created.toLong, (ws.size - created).toLong)
-        }
-        val nmPairs = winnersFull.iterator.map { case (k, w) => (k, w._4) }.toArray
-        val sup =
-          if (suppressedKeys.isEmpty) None
-          else Some(suppressedKeys.toSeq.toDF("key"))
-        (Left(flagBySrc), None, None, Some(nmPairs), sup)
-      } else {
-        // distributed twin — same outputs, no driver state. The suppressed
-        // plan reads only stable inputs (the landed raw table + the meta
-        // cache), so the background commit re-executes it safely.
-        val existingDf = existingMetaOpt
-        val suppressed = Items.suppressedKeyDf(
-          itemMetaDf, existingDf, cfg.phashThreshold,
-          broadcastIncoming = false)
-        val keptMeta = itemMetaDf.join(suppressed, Seq("key"), "left_anti")
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("key"))
-          .orderBy(col("srcJob").asc, col("image_id").asc, col("pos").asc)
-        // reused by the flag agg, the delta semi-join AND the item-meta
-        // cache update (key, phash) → checkpoint once
-        val winnersDf = keptMeta
-          .withColumn("rn", row_number().over(win))
-          .filter(col("rn") === 1).drop("rn")
-          .localCheckpoint(true)
-        val winnersFlagged = existingDf match {
-          case Some(ex) => winnersDf.join(
-            ex.select(col("key")).distinct().withColumn("existed", lit(true)),
-            Seq("key"), "left")
-          case None => winnersDf.withColumn("existed", lit(false))
-        }
-        val flagDf = winnersFlagged.groupBy(col("srcJob"))
-          .agg(
-            sum(when(coalesce(col("existed"), lit(false)), 0L).otherwise(1L))
-              .as("created"),
-            sum(when(coalesce(col("existed"), lit(false)), 1L).otherwise(0L))
-              .as("updated"))
-        (Right(flagDf), Some(winnersDf),
-          Some(winnersDf.select(col("key"), col("phash"))), None,
-          if (cfg.phashThreshold < 0) None else Some(suppressed))
-      })
-
-    // -- item-meta update (backs the next superstep's suppression) --------
-    // The driver mirror carries it while the merged rows fit (no Spark
-    // job); any case it cannot mirror (distributed-path step, cap breach)
-    // checkpoints the DataFrame twin instead — the distributed probe then
-    // serves subsequent steps with identical semantics.
-    val mergedLocal = for {
-      o <- existingLocal; n <- newMetaLocal
-      if o.length.toLong + n.length <= cfg.driverCollectMaxRows
-    } yield o ++ n
-    val (staleMeta: Option[DataFrame], mergedMeta: Option[DataFrame]) =
-      if (mergedLocal.isDefined) (existingCkpt, None)
-      else (existingMetaOpt, newMetaOpt.orElse(newMetaLocal.filter(_.nonEmpty)
-          .map(_.toSeq.toDF("key", "phash")))) match {
-        case (Some(e), Some(n)) =>
-          (Some(e), Some(e.unionByName(n).localCheckpoint(true)))
-        case (Some(e), None) => (None, Some(e))
-        case (None, Some(n)) => (None, Some(n.localCheckpoint(true)))
-        case _ => (None, None)
-      }
-    itemMetaLocal = mergedLocal.map((stepNow, _))
-    itemMetaCache = mergedMeta.map((stepNow, _))
-
-    // -- spawned-jobs path (byte-free scans of the landed outcomes; on the
-    // tiny path a LOCAL relation off the meta array — the canon/robots/
-    // dedup pipeline below is identical, it just never rescans the table)
-    val spawnedRaw = metaLocal match {
-      case Some(rows) =>
-        val sp = rows.iterator.flatMap(_.spawned.iterator
-          .map(s => (s.routeId, s.url, s.query)))
-        val rd = rows.iterator.filter(_.action.startsWith("redirect:"))
-          .map(r => (r.job.routeId, r.action.substring("redirect:".length),
-            Map.empty[String, String]))
-        spark.createDataset((sp ++ rd).toSeq)
-          .toDF("routeId", "rawUrl", "query")
-      case None =>
-        val spawnedPart = outcomes
-          .select(explode(col("spawned")).as("sj"))
-          .select(col("sj.routeId").as("routeId"), col("sj.url").as("rawUrl"),
-            col("sj.query").as("query"))
-        val redirectPart = outcomes
-          .filter(col("action").startsWith("redirect:"))
-          .select(col("job.routeId").as("routeId"),
-            expr(s"substring(action, ${"redirect:".length + 1})").as("rawUrl"),
-            typedLit(Map.empty[String, String]).as("query"))
-        spawnedPart.unionByName(redirectPart)
-    }
-    val known = spawnedRaw.filter(col("routeId").isin(routes.keys.toSeq: _*))
-    // query-templated spawns (url empty, query set): build the URL through
-    // the route's template — reference `route.getUrl(job)` over the spawned
-    // op's query (worker.js:281-292, route.js:31-37). A throwing template
-    // drops the job (the reference fails it; a queryable drop is kinder).
-    val routesForResolve = routesBc
+  /** Every outcome's spawn candidates — its spawned jobs plus a redirect
+    * target — as array<SpawnCand>: unknown routes dropped, query-templated
+    * URLs built through the route's template (reference `route.getUrl(job)`
+    * over the spawned op's query, worker.js:281-292, route.js:31-37; a
+    * throwing template drops the job, where the reference fails it), then
+    * canonicalized, host-split and keyed by the native expressions. The
+    * driver tier evaluates it inside its one outcome collect, so the
+    * canonicalization runs in that job's tasks; the distributed tier
+    * explodes it.
+    */
+  private val spawnCands: Column = {
+    val routesLocal = routesBc // a field in the closure would serialize `this`
     val resolveUrl = udf((rid: String, u: String, q: Map[String, String]) =>
       if (u != null && u.nonEmpty) u
-      else try routesForResolve.value(rid).urlTemplate(
-        Option(q).getOrElse(Map.empty))
+      else try routesLocal.value(rid).urlTemplate(Option(q).getOrElse(Map.empty))
       catch { case _: Exception => "" })
-    val resolved = known
-      .withColumn("rawUrl", resolveUrl(col("routeId"), col("rawUrl"), col("query")))
-      .filter(col("rawUrl") =!= "")
-    val canonical = resolved
-      .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
-      .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
-      .withColumn("urlKey", xxhash64(col("url")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("urlKey")).orderBy(col("routeId"))))
-      .filter(col("rn") === 1).drop("rn", "rawUrl")
-    // checkpointed lazily: the driver-resident branch consumes this plan
-    // with ONE collect, so materializing it first would only add a job
-    val allowedJobsPlan = Robots.allowed(canonical, robotsRules)
-    var allowedJobsCkpt: Option[DataFrame] = None
+    def spawn(rid: Column, url: Column, q: Column) =
+      struct(rid.as("routeId"), url.as("url"), q.as("query"))
+    val redirect = "redirect:"
+    val raw = concat(
+      transform(col("spawned"), s => spawn(s("routeId"), s("url"), s("query"))),
+      filter(array(spawn(col("job.routeId"),
+          expr(s"substring(action, ${redirect.length + 1})"),
+          typedLit(Map.empty[String, String]))),
+        _ => col("action").startsWith(redirect)))
+    val resolved = transform(
+      filter(raw, s => s("routeId").isin(routes.keys.toSeq: _*)),
+      s => spawn(s("routeId"), resolveUrl(s("routeId"), s("url"), s("query")), s("query")))
+    val canonical = transform(filter(resolved, s => s("url") =!= ""),
+      s => spawn(s("routeId"), graft.canon.CanonUdfs.canon_url(s("url")), s("query")))
+    transform(canonical, s => struct(xxhash64(s("url")).as("urlKey"), s("url").as("url"),
+      graft.canon.CanonUdfs.url_host(s("url")).as("host"), s("routeId").as("routeId"),
+      s("query").as("query")))
+  }
 
-    val sketchBytes = cfg.bloomPartitions *
-      BloomSeen.estimatedShardBytes(cfg.bloomCapacityPerShard, cfg.bloomFpp)
-    // While total sketch size fits the broadcast budget (i.e. until the
-    // frontier reaches billions of keys) AND the wave's spawn candidates fit
-    // the driver envelope, the shards live driver-side: driver probe over
-    // collected candidate keys + driver-merged insert. Beyond either bound
-    // the cogroup paths take over — same semantics, fully distributed.
-    val shardsLocal: Option[Array[BloomShard]] =
-      if (sketchBytes <= cfg.bloomBroadcastMaxBytes &&
-          nSpawnedUpper <= cfg.driverCollectMaxRows)
-        Some(shardCache.collect { case (`v`, sh) => sh }
-          .getOrElse(readBloom(v).collect()))
-      else None
+  /** The driver tier's one collect: the wave's byte-free outcome metadata. */
+  private def collectMeta(outcomes: DataFrame): Array[OutcomeMeta] =
+    outcomes
+      .select(col("job"), col("status"), col("action"), col("hasNextPage"),
+        col("newState"), size(col("spawned")).as("nSpawned"), spawnCands.as("spawns"),
+        expr("transform(items, (it, i) -> named_struct(" +
+          "'_1', i, '_2', it.key, '_3', coalesce(it.image_id, ''), " +
+          "'_4', it.phash))").as("itemMeta"))
+      .as[OutcomeMeta].collect()
+
+  private def metaDf(rows: Array[(String, Long)]): DataFrame = rows.toSeq.toDF("key", "phash")
+
+  /** (key, phash) of every item row up to `committed`: the driver mirror
+    * (Left) or the checkpointed DataFrame (Right), as maintained by the
+    * previous step. A miss (resume, first step after compaction) reads the
+    * delta dirs once (awaiting any in-flight commit); with `mirror` it
+    * refills the driver mirror in one bounded collect while the rows fit
+    * driverCollectMaxRows.
+    */
+  private def existingItemMeta(committed: Int, mirror: Boolean)
+      : Either[Array[(String, Long)], DataFrame] =
+    (itemMetaLocal, itemMetaCache) match {
+      case (Some((`committed`, a)), _) => Left(a)
+      case (_, Some((`committed`, df))) => Right(df)
+      case _ =>
+        awaitCommit()
+        if (!graft.state.StateIO.isDir(rawDir) && latestBaseStep < 0) Left(Array.empty)
+        else {
+          val df = readItemDeltas(committed, withBytes = false)
+            .select(col("key"), col("phash")).toDF()
+          val cap = cfg.driverCollectMaxRows
+          val rows =
+            if (mirror) df.as[(String, Long)].limit(math.min(cap, Int.MaxValue - 1L).toInt + 1)
+              .collect()
+            else Array.empty[(String, Long)]
+          if (mirror && rows.length <= cap) Left(rows) else Right(df.localCheckpoint(true))
+        }
+    }
+
+  /** Replace the item-meta state by `existing ∪ added`, checkpointed. */
+  private def cacheItemMeta(existing: Option[DataFrame], added: DataFrame,
+      stepNow: Int): Unit = {
+    itemMetaLocal = None
+    itemMetaCache = Some((stepNow,
+      existing.fold(added)(_.unionByName(added)).localCheckpoint(true)))
+  }
+
+  // -- items (raw outcomes + equality deletes; merge-on-read) -------------
+  // The bytes are already landed; this phase only DECIDES — winner pick,
+  // created-vs-updated flags, phash near-dup suppression — and persists the
+  // decisions as small byte-free side outputs (the winner pick is re-derived
+  // deterministically at read time; suppression lands as the step's
+  // equality-delete keys). Both tiers pick one winner per key by the ONE
+  // canonical ordering (srcJob, image_id, pos) — identical to the read-side
+  // ranking window in readItemDeltas; a divergent tiebreak (e.g. phash)
+  // would let the landed item's phash differ from the one recorded in the
+  // item-meta state, corrupting later near-dup votes and breaking
+  // resume-identical parity.
+  private def itemsPhase(tier: Tier, outcomes: DataFrame, committed: Int,
+      stepNow: Int): ItemDecisions = tier match {
+    case DriverTier(meta) =>
+      val existing = existingItemMeta(committed, mirror = true)
+      // (srcJob, pos, key, image_id, phash)
+      val itemTups = meta.iterator.flatMap(r => r.itemMeta.iterator
+        .map(m => (r.job.urlKey, m._1, m._2, m._3, m._4))).toArray
+      val (suppressedKeys, existedKeys) = Items.suppressAndSeenSets(
+        itemTups.map(t => (t._1, t._3, t._4, t._5)),
+        if (itemTups.isEmpty) None else Some(existing), cfg.phashThreshold)
+      val winners: Map[String, (Long, String, Int, Long)] = itemTups
+        .filterNot(t => suppressedKeys(t._3)).groupBy(_._3).map {
+          case (k, rows) => k -> rows.iterator.map(r => (r._1, r._4, r._2, r._5))
+            .minBy(t => (t._1, t._2, t._3))
+        }
+      val flagBySrc: Map[Long, (Long, Long)] = winners.groupBy(_._2._1).map {
+        case (src, ws) =>
+          val created = ws.count { case (k, _) => !existedKeys(k) }
+          src -> (created.toLong, (ws.size - created).toLong)
+      }
+      // the item-meta update backing the next step's suppression: the
+      // driver mirror while the merged rows fit, else the DataFrame twin
+      val added = winners.iterator.map { case (k, w) => (k, w._4) }.toArray
+      val stale = existing match {
+        case Left(old) if old.length.toLong + added.length <= cfg.driverCollectMaxRows =>
+          itemMetaLocal = Some((stepNow, old ++ added)); itemMetaCache = None
+          None
+        case _ =>
+          cacheItemMeta(existing.fold(a => Some(metaDf(a)), Some(_)), metaDf(added), stepNow)
+          existing.toOption
+      }
+      ItemDecisions(Left(flagBySrc),
+        if (suppressedKeys.isEmpty) None else Some(suppressedKeys.toSeq.toDF("key")),
+        stale.toSeq)
+    case DistributedTier =>
+      // same outputs, no driver state. The suppressed plan reads only stable
+      // inputs (the landed raw table + the item-meta checkpoint), so the
+      // background commit re-executes it safely.
+      val existing: Option[DataFrame] = existingItemMeta(committed, mirror = false) match {
+        case Left(a) if a.isEmpty => None
+        case Left(a) => Some(metaDf(a).localCheckpoint(true))
+        case Right(df) => Some(df)
+      }
+      val incoming = outcomes
+        .select(col("job.urlKey").as("srcJob"), posexplode(expr(
+          "transform(items, it -> named_struct(" +
+            "'key', it.key, 'image_id', it.image_id, 'phash', it.phash))"))
+          .as(Seq("pos", "it")))
+        .select(col("srcJob"), col("pos"), col("it.key").as("key"),
+          coalesce(col("it.image_id"), lit("")).as("image_id"),
+          col("it.phash").as("phash"))
+      val suppressed = Items.suppressedKeyDf(incoming, existing, cfg.phashThreshold,
+        broadcastIncoming = false)
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("key"))
+        .orderBy(col("srcJob").asc, col("image_id").asc, col("pos").asc)
+      // reused by the flag agg and the item-meta update → checkpoint once
+      val winners = incoming.join(suppressed, Seq("key"), "left_anti")
+        .withColumn("rn", row_number().over(win))
+        .filter(col("rn") === 1).drop("rn")
+        .localCheckpoint(true)
+      val winnersFlagged = existing match {
+        case Some(ex) => winners.join(
+          ex.select(col("key")).distinct().withColumn("existed", lit(true)),
+          Seq("key"), "left")
+        case None => winners.withColumn("existed", lit(false))
+      }
+      val flagDf = winnersFlagged.groupBy(col("srcJob"))
+        .agg(
+          sum(when(coalesce(col("existed"), lit(false)), 0L).otherwise(1L))
+            .as("created"),
+          sum(when(coalesce(col("existed"), lit(false)), 1L).otherwise(0L))
+            .as("updated"))
+      cacheItemMeta(existing, winners.select(col("key"), col("phash")), stepNow)
+      ItemDecisions(Right(flagDf),
+        if (cfg.phashThreshold < 0) None else Some(suppressed),
+        Seq(winners) ++ existing)
+  }
+
+  /** Frontier jobs, entering at `createdStep` with their route's priority,
+    * from (urlKey, url, host, routeId, query) rows (seeds and spawns). */
+  private def toJobs(df: DataFrame, createdStep: Int): Dataset[CrawlJob] = {
     val prioByRoute = typedLit(routes.map { case (k, r) => k -> r.priority })
-    def toJobs(df: DataFrame): Dataset[CrawlJob] = df
-      .withColumn("priority", coalesce(element_at(prioByRoute, col("routeId")), lit(50)))
+    df.withColumn("priority", coalesce(element_at(prioByRoute, col("routeId")), lit(50)))
       .select(col("urlKey").as("_1"), col("url").as("_2"), col("host").as("_3"),
         col("routeId").as("_4"), col("priority").cast("int").as("_5"),
         col("query").as("_6"))
       .as[(Long, String, String, String, Int, Map[String, String])]
       .map { case (k, u, h, r, p, q) =>
         CrawlJob(k, u, h, r, priority = p, query = q,
-          createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
+          createdStep = createdStep, notBeforeStep = createdStep)
       }
-    // (fresh rows; the same rows as an array when driver-resident)
-    val (fresh: Dataset[CrawlJob], freshLocal: Option[Array[CrawlJob]]) =
-      timed("spawn")(shardsLocal match {
-        case Some(shards) =>
-          // ONE collect serves probe + fresh-job construction: candidates
-          // after dedup are spawn-bounded (guarded by driverCollectMaxRows)
-          // and byte-free — the same envelope the previous plan shipped via
-          // broadcast(probed), minus a checkpoint job, a key collect, and a
-          // re-scan per superstep. On the tiny path even that collect goes
-          // away: the SAME resolve → canonicalize → xxhash64 → dedup →
-          // robots pipeline runs as a driver loop over the meta array
-          // (UrlCanon/urlKeyScala/allowedLocal are the exact functions the
-          // plan's expressions evaluate — pinned by the middle-vs-tiny
-          // parity test), zero Spark jobs.
-          val cand: Array[(Long, String, String, String, Map[String, String])] =
-            metaLocal match {
-              case Some(rows) =>
-                val raw = rows.iterator.flatMap(_.spawned.iterator
-                    .map(s => (s.routeId, s.url, s.query))) ++
-                  rows.iterator.filter(_.action.startsWith("redirect:"))
-                    .map(r => (r.job.routeId,
-                      r.action.substring("redirect:".length),
-                      Map.empty[String, String]))
-                val resolved = raw.filter(t => routes.contains(t._1))
-                  .flatMap { case (rid, u, q) =>
-                    val qq = Option(q).getOrElse(Map.empty[String, String])
-                    val ru =
-                      if (u != null && u.nonEmpty) u
-                      else try routes(rid).urlTemplate(qq)
-                      catch { case _: Exception => "" }
-                    if (ru.isEmpty) None
-                    else {
-                      val cu = UrlCanon.canonicalize(ru)
-                      Some((graft.canon.CanonUdfs.urlKeyScala(cu), cu,
-                        UrlCanon.host(cu), rid, qq))
-                    }
-                  }
-                resolved.toArray.groupBy(_._1)
-                  .map { case (_, g) => g.minBy(_._4) } // dedup: min routeId per key
-                  .filter(c => Robots.allowedLocal(c._2, c._3, robotsRules))
-                  .toArray
-              case None => allowedJobsPlan
-                .select(col("urlKey"), col("url"), col("host"), col("routeId"),
-                  col("query"))
-                .as[(Long, String, String, String, Map[String, String])]
-                .collect()
-            }
-          val candKeys = cand.map(_._1)
-          val might = BloomSeen.probeLocal(shards, candKeys, cfg.bloomPartitions)
-          val posSet = candKeys.iterator.zip(might.iterator)
-            .collect { case (k, true) => k }.toSet
-          // Exact check only on the bloom-positive sliver (true hits +
-          // fpp·new): the active frontier is column-scanned on urlKey,
-          // never shuffled; the archive leg prunes to the positive keys'
-          // bucket partitions (archiveProbePlan — PlanSpec-asserted), so
-          // a probe of k keys touches ≤ min(k, archiveBuckets) buckets of
-          // the all-jobs-ever table, not every archived key. Reading the
-          // archive awaits any in-flight commit (it appends a step dir) —
-          // usually a no-op since the commit overlapped the whole fetch;
-          // spawn-free steps (posSet empty) never touch it.
-          val confirmedSeen: Set[Long] =
-            if (posSet.isEmpty) Set.empty
-            else {
-              val posSorted = posSet.toArray.sorted
-              val activeSeen: Set[Long] = frontLocal match {
-                case Some(a) => a.iterator.map(_.urlKey).filter(posSet).toSet
-                case None =>
-                  val posBc = spark.sparkContext.broadcast(posSorted)
-                  val inPos = udf((k: Long) =>
-                    java.util.Arrays.binarySearch(posBc.value, k) >= 0)
-                  front.select(col("urlKey")).filter(inPos(col("urlKey")))
-                    .as[Long].collect().toSet
-              }
-              awaitCommit()
-              val archSeen = archiveProbePlan(posSorted, committed)
-                .map(_.as[Long].collect().toSet)
-                .getOrElse(Set.empty[Long])
-              activeSeen ++ archSeen
-            }
-          val freshKeySet = candKeys.iterator
-            .filter(k => !posSet(k) || !confirmedSeen(k)).toSet
-          val freshJobs = cand.iterator.filter(c => freshKeySet(c._1))
-            .map { case (k, u, h, r, q) =>
-              CrawlJob(k, u, h, r,
-                priority = routes.get(r).map(_.priority).getOrElse(50),
-                query = q, createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
-            }.toArray
-          (spark.createDataset(freshJobs.toSeq), Some(freshJobs))
-        case None =>
-          val allowedJobs = allowedJobsPlan.localCheckpoint(true)
-          allowedJobsCkpt = Some(allowedJobs)
-          val bloom = readBloom(v)
-          val probed = BloomSeen.probe(bloom,
-              allowedJobs.select(col("urlKey")).as[Long], cfg.bloomPartitions)
-            .toDF("urlKey", "might").persist(StorageLevel.MEMORY_AND_DISK)
-          val definitelyNew = allowedJobs.join(
-            broadcast(probed.filter(!col("might")).drop("might")),
-            Seq("urlKey"), "left_semi")
-          val maybeSeen = allowedJobs.join(
-            broadcast(probed.filter(col("might")).drop("might")),
-            Seq("urlKey"), "left_semi")
-          // distributed path already awaited (readBloom above) — the archive
-          // dirs up to `committed` are fully landed. The archive leg joins
-          // on (bucket, urlKey) against the broadcast maybe-seen keys:
-          // bucket is the archive's partition column, so dynamic partition
-          // pruning can drop non-matching bucket dirs before the scan.
-          val bucketsN = cfg.archiveBuckets
-          val seenEver = readArchive(committed) match {
-            case Some(a) => front.select(col("urlKey"))
-              .unionByName(a
-                .join(broadcast(maybeSeen.select(col("urlKey"),
-                  pmod(col("urlKey"), lit(bucketsN)).cast("int").as("bucket"))),
-                  Seq("bucket", "urlKey"), "left_semi")
-                .select(col("urlKey")))
-            case None => front.select(col("urlKey"))
-          }
-          val seenConfirmed = seenEver
-            .join(broadcast(maybeSeen.select(col("urlKey"))), Seq("urlKey"), "left_semi")
-          val confirmedNew = maybeSeen.join(
-            broadcast(seenConfirmed), Seq("urlKey"), "left_anti")
-          val f = toJobs(definitelyNew.unionByName(confirmedNew)).localCheckpoint(true)
-          probed.unpersist()
-          (f, None)
-      })
+  }
 
-    // -- run accounting update (see fields above) ------------------------
-    val freshN = freshLocal.map(_.length.toLong).getOrElse(-1L)
-    fetchedAcc += waveN
-    pendingCount =
-      if (pendingCount >= 0L && contStep >= 0L && freshN >= 0L)
-        pendingCount - waveN + contStep + freshN
-      else -1L
-    if (dlStep >= 0L) dlAcc += dlStep else acctValid = false
-    flags match {
-      case Left(m) => itemsAcc += m.valuesIterator.map(_._1).sum
-      case Right(_) => acctValid = false
+  /** One row per urlKey — the lowest routeId's. */
+  private def minRoutePerKey(df: DataFrame): DataFrame = df
+    .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
+      .partitionBy(col("urlKey")).orderBy(col("routeId"))))
+    .filter(col("rn") === 1).drop("rn")
+
+  private def insertLocal(shards: Array[BloomShard], keys: Array[Long]): Array[BloomShard] = {
+    val byPid = keys.groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
+    shards.map(sh => byPid.get(sh.pid).map(BloomSeen.insertLocal(sh, _)).getOrElse(sh))
+  }
+
+  private val sketchBytes = cfg.bloomPartitions *
+    BloomSeen.estimatedShardBytes(cfg.bloomCapacityPerShard, cfg.bloomFpp)
+
+  // -- spawned jobs: dedup (min routeId per key) → robots → seen-set -------
+  private def spawnsPhase(tier: Tier, outcomes: DataFrame, front: Front, v: Int,
+      committed: Int, stepNow: Int): Spawns = tier match {
+    case DriverTier(meta) =>
+      val cand = meta.iterator.flatMap(_.spawns).toArray.groupBy(_.urlKey)
+        .valuesIterator.map(_.minBy(_.routeId))
+        .filter(c => Robots.allowedLocal(c.url, c.host, robotsRules)).toArray
+      // the bloom shards live driver-side while they fit the broadcast budget
+      if (sketchBytes <= BloomBroadcastMaxBytes) driverSpawns(cand, front, v, committed, stepNow)
+      else distributedSpawns(cand.toSeq.toDF(), front, v, committed, stepNow)
+    case DistributedTier =>
+      val cands = outcomes.select(explode(spawnCands).as("c")).select(col("c.*"))
+      distributedSpawns(Robots.allowed(minRoutePerKey(cands), robotsRules),
+        front, v, committed, stepNow)
+  }
+
+  /** Driver probe of the collected candidates + driver-merged bloom insert. */
+  private def driverSpawns(cand: Array[SpawnCand], front: Front, v: Int,
+      committed: Int, stepNow: Int): Spawns = {
+    val shards = shardCache.collect { case (`v`, sh) => sh }
+      .getOrElse(readBloom(v).collect())
+    val keys = cand.map(_.urlKey)
+    val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
+    val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
+    // Exact check only on the bloom-positive sliver (true hits + fpp·new):
+    // the active frontier is the driver array or a column scan on urlKey,
+    // never shuffled; the archive leg prunes to the positive keys' bucket
+    // partitions (archiveProbePlan — PlanSpec-asserted), so a probe of k
+    // keys touches ≤ min(k, archiveBuckets) buckets of the all-jobs-ever
+    // table, not every archived key. Reading the archive awaits any
+    // in-flight commit (it appends a step dir) — usually a no-op since the
+    // commit overlapped the whole fetch; spawn-free steps never touch it.
+    val seen: Set[Long] =
+      if (pos.isEmpty) Set.empty
+      else {
+        val posSorted = pos.toArray.sorted
+        val active: Set[Long] = front.local match {
+          case Some(a) => a.iterator.map(_.urlKey).filter(pos).toSet
+          case None => front.ds.select(col("urlKey")).filter(urlKeyIn(posSorted))
+            .as[Long].collect().toSet
+        }
+        awaitCommit()
+        active ++ archiveProbePlan(posSorted, committed)
+          .map(_.as[Long].collect().toSet).getOrElse(Set.empty[Long])
+      }
+    val fresh = cand.filterNot(c => seen(c.urlKey)).map(c =>
+      CrawlJob(c.urlKey, c.url, c.host, c.routeId,
+        priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
+        query = c.query, createdStep = stepNow + 1, notBeforeStep = stepNow + 1))
+    val merged = insertLocal(shards, fresh.map(_.urlKey))
+    shardCache = Some((v + 1, merged))
+    Spawns(spark.createDataset(fresh.toSeq), Some(fresh),
+      spark.createDataset(merged.toSeq), Nil)
+  }
+
+  /** Cogroup bloom probe, then an exact semi-join on the maybe-seen keys. */
+  private def distributedSpawns(allowedPlan: DataFrame, front: Front, v: Int,
+      committed: Int, stepNow: Int): Spawns = {
+    shardCache = None
+    val allowed = allowedPlan.localCheckpoint(true)
+    val bloom = readBloom(v)
+    val probed = BloomSeen.probe(bloom,
+        allowed.select(col("urlKey")).as[Long], cfg.bloomPartitions)
+      .toDF("urlKey", "might").persist(StorageLevel.MEMORY_AND_DISK)
+    val definitelyNew = allowed.join(
+      broadcast(probed.filter(!col("might")).drop("might")),
+      Seq("urlKey"), "left_semi")
+    val maybeSeen = allowed.join(
+      broadcast(probed.filter(col("might")).drop("might")),
+      Seq("urlKey"), "left_semi")
+    // readBloom above already awaited the commit — the archive dirs up to
+    // `committed` are fully landed. The archive leg joins on (bucket,
+    // urlKey) against the broadcast maybe-seen keys: bucket is the
+    // archive's partition column, so dynamic partition pruning can drop
+    // non-matching bucket dirs before the scan.
+    val seenEver = readArchive(committed) match {
+      case Some(a) => front.ds.select(col("urlKey"))
+        .unionByName(a
+          .join(broadcast(maybeSeen.select(col("urlKey"),
+            pmod(col("urlKey"), lit(cfg.archiveBuckets)).cast("int").as("bucket"))),
+            Seq("bucket", "urlKey"), "left_semi")
+          .select(col("urlKey")))
+      case None => front.ds.select(col("urlKey"))
     }
+    val seenConfirmed = seenEver
+      .join(broadcast(maybeSeen.select(col("urlKey"))), Seq("urlKey"), "left_semi")
+    val confirmedNew = maybeSeen.join(
+      broadcast(seenConfirmed), Seq("urlKey"), "left_anti")
+    val fresh = toJobs(definitelyNew.unionByName(confirmedNew), stepNow + 1)
+      .localCheckpoint(true)
+    probed.unpersist()
+    Spawns(fresh, None,
+      BloomSeen.insert(bloom, fresh.map(_.urlKey), cfg.bloomPartitions),
+      Seq(allowed, fresh))
+  }
 
-    // -- job-state updates + fetch log -----------------------------------
+  private def jobStatePhase(tier: Tier, outcomes: DataFrame,
+      flags: Either[Map[Long, (Long, Long)], DataFrame],
+      freshLocal: Option[Array[CrawlJob]], waveN: Long, stepNow: Int): JobUpdates = {
     // locals only in executor closures — capturing fields would serialize `this`
     val routesLocal = routesBc
-    val backoffLocal = cfg.retryBackoffSteps
-    // Both paths run the SAME transition function (CrawlEngine.advance /
-    // logRow). Tiny path: one driver loop over the meta array (flags are
-    // the driver map by construction) → local relations, no re-scan of the
-    // landed table for the state rewrite, the fetch-log write OR the
-    // archive write. Distributed path: a byte-free Dataset projection with
-    // flags attached by broadcast map or left join.
-    val (updatedWave: Dataset[CrawlJob], stepFetchLog: DataFrame,
-         updatedLocal: Option[Array[CrawlJob]]) =
-      (metaLocal, flags) match {
-        case (Some(rows), Left(flagBySrc)) =>
-          val upd = rows.map { r =>
-            val (c, u) = flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))
-            val tdel = routes.get(r.job.routeId).map(_.transitionDelay).getOrElse(0)
-            CrawlEngine.advance(r.job, r.action, r.hasNextPage, r.newState,
-              r.spawned.size, c, u, stepNow, tdel, backoffLocal)
-          }
-          val logs = rows.map { r =>
-            val (c, u) = flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))
+    val backoff = cfg.retryBackoffSteps
+    fetchedAcc += waveN
+    ((tier, flags): @unchecked) match {
+      case (DriverTier(meta), Left(flagBySrc)) =>
+        // run accounting (see the fields): exact off the outcome metadata
+        dlAcc += meta.count(r => r.status >= 400 && r.action == "stop")
+        itemsAcc += flagBySrc.valuesIterator.map(_._1).sum
+        val cont = meta.count(r => r.action == "retry" || (r.action == "ok" && r.hasNextPage))
+        pendingCount = freshLocal match {
+          case Some(fr) if pendingCount >= 0L => pendingCount - waveN + cont + fr.length
+          case _ => -1L
+        }
+        // one driver loop → local relations: no re-scan of the landed table
+        // for the state rewrite, the fetch-log write OR the archive write
+        val rows = meta.map { r =>
+          val (c, u) = flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))
+          val tdel = routes.get(r.job.routeId).map(_.transitionDelay).getOrElse(0)
+          (CrawlEngine.advance(r.job, r.action, r.hasNextPage, r.newState,
+              r.nSpawned, c, u, stepNow, tdel, backoff),
             CrawlEngine.logRow(stepNow, r.job, r.status, r.action,
-              r.hasNextPage, r.spawned.size, c, u)
-          }
-          (spark.createDataset(upd.toSeq).coalesce(1),
-            spark.createDataset(logs.toSeq).coalesce(1).toDF(), Some(upd))
-        case _ =>
-          val metaDs = outcomes.select(col("job").as("_1"), col("status").as("_2"),
-              col("action").as("_3"), col("hasNextPage").as("_4"),
-              col("newState").as("_5"), size(col("spawned")).as("_6"))
-            .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int)]
-          val metaFlagged: Dataset[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)] =
-            flags match {
-              case Left(flagBySrc) =>
-                val flagBc = spark.sparkContext.broadcast(flagBySrc)
-                metaDs.map { case (job, st, a, h, ns, n) =>
-                  val (c, u) = flagBc.value.getOrElse(job.urlKey, (0L, 0L))
-                  (job, st, a, h, ns, n, c, u)
-                }
-              case Right(flagDf) =>
-                metaDs.join(flagDf.withColumnRenamed("srcJob", "jk"),
-                    col("_1.urlKey") === col("jk"), "left")
-                  .select(col("_1"), col("_2"), col("_3"), col("_4"), col("_5"),
-                    col("_6"), coalesce(col("created"), lit(0L)).as("_7"),
-                    coalesce(col("updated"), lit(0L)).as("_8"))
-                  .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)]
-            }
-          val upd = metaFlagged.map {
-            case (job, _, action, hasNextPage, newState, nSpawned, created, updated) =>
-              val tdel = routesLocal.value.get(job.routeId)
-                .map(_.transitionDelay).getOrElse(0)
-              CrawlEngine.advance(job, action, hasNextPage, newState,
-                nSpawned, created, updated, stepNow, tdel, backoffLocal)
-          }
-          val logDf = metaFlagged.map {
-            case (job, status, action, hasNext, _, nSpawned, created, updated) =>
-              CrawlEngine.logRow(stepNow, job, status, action, hasNext,
-                nSpawned, created, updated)
-          }.toDF()
-          (upd, logDf, None)
-      }
+              r.hasNextPage, r.nSpawned, c, u))
+        }
+        val upd = rows.map(_._1)
+        JobUpdates(spark.createDataset(upd.toSeq).coalesce(1),
+          spark.createDataset(rows.map(_._2).toSeq).coalesce(1).toDF(), Some(upd))
+      case (DistributedTier, Right(flagDf)) =>
+        pendingCount = -1L
+        acctValid = false
+        // a byte-free projection of the landed outcomes, flags left-joined
+        val metaFlagged = outcomes
+          .join(flagDf.withColumnRenamed("srcJob", "jk"), col("job.urlKey") === col("jk"), "left")
+          .select(col("job").as("_1"), col("status").as("_2"), col("action").as("_3"),
+            col("hasNextPage").as("_4"), col("newState").as("_5"),
+            size(col("spawned")).as("_6"), coalesce(col("created"), lit(0L)).as("_7"),
+            coalesce(col("updated"), lit(0L)).as("_8"))
+          .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)]
+        val upd = metaFlagged.map {
+          case (job, _, action, hasNextPage, newState, nSpawned, created, updated) =>
+            val tdel = routesLocal.value.get(job.routeId)
+              .map(_.transitionDelay).getOrElse(0)
+            CrawlEngine.advance(job, action, hasNextPage, newState,
+              nSpawned, created, updated, stepNow, tdel, backoff)
+        }
+        val log = metaFlagged.map {
+          case (job, status, action, hasNext, _, nSpawned, created, updated) =>
+            CrawlEngine.logRow(stepNow, job, status, action, hasNext,
+              nSpawned, created, updated)
+        }.toDF()
+        JobUpdates(upd, log, None)
+    }
+  }
 
-    // -- frontier rewrite + per-host crawl-delay bump --------------------
+  /** The next frontier — the wave's untouched rows, its unfinished updates
+    * and the fresh jobs, crawl-delay bumped — kept as the driver array while
+    * it fits [[driverRows]], else checkpointed. Returns the rows the commit
+    * writes and the previous frontier checkpoint, released after it.
+    */
+  private def frontierPhase(tier: Tier, front: Front, wave: Dataset[CrawlJob],
+      jobs: JobUpdates, spawns: Spawns, v: Int, stepNow: Int)
+      : (Dataset[CrawlJob], Option[Dataset[CrawlJob]]) = {
     // robots crawl-delay: bump hosts fetched this wave. The delayed-host
     // universe is the robots rules table (tiny by design), so the touched∩
     // delayed set collects driver-side at ANY wave size.
-    val hostNext: Map[String, Int] =
-      if (hostDelay.isEmpty) Map.empty
-      else metaLocal match {
-        case Some(rows) => rows.iterator.map(_.job.host)
-          .filter(hostDelay.contains).distinct
-          .map(h => h -> (stepNow + hostDelay(h))).toMap
-        case None => wave.select(col("host")).distinct()
-          .filter(col("host").isin(hostDelay.keys.toSeq: _*))
-          .as[String].collect()
-          .map(h => h -> (stepNow + hostDelay(h))).toMap
+    val (touched: Seq[String], waveKeys: Either[Array[Long], DataFrame]) = tier match {
+      case DriverTier(meta) =>
+        (meta.map(_.job.host).toSeq, Left(meta.map(_.job.urlKey).sorted))
+      case DistributedTier =>
+        (if (hostDelay.isEmpty) Nil
+         else wave.select(col("host")).distinct()
+           .filter(col("host").isin(hostDelay.keys.toSeq: _*)).as[String].collect().toSeq,
+          Right(wave.select(col("urlKey"))))
+    }
+    val hostNext: Map[String, Int] = touched.distinct.filter(hostDelay.contains)
+      .map(h => h -> (stepNow + hostDelay(h))).toMap
+    val next: Either[Array[CrawlJob], Dataset[CrawlJob]] =
+      (front.local, jobs.updatedLocal, spawns.freshLocal) match {
+        case (Some(f), Some(upd), Some(fr)) =>
+          // an array pass: the fetch stage maps wave rows 1:1 to outcomes,
+          // so the updated rows carry every wave key
+          val inWave = upd.iterator.map(_.urlKey).toSet
+          val a = (f.iterator.filterNot(j => inWave(j.urlKey)) ++
+            upd.iterator.filterNot(_.state.finished) ++ fr.iterator)
+            .map(j => hostNext.get(j.host) match {
+              case Some(n) if !j.state.finished && n > j.notBeforeStep =>
+                j.copy(notBeforeStep = n)
+              case _ => j
+            }).toArray
+          if (a.length <= driverRows) Left(a)
+          else Right(spark.createDataset(a.toSeq).localCheckpoint(true))
+        case _ =>
+          // driver-tier wave keys filter the frontier in one narrow scan;
+          // a distributed wave anti-joins it (strategy left to Catalyst)
+          val untouched = waveKeys.fold(
+            keys => front.ds.filter(!urlKeyIn(keys)),
+            keys => front.ds.join(keys, Seq("urlKey"), "left_anti").as[CrawlJob])
+          val frontier2 = untouched
+            .unionByName(jobs.updated.filter(!col("state.finished")))
+            .unionByName(spawns.fresh)
+          val bumped =
+            if (hostNext.isEmpty) frontier2
+            else {
+              val nextLit = typedLit(hostNext)
+              frontier2.toDF()
+                .withColumn("notBeforeStep",
+                  when(element_at(nextLit, col("host")).isNotNull && !col("state.finished"),
+                    greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
+                  .otherwise(col("notBeforeStep")))
+                .as[CrawlJob]
+            }
+          Right(bumped.localCheckpoint(true))
       }
-    // Jobs that finished THIS step leave the hot frontier for the append-
-    // only archive (written in the commit below); the versioned frontier —
-    // scanned, rewritten and snapshotted every superstep — stays O(pending).
-    val archivedWave = updatedWave.filter(col("state.finished"))
-    // Driver frontier + driver job-state updates + driver fresh jobs ⇒ the
-    // rewrite is an array pass (the fetch stage maps wave rows 1:1 to
-    // outcomes, so the updated rows carry every wave key).
-    val nextLocal: Option[Array[CrawlJob]] = for {
-      f <- frontLocal; upd <- updatedLocal; fr <- freshLocal
-    } yield {
-      val waveKeys = upd.iterator.map(_.urlKey).toSet
-      (f.iterator.filterNot(j => waveKeys(j.urlKey)) ++
-        upd.iterator.filterNot(_.state.finished) ++ fr.iterator)
-        .map(j => hostNext.get(j.host) match {
-          case Some(n) if !j.state.finished && n > j.notBeforeStep =>
-            j.copy(notBeforeStep = n)
-          case _ => j
-        }).toArray
-    }
-    // The Dataset rewrite. Driver-sized waves: keys broadcast → the
-    // frontier is narrowly scanned and filtered, never shuffled or joined —
-    // one codegen'd pass. Larger waves: plain anti-join, strategy left to
-    // Catalyst/AQE.
-    def frontierPlan: Dataset[CrawlJob] = {
-      val untouched =
-        if (waveOnDriver) {
-          // the tiny path's meta array already holds every wave key
-          val waveKeysBc = spark.sparkContext.broadcast(
-            metaLocal.map(_.map(_.job.urlKey).sorted).getOrElse(
-              wave.select(col("urlKey")).as[Long].collect().sorted))
-          val notInWave = udf((k: Long) =>
-            java.util.Arrays.binarySearch(waveKeysBc.value, k) < 0)
-          front.filter(notInWave(col("urlKey"))).as[CrawlJob]
-        } else
-          front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
-            .as[CrawlJob]
-      val frontier2 = untouched
-        .unionByName(updatedWave.filter(!col("state.finished")))
-        .unionByName(fresh)
-      if (hostNext.isEmpty) frontier2
-      else {
-        val nextLit = typedLit(hostNext)
-        frontier2.toDF()
-          .withColumn("notBeforeStep",
-            when(element_at(nextLit, col("host")).isNotNull && !col("state.finished"),
-              greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
-            .otherwise(col("notBeforeStep")))
-          .as[CrawlJob]
-      }
-    }
+    val prev = frontierCache.collect { case (`v`, f) => f }
+    frontierLocal = next.left.toOption.map((v + 1, _))
+    frontierCache = next.toOption.map((v + 1, _))
+    (next.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity), prev)
+  }
 
-    // -- bloom update -----------------------------------------------------
-    val bloom2 = (shardsLocal, freshLocal) match {
-      case (Some(shards), Some(fj)) =>
-        val byPid = fj.map(_.urlKey).groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
-        val merged = shards.map(sh =>
-          byPid.get(sh.pid).map(ks => BloomSeen.insertLocal(sh, ks)).getOrElse(sh))
-        shardCache = Some((v + 1, merged))
-        spark.createDataset(merged.toSeq)
-      case _ =>
-        shardCache = None
-        BloomSeen.insert(readBloom(v), fresh.map(_.urlKey), cfg.bloomPartitions)
-    }
-
-    // -- append-only writes (invisible until the snapshot commit below) ---
-    // full write parallelism — item deltas carry the image bytes, and a
-    // capped coalesce made this write a fixed serial cost that broke N-vs-4N
-    // scaling (measured). Small steps produce small files; compaction is a
-    // maintenance job, not a superstep cost.
-    // uncompressed: the payload column is already PNG/JPEG-compressed, so
-    // parquet snappy only burns CPU on bytes it cannot shrink (the small
-    // metadata columns still dictionary/RLE-encode regardless)
-    // The next superstep's frontier: the driver array while it fits tinyCap.
-    // Otherwise the wave scans an eager checkpoint from memory, which the
-    // background frontier write below reuses (no recompute, no re-read of
-    // the snapshot). Byte-free rows — cheap to materialize.
-    val prevFrontCkpt: Option[Dataset[CrawlJob]] =
-      frontierCache.collect { case (`v`, f) => f }
-    val nextFront: Either[Array[CrawlJob], Dataset[CrawlJob]] =
-      timed("front.next")(nextLocal match {
-        case Some(a) if a.length <= tinyCap => Left(a)
-        case Some(a) => Right(spark.createDataset(a.toSeq).localCheckpoint(true))
-        case None => Right(frontierPlan.localCheckpoint(true))
-      })
-    frontierLocal = nextFront.left.toOption.map((v + 1, _))
-    frontierCache = nextFront.toOption.map((v + 1, _))
-    val frontierOut: Dataset[CrawlJob] =
-      nextFront.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity)
+  /** Issue the step's snapshot commit (pipelined unless listeners wait on
+    * it). `release` = checkpoints the writes read, freed once they land.
+    */
+  private def commitPhase(v: Int, stepNow: Int, waveN: Long, jobs: JobUpdates,
+      suppressed: Option[DataFrame], frontierOut: Dataset[CrawlJob],
+      bloom: Dataset[BloomShard], release: Seq[Dataset[_]]): Unit = {
     // this version's manifest — the exact counts, taken now: the next
     // superstep advances them while this commit may still be in flight
     val manifest = SnapshotStore.Manifest(v + 1, stepNow, waveN,
       pending = Some(pendingCount).filter(_ >= 0L),
       totals = if (acctValid) Some(SnapshotStore.Totals(fetchedAcc, itemsAcc, dlAcc))
                else None)
+    // Jobs that finished THIS step leave the hot frontier for the append-
+    // only archive; the versioned frontier — scanned, rewritten and
+    // snapshotted every superstep — stays O(pending).
+    val archivedWave = jobs.updated.filter(col("state.finished"))
 
-    // All four superstep writes (delta, fetch log, frontier, bloom) are
-    // independent plans over already-checkpointed inputs — submitted from
-    // four threads so planning + scheduling + small-file IO overlap (Spark
-    // job submission is thread-safe by design). Atomicity is unchanged:
-    // nothing is visible until the manifest rename, and stale delta/log
+    // The superstep writes (fetch log, frontier, bloom, archive, equality
+    // deletes) are independent plans over already-checkpointed inputs —
+    // submitted from parallel threads so planning + scheduling + small-file
+    // IO overlap (Spark job submission is thread-safe by design). Atomicity
+    // is unchanged: nothing is visible until the manifest rename, and stale
     // step dirs from a failed commit are swept by cleanStale on the next
-    // step/resume.
+    // step/resume. The item payloads are ALREADY on disk (landed by the
+    // fetch job); the commit persists only byte-free state.
     // The WHOLE commit is pipelined (see "pipelined commit" at the top):
     // with no listeners it runs on a background thread, overlapping the
     // next superstep's wave+fetch — a superstep's flat driver cost is the
-    // N→4N scaling-efficiency ceiling, and the commit was its largest
-    // term. step s+1 plans off the caches updated above; any disk read
+    // N→4N scaling-efficiency ceiling, and the commit was its largest term.
+    // step s+1 plans off the in-memory state updated above; any disk read
     // awaits. The previous commit (long since done — a whole superstep
     // elapsed) is awaited before this one is issued, so commits are ordered
     // and at most one is in flight.
     timed("commit.await")(awaitCommit())
     def commitWork(): Unit = {
       store.commit(v + 1, manifest) { dir =>
-        // the item payloads are ALREADY on disk (landed by the fetch job);
-        // the commit persists only byte-free state: the step's equality-
-        // delete keys, the fetch log, and the versioned frontier + bloom
         inParallel(Seq(
-          Some(() => stepFetchLog.drop("step").coalesce(1).write.mode("overwrite")
+          Some(() => jobs.log.drop("step").coalesce(1).write.mode("overwrite")
             .parquet(s"${logDir("fetchlog")}/step=$stepNow")),
           Some(() => frontierOut.write.parquet(s"$dir/frontier")),
-          Some(() => bloom2.write.parquet(s"$dir/bloom")),
+          Some(() => bloom.write.parquet(s"$dir/bloom")),
           Some(() => writeArchive(archivedWave.toDF(), stepNow)),
-          suppressedOut.map(sup => () => sup.coalesce(1).write.mode("overwrite")
+          suppressed.map(sup => () => sup.coalesce(1).write.mode("overwrite")
             .parquet(s"$suppressedDir/step=$stepNow"))).flatten: _*)
       }
       store.expire(v + 1 - cfg.retainSnapshots + 1)
-    }
-    // released only after the writes that read them have finished
-    def releaseCheckpoints(): Unit = {
-      Seq(wave, fresh).foreach(_.unpersist())
-      allowedJobsCkpt.foreach(_.unpersist())
-      winnersCkpt.foreach(_.unpersist())
-      prevFrontCkpt.foreach(_.unpersist())
-      staleMeta.foreach(_.unpersist())
     }
     issuedState = Some((v + 1, stepNow))
     if (listeners.nonEmpty) {
       // listener contract: fan-out AFTER the commit (stepLog reads the
       // landed raw outcomes + this step's flags) — so commit synchronously
       timed("commit")(commitWork())
-      val stepLog = stepFetchLog.as[FetchLog]
+      val stepLog = jobs.log.as[FetchLog]
       listeners.foreach(_.onStepCommitted(stepNow, stepLog))
-      releaseCheckpoints()
+      release.foreach(_.unpersist())
     } else {
       import scala.concurrent.ExecutionContext.Implicits.global
       commitInFlight = Some(scala.concurrent.Future {
@@ -1568,12 +1451,11 @@ final class CrawlEngine(
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft-commit")
         try {
           timed("commit.bg")(commitWork())
-          releaseCheckpoints()
+          release.foreach(_.unpersist())
         } finally
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
       })
     }
-    true
   }
 
   /** Run supersteps until the frontier drains or maxSteps is hit. */

@@ -31,7 +31,7 @@ import graft.model.CrawlJob
   *     a single narrow pass (mapPartitions), no further ranking windows.
   *
   * [[waveLocal]] is the same selection over a driver-resident frontier
-  * array (the engine's tiny-frontier path): one sort, then the SAME
+  * array (the engine's driver-resident frontier): one sort, then the SAME
   * [[takeSequential]] walk. The salted phase 1 is only a truncation — it
   * drops jobs the walk would skip anyway (a job the walk takes has fewer
   * than `hostBudget` same-route jobs ahead of it on its host) — so the two

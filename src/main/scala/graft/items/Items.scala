@@ -101,7 +101,7 @@ object Items {
     val (vsExisting, seenKeys) = existing match {
       case None => (Set.empty[String], Set.empty[String])
       case Some(Left(exArr)) =>
-        // driver-resident existing meta (the engine's tiny-crawl mirror):
+        // driver-resident existing meta (the engine's item-meta mirror):
         // the same probe the mapPartitions closure below runs, with zero
         // Spark jobs — identical math, pinned by the engine's path-parity
         // tests

@@ -46,9 +46,9 @@ object Robots {
   /** Driver-side twin of [[allowed]] for one URL — same longest-prefix rule,
     * same tiebreak (equal-length prefixes: disallow wins, matching the
     * window's `allow.asc_nulls_last`), no rule ⇒ allowed. The engine's
-    * tiny-wave spawn path filters driver-resident candidates with this;
-    * parity with the Dataset transform is pinned by the engine's
-    * middle-vs-tiny path test.
+    * driver tier filters its collected spawn candidates with this; parity
+    * with the Dataset transform is pinned by OracleParitySpec's two robots
+    * tests (driver tier, and the forced distributed tier).
     */
   def allowedLocal(url: String, host: String, rules: Seq[RobotsRule]): Boolean = {
     if (rules.isEmpty) return true

@@ -141,34 +141,6 @@ class CrawlEngineSpec extends SparkSpec {
       .sameElements(b.deadLetters.collect().map(_.urlKey).sorted))
   }
 
-  test("middle driver path (probe + per-plan collects) == tiny single-collect path") {
-    // driverCollectMaxRows = 1024 keeps every wave driver-resident but puts
-    // the tiny-path threshold (maxRows/1024) at 1 row, so multi-row waves
-    // run the probe + per-plan-collect middle path; the default config runs
-    // the single-collect tiny path. Items, frontier AND the full fetch log
-    // must be identical.
-    val dirM = tmpDir("engine-middle")
-    val m = new CrawlEngine(spark, routes, fetcher, Nil,
-      EngineConfig(statePath = dirM, hostBudget = 2,
-        bloomPartitions = 4, bloomCapacityPerShard = 1 << 16,
-        driverCollectMaxRows = 1024L))
-    m.seed(SyntheticCorpus.seeds(spec))
-    m.run()
-    val dirT = tmpDir("engine-tiny")
-    val t = newEngine(dirT)
-    t.seed(SyntheticCorpus.seeds(spec))
-    t.run()
-    val im = m.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
-    val it = t.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
-    assert(im.sameElements(it), "middle-path items differ from tiny path")
-    val fm = m.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
-    val ft = t.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
-    assert(fm.sameElements(ft), "middle-path frontier differs from tiny path")
-    val lm = m.fetchLog.collect().sortBy(l => (l.step, l.urlKey))
-    val lt = t.fetchLog.collect().sortBy(l => (l.step, l.urlKey))
-    assert(lm.sameElements(lt), "middle-path fetch log differs from tiny path")
-  }
-
   test("hostMinDelayMs bounds the per-host fetch rate across split tasks") {
     PaceRecorder.events.clear()
     val dir = tmpDir("engine-paced")
@@ -315,11 +287,17 @@ class CrawlEngineSpec extends SparkSpec {
     assert(totalsOf(distSum) == totalsOf(straightSum), s"$distSum vs $straightSum")
   }
 
+  def itemsOf(e: CrawlEngine) =
+    e.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1).toSeq
+  def frontierOf(e: CrawlEngine) =
+    e.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1).toSeq
+  def logOf(e: CrawlEngine) = e.fetchLog.collect().sortBy(l => (l.step, l.urlKey)).toSeq
+
   test("driver frontier crossing its bound mid-crawl == default run == forced distributed") {
-    // tinyWaveMaxRows = 4: the 2-row seed frontier starts on the driver, the
-    // listings' spawns push it past the bound (Dataset frontier), and the
-    // drain brings it back under (it stays a Dataset frontier, small enough
-    // for the tiny-wave step paths)
+    // driverCollectMaxRows = 4096 puts the driver-tier bound at 4 rows: the
+    // 2-row seed frontier starts on the driver, the listings' spawns push it
+    // past the bound (Dataset frontier), and the drain brings it back under
+    // (it stays a Dataset frontier; its ≤ 4-row waves run the driver tier)
     def crawl(name: String, tweak: EngineConfig => EngineConfig): (CrawlEngine, String) = {
       val dir = tmpDir(name)
       val e = new CrawlEngine(spark, routes, fetcher, Nil, tweak(
@@ -329,23 +307,45 @@ class CrawlEngineSpec extends SparkSpec {
       e.run()
       (e, dir)
     }
-    val (x, dirX) = crawl("engine-crossing", _.copy(tinyWaveMaxRows = 4L))
+    val (x, dirX) = crawl("engine-crossing", _.copy(driverCollectMaxRows = 4096L))
     val (t, _) = crawl("engine-cross-default", identity)
     val (d, _) = crawl("engine-cross-dist", _.copy(driverCollectMaxRows = 0L))
     val pending = (0 to x.currentVersion.get).map(v => manifestOf(dirX, v).pending.get)
     val over = pending.indexWhere(_ > 4)
     assert(pending.head <= 4 && over > 0 && pending.drop(over).exists(p => p > 0 && p <= 4),
       s"the frontier never crossed the bound both ways: $pending")
-    def itemsOf(e: CrawlEngine) =
-      e.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1).toSeq
-    def frontierOf(e: CrawlEngine) =
-      e.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1).toSeq
-    def logOf(e: CrawlEngine) = e.fetchLog.collect().sortBy(l => (l.step, l.urlKey)).toSeq
     for ((other, name) <- Seq((t, "default"), (d, "forced-distributed"))) {
       assert(itemsOf(x) == itemsOf(other), s"items differ from the $name run")
       assert(frontierOf(x) == frontierOf(other), s"frontier differs from the $name run")
       assert(logOf(x) == logOf(other), s"fetch log differs from the $name run")
     }
+  }
+
+  test("driver tier above the old 256-row cap == forced distributed") {
+    // 2 hosts × 160 details at budget 160: the detail wave (320 rows) and the
+    // frontier (320 pending) exceed 256 rows but fit the driver-tier bound
+    // (driverCollectMaxRows / 1024 = 1953 by default)
+    val wide = CorpusSpec(hosts = 2, listPages = 1, detailsPerList = 160)
+    val wideFetcher = new CorpusFetcher(SyntheticCorpus.buildLocal(wide))
+    def crawl(name: String, tweak: EngineConfig => EngineConfig): (CrawlEngine, String) = {
+      val dir = tmpDir(name)
+      val e = new CrawlEngine(spark, SiteRoutes.registry(wide, detailConcurrency = 160),
+        wideFetcher, Nil, tweak(EngineConfig(statePath = dir, hostBudget = 160,
+          retainSnapshots = 1000, bloomPartitions = 4, bloomCapacityPerShard = 1 << 16)))
+      e.seed(SyntheticCorpus.seeds(wide))
+      e.run()
+      (e, dir)
+    }
+    val (w, dirW) = crawl("engine-wide", identity)
+    val (d, _) = crawl("engine-wide-dist", _.copy(driverCollectMaxRows = 0L))
+    assert(w.fetchLog.collect().groupBy(_.step).values.exists(_.length > 256),
+      "no wave above 256 rows")
+    val manifests = (0 to w.currentVersion.get).map(manifestOf(dirW, _))
+    assert(manifests.forall(m => m.pending.isDefined && m.totals.isDefined), manifests)
+    assert(manifests.exists(_.pending.get > 256), manifests)
+    assert(itemsOf(w) == itemsOf(d), "items differ from the forced-distributed run")
+    assert(frontierOf(w) == frontierOf(d), "frontier differs from the forced-distributed run")
+    assert(logOf(w) == logOf(d), "fetch log differs from the forced-distributed run")
   }
 
   test("compaction mid-crawl: identical final state, absorbed deltas dropped") {

@@ -2,9 +2,17 @@ package graft
 
 import graft.corpus._
 import graft.engine.{CrawlEngine, EngineConfig}
-import graft.fetch.CorpusFetcher
-import graft.model.RobotsRule
+import graft.canon.UrlCanon
+import graft.fetch.{CorpusFetcher, Fetcher}
+import graft.model.{ErrorAction, FetchedPage, RobotsRule, RouteSpec}
 import graft.oracle.NestOracle
+
+/** Serves the page at `source` under the URL `moved` (canonical form). */
+final class MovedPageFetcher(inner: Fetcher, moved: String, source: String) extends Fetcher {
+  override def fetch(url: String, attempt: Int): FetchedPage =
+    if (url == moved) inner.fetch(source, attempt).copy(url = moved)
+    else inner.fetch(url, attempt)
+}
 
 /** North-rule parity: the distributed engine must reproduce the
   * single-threaded nest-semantics oracle's crawl ordering, final URL-seen
@@ -19,7 +27,9 @@ class OracleParitySpec extends SparkSpec {
   lazy val routes = SiteRoutes.registry(spec)
 
   def runBoth(robots: Seq[RobotsRule],
-      tweak: EngineConfig => EngineConfig = identity): (CrawlEngine, NestOracle) = {
+      tweak: EngineConfig => EngineConfig = identity,
+      routes: Map[String, RouteSpec] = this.routes,
+      fetcher: Fetcher = this.fetcher): (CrawlEngine, NestOracle) = {
     val eng = new CrawlEngine(spark, routes, fetcher, robots,
       tweak(EngineConfig(statePath = tmpDir("parity"), hostBudget = budget,
         phashThreshold = -1, bloomPartitions = 4,
@@ -116,5 +126,24 @@ class OracleParitySpec extends SparkSpec {
     oracle.seed(SyntheticCorpus.seeds(spec))
     oracle.run()
     assertParity(eng, oracle)
+  }
+
+  test("parity holds when onError redirects: the target is enqueued and crawled") {
+    // every planted 404 redirects to one non-canonical URL: the first
+    // redirect enqueues it (canonicalized), later ones dedup against it
+    val target = "HTTP://H0.test:80/img/../moved"
+    val moved = UrlCanon.canonicalize(target)
+    val detail = routes(SyntheticCorpus.DETAIL)
+    val redirecting = routes.updated(SyntheticCorpus.DETAIL, detail.copy(onError =
+      (status, _) => if (status >= 500) ErrorAction.Retry else ErrorAction.Redirect(target)))
+    val movedFetcher = new MovedPageFetcher(fetcher, moved, spec.detailUrl(0, 0))
+    for (tweak <- Seq[EngineConfig => EngineConfig](identity, _.copy(driverCollectMaxRows = 0L))) {
+      val (eng, oracle) = runBoth(Nil, tweak, redirecting, movedFetcher)
+      assertParity(eng, oracle)
+      val log = eng.fetchLog.collect()
+      assert(log.count(_.action == s"redirect:$target") > 1, "no redirects to dedup")
+      assert(log.count(l => l.url == moved && l.action == "ok") == 1,
+        "the redirect target was not crawled exactly once")
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.corpus._
 import graft.engine.{CrawlEngine, EngineConfig}
 import graft.fetch.CorpusFetcher
+import graft.model.SpawnedJob
 import graft.oracle.NestOracle
 import graft.testkit.RouteHarness
 
@@ -20,11 +21,11 @@ class TemplatedEnqueueSpec extends SparkSpec {
   lazy val fetcher = new CorpusFetcher(SyntheticCorpus.buildLocal(spec))
 
   def run(routes: Map[String, graft.model.RouteSpec], dir: String,
-      byQuery: Boolean): CrawlEngine = {
+      byQuery: Boolean, tweak: EngineConfig => EngineConfig = identity): CrawlEngine = {
     val eng = new CrawlEngine(spark, routes, fetcher, Nil,
-      EngineConfig(statePath = tmpDir(dir), hostBudget = 2,
+      tweak(EngineConfig(statePath = tmpDir(dir), hostBudget = 2,
         phashThreshold = -1, bloomPartitions = 4,
-        bloomCapacityPerShard = 1 << 16))
+        bloomCapacityPerShard = 1 << 16)))
     if (byQuery) eng.seedQueries(SyntheticCorpus.seedQueries(spec))
     else eng.seed(SyntheticCorpus.seeds(spec))
     eng.run()
@@ -44,22 +45,43 @@ class TemplatedEnqueueSpec extends SparkSpec {
   }
 
   test("query-templated SPAWNS: crawl equals the URL-driven crawl and the oracle") {
-    val q = run(SiteRoutes.queryRegistry(spec), "tmpl-spawn-q", byQuery = true)
     val u = run(SiteRoutes.registry(spec), "tmpl-spawn-u", byQuery = false)
-    assert(q.frontier.collect().map(_.url).sorted
-      .sameElements(u.frontier.collect().map(_.url).sorted),
-      "query-spawned frontier differs from URL-spawned")
-    assert(q.items.collect().map(i => (i.key, i.caption, i.phash)).sortBy(_._1)
-      .sameElements(u.items.collect().map(i => (i.key, i.caption, i.phash)).sortBy(_._1)))
-    // spawned detail jobs carry their query params
-    val details = q.frontier.collect().filter(_.routeId == SyntheticCorpus.DETAIL)
-    assert(details.nonEmpty && details.forall(_.query.contains("id")))
+    // a listing that also spawns one job per page whose URL template throws
+    // (no "id" param): the job is dropped, yet counts in the spawned stat
+    val base = SiteRoutes.queryRegistry(spec)
+    val listing = base(SyntheticCorpus.LISTING)
+    val throwing = base.updated(SyntheticCorpus.LISTING, listing.copy(scraper = page => {
+      val r = listing.scraper(page)
+      if (page.status != 200) r
+      else r.copy(jobs = r.jobs :+ SpawnedJob(SyntheticCorpus.DETAIL, url = "",
+        query = Map("host" -> page.host)))
+    }))
+    for ((routes, extra) <- Seq((base, 0), (throwing, 1));
+         (tweak, tier) <- Seq[(EngineConfig => EngineConfig, String)](
+           (identity, "driver"), (_.copy(driverCollectMaxRows = 0L), "distributed"))) {
+      val clue = s"${tier} tier, ${extra} throwing spawn(s) per listing page"
+      val q = run(routes, "tmpl-spawn-q", byQuery = true, tweak)
+      assert(q.frontier.collect().map(_.url).sorted
+        .sameElements(u.frontier.collect().map(_.url).sorted),
+        s"query-spawned frontier differs from URL-spawned ($clue)")
+      assert(q.items.collect().map(i => (i.key, i.caption, i.phash)).sortBy(_._1)
+        .sameElements(u.items.collect().map(i => (i.key, i.caption, i.phash)).sortBy(_._1)),
+        clue)
+      // spawned detail jobs carry their query params
+      val jobs = q.frontier.collect()
+      val details = jobs.filter(_.routeId == SyntheticCorpus.DETAIL)
+      assert(details.nonEmpty && details.forall(_.query.contains("id")), clue)
+      assert(jobs.filter(_.routeId == SyntheticCorpus.LISTING)
+        .forall(_.stats.spawned == spec.listPages * (spec.detailsPerList + extra)), clue)
 
-    val oracle = new NestOracle(SiteRoutes.queryRegistry(spec), fetcher, Nil, 2)
-    oracle.seedQueries(SyntheticCorpus.seedQueries(spec))
-    oracle.run()
-    assert(q.frontier.collect().map(_.url).toSet == oracle.seenUrls)
-    assert(q.items.collect().map(_.key).toSet == oracle.finalItemKeys)
+      val oracle = new NestOracle(routes, fetcher, Nil, 2)
+      oracle.seedQueries(SyntheticCorpus.seedQueries(spec))
+      oracle.run()
+      assert(q.frontier.collect().map(_.url).toSet == oracle.seenUrls, clue)
+      assert(q.items.collect().map(_.key).toSet == oracle.finalItemKeys, clue)
+      assert(jobs.map(j => j.urlKey -> ((j.stats.pages, j.stats.spawned,
+        j.state.finished))).toMap == oracle.jobStats, clue)
+    }
   }
 
   test("RouteHarness: both synthetic routes pass their declared self-tests") {
