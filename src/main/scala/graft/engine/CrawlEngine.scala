@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.corpus.CorpusRow
@@ -286,11 +286,14 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   * collects its byte-free outcome metadata in one job and runs phases 3–5
   * as driver passes (with the frontier a driver array while it fits the
   * same bound) — two foreground Spark jobs per superstep; a larger wave
-  * runs the Dataset plans above. A frontier that leaves the driver array
-  * (it outgrew the bound, or the engine resumed mid-crawl) stays a Dataset
-  * for the rest of the run. Each manifest records the exact pending count
-  * and run totals while the driver tier keeps them, so resuming a drained
-  * crawl runs no Spark job.
+  * runs the Dataset plans above. A driver-array frontier also carries its
+  * finished jobs, so a step whose frontier fits the bound writes no
+  * archive; they are flushed in one batch when it would outgrow the bound
+  * (see `archiveDir`). A frontier that leaves the driver array (it outgrew
+  * the bound, or the engine resumed mid-crawl) stays a Dataset for the
+  * rest of the run and archives its finished jobs every step. Each
+  * manifest records the exact pending count and run totals while the
+  * driver tier keeps them, so resuming a drained crawl runs no Spark job.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -366,13 +369,16 @@ final class CrawlEngine(
     * superstep's wave scans memory instead of re-reading the snapshot. Set
     * whenever the frontier is not the driver array [[frontierLocal]]. */
   private var frontierCache: Option[(Int, Dataset[CrawlJob])] = None
-  /** version → the unfinished frontier of that version as a driver array,
-    * while it has ≤ [[driverRows]] rows (the driver-resident frontier). The
-    * wave, the empty-wave clock jump, the exact-seen probe of the active
-    * frontier and the frontier rewrite then run with ZERO Spark jobs: on an
-    * 8-host crawl the Dataset wave alone (salted window + host exchange +
-    * sort, one 3-stage collect) cost 0.3–0.7 s of a 1.1–1.9 s superstep
-    * over ≤ 216 rows, and the frontier checkpoint one more job per step.
+  /** version → the frontier of that version as a driver array, while it
+    * has ≤ [[driverRows]] rows (the driver-resident frontier): its pending
+    * jobs plus the finished ones it carries until a flush (see
+    * [[archiveDir]]), which the exact-seen probe then finds with no archive
+    * read. The wave, the empty-wave clock jump, the exact-seen probe of the
+    * active frontier and the frontier rewrite then run with ZERO Spark
+    * jobs: on an 8-host crawl the Dataset wave alone (salted window + host
+    * exchange + sort, one 3-stage collect) cost 0.3–0.7 s of a 1.1–1.9 s
+    * superstep over ≤ 216 rows, and the frontier checkpoint one more job
+    * per step.
     * The commit writes the array as a local relation (same table layout).
     * Filled by seed() and kept by each driver-tier step while the next
     * frontier fits; a frontier that outgrows it (or a resumed one) stays a
@@ -507,16 +513,33 @@ final class CrawlEngine(
   private def suppressedDir = s"${cfg.statePath}/items_deletes"
   private def itemsBaseDir = s"${cfg.statePath}/items_base"
   // Finished jobs leave the versioned frontier for this append-only archive
-  // (one step dir per superstep, written in the pipelined commit). The hot
-  // frontier — scanned, rewritten and snapshotted EVERY superstep — stays
-  // O(pending jobs); a months-long 10^10-URL crawl would otherwise pay
-  // O(all jobs ever) per step on each of those. The archive is read only by
-  // the [[frontier]] accessor (union view) and by the seen-set EXACT check.
-  // Each step dir is sub-partitioned by `bucket = pmod(urlKey,
-  // archiveBuckets)`, so the bloom-positive probe PRUNES to the buckets of
-  // its positive keys (asserted by PlanSpec) instead of scanning every
-  // archived key — the remaining O(all-jobs-ever) term of a superstep.
+  // in batches: every enqueued job lives in exactly ONE of the latest
+  // versioned frontier and the archive up to its step. A driver-array
+  // frontier carries its finished rows while the merged array fits
+  // [[driverRows]] and flushes them all in one step dir when it would not;
+  // a Dataset frontier flushes every finished row each step, so it never
+  // carries any. The hot frontier — scanned, rewritten and snapshotted
+  // EVERY superstep — stays O(pending + ≤ driverRows carried finished); a
+  // months-long 10^10-URL crawl would otherwise pay O(all jobs ever) per
+  // step on each of those. Batching cuts the commit, not the layout: the
+  // per-step archive of crawl_deep (8 hosts × 3 listings × 8 pages, 4
+  // vCPUs) wrote 25–41 one-row bucket files (+ .crc) per step in a 2-stage
+  // job of 0.71–1.14 s that ran into the next superstep and ended most of
+  // them. The archive is read only by the [[frontier]] accessor (union
+  // view) and by the seen-set EXACT check. Each step dir is sub-partitioned
+  // by `bucket = pmod(urlKey, archiveBuckets)`, so the bloom-positive probe
+  // PRUNES to the buckets of its positive keys (asserted by PlanSpec)
+  // instead of scanning every archived key — the remaining
+  // O(all-jobs-ever) term of a superstep.
   private def archiveDir = s"${cfg.statePath}/jobs_done"
+
+  /** Every engine state write goes through here: no `_SUCCESS` marker.
+    * Nothing reads one — the manifest rename and the committed-step filter
+    * are the commit record, and Spark's file index skips `_` files — while
+    * on a local Hadoop filesystem each marker is 2 more files per write.
+    */
+  private def stateWrite[T](ds: Dataset[T]): DataFrameWriter[T] =
+    ds.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
   private def writeArchive(finished: DataFrame, step: Int): Unit = {
     // Repartition ON the bucket column first: without it every input task
@@ -524,14 +547,14 @@ final class CrawlEngine(
     // W × archiveBuckets tiny files per step (measured ~25k files on the
     // 51k-row bench wave — a flat, core-count-independent commit cost that
     // alone broke the N→4N scaling gate). Hash-partitioning by bucket puts
-    // each bucket in exactly one task ⇒ ≤ archiveBuckets files per step,
+    // each bucket in exactly one task ⇒ ≤ archiveBuckets files per flush,
     // and the shuffled rows are byte-free job rows (cheap).
     val parts = math.min(cfg.archiveBuckets,
       math.max(1, spark.sessionState.conf.numShufflePartitions))
-    finished
+    stateWrite(finished
       .withColumn("bucket", pmod(col("urlKey"), lit(cfg.archiveBuckets)).cast("int"))
-      .repartition(parts, col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite")
+      .repartition(parts, col("bucket")))
+      .partitionBy("bucket").mode("overwrite")
       .parquet(s"$archiveDir/step=$step")
   }
 
@@ -760,9 +783,9 @@ final class CrawlEngine(
       val frontierDs = spark.createDataset(jobsArr.toSeq).coalesce(1)
       store.commit(0, seedManifest(jobsArr.length)) { dir =>
         inParallel(
-          () => frontierDs.write.parquet(s"$dir/frontier"),
-          () => spark.createDataset(shards.toSeq).coalesce(1)
-            .write.parquet(s"$dir/bloom"))
+          () => stateWrite(frontierDs).parquet(s"$dir/frontier"),
+          () => stateWrite(spark.createDataset(shards.toSeq).coalesce(1))
+            .parquet(s"$dir/bloom"))
       }
       shardCache = Some((0, shards))
       if (jobsArr.length <= driverRows) frontierLocal = Some((0, jobsArr))
@@ -775,8 +798,8 @@ final class CrawlEngine(
         BloomSeen.empty(spark, cfg.bloomPartitions, cfg.bloomCapacityPerShard, cfg.bloomFpp),
         jobsP.map(_.urlKey), cfg.bloomPartitions)
       store.commit(0, seedManifest(n)) { dir =>
-        jobsP.write.parquet(s"$dir/frontier")
-        bloom.write.parquet(s"$dir/bloom")
+        stateWrite(jobsP).parquet(s"$dir/frontier")
+        stateWrite(bloom).parquet(s"$dir/bloom")
       }
       jobsP.unpersist()
     }
@@ -859,10 +882,10 @@ final class CrawlEngine(
         val spawns = timed("spawn")(spawnsPhase(tier, outcomes, front, v, committed, stepNow))
         val jobs = jobStatePhase(tier, outcomes, items.flags, spawns.freshLocal,
           waveN, stepNow)
-        val (frontierOut, prevFront) = timed("front.next")(
+        val (frontierOut, archived, prevFront) = timed("front.next")(
           frontierPhase(tier, front, wave, jobs, spawns, v, stepNow))
-        commitPhase(v, stepNow, waveN, jobs, items.suppressed, frontierOut, spawns.bloom,
-          Seq(wave) ++ items.release ++ spawns.release ++ prevFront)
+        commitPhase(v, stepNow, waveN, jobs, items.suppressed, frontierOut, archived,
+          spawns.bloom, Seq(wave) ++ items.release ++ spawns.release ++ prevFront)
         true
     }
   }
@@ -958,9 +981,9 @@ final class CrawlEngine(
     // snapshot commit (readers filter to committed steps).
     val rawPath = s"$rawDir/step=$stepNow"
     timed("fetch")(
-      FetchStage.run(waveFetch, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
-          cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits))
-        .write.mode("overwrite").option("compression", "uncompressed")
+      stateWrite(FetchStage.run(waveFetch, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
+          cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits)))
+        .mode("overwrite").option("compression", "uncompressed")
         .parquet(rawPath))
     spark.read.schema(outcomeSchema).parquet(rawPath)
   }
@@ -1191,13 +1214,15 @@ final class CrawlEngine(
     val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
     val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
     // Exact check only on the bloom-positive sliver (true hits + fpp·new):
-    // the active frontier is the driver array or a column scan on urlKey,
-    // never shuffled; the archive leg prunes to the positive keys' bucket
-    // partitions (archiveProbePlan — PlanSpec-asserted), so a probe of k
-    // keys touches ≤ min(k, archiveBuckets) buckets of the all-jobs-ever
-    // table, not every archived key. Reading the archive awaits any
-    // in-flight commit (it appends a step dir) — usually a no-op since the
-    // commit overlapped the whole fetch; spawn-free steps never touch it.
+    // the active frontier is the driver array (with the finished jobs it
+    // carries) or a column scan on urlKey, never shuffled; only the keys it
+    // misses go to the archive leg, which prunes to their bucket partitions
+    // (archiveProbePlan — PlanSpec-asserted), so a probe of k keys touches
+    // ≤ min(k, archiveBuckets) buckets of the all-jobs-ever table, not
+    // every archived key. Reading the archive awaits any in-flight commit
+    // (it appends a step dir) — usually a no-op since the commit overlapped
+    // the whole fetch; a step whose positives all sit in the frontier never
+    // touches it.
     val seen: Set[Long] =
       if (pos.isEmpty) Set.empty
       else {
@@ -1207,9 +1232,13 @@ final class CrawlEngine(
           case None => front.ds.select(col("urlKey")).filter(urlKeyIn(posSorted))
             .as[Long].collect().toSet
         }
-        awaitCommit()
-        active ++ archiveProbePlan(posSorted, committed)
-          .map(_.as[Long].collect().toSet).getOrElse(Set.empty[Long])
+        val rest = posSorted.filterNot(active)
+        if (rest.isEmpty) active
+        else {
+          awaitCommit()
+          active ++ archiveProbePlan(rest, committed)
+            .map(_.as[Long].collect().toSet).getOrElse(Set.empty[Long])
+        }
       }
     val fresh = cand.filterNot(c => seen(c.urlKey)).map(c =>
       CrawlJob(c.urlKey, c.url, c.host, c.routeId,
@@ -1217,8 +1246,9 @@ final class CrawlEngine(
         query = c.query, createdStep = stepNow + 1, notBeforeStep = stepNow + 1))
     val merged = insertLocal(shards, fresh.map(_.urlKey))
     shardCache = Some((v + 1, merged))
+    // one bloom file per version, as seed() writes it
     Spawns(spark.createDataset(fresh.toSeq), Some(fresh),
-      spark.createDataset(merged.toSeq), Nil)
+      spark.createDataset(merged.toSeq).coalesce(1), Nil)
   }
 
   /** Cogroup bloom probe, then an exact semi-join on the maybe-seen keys. */
@@ -1319,14 +1349,19 @@ final class CrawlEngine(
     }
   }
 
-  /** The next frontier — the wave's untouched rows, its unfinished updates
-    * and the fresh jobs, crawl-delay bumped — kept as the driver array while
-    * it fits [[driverRows]], else checkpointed. Returns the rows the commit
-    * writes and the previous frontier checkpoint, released after it.
+  /** The next frontier — the frontier's untouched rows, the wave's updates
+    * and the fresh jobs, crawl-delay bumped — and the finished rows it
+    * flushes to the archive this step (see [[archiveDir]]). A driver array
+    * keeps its finished rows while the merged array fits [[driverRows]]; an
+    * array that would not fit, and any Dataset frontier, flush all of
+    * theirs. The pending rows stay the driver array while they fit, else
+    * they are checkpointed. Returns the frontier rows the commit writes, the
+    * archive rows (None: no flush) and the previous frontier checkpoint,
+    * released after the commit.
     */
   private def frontierPhase(tier: Tier, front: Front, wave: Dataset[CrawlJob],
       jobs: JobUpdates, spawns: Spawns, v: Int, stepNow: Int)
-      : (Dataset[CrawlJob], Option[Dataset[CrawlJob]]) = {
+      : (Dataset[CrawlJob], Option[Dataset[CrawlJob]], Option[Dataset[CrawlJob]]) = {
     // robots crawl-delay: bump hosts fetched this wave. The delayed-host
     // universe is the robots rules table (tiny by design), so the touched∩
     // delayed set collects driver-side at ANY wave size.
@@ -1341,28 +1376,34 @@ final class CrawlEngine(
     }
     val hostNext: Map[String, Int] = touched.distinct.filter(hostDelay.contains)
       .map(h => h -> (stepNow + hostDelay(h))).toMap
-    val next: Either[Array[CrawlJob], Dataset[CrawlJob]] =
+    val (next: Either[Array[CrawlJob], Dataset[CrawlJob]],
+         archived: Option[Dataset[CrawlJob]]) =
       (front.local, jobs.updatedLocal, spawns.freshLocal) match {
         case (Some(f), Some(upd), Some(fr)) =>
           // an array pass: the fetch stage maps wave rows 1:1 to outcomes,
           // so the updated rows carry every wave key
           val inWave = upd.iterator.map(_.urlKey).toSet
           val a = (f.iterator.filterNot(j => inWave(j.urlKey)) ++
-            upd.iterator.filterNot(_.state.finished) ++ fr.iterator)
+            upd.iterator ++ fr.iterator)
             .map(j => hostNext.get(j.host) match {
               case Some(n) if !j.state.finished && n > j.notBeforeStep =>
                 j.copy(notBeforeStep = n)
               case _ => j
             }).toArray
-          if (a.length <= driverRows) Left(a)
-          else Right(spark.createDataset(a.toSeq).localCheckpoint(true))
+          if (a.length <= driverRows) (Left(a), None)
+          else {
+            val (done, pending) = a.partition(_.state.finished)
+            (if (pending.length <= driverRows) Left(pending)
+             else Right(spark.createDataset(pending.toSeq).localCheckpoint(true)),
+             Option.when(done.nonEmpty)(spark.createDataset(done.toSeq)))
+          }
         case _ =>
           // driver-tier wave keys filter the frontier in one narrow scan;
           // a distributed wave anti-joins it (strategy left to Catalyst)
           val untouched = waveKeys.fold(
             keys => front.ds.filter(!urlKeyIn(keys)),
             keys => front.ds.join(keys, Seq("urlKey"), "left_anti").as[CrawlJob])
-          val frontier2 = untouched
+          val frontier2 = untouched.filter(!col("state.finished"))
             .unionByName(jobs.updated.filter(!col("state.finished")))
             .unionByName(spawns.fresh)
           val bumped =
@@ -1371,40 +1412,43 @@ final class CrawlEngine(
               val nextLit = typedLit(hostNext)
               frontier2.toDF()
                 .withColumn("notBeforeStep",
-                  when(element_at(nextLit, col("host")).isNotNull && !col("state.finished"),
+                  when(element_at(nextLit, col("host")).isNotNull,
                     greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
                   .otherwise(col("notBeforeStep")))
                 .as[CrawlJob]
             }
-          Right(bumped.localCheckpoint(true))
+          // the frontier's carried finished rows (a resumed or spilled
+          // driver array) and the wave's, so the next one carries none
+          (Right(bumped.localCheckpoint(true)),
+           Some(untouched.filter(col("state.finished"))
+             .unionByName(jobs.updated.filter(col("state.finished")))))
       }
     val prev = frontierCache.collect { case (`v`, f) => f }
     frontierLocal = next.left.toOption.map((v + 1, _))
     frontierCache = next.toOption.map((v + 1, _))
-    (next.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity), prev)
+    (next.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity), archived, prev)
   }
 
   /** Issue the step's snapshot commit (pipelined unless listeners wait on
-    * it). `release` = checkpoints the writes read, freed once they land.
+    * it). `archived` = the finished rows the frontier flushed this step, if
+    * it flushed; `release` = checkpoints the writes read, freed once they
+    * land.
     */
   private def commitPhase(v: Int, stepNow: Int, waveN: Long, jobs: JobUpdates,
       suppressed: Option[DataFrame], frontierOut: Dataset[CrawlJob],
-      bloom: Dataset[BloomShard], release: Seq[Dataset[_]]): Unit = {
+      archived: Option[Dataset[CrawlJob]], bloom: Dataset[BloomShard],
+      release: Seq[Dataset[_]]): Unit = {
     // this version's manifest — the exact counts, taken now: the next
     // superstep advances them while this commit may still be in flight
     val manifest = SnapshotStore.Manifest(v + 1, stepNow, waveN,
       pending = Some(pendingCount).filter(_ >= 0L),
       totals = if (acctValid) Some(SnapshotStore.Totals(fetchedAcc, itemsAcc, dlAcc))
                else None)
-    // Jobs that finished THIS step leave the hot frontier for the append-
-    // only archive; the versioned frontier — scanned, rewritten and
-    // snapshotted every superstep — stays O(pending).
-    val archivedWave = jobs.updated.filter(col("state.finished"))
-
-    // The superstep writes (fetch log, frontier, bloom, archive, equality
-    // deletes) are independent plans over already-checkpointed inputs —
-    // submitted from parallel threads so planning + scheduling + small-file
-    // IO overlap (Spark job submission is thread-safe by design). Atomicity
+    // The superstep writes (fetch log, frontier, bloom, equality deletes,
+    // and the archive on a step that flushed) are independent plans over
+    // already-checkpointed inputs — submitted from parallel threads so
+    // planning + scheduling + small-file IO overlap (Spark job submission
+    // is thread-safe by design). Atomicity
     // is unchanged: nothing is visible until the manifest rename, and stale
     // step dirs from a failed commit are swept by cleanStale on the next
     // step/resume. The item payloads are ALREADY on disk (landed by the
@@ -1421,12 +1465,12 @@ final class CrawlEngine(
     def commitWork(): Unit = {
       store.commit(v + 1, manifest) { dir =>
         inParallel(Seq(
-          Some(() => jobs.log.drop("step").coalesce(1).write.mode("overwrite")
+          Some(() => stateWrite(jobs.log.drop("step").coalesce(1)).mode("overwrite")
             .parquet(s"${logDir("fetchlog")}/step=$stepNow")),
-          Some(() => frontierOut.write.parquet(s"$dir/frontier")),
-          Some(() => bloom.write.parquet(s"$dir/bloom")),
-          Some(() => writeArchive(archivedWave.toDF(), stepNow)),
-          suppressed.map(sup => () => sup.coalesce(1).write.mode("overwrite")
+          Some(() => stateWrite(frontierOut).parquet(s"$dir/frontier")),
+          Some(() => stateWrite(bloom).parquet(s"$dir/bloom")),
+          archived.map(a => () => writeArchive(a.toDF(), stepNow)),
+          suppressed.map(sup => () => stateWrite(sup.coalesce(1)).mode("overwrite")
             .parquet(s"$suppressedDir/step=$stepNow"))).flatten: _*)
       }
       store.expire(v + 1 - cfg.retainSnapshots + 1)
@@ -1495,7 +1539,7 @@ final class CrawlEngine(
       if (committed >= 0 && prevBase < committed) {
         val tmp = s"${cfg.statePath}/.compact-items"
         StateIO.deleteRec(tmp)
-        Items.resolve(readItemDeltas(committed)).write.parquet(tmp)
+        stateWrite(Items.resolve(readItemDeltas(committed))).parquet(tmp)
         StateIO.moveReplace(tmp, s"$itemsBaseDir/step=$committed")
         // absorbed inputs — readers already ignore them (max-base rule).
         // NOTE: dropping a raw step dir also drops that step's fetch

@@ -3,7 +3,7 @@ package graft
 import graft.corpus._
 import graft.engine.{CrawlEngine, EngineConfig, RunSummary}
 import graft.fetch.CorpusFetcher
-import graft.model.RobotsRule
+import graft.model.{CrawlJob, RobotsRule}
 import graft.state.SnapshotStore
 import graft.state.SnapshotStore.Totals
 
@@ -321,6 +321,92 @@ class CrawlEngineSpec extends SparkSpec {
     }
   }
 
+  /** Files named `_SUCCESS` anywhere under a state root. */
+  def successMarkers(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.filter(_.getFileName.toString == "_SUCCESS")
+      .map(_.toString).toList
+    finally walk.close()
+  }
+
+  /** Version `v`'s snapshot frontier rows, and the archive rows up to its step. */
+  def snapshotAndArchive(dir: String, v: Int): (Seq[CrawlJob], Seq[CrawlJob]) = {
+    val enc = org.apache.spark.sql.Encoders.product[CrawlJob]
+    val step = manifestOf(dir, v).step
+    val snap = spark.read.schema(enc.schema).parquet(s"$dir/v=$v/frontier").as(enc).collect()
+    val arch =
+      if (!new java.io.File(s"$dir/jobs_done").isDirectory) Array.empty[CrawlJob]
+      else spark.read.schema(enc.schema.add("bucket", "int").add("step", "int"))
+        .parquet(s"$dir/jobs_done").filter(org.apache.spark.sql.functions.col("step") <= step)
+        .drop("bucket", "step").as(enc).collect()
+    (snap.toSeq, arch.toSeq)
+  }
+
+  test("every enqueued job lives in exactly one of the versioned frontier and the archive") {
+    def engine(dir: String, tweak: EngineConfig => EngineConfig, maxSteps: Int = 10000) =
+      new CrawlEngine(spark, routes, fetcher, Nil, tweak(
+        EngineConfig(statePath = dir, hostBudget = 2, maxSteps = maxSteps,
+          retainSnapshots = 1000, bloomPartitions = 4, bloomCapacityPerShard = 1 << 16)))
+    /** Per committed version: the snapshot frontier and the archive up to
+      * its step hold disjoint urlKeys; returns their union's jobs. */
+    def versions(name: String, e: CrawlEngine, dir: String) =
+      (0 to e.currentVersion.get).map { v =>
+        val (snap, arch) = snapshotAndArchive(dir, v)
+        val keys = snap.map(_.urlKey) ++ arch.map(_.urlKey)
+        val twice = keys.size - keys.distinct.size
+        assert(twice == 0,
+          s"$name v$v: $twice jobs held twice (snapshot ${snap.size}, archive ${arch.size})")
+        (snap ++ arch).map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
+      }
+    val runs: Seq[(String, EngineConfig => EngineConfig)] = Seq(
+      ("default", identity),
+      ("crossing", _.copy(driverCollectMaxRows = 4096L)),
+      ("forced-distributed", _.copy(driverCollectMaxRows = 0L)),
+      // a 24-row bound: the ≤ 20 pending jobs always fit, the carried
+      // finished ones overflow it (26 jobs), so the driver array flushes
+      // and stays an array
+      ("flushing", _.copy(driverCollectMaxRows = 24L * 1024)))
+    val views = runs.map { case (name, tweak) =>
+      val dir = tmpDir(s"engine-once-$name")
+      val e = engine(dir, tweak)
+      e.seed(SyntheticCorpus.seeds(spec))
+      e.run()
+      val pv = versions(name, e, dir)
+      assert(pv.last == frontierOf(e), s"$name: frontier is not snapshot ∪ archive")
+      assert(successMarkers(dir).isEmpty, s"$name: ${successMarkers(dir).take(3)}")
+      (name, e, dir, pv)
+    }
+    val (_, default, dirDefault, base) = views.head
+    for ((name, _, _, pv) <- views.tail)
+      assert(pv == base, s"$name run holds other jobs than the default run at some version")
+    // the default run's frontier fits its bound: it carries its finished
+    // jobs and never writes the archive; the crossing run flushes
+    assert(!new java.io.File(s"$dirDefault/jobs_done").exists, "default run archived")
+    assert(snapshotAndArchive(views(1)._3, base.size - 1)._2.nonEmpty,
+      "crossing run never flushed")
+    val dirFlush = views(3)._3
+    assert((0 until base.size).forall(v => manifestOf(dirFlush, v).pending.get <= 24) &&
+      snapshotAndArchive(dirFlush, base.size - 1)._2.nonEmpty,
+      "flushing run never flushed a driver array whose pending jobs fit")
+
+    // kill after step 3, finished jobs carried in the snapshot → resume
+    val dirK = tmpDir("engine-once-killed")
+    val k = engine(dirK, identity, maxSteps = 3)
+    k.seed(SyntheticCorpus.seeds(spec))
+    k.run()
+    val (snapK, archK) = snapshotAndArchive(dirK, k.currentVersion.get)
+    assert(snapK.exists(_.state.finished) && archK.isEmpty,
+      "the killed run carries no finished jobs in its snapshot")
+    val r = engine(dirK, identity)
+    r.resume()
+    assert(versions("resumed", r, dirK) == base, "resumed run differs from the default run")
+    assert(itemsOf(r) == itemsOf(default) && logOf(r) == logOf(default),
+      "resumed items or fetch log differ from the default run")
+    val keys = r.frontier.collect().map(_.urlKey)
+    assert(keys.distinct.length == keys.length, "duplicate urlKey in the resumed frontier")
+  }
+
   test("driver tier above the old 256-row cap == forced distributed") {
     // 2 hosts × 160 details at budget 160: the detail wave (320 rows) and the
     // frontier (320 pending) exceed 256 rows but fit the driver-tier bound
@@ -382,6 +468,8 @@ class CrawlEngineSpec extends SparkSpec {
     val ia = resumed.items.collect().map(i => (i.key, i.phash, i.createdStep)).sortBy(_._1)
     val ib = b.items.collect().map(i => (i.key, i.phash, i.createdStep)).sortBy(_._1)
     assert(ia.sameElements(ib), "compacted run items differ from straight run")
+    // no state write (seed, fetch, commit, compaction) leaves a _SUCCESS marker
+    assert(successMarkers(dirA).isEmpty, successMarkers(dirA).take(3))
   }
 
   test("robots: disallowed prefix blocks, crawl-delay throttles") {

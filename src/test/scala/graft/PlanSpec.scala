@@ -75,42 +75,47 @@ class PlanSpec extends SparkSpec {
     import graft.engine.{CrawlEngine, EngineConfig}
     import graft.fetch.CorpusFetcher
     val spec = CorpusSpec(hosts = 1, listPages = 2, detailsPerList = 3)
-    val stateDir = tmpDir("plan-archive")
-    val buckets = 8
-    val eng = new CrawlEngine(spark, SiteRoutes.registry(spec),
-      new CorpusFetcher(SyntheticCorpus.buildLocal(spec)), Nil,
-      EngineConfig(statePath = stateDir, hostBudget = 4,
-        bloomPartitions = 4, bloomCapacityPerShard = 1 << 16,
-        archiveBuckets = buckets))
-    eng.seed(SyntheticCorpus.seeds(spec))
-    eng.run()
-    val archived = spark.read.parquet(s"$stateDir/jobs_done")
-      .select(col("urlKey")).collect().map(_.getLong(0))
-    assert(archived.length >= 2, "crawl archived too few jobs for the assert")
-    val probeKeys = archived.sorted.take(2)
-    val expectedBuckets = probeKeys
-      .map(k => (((k % buckets) + buckets) % buckets).toInt).toSet
-    val plan = eng.archiveProbePlan(probeKeys, Int.MaxValue)
-      .getOrElse(fail("no archive probe plan"))
-    // every file the pruned scan selects lives in a positive key's bucket dir
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val exec = plan.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
+    // A driver-array frontier archives its finished jobs only when it
+    // outgrows driverCollectMaxRows / 1024 rows: at 4096 (a 4-row bound)
+    // this 8-job crawl flushes; at 0 every step archives.
+    for (driverCollectMaxRows <- Seq(4096L, 0L)) {
+      val stateDir = tmpDir("plan-archive")
+      val buckets = 8
+      val eng = new CrawlEngine(spark, SiteRoutes.registry(spec),
+        new CorpusFetcher(SyntheticCorpus.buildLocal(spec)), Nil,
+        EngineConfig(statePath = stateDir, hostBudget = 4,
+          bloomPartitions = 4, bloomCapacityPerShard = 1 << 16,
+          archiveBuckets = buckets, driverCollectMaxRows = driverCollectMaxRows))
+      eng.seed(SyntheticCorpus.seeds(spec))
+      eng.run()
+      val archived = spark.read.parquet(s"$stateDir/jobs_done")
+        .select(col("urlKey")).collect().map(_.getLong(0))
+      assert(archived.length >= 2, "crawl archived too few jobs for the assert")
+      val probeKeys = archived.sorted.take(2)
+      val expectedBuckets = probeKeys
+        .map(k => (((k % buckets) + buckets) % buckets).toInt).toSet
+      val plan = eng.archiveProbePlan(probeKeys, Int.MaxValue)
+        .getOrElse(fail("no archive probe plan"))
+      // every file the pruned scan selects lives in a positive key's bucket dir
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      val exec = plan.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val scans = exec.collect { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty, exec.toString.take(800))
+      val files = scans.flatMap(_.selectedPartitions.toPartitionArray)
+        .map(_.filePath.toString)
+      assert(files.nonEmpty, "probe scan selected no files")
+      files.foreach { f =>
+        assert(expectedBuckets.exists(b => f.contains(s"bucket=$b/")),
+          s"probe scanned a non-matching bucket file: $f (expected buckets $expectedBuckets)")
+      }
+      // and the probe still finds exactly the probed keys
+      assert(plan.as[Long](org.apache.spark.sql.Encoders.scalaLong)
+        .collect().sorted.sameElements(probeKeys))
     }
-    val scans = exec.collect { case s: FileSourceScanExec => s }
-    assert(scans.nonEmpty, exec.toString.take(800))
-    val files = scans.flatMap(_.selectedPartitions.toPartitionArray)
-      .map(_.filePath.toString)
-    assert(files.nonEmpty, "probe scan selected no files")
-    files.foreach { f =>
-      assert(expectedBuckets.exists(b => f.contains(s"bucket=$b/")),
-        s"probe scanned a non-matching bucket file: $f (expected buckets $expectedBuckets)")
-    }
-    // and the probe still finds exactly the probed keys
-    assert(plan.as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .collect().sorted.sameElements(probeKeys))
   }
 
   test("text sketches (shingles, minhash sig, simhash) are shuffle-free maps") {
