@@ -80,7 +80,6 @@ object ScalingBench {
           statePath = state,
           hostBudget = budget, retryBackoffSteps = 0,
           bloomPartitions = 8, bloomCapacityPerShard = 1 << 20,
-          saltBuckets = 16,
           fetchSplits = 8)) // synth fetcher: no real host to be polite to
       eng.seed(SyntheticCorpus.seeds(spec))
       val t0 = System.nanoTime()

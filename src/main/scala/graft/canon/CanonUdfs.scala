@@ -1,21 +1,16 @@
 package graft.canon
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.Platform
 
 /** Spark bindings for [[UrlCanon]].
   *
-  * `url_key` is computed with the built-in `xxhash64` (codegen'd, seed 42)
-  * over the canonical string; [[urlKeyScala]] reproduces the identical value
+  * URL keys are the built-in `xxhash64` (codegen'd, seed 42) of the
+  * canonical string; [[urlKeyScala]] reproduces the identical value
   * driver-side (same XXH64 implementation Spark uses) so sketches built in
   * plain Scala agree with keys computed in the plan.
   */
 object CanonUdfs {
-
-  val canonUdf = udf((u: String) => UrlCanon.canonicalize(u))
-  val hostUdf  = udf((u: String) => UrlCanon.host(u))
-  val resolveUdf = udf((b: String, l: String) => UrlCanon.resolve(b, l))
 
   // native-Expression forms — inline into whole-stage codegen (no ScalaUDF
   // dispatch/boxing); see graft.functions.UrlExprs
@@ -26,9 +21,6 @@ object CanonUdfs {
 
   def canon_url(c: Column): Column = col(graft.functions.UrlCanonExpr(expr(c)))
   def url_host(c: Column): Column  = col(graft.functions.UrlHostExpr(expr(c)))
-
-  /** xxhash64(canonical url), matching Spark's builtin on the same string. */
-  def url_key(c: Column): Column = xxhash64(canon_url(c))
 
   /** Driver/oracle-side equivalent of `xxhash64(lit(s))` (seed 42). */
   def urlKeyScala(canonical: String): Long = {

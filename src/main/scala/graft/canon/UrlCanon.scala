@@ -1,7 +1,5 @@
 package graft.canon
 
-import java.nio.charset.StandardCharsets
-
 /** RFC-3986 URL canonicalizer — the identity function of the URL-seen set.
   *
   * The reference deduplicates frontier entries by exact `(routeId, query)`
@@ -175,8 +173,4 @@ object UrlCanon {
       case _ => l
     }
   }
-
-  /** UTF-8 bytes of the canonical form — hash input for xxhash64 keys. */
-  def canonicalBytes(url: String): Array[Byte] =
-    canonicalize(url).getBytes(StandardCharsets.UTF_8)
 }

@@ -48,7 +48,6 @@ case class CorpusSpec(
   def listUrl(hostIdx: Int, p: Int): String = s"http://${hostName(hostIdx)}/list?p=$p"
   def detailUrl(hostIdx: Int, id: Long): String = s"http://${hostName(hostIdx)}/img/$id"
   def hostOf(id: Long): Int = (id / (listPages.toLong * detailsPerList)).toInt
-  def pageOf(id: Long): Int = ((id / detailsPerList) % listPages).toInt + 1
 }
 
 object SyntheticCorpus {

@@ -75,30 +75,70 @@ object CrawlEngine {
   /** A larger wave: Dataset plans only, no per-step driver state. */
   private[engine] case object DistributedTier extends Tier
 
+  /** A pending frontier: a driver array or a Dataset. */
+  private[engine] type Frontier = Either[Array[CrawlJob], Dataset[CrawlJob]]
+
+  /** The engine's in-memory state at its latest issued version (the commit
+    * may still be in flight): the version's manifest plus what the next
+    * superstep would otherwise read back from disk. `None` means "read it
+    * from the snapshot" — a resumed engine starts from the manifest alone.
+    *
+    *  - `manifest.pending`/`totals`: the exact unfinished-frontier count
+    *    and run totals while every step since seed() counted them (driver
+    *    tier). They let run() stop without an empty-wave probe (wave build +
+    *    count + pending-min agg, ~1 s of flat cost) and summary() answer
+    *    with zero Spark jobs; without them the log-based paths take over.
+    *  - `frontier`: the pending frontier, as a driver array while it has ≤
+    *    `driverRows` rows — its pending jobs plus the finished ones it
+    *    carries until a flush (see `archiveDir`) — else the eagerly
+    *    checkpointed Dataset. On the array the wave, the empty-wave clock
+    *    jump, the exact-seen probe of the active frontier and the frontier
+    *    rewrite run with ZERO Spark jobs: on an 8-host crawl the Dataset
+    *    wave alone (salted window + host exchange + sort, one 3-stage
+    *    collect) cost 0.3–0.7 s of a 1.1–1.9 s superstep over ≤ 216 rows,
+    *    and the frontier checkpoint one more job per step.
+    *  - `itemMeta`: (key, phash) of every item row up to the step, feeding
+    *    near-dup suppression and created/updated flags; a driver array while
+    *    it has ≤ driverCollectMaxRows rows (the driver tier's suppression
+    *    probe then runs with ZERO Spark jobs — the per-step existing-meta
+    *    scan was the largest remaining flat cost of a toy-scale superstep),
+    *    else a checkpointed DataFrame. [[compactItems]] drops it (live-set
+    *    semantics from then on).
+    *  - `shards`: the bloom shards of the version, kept while the driver
+    *    tier probes them: the shards written at step s are exactly the ones
+    *    probed at s+1, so no superstep re-reads and collects them.
+    */
+  private[engine] final case class Issued(manifest: SnapshotStore.Manifest,
+      frontier: Option[Frontier],
+      itemMeta: Option[Either[Array[(String, Long)], DataFrame]],
+      shards: Option[Array[BloomShard]])
+
   /** A step's item decisions: per-source created/updated flags (a driver map
     * on the driver tier, a (srcJob, created, updated) DataFrame on the
     * distributed tier), the step's suppressed keys — the equality-delete
     * rows the commit persists so readers drop them from the already-landed
-    * raw outcomes — and checkpoints to release after the commit.
+    * raw outcomes — the next item meta, and checkpoints to release after
+    * the commit.
     */
   private[engine] final case class ItemDecisions(
       flags: Either[Map[Long, (Long, Long)], DataFrame],
-      suppressed: Option[DataFrame], release: Seq[Dataset[_]])
+      suppressed: Option[DataFrame], meta: Either[Array[(String, Long)], DataFrame],
+      release: Seq[Dataset[_]])
 
   /** A step's fresh jobs (never seen before; the same rows as an array when
-    * the driver tier built them), the next bloom version, and checkpoints
-    * to release after the commit.
+    * the driver tier built them), the next bloom version (as driver shards
+    * on the driver tier), and checkpoints to release after the commit.
     */
   private[engine] final case class Spawns(fresh: Dataset[CrawlJob],
       freshLocal: Option[Array[CrawlJob]], bloom: Dataset[BloomShard],
-      release: Seq[Dataset[_]])
+      shards: Option[Array[BloomShard]], release: Seq[Dataset[_]])
 
   /** The wave's job-state rewrite and the step's fetch log (both tiers run
     * [[CrawlEngine.advance]] / [[CrawlEngine.logRow]]); the rewritten rows
-    * as an array on the driver tier.
+    * as an array on the driver tier; the next version's manifest.
     */
   private[engine] final case class JobUpdates(updated: Dataset[CrawlJob], log: DataFrame,
-      updatedLocal: Option[Array[CrawlJob]])
+      updatedLocal: Option[Array[CrawlJob]], manifest: SnapshotStore.Manifest)
 
   /** Job-state transition for one fetched job — the reference worker's
     * post-job bookkeeping (pagination worker.js:223-233, finish 137-142,
@@ -155,8 +195,25 @@ object CrawlEngine {
   private val AqeInSteps = false
   /** The bloom shards are probed and merged driver-side while their total
     * size fits this budget (i.e. until the frontier reaches billions of
-    * keys); beyond it the cogroup probe takes over. */
+    * keys); a larger sketch zeroes the driver bound, so every step runs the
+    * distributed tier and its cogroup probe. */
   private val BloomBroadcastMaxBytes = 256L << 20
+  /** False-positive rate of the URL-seen bloom filter. Only positives pay
+    * the exact seen check, so 1% keeps that sliver small at ~9.6 bits per
+    * key (a 10^10-key sketch is ~12 GB across its shards). */
+  private val BloomFpp = 0.01
+  /** Salt buckets of the politeness wave's first ranking (see
+    * [[graft.frontier.Politeness]]): a hot host is ranked over this many
+    * partitions, bounding its survivors at salts × routes × hostBudget. */
+  private val SaltBuckets = 16
+  /** Hash buckets (`pmod(urlKey, N)` partition dirs) of the finished-job
+    * archive. The bloom-positive exact-seen probe prunes its archive scan
+    * to the buckets of the positive keys instead of column-scanning every
+    * archived key — at 10^10 finished URLs a per-step full scan of the
+    * archive is a driver-cost cliff. 64 buckets ⇒ a probe of k keys reads
+    * ≤ min(k, 64)/64 of the archive's files. PlanSpec asserts the pruning.
+    */
+  private[graft] val ArchiveBuckets = 64
   /** Fetch-stage task count: ~[[FetchPagesPerTask]] pages per task, floored
     * at min(shuffle partitions, wave size) and capped at partitions × this
     * factor. Page costs are heavy-tailed (encode/decode varies with format
@@ -182,8 +239,6 @@ case class EngineConfig(
     retryBackoffSteps: Int = 1,
     bloomPartitions: Int = 8,
     bloomCapacityPerShard: Long = 1L << 20,
-    bloomFpp: Double = 0.01,
-    saltBuckets: Int = 16,
     /** snapshots older than latest-N are expired after each commit. */
     retainSnapshots: Int = 4,
     /** Sub-partitions per host when rebalancing the selected wave for the
@@ -212,14 +267,6 @@ case class EngineConfig(
       * the real-time complement for production fetchers.
       */
     hostMinDelayMs: Int = 0,
-    /** Hash buckets (`pmod(urlKey, N)` partition dirs) of the finished-job
-      * archive. The bloom-positive exact-seen probe prunes its archive scan
-      * to the buckets of the positive keys instead of column-scanning every
-      * archived key — at 10^10 finished URLs a per-step full scan of the
-      * archive is a driver-cost cliff. 64 buckets ⇒ a probe of k keys reads
-      * ≤ min(k, 64)/64 of the archive's files.
-      */
-    archiveBuckets: Int = 64,
     /** route every fetch through the dynamic fetcher — the reference's
       * FORCE_DYNAMIC env switch (spider.js:21,52). */
     forceDynamic: Boolean = false,
@@ -250,6 +297,11 @@ case class EngineConfig(
       * The item-meta mirror stays on the driver while it has at most
       * `driverCollectMaxRows` rows. Tests force 0 to pin the distributed
       * tier against the driver tier and the oracle.
+      *
+      * The driver tier probes and merges the bloom shards on the driver, so
+      * a sketch (`bloomPartitions` × the shard size at
+      * `bloomCapacityPerShard`) above the 256 MB broadcast budget zeroes the
+      * bound: every step then runs the distributed tier.
       */
     driverCollectMaxRows: Long = 2000000L)
 
@@ -294,6 +346,13 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   * rest of the run and archives its finished jobs every step. Each
   * manifest records the exact pending count and run totals while the
   * driver tier keeps them, so resuming a drained crawl runs no Spark job.
+  *
+  * The engine's in-memory state is ONE immutable value per issued version
+  * (`Issued`: the manifest, plus the frontier, item meta and bloom shards
+  * the next step would otherwise read back from the snapshot). Each phase
+  * reads the committed value and returns its own part; the superstep
+  * assembles the next value and assigns it once — when its background
+  * commit is issued, or after its synchronous commit has landed.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -341,108 +400,58 @@ final class CrawlEngine(
       r
     }
 
-  /** Driver-side cache of the bloom shards (version → shards), valid only
-    * while the driver tier probes them. Skips the per-superstep parquet
-    * read+collect: the shards written at step s are exactly the ones probed
-    * at s+1. Resume in a fresh engine simply misses the cache and reads the
-    * snapshot.
-    */
-  private var shardCache: Option[(Int, Array[BloomShard])] = None
-
   // ---- pipelined commit ------------------------------------------------
   // The snapshot commit is crash-resume IO, not a dataflow dependency: the
-  // next superstep plans entirely off in-memory state (frontier, item-meta,
-  // bloom shards below), so step s+1's wave+fetch overlaps step s's parquet
+  // next superstep plans entirely off the issued value (frontier, item meta,
+  // bloom shards), so step s+1's wave+fetch overlaps step s's parquet
   // writes instead of waiting on them. On a real cluster this hides the
   // object-store commit latency behind the next wave. At most ONE commit is
   // in flight; every DISK read of engine state awaits it first, so public
-  // accessors and cache-miss paths (resume, distributed fallbacks) always
-  // see the committed view. A background-commit failure surfaces at the
-  // next await (step, accessor, or run() end) and fails the crawl.
+  // accessors and the parts the issued value lacks (resume, distributed
+  // fallbacks) always see the committed view. A failed commit surfaces at
+  // the next await (step, accessor, or run() end) and fails the crawl.
 
+  /** The latest issued version's state (see [[CrawlEngine.Issued]]); None
+    * before seed(), and on a resumed engine before its first step. */
+  private var issued: Option[Issued] = None
   /** The previous superstep's commit, if still being written. */
   private var commitInFlight: Option[scala.concurrent.Future[Unit]] = None
-  /** (version, step) of the latest ISSUED commit (possibly in flight) —
-    * the in-memory twin of `store.latestVersion`/`stepOf`. */
-  private var issuedState: Option[(Int, Int)] = None
-  /** version → eagerly-checkpointed frontier of that version: the next
-    * superstep's wave scans memory instead of re-reading the snapshot. Set
-    * whenever the frontier is not the driver array [[frontierLocal]]. */
-  private var frontierCache: Option[(Int, Dataset[CrawlJob])] = None
-  /** version → the frontier of that version as a driver array, while it
-    * has ≤ [[driverRows]] rows (the driver-resident frontier): its pending
-    * jobs plus the finished ones it carries until a flush (see
-    * [[archiveDir]]), which the exact-seen probe then finds with no archive
-    * read. The wave, the empty-wave clock jump, the exact-seen probe of the
-    * active frontier and the frontier rewrite then run with ZERO Spark
-    * jobs: on an 8-host crawl the Dataset wave alone (salted window + host
-    * exchange + sort, one 3-stage collect) cost 0.3–0.7 s of a 1.1–1.9 s
-    * superstep over ≤ 216 rows, and the frontier checkpoint one more job
-    * per step.
-    * The commit writes the array as a local relation (same table layout).
-    * Filled by seed() and kept by each driver-tier step while the next
-    * frontier fits; a frontier that outgrows it (or a resumed one) stays a
-    * Dataset.
-    */
-  private var frontierLocal: Option[(Int, Array[CrawlJob])] = None
-  /** step → checkpointed (key, phash) of every item delta row up to step —
-    * feeds near-dup suppression + created/updated flags without re-scanning
-    * the delta dirs each superstep. Set only while [[itemMetaLocal]] cannot
-    * hold the rows. Invalidated by [[compactItems]] (which switches
-    * suppression to live-set semantics). */
-  private var itemMetaCache: Option[(Int, DataFrame)] = None
-  /** step → the same (key, phash) rows as a driver array while they stay
-    * ≤ driverCollectMaxRows — the driver tier's suppression probe then runs
-    * with ZERO Spark jobs (the per-step distributed existing-meta scan was
-    * the largest remaining flat cost of a toy-scale superstep), and no
-    * per-step checkpoint job keeps a DataFrame twin (its task count grew
-    * with every step). None above the cap; the distributed probe then takes
-    * over with identical semantics.
-    */
-  private var itemMetaLocal: Option[(Int, Array[(String, Long)])] = None
-
-  /** Row bound of the driver tier and of the driver-resident frontier (see
-    * [[EngineConfig.driverCollectMaxRows]]); 0 forces the distributed tier. */
-  private val driverRows: Long = cfg.driverCollectMaxRows / 1024
-
-  // ---- exact driver-side run accounting --------------------------------
-  // Maintained while every superstep since seed() ran the driver tier:
-  // unfinished-frontier count (lets run() stop without one final empty-wave
-  // probe — wave build + count + pending-min agg, ~1 s of pure flat cost)
-  // and the [[RunSummary]] tallies (fetched = Σ wave sizes; items = Σ
-  // created flags, exact because a key is "created" exactly once; dead
-  // letters off the outcome metadata). Every manifest carries the exact
-  // values it has (`pending`, `totals`), so a resume into a fresh engine
-  // restores them. Any step that can't account exactly (distributed tier, a
-  // manifest without them) flips the state to unknown and the log-based
-  // paths take over — identical values, a few extra jobs.
-  private var pendingCount: Long = -1L // unfinished frontier rows; -1 unknown
-  private var acctValid = false
-  private var fetchedAcc = 0L
-  private var itemsAcc = 0L
-  private var dlAcc = 0L
-
-  /** A failed background commit POISONS the engine: the in-memory twin
-    * (issuedState/frontierCache/shardCache) is already at v+1 but v+1's
-    * step dirs were never written, so continuing would commit v+2 over a
-    * hole (suppressed items resurrecting, a silently lost fetch-log step).
-    * The failure is latched and rethrown from EVERY subsequent await — a
-    * caller that catches the first throw cannot step() past it. Recovery =
-    * a fresh engine resume()d from the last committed snapshot.
+  /** A failed commit POISONS the engine. A background commit fails after
+    * its version v+1 was issued, with v+1's step dirs never written, so
+    * continuing would commit v+2 over a hole (suppressed items resurrecting,
+    * a silently lost fetch-log step); a failed synchronous commit is
+    * latched the same way, so both commit modes recover alike. The failure
+    * is rethrown from EVERY later step() and await — a caller that catches
+    * the first throw cannot step() past it. Recovery = a fresh engine
+    * resume()d from the last committed snapshot.
     */
   private var commitFailed: Option[Throwable] = None
 
+  private def checkNotPoisoned(): Unit = commitFailed.foreach(e =>
+    throw new IllegalStateException("engine poisoned by an earlier commit failure; " +
+      "resume() a fresh engine from the last committed snapshot", e))
+
+  private def latchFailure[T](commit: => T): T =
+    try commit catch { case e: Throwable => commitFailed = Some(e); throw e }
+
   private def awaitCommit(): Unit = {
-    commitFailed.foreach(e => throw new IllegalStateException(
-      "engine poisoned by an earlier background-commit failure; " +
-        "resume() a fresh engine from the last committed snapshot", e))
+    checkNotPoisoned()
     commitInFlight.foreach { f =>
       import scala.concurrent.Await
       import scala.concurrent.duration.Duration
-      try Await.result(f, Duration.Inf)
-      catch { case e: Throwable => commitFailed = Some(e); throw e }
+      try latchFailure(Await.result(f, Duration.Inf))
       finally commitInFlight = None
     }
+  }
+
+  /** Row bound of the driver tier and of the driver-resident frontier (see
+    * [[EngineConfig.driverCollectMaxRows]]); 0 forces the distributed tier.
+    * The driver tier holds the bloom shards, so a sketch above the
+    * broadcast budget forces it too. */
+  private val driverRows: Long = {
+    val sketchBytes = cfg.bloomPartitions *
+      BloomSeen.estimatedShardBytes(cfg.bloomCapacityPerShard, BloomFpp)
+    if (sketchBytes <= BloomBroadcastMaxBytes) cfg.driverCollectMaxRows / 1024 else 0L
   }
 
   /** Superstep-scoped session conf (restored after): see [[AqeInSteps]].
@@ -527,7 +536,7 @@ final class CrawlEngine(
   // job of 0.71–1.14 s that ran into the next superstep and ended most of
   // them. The archive is read only by the [[frontier]] accessor (union
   // view) and by the seen-set EXACT check. Each step dir is sub-partitioned
-  // by `bucket = pmod(urlKey, archiveBuckets)`, so the bloom-positive probe
+  // by `bucket = pmod(urlKey, ArchiveBuckets)`, so the bloom-positive probe
   // PRUNES to the buckets of its positive keys (asserted by PlanSpec)
   // instead of scanning every archived key — the remaining
   // O(all-jobs-ever) term of a superstep.
@@ -544,15 +553,15 @@ final class CrawlEngine(
   private def writeArchive(finished: DataFrame, step: Int): Unit = {
     // Repartition ON the bucket column first: without it every input task
     // opens a writer per bucket it sees, so a W-task wave archives up to
-    // W × archiveBuckets tiny files per step (measured ~25k files on the
+    // W × ArchiveBuckets tiny files per step (measured ~25k files on the
     // 51k-row bench wave — a flat, core-count-independent commit cost that
     // alone broke the N→4N scaling gate). Hash-partitioning by bucket puts
-    // each bucket in exactly one task ⇒ ≤ archiveBuckets files per flush,
+    // each bucket in exactly one task ⇒ ≤ ArchiveBuckets files per flush,
     // and the shuffled rows are byte-free job rows (cheap).
-    val parts = math.min(cfg.archiveBuckets,
+    val parts = math.min(ArchiveBuckets,
       math.max(1, spark.sessionState.conf.numShufflePartitions))
     stateWrite(finished
-      .withColumn("bucket", pmod(col("urlKey"), lit(cfg.archiveBuckets)).cast("int"))
+      .withColumn("bucket", pmod(col("urlKey"), lit(ArchiveBuckets)).cast("int"))
       .repartition(parts, col("bucket")))
       .partitionBy("bucket").mode("overwrite")
       .parquet(s"$archiveDir/step=$step")
@@ -569,7 +578,7 @@ final class CrawlEngine(
   }
 
   private def bucketOf(k: Long): Int =
-    (((k % cfg.archiveBuckets) + cfg.archiveBuckets) % cfg.archiveBuckets).toInt
+    (((k % ArchiveBuckets) + ArchiveBuckets) % ArchiveBuckets).toInt
 
   /** The exact-seen probe's archive leg: scan ONLY the bucket partitions the
     * sorted bloom-positive keys hash to, then filter to those keys. Package-
@@ -758,82 +767,68 @@ final class CrawlEngine(
   private def seedResolved(seeds: Seq[(String, String, Map[String, String])]): Unit =
     withEngineConf {
     awaitCommit()
-    issuedState = None; frontierCache = None; frontierLocal = None
-    itemMetaCache = None; shardCache = None; itemMetaLocal = None
+    issued = None
     val seedJobs = seeds.toDF("routeId", "rawUrl", "query")
       .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
       .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
       .withColumn("urlKey", xxhash64(col("url")))
     val allowedSeeds = Robots.allowed(minRoutePerKey(seedJobs.drop("rawUrl")), robotsRules)
     val jobs = toJobs(allowedSeeds, 0)
-
-    acctValid = true
-    fetchedAcc = 0L; itemsAcc = 0L; dlAcc = 0L
-    if (seeds.size <= math.max(1L, driverRows)) {
+    def manifest(n: Long) = SnapshotStore.Manifest(0, -1, 0L,
+      pending = Some(n), totals = Some(SnapshotStore.Totals(0L, 0L, 0L)))
+    // no item rows exist before step 0 (unless a compacted base does): the
+    // empty item meta spares step 0 the read of the delta dirs
+    val itemMeta = Option.when(latestBaseStep < 0)(Left(Array.empty[(String, Long)]))
+    // synchronous commits — the v0 value is committed once assigned
+    issued = Some(if (seeds.size <= math.max(1L, driverRows)) {
       // small-seed fast path: ONE Spark job evaluates the (local-relation)
       // canon/dedup/robots plan; the bloom shards are built driver-side and
-      // both state tables land coalesced. The seed ALSO primes the frontier
-      // (the driver array when it fits driverRows) and shard caches, so
-      // step 1 never re-reads the v0 snapshot.
+      // both state tables land coalesced. The v0 value ALSO holds the
+      // frontier (the driver array when it fits driverRows) and the shards,
+      // so step 1 never re-reads the v0 snapshot.
       val jobsArr = jobs.collect()
-      pendingCount = jobsArr.length
       val shards = insertLocal(BloomSeen
-        .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, cfg.bloomFpp),
+        .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp),
         jobsArr.map(_.urlKey))
       val frontierDs = spark.createDataset(jobsArr.toSeq).coalesce(1)
-      store.commit(0, seedManifest(jobsArr.length)) { dir =>
+      store.commit(0, manifest(jobsArr.length)) { dir =>
         inParallel(
           () => stateWrite(frontierDs).parquet(s"$dir/frontier"),
           () => stateWrite(spark.createDataset(shards.toSeq).coalesce(1))
             .parquet(s"$dir/bloom"))
       }
-      shardCache = Some((0, shards))
-      if (jobsArr.length <= driverRows) frontierLocal = Some((0, jobsArr))
-      else frontierCache = Some((0, frontierDs))
+      Issued(manifest(jobsArr.length),
+        Some(if (jobsArr.length <= driverRows) Left(jobsArr) else Right(frontierDs)),
+        itemMeta, Some(shards))
     } else {
       val jobsP = jobs.persist(StorageLevel.MEMORY_AND_DISK)
       val n = jobsP.count()
-      pendingCount = n
       val bloom = BloomSeen.insert(
-        BloomSeen.empty(spark, cfg.bloomPartitions, cfg.bloomCapacityPerShard, cfg.bloomFpp),
+        BloomSeen.empty(spark, cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp),
         jobsP.map(_.urlKey), cfg.bloomPartitions)
-      store.commit(0, seedManifest(n)) { dir =>
+      store.commit(0, manifest(n)) { dir =>
         stateWrite(jobsP).parquet(s"$dir/frontier")
         stateWrite(bloom).parquet(s"$dir/bloom")
       }
       jobsP.unpersist()
-    }
-    // synchronous commit — the in-memory twin is immediately valid
-    issuedState = Some((0, -1))
-    // no item rows exist before step 0 (unless a compacted base does): the
-    // empty mirror spares step 0 the item-meta read of the delta dirs
-    if (latestBaseStep < 0) itemMetaLocal = Some((-1, Array.empty))
+      Issued(manifest(n), None, itemMeta, None)
+    })
   }
 
-  private def seedManifest(n: Long) = SnapshotStore.Manifest(0, -1, 0L,
-    pending = Some(n), totals = Some(SnapshotStore.Totals(0L, 0L, 0L)))
-
-  /** The in-memory twin of a fresh engine over an existing store (resume),
-    * from the latest manifest. A manifest that carries the exact pending
+  /** The issued value of a fresh engine over an existing store (resume):
+    * the latest manifest alone. A manifest that carries the exact pending
     * count and run totals keeps the exact accounting live, so a drained
-    * crawl resumes with zero Spark jobs; the frontier itself is read from
-    * the snapshot (Dataset plans). Without them (an older engine, or a step
-    * that ran the distributed plans) the counts stay unknown and the
-    * log-based paths take over.
+    * crawl resumes with zero Spark jobs; the frontier, item meta and bloom
+    * shards are read from the snapshot. Without them (an older engine, or a
+    * step that ran the distributed plans) the log-based paths take over.
     */
-  private def restore(): (Int, Int) = {
+  private def restore(): Issued = {
     val v = currentVersion.getOrElse(
       throw new IllegalStateException("seed() first — no snapshot"))
-    val m = store.manifest(v)
-    pendingCount = m.pending.getOrElse(-1L)
-    acctValid = m.totals.isDefined
-    m.totals.foreach { t =>
-      fetchedAcc = t.fetched; itemsAcc = t.items; dlAcc = t.deadLettered
-    }
-    issuedState = Some((v, m.step))
-    (v, m.step)
+    val cur = Issued(store.manifest(v), None, None, None)
+    issued = Some(cur)
+    cur
   }
-
 
   // ---- one superstep --------------------------------------------------
 
@@ -842,26 +837,28 @@ final class CrawlEngine(
     * (reference: src/worker.js:108-110).
     */
   def step(): Boolean = {
-    // in-memory twin of the store's (version, step) — valid even while the
-    // previous commit is still in flight; a resumed engine loads it from
-    // the latest manifest
-    val (v, committed) = issuedState.getOrElse(restore())
+    checkNotPoisoned()
+    // the issued value is valid even while its commit is still in flight;
+    // a resumed engine loads it from the latest manifest
+    val cur = issued.getOrElse(restore())
+    val pending = cur.manifest.pending
     // exact early exit: nothing unfinished in the frontier ⇒ the next wave
     // is empty by construction — skip the wave-build/count/pending probe
-    if (pendingCount == 0L) false
+    if (pending.contains(0L)) false
     else withStepConf(
       // driver-sized pending frontier ⇒ narrow the step's exchanges to
-      // ~pendingCount tasks: full-width 32-task windows over a 20-row
-      // frontier cost pure scheduler latency. Unknown or large pendingCount
-      // leaves the session width untouched (bench/production scale,
-      // distributed-forced tests).
-      if (pendingCount > 0 && pendingCount <= math.max(1L, driverRows))
-        Some(math.min(spark.sessionState.conf.numShufflePartitions.toLong,
-          pendingCount).toInt)
-      else None)(superstep(v, committed))
+      // ~pending tasks: full-width 32-task windows over a 20-row frontier
+      // cost pure scheduler latency. Unknown or large pending leaves the
+      // session width untouched (bench/production scale, distributed-forced
+      // tests).
+      pending.filter(p => p > 0 && p <= math.max(1L, driverRows)).map(p =>
+        math.min(spark.sessionState.conf.numShufflePartitions.toLong, p).toInt)
+    )(superstep(cur))
   }
 
-  private def superstep(v: Int, committed: Int): Boolean = {
+  private def superstep(cur: Issued): Boolean = {
+    val v = cur.manifest.version
+    val committed = cur.manifest.step
     // safe without awaiting the in-flight commit: it writes step=committed
     // dirs, and cleanStale only removes step > committed. The raw outcome
     // dir of the step being built is written BEFORE its commit (by the
@@ -869,7 +866,7 @@ final class CrawlEngine(
     // that this sweep removes on resume.
     Seq(rawDir, suppressedDir, archiveDir, logDir("fetchlog"))
       .foreach(cleanStale(_, committed))
-    val front = new Front(v)
+    val front = cur.frontier.getOrElse(Right(readFrontier(v)))
     wavePhase(front, committed + 1) match {
       case None => false
       case Some((wave, waveN, stepNow)) =>
@@ -878,53 +875,37 @@ final class CrawlEngine(
         val tier =
           if (waveN <= driverRows) DriverTier(timed("meta.collect")(collectMeta(outcomes)))
           else DistributedTier
-        val items = timed("items")(itemsPhase(tier, outcomes, committed, stepNow))
-        val spawns = timed("spawn")(spawnsPhase(tier, outcomes, front, v, committed, stepNow))
+        val items = timed("items")(itemsPhase(tier, outcomes, cur, stepNow))
+        val spawns = timed("spawn")(spawnsPhase(tier, outcomes, front, cur, stepNow))
         val jobs = jobStatePhase(tier, outcomes, items.flags, spawns.freshLocal,
-          waveN, stepNow)
-        val (frontierOut, archived, prevFront) = timed("front.next")(
-          frontierPhase(tier, front, wave, jobs, spawns, v, stepNow))
-        commitPhase(v, stepNow, waveN, jobs, items.suppressed, frontierOut, archived,
-          spawns.bloom, Seq(wave) ++ items.release ++ spawns.release ++ prevFront)
+          cur.manifest, waveN, stepNow)
+        val (next, archived) = timed("front.next")(
+          frontierPhase(tier, front, wave, jobs, spawns, stepNow))
+        commitPhase(Issued(jobs.manifest, Some(next), Some(items.meta), spawns.shards), next,
+          jobs.log, items.suppressed, archived, spawns.bloom,
+          Seq(wave) ++ items.release ++ spawns.release ++ cur.frontier.flatMap(_.toOption))
         true
-    }
-  }
-
-  /** The pending frontier of version `v`: the driver array while it fits
-    * [[driverRows]] (see [[frontierLocal]]) — the frontier-side phases then
-    * run on it with zero Spark jobs, and its Dataset twin is built only if
-    * a phase asks for it — else the checkpointed Dataset (or the snapshot
-    * on a cache miss).
-    */
-  private final class Front(v: Int) {
-    val local: Option[Array[CrawlJob]] = frontierLocal.collect { case (`v`, a) => a }
-    lazy val ds: Dataset[CrawlJob] = local match {
-      case Some(a) => spark.createDataset(a.toSeq)
-      case None => frontierCache match {
-        case Some((`v`, f)) => f
-        case _ => readFrontier(v)
-      }
     }
   }
 
   /** The politeness wave at the first step ≥ `s` with eligible work, with
     * its size and that step; None when no work remains.
     */
-  private def wavePhase(front: Front, s: Int): Option[(Dataset[CrawlJob], Long, Int)] = {
+  private def wavePhase(front: Frontier, s: Int): Option[(Dataset[CrawlJob], Long, Int)] = {
     // A driver frontier ⇒ the driver wave (the same sequential take as the
     // Dataset plan) as a local relation. Otherwise: localCheckpoint (eager)
     // on the shared wave truncates lineage so every downstream action
     // analyzes a shallow scan instead of re-planning the whole superstep
     // tree — catalyst planning time was ~half of each superstep's wall
     // clock before this (measured via SparkListener) — plus a cheap count.
-    def build(atStep: Int): (Dataset[CrawlJob], Long) = front.local match {
-      case Some(a) =>
+    def build(atStep: Int): (Dataset[CrawlJob], Long) = front match {
+      case Left(a) =>
         val w = Politeness.waveLocal(a, atStep, cfg.hostBudget, routeCaps,
           cfg.disabledRoutes, hooks.jobFilter)
         (spark.createDataset(w.toSeq), w.length.toLong)
-      case None =>
-        val w = Politeness.wave(front.ds, atStep, cfg.hostBudget, routeCaps,
-          cfg.disabledRoutes, cfg.saltBuckets, hooks.jobFilter).localCheckpoint(true)
+      case Right(ds) =>
+        val w = Politeness.wave(ds, atStep, cfg.hostBudget, routeCaps,
+          cfg.disabledRoutes, SaltBuckets, hooks.jobFilter).localCheckpoint(true)
         (w, w.count())
     }
     val (wave, waveN) = timed("wave")(build(s))
@@ -933,12 +914,12 @@ final class CrawlEngine(
     // waiting on a future step — jump the clock to the earliest one (the
     // analogue of the reference worker's idle poll-sleep, worker.js:108-110).
     wave.unpersist()
-    val pending: Option[Int] = front.local match {
-      case Some(a) => a.iterator
+    val pending: Option[Int] = front match {
+      case Left(a) => a.iterator
         .filter(j => !j.state.finished && !cfg.disabledRoutes(j.routeId))
         .map(_.notBeforeStep).minOption
-      case None =>
-        val r = front.ds
+      case Right(ds) =>
+        val r = ds
           .filter(!col("state.finished"))
           .filter(if (cfg.disabledRoutes.isEmpty) lit(true)
                   else !col("routeId").isin(cfg.disabledRoutes.toSeq: _*))
@@ -1035,40 +1016,33 @@ final class CrawlEngine(
 
   private def metaDf(rows: Array[(String, Long)]): DataFrame = rows.toSeq.toDF("key", "phash")
 
-  /** (key, phash) of every item row up to `committed`: the driver mirror
-    * (Left) or the checkpointed DataFrame (Right), as maintained by the
-    * previous step. A miss (resume, first step after compaction) reads the
-    * delta dirs once (awaiting any in-flight commit); with `mirror` it
-    * refills the driver mirror in one bounded collect while the rows fit
+  /** (key, phash) of every item row up to the committed step: the issued
+    * value's driver mirror (Left) or checkpointed DataFrame (Right). When it
+    * has none (resume, first step after compaction) the delta dirs are read
+    * once (awaiting any in-flight commit); with `mirror` it refills the
+    * driver mirror in one bounded collect while the rows fit
     * driverCollectMaxRows.
     */
-  private def existingItemMeta(committed: Int, mirror: Boolean)
+  private def existingItemMeta(cur: Issued, mirror: Boolean)
       : Either[Array[(String, Long)], DataFrame] =
-    (itemMetaLocal, itemMetaCache) match {
-      case (Some((`committed`, a)), _) => Left(a)
-      case (_, Some((`committed`, df))) => Right(df)
-      case _ =>
-        awaitCommit()
-        if (!graft.state.StateIO.isDir(rawDir) && latestBaseStep < 0) Left(Array.empty)
-        else {
-          val df = readItemDeltas(committed, withBytes = false)
-            .select(col("key"), col("phash")).toDF()
-          val cap = cfg.driverCollectMaxRows
-          val rows =
-            if (mirror) df.as[(String, Long)].limit(math.min(cap, Int.MaxValue - 1L).toInt + 1)
-              .collect()
-            else Array.empty[(String, Long)]
-          if (mirror && rows.length <= cap) Left(rows) else Right(df.localCheckpoint(true))
-        }
+    cur.itemMeta.getOrElse {
+      awaitCommit()
+      if (!graft.state.StateIO.isDir(rawDir) && latestBaseStep < 0) Left(Array.empty)
+      else {
+        val df = readItemDeltas(cur.manifest.step, withBytes = false)
+          .select(col("key"), col("phash")).toDF()
+        val cap = cfg.driverCollectMaxRows
+        val rows =
+          if (mirror) df.as[(String, Long)].limit(math.min(cap, Int.MaxValue - 1L).toInt + 1)
+            .collect()
+          else Array.empty[(String, Long)]
+        if (mirror && rows.length <= cap) Left(rows) else Right(df.localCheckpoint(true))
+      }
     }
 
-  /** Replace the item-meta state by `existing ∪ added`, checkpointed. */
-  private def cacheItemMeta(existing: Option[DataFrame], added: DataFrame,
-      stepNow: Int): Unit = {
-    itemMetaLocal = None
-    itemMetaCache = Some((stepNow,
-      existing.fold(added)(_.unionByName(added)).localCheckpoint(true)))
-  }
+  /** The next item meta as a DataFrame: `existing ∪ added`, checkpointed. */
+  private def checkpointMeta(existing: Option[DataFrame], added: DataFrame): DataFrame =
+    existing.fold(added)(_.unionByName(added)).localCheckpoint(true)
 
   // -- items (raw outcomes + equality deletes; merge-on-read) -------------
   // The bytes are already landed; this phase only DECIDES — winner pick,
@@ -1081,10 +1055,10 @@ final class CrawlEngine(
   // would let the landed item's phash differ from the one recorded in the
   // item-meta state, corrupting later near-dup votes and breaking
   // resume-identical parity.
-  private def itemsPhase(tier: Tier, outcomes: DataFrame, committed: Int,
+  private def itemsPhase(tier: Tier, outcomes: DataFrame, cur: Issued,
       stepNow: Int): ItemDecisions = tier match {
     case DriverTier(meta) =>
-      val existing = existingItemMeta(committed, mirror = true)
+      val existing = existingItemMeta(cur, mirror = true)
       // (srcJob, pos, key, image_id, phash)
       val itemTups = meta.iterator.flatMap(r => r.itemMeta.iterator
         .map(m => (r.job.urlKey, m._1, m._2, m._3, m._4))).toArray
@@ -1101,25 +1075,23 @@ final class CrawlEngine(
           val created = ws.count { case (k, _) => !existedKeys(k) }
           src -> (created.toLong, (ws.size - created).toLong)
       }
-      // the item-meta update backing the next step's suppression: the
-      // driver mirror while the merged rows fit, else the DataFrame twin
+      // the item meta backing the next step's suppression: the driver
+      // mirror while the merged rows fit, else the DataFrame twin
       val added = winners.iterator.map { case (k, w) => (k, w._4) }.toArray
-      val stale = existing match {
+      val next = existing match {
         case Left(old) if old.length.toLong + added.length <= cfg.driverCollectMaxRows =>
-          itemMetaLocal = Some((stepNow, old ++ added)); itemMetaCache = None
-          None
+          Left(old ++ added)
         case _ =>
-          cacheItemMeta(existing.fold(a => Some(metaDf(a)), Some(_)), metaDf(added), stepNow)
-          existing.toOption
+          Right(checkpointMeta(Some(existing.fold(metaDf, identity)), metaDf(added)))
       }
       ItemDecisions(Left(flagBySrc),
         if (suppressedKeys.isEmpty) None else Some(suppressedKeys.toSeq.toDF("key")),
-        stale.toSeq)
+        next, existing.toOption.toSeq)
     case DistributedTier =>
       // same outputs, no driver state. The suppressed plan reads only stable
       // inputs (the landed raw table + the item-meta checkpoint), so the
       // background commit re-executes it safely.
-      val existing: Option[DataFrame] = existingItemMeta(committed, mirror = false) match {
+      val existing: Option[DataFrame] = existingItemMeta(cur, mirror = false) match {
         case Left(a) if a.isEmpty => None
         case Left(a) => Some(metaDf(a).localCheckpoint(true))
         case Right(df) => Some(df)
@@ -1132,8 +1104,7 @@ final class CrawlEngine(
         .select(col("srcJob"), col("pos"), col("it.key").as("key"),
           coalesce(col("it.image_id"), lit("")).as("image_id"),
           col("it.phash").as("phash"))
-      val suppressed = Items.suppressedKeyDf(incoming, existing, cfg.phashThreshold,
-        broadcastIncoming = false)
+      val suppressed = Items.suppressedKeyDf(incoming, existing, cfg.phashThreshold)
       val win = org.apache.spark.sql.expressions.Window
         .partitionBy(col("key"))
         .orderBy(col("srcJob").asc, col("image_id").asc, col("pos").asc)
@@ -1154,9 +1125,9 @@ final class CrawlEngine(
             .as("created"),
           sum(when(coalesce(col("existed"), lit(false)), 1L).otherwise(0L))
             .as("updated"))
-      cacheItemMeta(existing, winners.select(col("key"), col("phash")), stepNow)
       ItemDecisions(Right(flagDf),
         if (cfg.phashThreshold < 0) None else Some(suppressed),
+        Right(checkpointMeta(existing, winners.select(col("key"), col("phash")))),
         Seq(winners) ++ existing)
   }
 
@@ -1186,129 +1157,119 @@ final class CrawlEngine(
     shards.map(sh => byPid.get(sh.pid).map(BloomSeen.insertLocal(sh, _)).getOrElse(sh))
   }
 
-  private val sketchBytes = cfg.bloomPartitions *
-    BloomSeen.estimatedShardBytes(cfg.bloomCapacityPerShard, cfg.bloomFpp)
-
   // -- spawned jobs: dedup (min routeId per key) → robots → seen-set -------
-  private def spawnsPhase(tier: Tier, outcomes: DataFrame, front: Front, v: Int,
-      committed: Int, stepNow: Int): Spawns = tier match {
-    case DriverTier(meta) =>
+  // A distributed wave's frontier is a Dataset: a driver array holds at
+  // most driverRows rows, so every wave off one runs the driver tier.
+  private def spawnsPhase(tier: Tier, outcomes: DataFrame, front: Frontier, cur: Issued,
+      stepNow: Int): Spawns = ((tier, front): @unchecked) match {
+    case (DriverTier(meta), _) =>
+      // driver probe of the collected candidates + driver-merged bloom insert
       val cand = meta.iterator.flatMap(_.spawns).toArray.groupBy(_.urlKey)
         .valuesIterator.map(_.minBy(_.routeId))
         .filter(c => Robots.allowedLocal(c.url, c.host, robotsRules)).toArray
-      // the bloom shards live driver-side while they fit the broadcast budget
-      if (sketchBytes <= BloomBroadcastMaxBytes) driverSpawns(cand, front, v, committed, stepNow)
-      else distributedSpawns(cand.toSeq.toDF(), front, v, committed, stepNow)
-    case DistributedTier =>
-      val cands = outcomes.select(explode(spawnCands).as("c")).select(col("c.*"))
-      distributedSpawns(Robots.allowed(minRoutePerKey(cands), robotsRules),
-        front, v, committed, stepNow)
-  }
-
-  /** Driver probe of the collected candidates + driver-merged bloom insert. */
-  private def driverSpawns(cand: Array[SpawnCand], front: Front, v: Int,
-      committed: Int, stepNow: Int): Spawns = {
-    val shards = shardCache.collect { case (`v`, sh) => sh }
-      .getOrElse(readBloom(v).collect())
-    val keys = cand.map(_.urlKey)
-    val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
-    val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
-    // Exact check only on the bloom-positive sliver (true hits + fpp·new):
-    // the active frontier is the driver array (with the finished jobs it
-    // carries) or a column scan on urlKey, never shuffled; only the keys it
-    // misses go to the archive leg, which prunes to their bucket partitions
-    // (archiveProbePlan — PlanSpec-asserted), so a probe of k keys touches
-    // ≤ min(k, archiveBuckets) buckets of the all-jobs-ever table, not
-    // every archived key. Reading the archive awaits any in-flight commit
-    // (it appends a step dir) — usually a no-op since the commit overlapped
-    // the whole fetch; a step whose positives all sit in the frontier never
-    // touches it.
-    val seen: Set[Long] =
-      if (pos.isEmpty) Set.empty
-      else {
-        val posSorted = pos.toArray.sorted
-        val active: Set[Long] = front.local match {
-          case Some(a) => a.iterator.map(_.urlKey).filter(pos).toSet
-          case None => front.ds.select(col("urlKey")).filter(urlKeyIn(posSorted))
-            .as[Long].collect().toSet
-        }
-        val rest = posSorted.filterNot(active)
-        if (rest.isEmpty) active
+      val shards = cur.shards.getOrElse(readBloom(cur.manifest.version).collect())
+      val keys = cand.map(_.urlKey)
+      val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
+      val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
+      // Exact check only on the bloom-positive sliver (true hits + fpp·new):
+      // the active frontier is the driver array (with the finished jobs it
+      // carries) or a column scan on urlKey, never shuffled; only the keys
+      // it misses go to the archive leg, which prunes to their bucket
+      // partitions (archiveProbePlan — PlanSpec-asserted), so a probe of k
+      // keys touches ≤ min(k, ArchiveBuckets) buckets of the all-jobs-ever
+      // table, not every archived key. Reading the archive awaits any
+      // in-flight commit (it appends a step dir) — usually a no-op since the
+      // commit overlapped the whole fetch; a step whose positives all sit in
+      // the frontier never touches it.
+      val seen: Set[Long] =
+        if (pos.isEmpty) Set.empty
         else {
-          awaitCommit()
-          active ++ archiveProbePlan(rest, committed)
-            .map(_.as[Long].collect().toSet).getOrElse(Set.empty[Long])
+          val posSorted = pos.toArray.sorted
+          val active: Set[Long] = front match {
+            case Left(a) => a.iterator.map(_.urlKey).filter(pos).toSet
+            case Right(ds) => ds.select(col("urlKey")).filter(urlKeyIn(posSorted))
+              .as[Long].collect().toSet
+          }
+          val rest = posSorted.filterNot(active)
+          if (rest.isEmpty) active
+          else {
+            awaitCommit()
+            active ++ archiveProbePlan(rest, cur.manifest.step)
+              .map(_.as[Long].collect().toSet).getOrElse(Set.empty[Long])
+          }
         }
+      val fresh = cand.filterNot(c => seen(c.urlKey)).map(c =>
+        CrawlJob(c.urlKey, c.url, c.host, c.routeId,
+          priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
+          query = c.query, createdStep = stepNow + 1, notBeforeStep = stepNow + 1))
+      val merged = insertLocal(shards, fresh.map(_.urlKey))
+      // one bloom file per version, as seed() writes it
+      Spawns(spark.createDataset(fresh.toSeq), Some(fresh),
+        spark.createDataset(merged.toSeq).coalesce(1), Some(merged), Nil)
+    case (DistributedTier, Right(frontDs)) =>
+      // cogroup bloom probe, then an exact semi-join on the maybe-seen keys
+      val cands = outcomes.select(explode(spawnCands).as("c")).select(col("c.*"))
+      val allowed = Robots.allowed(minRoutePerKey(cands), robotsRules).localCheckpoint(true)
+      val bloom = readBloom(cur.manifest.version)
+      val probed = BloomSeen.probe(bloom,
+          allowed.select(col("urlKey")).as[Long], cfg.bloomPartitions)
+        .toDF("urlKey", "might").persist(StorageLevel.MEMORY_AND_DISK)
+      val definitelyNew = allowed.join(
+        broadcast(probed.filter(!col("might")).drop("might")),
+        Seq("urlKey"), "left_semi")
+      val maybeSeen = allowed.join(
+        broadcast(probed.filter(col("might")).drop("might")),
+        Seq("urlKey"), "left_semi")
+      // readBloom above already awaited the commit — the archive dirs up to
+      // the committed step are fully landed. The archive leg joins on
+      // (bucket, urlKey) against the broadcast maybe-seen keys: bucket is
+      // the archive's partition column, so dynamic partition pruning can
+      // drop non-matching bucket dirs before the scan.
+      val seenEver = readArchive(cur.manifest.step) match {
+        case Some(a) => frontDs.select(col("urlKey"))
+          .unionByName(a
+            .join(broadcast(maybeSeen.select(col("urlKey"),
+              pmod(col("urlKey"), lit(ArchiveBuckets)).cast("int").as("bucket"))),
+              Seq("bucket", "urlKey"), "left_semi")
+            .select(col("urlKey")))
+        case None => frontDs.select(col("urlKey"))
       }
-    val fresh = cand.filterNot(c => seen(c.urlKey)).map(c =>
-      CrawlJob(c.urlKey, c.url, c.host, c.routeId,
-        priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
-        query = c.query, createdStep = stepNow + 1, notBeforeStep = stepNow + 1))
-    val merged = insertLocal(shards, fresh.map(_.urlKey))
-    shardCache = Some((v + 1, merged))
-    // one bloom file per version, as seed() writes it
-    Spawns(spark.createDataset(fresh.toSeq), Some(fresh),
-      spark.createDataset(merged.toSeq).coalesce(1), Nil)
+      val seenConfirmed = seenEver
+        .join(broadcast(maybeSeen.select(col("urlKey"))), Seq("urlKey"), "left_semi")
+      val confirmedNew = maybeSeen.join(
+        broadcast(seenConfirmed), Seq("urlKey"), "left_anti")
+      val fresh = toJobs(definitelyNew.unionByName(confirmedNew), stepNow + 1)
+        .localCheckpoint(true)
+      probed.unpersist()
+      Spawns(fresh, None,
+        BloomSeen.insert(bloom, fresh.map(_.urlKey), cfg.bloomPartitions), None,
+        Seq(allowed, fresh))
   }
 
-  /** Cogroup bloom probe, then an exact semi-join on the maybe-seen keys. */
-  private def distributedSpawns(allowedPlan: DataFrame, front: Front, v: Int,
-      committed: Int, stepNow: Int): Spawns = {
-    shardCache = None
-    val allowed = allowedPlan.localCheckpoint(true)
-    val bloom = readBloom(v)
-    val probed = BloomSeen.probe(bloom,
-        allowed.select(col("urlKey")).as[Long], cfg.bloomPartitions)
-      .toDF("urlKey", "might").persist(StorageLevel.MEMORY_AND_DISK)
-    val definitelyNew = allowed.join(
-      broadcast(probed.filter(!col("might")).drop("might")),
-      Seq("urlKey"), "left_semi")
-    val maybeSeen = allowed.join(
-      broadcast(probed.filter(col("might")).drop("might")),
-      Seq("urlKey"), "left_semi")
-    // readBloom above already awaited the commit — the archive dirs up to
-    // `committed` are fully landed. The archive leg joins on (bucket,
-    // urlKey) against the broadcast maybe-seen keys: bucket is the
-    // archive's partition column, so dynamic partition pruning can drop
-    // non-matching bucket dirs before the scan.
-    val seenEver = readArchive(committed) match {
-      case Some(a) => front.ds.select(col("urlKey"))
-        .unionByName(a
-          .join(broadcast(maybeSeen.select(col("urlKey"),
-            pmod(col("urlKey"), lit(cfg.archiveBuckets)).cast("int").as("bucket"))),
-            Seq("bucket", "urlKey"), "left_semi")
-          .select(col("urlKey")))
-      case None => front.ds.select(col("urlKey"))
-    }
-    val seenConfirmed = seenEver
-      .join(broadcast(maybeSeen.select(col("urlKey"))), Seq("urlKey"), "left_semi")
-    val confirmedNew = maybeSeen.join(
-      broadcast(seenConfirmed), Seq("urlKey"), "left_anti")
-    val fresh = toJobs(definitelyNew.unionByName(confirmedNew), stepNow + 1)
-      .localCheckpoint(true)
-    probed.unpersist()
-    Spawns(fresh, None,
-      BloomSeen.insert(bloom, fresh.map(_.urlKey), cfg.bloomPartitions),
-      Seq(allowed, fresh))
-  }
-
+  /** The wave's job-state rewrite and fetch log, and the next version's
+    * manifest. Run accounting is exact off the driver tier's outcome
+    * metadata while the committed manifest has it: pending = pending − wave
+    * + continuing jobs + fresh jobs; fetched = Σ wave sizes; items = Σ
+    * created flags (a key is "created" exactly once); dead letters = the
+    * stop+4xx/5xx outcomes. A distributed step drops both, and the
+    * log-based paths take over — identical values, a few extra jobs.
+    */
   private def jobStatePhase(tier: Tier, outcomes: DataFrame,
       flags: Either[Map[Long, (Long, Long)], DataFrame],
-      freshLocal: Option[Array[CrawlJob]], waveN: Long, stepNow: Int): JobUpdates = {
+      freshLocal: Option[Array[CrawlJob]], cur: SnapshotStore.Manifest, waveN: Long,
+      stepNow: Int): JobUpdates = {
     // locals only in executor closures — capturing fields would serialize `this`
     val routesLocal = routesBc
     val backoff = cfg.retryBackoffSteps
-    fetchedAcc += waveN
-    ((tier, flags): @unchecked) match {
-      case (DriverTier(meta), Left(flagBySrc)) =>
-        // run accounting (see the fields): exact off the outcome metadata
-        dlAcc += meta.count(r => r.status >= 400 && r.action == "stop")
-        itemsAcc += flagBySrc.valuesIterator.map(_._1).sum
+    def manifest(pending: Option[Long], totals: Option[SnapshotStore.Totals]) =
+      SnapshotStore.Manifest(cur.version + 1, stepNow, waveN, pending, totals)
+    ((tier, flags, freshLocal): @unchecked) match {
+      case (DriverTier(meta), Left(flagBySrc), Some(fresh)) =>
         val cont = meta.count(r => r.action == "retry" || (r.action == "ok" && r.hasNextPage))
-        pendingCount = freshLocal match {
-          case Some(fr) if pendingCount >= 0L => pendingCount - waveN + cont + fr.length
-          case _ => -1L
-        }
+        val dead = meta.count(r => r.status >= 400 && r.action == "stop")
+        val next = manifest(cur.pending.map(_ - waveN + cont + fresh.length),
+          cur.totals.map(t => SnapshotStore.Totals(t.fetched + waveN,
+            t.items + flagBySrc.valuesIterator.map(_._1).sum, t.deadLettered + dead)))
         // one driver loop → local relations: no re-scan of the landed table
         // for the state rewrite, the fetch-log write OR the archive write
         val rows = meta.map { r =>
@@ -1321,10 +1282,8 @@ final class CrawlEngine(
         }
         val upd = rows.map(_._1)
         JobUpdates(spark.createDataset(upd.toSeq).coalesce(1),
-          spark.createDataset(rows.map(_._2).toSeq).coalesce(1).toDF(), Some(upd))
-      case (DistributedTier, Right(flagDf)) =>
-        pendingCount = -1L
-        acctValid = false
+          spark.createDataset(rows.map(_._2).toSeq).coalesce(1).toDF(), Some(upd), next)
+      case (DistributedTier, Right(flagDf), _) =>
         // a byte-free projection of the landed outcomes, flags left-joined
         val metaFlagged = outcomes
           .join(flagDf.withColumnRenamed("srcJob", "jk"), col("job.urlKey") === col("jk"), "left")
@@ -1345,7 +1304,7 @@ final class CrawlEngine(
             CrawlEngine.logRow(stepNow, job, status, action, hasNext,
               nSpawned, created, updated)
         }.toDF()
-        JobUpdates(upd, log, None)
+        JobUpdates(upd, log, None, manifest(None, None))
     }
   }
 
@@ -1355,13 +1314,12 @@ final class CrawlEngine(
     * keeps its finished rows while the merged array fits [[driverRows]]; an
     * array that would not fit, and any Dataset frontier, flush all of
     * theirs. The pending rows stay the driver array while they fit, else
-    * they are checkpointed. Returns the frontier rows the commit writes, the
-    * archive rows (None: no flush) and the previous frontier checkpoint,
-    * released after the commit.
+    * they are checkpointed. Returns the next frontier and the archive rows
+    * (None: no flush).
     */
-  private def frontierPhase(tier: Tier, front: Front, wave: Dataset[CrawlJob],
-      jobs: JobUpdates, spawns: Spawns, v: Int, stepNow: Int)
-      : (Dataset[CrawlJob], Option[Dataset[CrawlJob]], Option[Dataset[CrawlJob]]) = {
+  private def frontierPhase(tier: Tier, front: Frontier, wave: Dataset[CrawlJob],
+      jobs: JobUpdates, spawns: Spawns, stepNow: Int)
+      : (Frontier, Option[Dataset[CrawlJob]]) = {
     // robots crawl-delay: bump hosts fetched this wave. The delayed-host
     // universe is the robots rules table (tiny by design), so the touched∩
     // delayed set collects driver-side at ANY wave size.
@@ -1376,74 +1334,65 @@ final class CrawlEngine(
     }
     val hostNext: Map[String, Int] = touched.distinct.filter(hostDelay.contains)
       .map(h => h -> (stepNow + hostDelay(h))).toMap
-    val (next: Either[Array[CrawlJob], Dataset[CrawlJob]],
-         archived: Option[Dataset[CrawlJob]]) =
-      (front.local, jobs.updatedLocal, spawns.freshLocal) match {
-        case (Some(f), Some(upd), Some(fr)) =>
-          // an array pass: the fetch stage maps wave rows 1:1 to outcomes,
-          // so the updated rows carry every wave key
-          val inWave = upd.iterator.map(_.urlKey).toSet
-          val a = (f.iterator.filterNot(j => inWave(j.urlKey)) ++
-            upd.iterator ++ fr.iterator)
-            .map(j => hostNext.get(j.host) match {
-              case Some(n) if !j.state.finished && n > j.notBeforeStep =>
-                j.copy(notBeforeStep = n)
-              case _ => j
-            }).toArray
-          if (a.length <= driverRows) (Left(a), None)
+    // a driver array's wave ran the driver tier (see spawnsPhase)
+    ((front, jobs.updatedLocal, spawns.freshLocal): @unchecked) match {
+      case (Left(f), Some(upd), Some(fr)) =>
+        // an array pass: the fetch stage maps wave rows 1:1 to outcomes,
+        // so the updated rows carry every wave key
+        val inWave = upd.iterator.map(_.urlKey).toSet
+        val a = (f.iterator.filterNot(j => inWave(j.urlKey)) ++
+          upd.iterator ++ fr.iterator)
+          .map(j => hostNext.get(j.host) match {
+            case Some(n) if !j.state.finished && n > j.notBeforeStep =>
+              j.copy(notBeforeStep = n)
+            case _ => j
+          }).toArray
+        if (a.length <= driverRows) (Left(a), None)
+        else {
+          val (done, pending) = a.partition(_.state.finished)
+          (if (pending.length <= driverRows) Left(pending)
+           else Right(spark.createDataset(pending.toSeq).localCheckpoint(true)),
+           Option.when(done.nonEmpty)(spark.createDataset(done.toSeq)))
+        }
+      case (Right(ds), _, _) =>
+        // driver-tier wave keys filter the frontier in one narrow scan;
+        // a distributed wave anti-joins it (strategy left to Catalyst)
+        val untouched = waveKeys.fold(
+          keys => ds.filter(!urlKeyIn(keys)),
+          keys => ds.join(keys, Seq("urlKey"), "left_anti").as[CrawlJob])
+        val frontier2 = untouched.filter(!col("state.finished"))
+          .unionByName(jobs.updated.filter(!col("state.finished")))
+          .unionByName(spawns.fresh)
+        val bumped =
+          if (hostNext.isEmpty) frontier2
           else {
-            val (done, pending) = a.partition(_.state.finished)
-            (if (pending.length <= driverRows) Left(pending)
-             else Right(spark.createDataset(pending.toSeq).localCheckpoint(true)),
-             Option.when(done.nonEmpty)(spark.createDataset(done.toSeq)))
+            val nextLit = typedLit(hostNext)
+            frontier2.toDF()
+              .withColumn("notBeforeStep",
+                when(element_at(nextLit, col("host")).isNotNull,
+                  greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
+                .otherwise(col("notBeforeStep")))
+              .as[CrawlJob]
           }
-        case _ =>
-          // driver-tier wave keys filter the frontier in one narrow scan;
-          // a distributed wave anti-joins it (strategy left to Catalyst)
-          val untouched = waveKeys.fold(
-            keys => front.ds.filter(!urlKeyIn(keys)),
-            keys => front.ds.join(keys, Seq("urlKey"), "left_anti").as[CrawlJob])
-          val frontier2 = untouched.filter(!col("state.finished"))
-            .unionByName(jobs.updated.filter(!col("state.finished")))
-            .unionByName(spawns.fresh)
-          val bumped =
-            if (hostNext.isEmpty) frontier2
-            else {
-              val nextLit = typedLit(hostNext)
-              frontier2.toDF()
-                .withColumn("notBeforeStep",
-                  when(element_at(nextLit, col("host")).isNotNull,
-                    greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
-                  .otherwise(col("notBeforeStep")))
-                .as[CrawlJob]
-            }
-          // the frontier's carried finished rows (a resumed or spilled
-          // driver array) and the wave's, so the next one carries none
-          (Right(bumped.localCheckpoint(true)),
-           Some(untouched.filter(col("state.finished"))
-             .unionByName(jobs.updated.filter(col("state.finished")))))
-      }
-    val prev = frontierCache.collect { case (`v`, f) => f }
-    frontierLocal = next.left.toOption.map((v + 1, _))
-    frontierCache = next.toOption.map((v + 1, _))
-    (next.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity), archived, prev)
+        // the frontier's carried finished rows (a resumed or spilled
+        // driver array) and the wave's, so the next one carries none
+        (Right(bumped.localCheckpoint(true)),
+         Some(untouched.filter(col("state.finished"))
+           .unionByName(jobs.updated.filter(col("state.finished")))))
+    }
   }
 
-  /** Issue the step's snapshot commit (pipelined unless listeners wait on
-    * it). `archived` = the finished rows the frontier flushed this step, if
-    * it flushed; `release` = checkpoints the writes read, freed once they
-    * land.
+  /** Issue the step's snapshot commit of `next` (pipelined unless listeners
+    * wait on it) and make `next` the issued value. `frontier` = next's
+    * frontier; `archived` = the finished rows the frontier flushed this
+    * step, if it flushed; `release` = checkpoints the writes read, freed
+    * once they land.
     */
-  private def commitPhase(v: Int, stepNow: Int, waveN: Long, jobs: JobUpdates,
-      suppressed: Option[DataFrame], frontierOut: Dataset[CrawlJob],
-      archived: Option[Dataset[CrawlJob]], bloom: Dataset[BloomShard],
-      release: Seq[Dataset[_]]): Unit = {
-    // this version's manifest — the exact counts, taken now: the next
-    // superstep advances them while this commit may still be in flight
-    val manifest = SnapshotStore.Manifest(v + 1, stepNow, waveN,
-      pending = Some(pendingCount).filter(_ >= 0L),
-      totals = if (acctValid) Some(SnapshotStore.Totals(fetchedAcc, itemsAcc, dlAcc))
-               else None)
+  private def commitPhase(next: Issued, frontier: Frontier, log: DataFrame,
+      suppressed: Option[DataFrame], archived: Option[Dataset[CrawlJob]],
+      bloom: Dataset[BloomShard], release: Seq[Dataset[_]]): Unit = {
+    val (v, stepNow) = (next.manifest.version, next.manifest.step)
+    val frontierOut = frontier.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity)
     // The superstep writes (fetch log, frontier, bloom, equality deletes,
     // and the archive on a step that flushed) are independent plans over
     // already-checkpointed inputs — submitted from parallel threads so
@@ -1457,15 +1406,15 @@ final class CrawlEngine(
     // with no listeners it runs on a background thread, overlapping the
     // next superstep's wave+fetch — a superstep's flat driver cost is the
     // N→4N scaling-efficiency ceiling, and the commit was its largest term.
-    // step s+1 plans off the in-memory state updated above; any disk read
-    // awaits. The previous commit (long since done — a whole superstep
-    // elapsed) is awaited before this one is issued, so commits are ordered
-    // and at most one is in flight.
+    // step s+1 plans off `next`, issued below; any disk read awaits. The
+    // previous commit (long since done — a whole superstep elapsed) is
+    // awaited before this one is issued, so commits are ordered and at most
+    // one is in flight.
     timed("commit.await")(awaitCommit())
     def commitWork(): Unit = {
-      store.commit(v + 1, manifest) { dir =>
+      store.commit(v, next.manifest) { dir =>
         inParallel(Seq(
-          Some(() => stateWrite(jobs.log.drop("step").coalesce(1)).mode("overwrite")
+          Some(() => stateWrite(log.drop("step").coalesce(1)).mode("overwrite")
             .parquet(s"${logDir("fetchlog")}/step=$stepNow")),
           Some(() => stateWrite(frontierOut).parquet(s"$dir/frontier")),
           Some(() => stateWrite(bloom).parquet(s"$dir/bloom")),
@@ -1473,18 +1422,20 @@ final class CrawlEngine(
           suppressed.map(sup => () => stateWrite(sup.coalesce(1)).mode("overwrite")
             .parquet(s"$suppressedDir/step=$stepNow"))).flatten: _*)
       }
-      store.expire(v + 1 - cfg.retainSnapshots + 1)
+      store.expire(v - cfg.retainSnapshots + 1)
     }
-    issuedState = Some((v + 1, stepNow))
     if (listeners.nonEmpty) {
       // listener contract: fan-out AFTER the commit (stepLog reads the
-      // landed raw outcomes + this step's flags) — so commit synchronously
-      timed("commit")(commitWork())
-      val stepLog = jobs.log.as[FetchLog]
+      // landed raw outcomes + this step's flags) — so commit synchronously;
+      // `next` is issued once it has landed
+      timed("commit")(latchFailure(commitWork()))
+      issued = Some(next)
+      val stepLog = log.as[FetchLog]
       listeners.foreach(_.onStepCommitted(stepNow, stepLog))
       release.foreach(_.unpersist())
     } else {
       import scala.concurrent.ExecutionContext.Implicits.global
+      issued = Some(next)
       commitInFlight = Some(scala.concurrent.Future {
         // own fair-scheduler pool: under spark.scheduler.mode=FAIR the
         // commit's jobs share task slots with the next superstep's wave +
@@ -1528,10 +1479,9 @@ final class CrawlEngine(
   def compactItems(): Unit = withEngineConf {
     awaitCommit()
     // compaction switches suppression to live-set semantics (superseded
-    // versions no longer vote) — drop the all-delta-rows cache + its mirror
-    itemMetaCache.foreach(_._2.unpersist())
-    itemMetaCache = None
-    itemMetaLocal = None
+    // versions no longer vote) — drop the all-delta-rows item meta
+    issued.flatMap(_.itemMeta).foreach(_.foreach(_.unpersist()))
+    issued = issued.map(_.copy(itemMeta = None))
     import graft.state.StateIO
     for (v <- currentVersion) {
       val committed = stepOf(v)
@@ -1557,26 +1507,25 @@ final class CrawlEngine(
   }
 
   private def summary(steps: Int): RunSummary = timed("summary") {
-    // exact driver accounting when live (zero Spark jobs — see the fields'
-    // scaladoc); else one pass over the fetch log (count == fetched: one
-    // row per fetch; dead letters are the stop+4xx/5xx rows) and the item
-    // count off the in-memory meta cache when it is current — LWW-resolved
-    // count == distinct delta keys, no window over the full delta scan
-    if (acctValid) RunSummary(steps, fetchedAcc, itemsAcc, dlAcc)
-    else {
-      val row = fetchLog.agg(
-        count(lit(1)),
-        coalesce(sum(when(col("status") >= 400 && col("action") === "stop", 1L)
-          .otherwise(0L)), lit(0L))).head()
-      val current = issuedState.map(_._2)
-      val itemCount = (itemMetaLocal, itemMetaCache) match {
-        case (Some((step, a)), _) if current.contains(step) =>
-          a.iterator.map(_._1).distinct.size.toLong
-        case (_, Some((step, df))) if current.contains(step) =>
-          df.select(col("key")).distinct().count()
-        case _ => items.count()
-      }
-      RunSummary(steps, row.getLong(0), itemCount, row.getLong(1))
+    // the issued manifest's exact totals when it has them (zero Spark jobs
+    // — see jobStatePhase); else one pass over the fetch log (count ==
+    // fetched: one row per fetch; dead letters are the stop+4xx/5xx rows)
+    // and the item count off the issued item meta when it has one —
+    // LWW-resolved count == distinct delta keys, no window over the full
+    // delta scan
+    issued.flatMap(_.manifest.totals) match {
+      case Some(t) => RunSummary(steps, t.fetched, t.items, t.deadLettered)
+      case None =>
+        val row = fetchLog.agg(
+          count(lit(1)),
+          coalesce(sum(when(col("status") >= 400 && col("action") === "stop", 1L)
+            .otherwise(0L)), lit(0L))).head()
+        val itemCount = issued.flatMap(_.itemMeta) match {
+          case Some(Left(a)) => a.iterator.map(_._1).distinct.size.toLong
+          case Some(Right(df)) => df.select(col("key")).distinct().count()
+          case None => items.count()
+        }
+        RunSummary(steps, row.getLong(0), itemCount, row.getLong(1))
     }
   }
 }

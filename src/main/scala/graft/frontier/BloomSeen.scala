@@ -1,7 +1,6 @@
 package graft.frontier
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -60,27 +59,6 @@ object BloomSeen {
           Iterator(BloomShard(pid, serialize(bf)))
         }
       }
-  }
-
-  /** Broadcast fast path for [[probe]]: when the total sketch size fits the
-    * broadcast budget (it does until the frontier reaches billions of keys),
-    * ship the shards to executors once and probe with a narrow map — zero
-    * shuffles. The cogroup [[probe]] remains the big-frontier path; the
-    * engine picks by estimated sketch size.
-    */
-  def probeBroadcast(shards: Broadcast[Map[Int, Array[Byte]]],
-      keys: Dataset[Long], partitions: Int): Dataset[(Long, Boolean)] = {
-    val spark = keys.sparkSession
-    import spark.implicits._
-    val p = partitions
-    keys.mapPartitions { it =>
-      val cache = scala.collection.mutable.Map.empty[Int, BloomFilter]
-      it.map { k =>
-        val pid = pidOf(k, p)
-        val bf = cache.getOrElseUpdate(pid, deserialize(shards.value(pid)))
-        (k, bf.mightContainLong(k))
-      }
-    }
   }
 
   /** Driver-side probe over locally-held shards (small-frontier fast path):

@@ -29,15 +29,14 @@ object Items {
       .as[ImageItem]
   }
 
-  /** Driver-resident variant of [[suppressNearDups]] + created-vs-updated
+  /** Driver-resident variant of [[suppressedKeyDf]] + created-vs-updated
     * key lookup, fused into ONE distributed pass over the existing items.
     *
-    * The incoming side of a superstep is politeness-bounded (hosts × budget ×
-    * items/page) — the same envelope [[suppressNearDups]] already assumes
-    * when it broadcasts the incoming bands — so its banding tables live on
-    * the driver and ship via one broadcast; the existing-items side (the
-    * unbounded one) is scanned distributed, each row probing the banded map
-    * and the incoming-key set. Replicates [[suppressNearDups]] exactly:
+    * The incoming side of a driver-tier superstep is politeness-bounded
+    * (hosts × budget × items/page), so its banding tables live on the driver
+    * and ship via one broadcast; the existing-items side (the unbounded one)
+    * is scanned distributed, each row probing the banded map and the
+    * incoming-key set. Replicates [[suppressedKeyDf]] exactly:
     * 8×8-bit LSH bands, hot-bucket guard on the incoming side, exact hamming
     * verify, in-batch lower-key-wins.
     *
@@ -166,20 +165,15 @@ object Items {
     * are instead collapsed by the exact-duplicate path (equality on the
     * full 64-bit phash), which stays linear. The hot set itself is bounded
     * by the 8×256-entry bucket space, so its anti-join side always
-    * broadcasts.
-    *
-    * @param broadcastIncoming true (wave-bounded incoming) broadcasts the
-    *        incoming bands so the existing side is scanned narrowly, never
-    *        shuffled — at 10^9 landed items the join stays map-side. false
-    *        (a wave too large for the driver/broadcast envelope) leaves join
-    *        strategy to Catalyst/AQE: sort-merge on (bandIdx, bandVal).
+    * broadcasts. The incoming side is a wave too large for the driver
+    * tier, so the band joins' strategy is left to Catalyst: sort-merge on
+    * (bandIdx, bandVal).
     */
   def suppressedKeyDf(
       incoming: DataFrame, // needs (key, phash); duplicate keys allowed
       existing: Option[DataFrame], // needs only (key, phash) — column-pruned
       t: Int,
-      hotBucketCap: Int = 256,
-      broadcastIncoming: Boolean = true): DataFrame = {
+      hotBucketCap: Int = 256): DataFrame = {
     val none = incoming.select(col("key")).limit(0)
     if (t < 0) return none
 
@@ -194,9 +188,8 @@ object Items {
     val hotVals = incAll.groupBy(col("bandIdx"), col("bandVal"))
       .agg(count(lit(1)).as("c")).filter(col("c") > hotBucketCap)
       .select(col("bandIdx"), col("bandVal"))
-    val incKept = incAll.join(broadcast(hotVals), Seq("bandIdx", "bandVal"),
+    val inc = incAll.join(broadcast(hotVals), Seq("bandIdx", "bandVal"),
       "left_anti")
-    val inc = if (broadcastIncoming) broadcast(incKept) else incKept
 
     val vsExisting = existing match {
       case Some(ex) =>
@@ -214,20 +207,5 @@ object Items {
       .select(col("inc_key").as("key")).distinct()
 
     vsExisting.union(vsIncoming).distinct()
-  }
-
-  /** Drop incoming items that are near-duplicates of an existing item or of
-    * a lower-keyed incoming item — [[suppressedKeyDf]] applied as an
-    * anti-join filter over the typed incoming rows.
-    */
-  def suppressNearDups(
-      incoming: Dataset[ImageItem],
-      existing: DataFrame, // needs only (key, phash) — column-pruned scan
-      t: Int = 6,
-      hotBucketCap: Int = 256): Dataset[ImageItem] = {
-    val spark = incoming.sparkSession
-    import spark.implicits._
-    val suppressed = suppressedKeyDf(incoming.toDF(), Some(existing), t, hotBucketCap)
-    incoming.join(broadcast(suppressed), Seq("key"), "left_anti").as[ImageItem]
   }
 }

@@ -287,6 +287,47 @@ class CrawlEngineSpec extends SparkSpec {
     assert(totalsOf(distSum) == totalsOf(straightSum), s"$distSum vs $straightSum")
   }
 
+  test("a failed commit poisons the engine in both commit modes; a fresh engine resumes") {
+    val dirB = tmpDir("engine-commitfail-straight")
+    val b = newEngine(dirB)
+    b.seed(SyntheticCorpus.seeds(spec))
+    val straightSum = b.run()
+    val noop = new CrawlEngine.StepListener {
+      override def onStepCommitted(step: Int,
+          stepLog: org.apache.spark.sql.Dataset[graft.engine.FetchLog]): Unit = ()
+    }
+    // a listener makes every commit synchronous; without one it runs in the
+    // background and its failure surfaces at the next step's await
+    val modes = Seq(("background", Nil), ("synchronous", Seq(noop)))
+    for ((mode, listeners) <- modes) withClue(s"$mode commit: ") {
+      val dir = tmpDir(s"engine-commitfail-$mode")
+      def engine = new CrawlEngine(spark, routes, fetcher, Nil,
+        EngineConfig(statePath = dir, hostBudget = 2,
+          bloomPartitions = 4, bloomCapacityPerShard = 1 << 16), listeners = listeners)
+      val e = engine
+      e.seed(SyntheticCorpus.seeds(spec))
+      // a regular file where the fetch log's step dirs go: the first step's
+      // commit fails at its fetch-log write
+      val blocker = new java.io.File(s"$dir/logs/fetchlog")
+      blocker.getParentFile.mkdirs()
+      assert(blocker.createNewFile())
+      if (listeners.isEmpty) assert(e.step(), "the first step found no work")
+      intercept[Exception](e.step())
+      // with the cause gone, the engine stays poisoned: no later step may
+      // commit a version over the missing one
+      assert(blocker.delete())
+      intercept[IllegalStateException](e.step())
+      intercept[IllegalStateException](e.run())
+      intercept[IllegalStateException](e.step())
+      assert(new SnapshotStore(dir).latestVersion.contains(0), "a version above v0")
+      val r = engine
+      val resumedSum = r.resume()
+      assert(resumedSum == straightSum, s"$resumedSum vs $straightSum")
+      assert(itemsOf(r) == itemsOf(b), "resumed items differ from the straight run")
+      assert(logOf(r) == logOf(b), "resumed fetch log differs from the straight run")
+    }
+  }
+
   def itemsOf(e: CrawlEngine) =
     e.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1).toSeq
   def frontierOf(e: CrawlEngine) =

@@ -69,7 +69,7 @@ class PlanSpec extends SparkSpec {
   test("bloom-positive archive probe prunes to the positive keys' bucket partitions") {
     // The finished-job archive is the all-jobs-ever table: at 10^10 URLs a
     // per-step full scan of its key column is a driver-cost cliff. It is
-    // written bucketed by pmod(urlKey, archiveBuckets); the exact-seen
+    // written bucketed by pmod(urlKey, ArchiveBuckets); the exact-seen
     // probe must touch ONLY the bucket dirs its positive keys hash to.
     import graft.corpus._
     import graft.engine.{CrawlEngine, EngineConfig}
@@ -80,12 +80,12 @@ class PlanSpec extends SparkSpec {
     // this 8-job crawl flushes; at 0 every step archives.
     for (driverCollectMaxRows <- Seq(4096L, 0L)) {
       val stateDir = tmpDir("plan-archive")
-      val buckets = 8
+      val buckets = CrawlEngine.ArchiveBuckets
       val eng = new CrawlEngine(spark, SiteRoutes.registry(spec),
         new CorpusFetcher(SyntheticCorpus.buildLocal(spec)), Nil,
         EngineConfig(statePath = stateDir, hostBudget = 4,
           bloomPartitions = 4, bloomCapacityPerShard = 1 << 16,
-          archiveBuckets = buckets, driverCollectMaxRows = driverCollectMaxRows))
+          driverCollectMaxRows = driverCollectMaxRows))
       eng.seed(SyntheticCorpus.seeds(spec))
       eng.run()
       val archived = spark.read.parquet(s"$stateDir/jobs_done")
