@@ -1,7 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, SparkSession}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration.Duration
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Observation, Row,
+  SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.corpus.CorpusRow
 import graft.fetch.{CorpusFetcher, FetchStage, Fetcher, StepOutcome}
@@ -41,11 +47,12 @@ object CrawlEngine {
     * superstep, listeners receive that step's fetch log as a typed Dataset
     * (filter `finished`/`action`/`itemsCreated` for the per-job events).
     * Runs on the driver between supersteps; a throwing listener fails the
-    * crawl like a throwing reference handler. The Dataset scans the step's
-    * landed raw-outcome table and should be consumed INSIDE the callback
-    * (collect/write/aggregate). With listeners attached the commit runs
-    * synchronously (fan-out is contractually after-commit), trading the
-    * pipelined overlap for the event ordering guarantee.
+    * crawl like a throwing reference handler. On the distributed tier the
+    * Dataset scans the step's landed raw-outcome table, so it should be
+    * consumed INSIDE the callback (collect/write/aggregate). With listeners
+    * attached the commit runs synchronously (fan-out is contractually
+    * after-commit), trading the pipelined overlap for the event ordering
+    * guarantee.
     */
   trait StepListener {
     def onStepCommitted(step: Int, stepLog: Dataset[FetchLog]): Unit
@@ -56,11 +63,13 @@ object CrawlEngine {
   private[engine] case class SpawnCand(urlKey: Long, url: String, host: String,
       routeId: String, query: Map[String, String])
 
-  /** Byte-free per-outcome metadata — the driver tier's single-collect
-    * envelope: one scan of the landed raw table feeds the item decisions,
-    * spawn dedup, job-state updates, fetch log, archive rows and frontier.
-    * `nSpawned` is the scraper's raw spawn count (the job stat), `spawns`
-    * its canonical candidates; `itemMeta` rows are (pos, key, image_id, phash).
+  /** Byte-free per-outcome metadata — the driver tier's envelope, returned
+    * by the fetch write itself as an observed metric (see `fetchPhase`); it
+    * feeds the item decisions, spawn dedup, job-state updates, fetch log,
+    * archive rows and frontier, so the driver tier never reads the landed
+    * raw table back. `nSpawned` is the scraper's raw spawn count (the job
+    * stat), `spawns` its canonical candidates; `itemMeta` rows are (pos,
+    * key, image_id, phash).
     */
   private[engine] case class OutcomeMeta(
       job: CrawlJob, status: Int, action: String, hasNextPage: Boolean,
@@ -70,10 +79,12 @@ object CrawlEngine {
   /** The plans a superstep runs, chosen once per step from its wave size
     * (see [[EngineConfig.driverCollectMaxRows]]). */
   private[engine] sealed trait Tier
-  /** A driver-sized wave, with its outcome metadata collected in one job. */
+  /** A driver-sized wave, with its outcome metadata observed by the fetch
+    * write: the step's one foreground Spark job. */
   private[engine] final case class DriverTier(meta: Array[OutcomeMeta]) extends Tier
-  /** A larger wave: Dataset plans only, no per-step driver state. */
-  private[engine] case object DistributedTier extends Tier
+  /** A larger wave: Dataset plans over the landed raw `outcomes` table, no
+    * per-step driver state. */
+  private[engine] final case class DistributedTier(outcomes: DataFrame) extends Tier
 
   /** A pending frontier: a driver array or a Dataset. */
   private[engine] type Frontier = Either[Array[CrawlJob], Dataset[CrawlJob]]
@@ -224,6 +235,12 @@ object CrawlEngine {
     */
   private val FetchTaskFactor = 32
   private val FetchPagesPerTask = 128
+  /** How long the driver tier waits, once its fetch write has returned, for
+    * the write's observed outcome metadata. Spark completes an observation
+    * from its listener bus, a moment after the write; a write whose metric
+    * never arrives fails the step instead of hanging it.
+    */
+  private val ObservedMetaWait = Duration(60, "s")
 }
 
 case class EngineConfig(
@@ -274,18 +291,19 @@ case class EngineConfig(
       * its two superstep tiers.
       *
       * A wave of at most `driverCollectMaxRows / 1024` rows runs the DRIVER
-      * tier: one collect of its byte-free outcome metadata (item keys,
-      * job state, and the spawn candidates, canonicalized inside that job's
-      * tasks) feeds driver passes for the item decisions, spawn dedup, job
-      * state, fetch log and frontier — two foreground Spark jobs per
-      * superstep (the fetch write and the collect). The 1024× headroom
+      * tier: the fetch write returns the wave's byte-free outcome metadata
+      * (item keys, job state, and the spawn candidates, canonicalized inside
+      * the fetch tasks) as an observed metric, which feeds driver passes for
+      * the item decisions, spawn dedup, job state, fetch log and frontier —
+      * one foreground Spark job per superstep. The 1024× headroom
       * covers what a page emits: breaching the bound from there needs more
       * than 1024 items or links per page on average. A pending frontier of
       * at most the same row count is a driver array, so the politeness
       * wave, the empty-wave clock jump, the active-frontier seen probe and
       * the frontier rewrite run with zero Spark jobs (measured on
       * crawl_deep, 8 hosts × 3 listings × 8 pages, 4 vCPUs: foreground jobs
-      * per superstep 5 → 2; the Dataset wave alone had been a 3-stage
+      * per superstep 5 → 2, before the metadata collect was folded into the
+      * fetch write; the Dataset wave alone had been a 3-stage
       * collect of 0.3–0.7 s per 1.1–1.9 s superstep). The same row bound
       * picks the seed's single-collect path and narrows a step's shuffle
       * width to its pending count.
@@ -333,17 +351,18 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   * continues from the latest snapshot with identical results (kill-safe via
   * the store's atomic rename).
   *
-  * Two tiers, chosen once per step by one bound
-  * ([[EngineConfig.driverCollectMaxRows]] / 1024 rows): a driver-sized wave
-  * collects its byte-free outcome metadata in one job and runs phases 3–5
-  * as driver passes (with the frontier a driver array while it fits the
-  * same bound) — two foreground Spark jobs per superstep; a larger wave
-  * runs the Dataset plans above. A driver-array frontier also carries its
-  * finished jobs, so a step whose frontier fits the bound writes no
-  * archive; they are flushed in one batch when it would outgrow the bound
-  * (see `archiveDir`). A frontier that leaves the driver array (it outgrew
-  * the bound, or the engine resumed mid-crawl) stays a Dataset for the
-  * rest of the run and archives its finished jobs every step. Each
+  * Two tiers, chosen once per step from the wave size by one bound
+  * ([[EngineConfig.driverCollectMaxRows]] / 1024 rows): a driver-sized
+  * wave's fetch write returns its byte-free outcome metadata as an observed
+  * metric, and phases 3–5 run as driver passes over it (with the frontier a
+  * driver array while it fits the same bound) — one foreground Spark job
+  * per superstep; a larger wave runs the Dataset plans above. A
+  * driver-array frontier also carries its finished jobs, so a step whose
+  * frontier fits the bound writes no archive; they are flushed in one batch
+  * when it would outgrow the bound (see `archiveDir`). A frontier that
+  * leaves the driver array (it outgrew the bound, or the engine resumed
+  * mid-crawl) stays a Dataset for the rest of the run and archives its
+  * finished jobs every step. Each
   * manifest records the exact pending count and run totals while the
   * driver tier keeps them, so resuming a drained crawl runs no Spark job.
   *
@@ -373,8 +392,7 @@ final class CrawlEngine(
     * their planning/scheduling/IO latencies overlap instead of chaining.
     */
   private def inParallel(fs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
     // propagate the calling thread's scheduler pool: jobs submitted from EC
     // worker threads otherwise land in the default pool, where (FIFO) they
@@ -437,12 +455,15 @@ final class CrawlEngine(
   private def awaitCommit(): Unit = {
     checkNotPoisoned()
     commitInFlight.foreach { f =>
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
       try latchFailure(Await.result(f, Duration.Inf))
       finally commitInFlight = None
     }
   }
+
+  /** Test seam: blocks until the in-flight commit, if any, has finished,
+    * leaving its outcome for the next step or await to consume. */
+  private[graft] def commitSettled(): Unit =
+    commitInFlight.foreach(Await.ready(_, Duration.Inf))
 
   /** Row bound of the driver tier and of the driver-resident frontier (see
     * [[EngineConfig.driverCollectMaxRows]]); 0 forces the distributed tier.
@@ -870,14 +891,13 @@ final class CrawlEngine(
     wavePhase(front, committed + 1) match {
       case None => false
       case Some((wave, waveN, stepNow)) =>
-        val outcomes = fetchPhase(wave, waveN, stepNow)
-        // the step's ONE tier decision (see EngineConfig.driverCollectMaxRows)
-        val tier =
-          if (waveN <= driverRows) DriverTier(timed("meta.collect")(collectMeta(outcomes)))
-          else DistributedTier
-        val items = timed("items")(itemsPhase(tier, outcomes, cur, stepNow))
-        val spawns = timed("spawn")(spawnsPhase(tier, outcomes, front, cur, stepNow))
-        val jobs = jobStatePhase(tier, outcomes, items.flags, spawns.freshLocal,
+        // a background commit that has already failed poisons the engine
+        // before this step fetches (awaiting a completed future never blocks)
+        if (commitInFlight.exists(_.isCompleted)) awaitCommit()
+        val tier = fetchPhase(wave, waveN, stepNow)
+        val items = timed("items")(itemsPhase(tier, cur, stepNow))
+        val spawns = timed("spawn")(spawnsPhase(tier, front, cur, stepNow))
+        val jobs = jobStatePhase(tier, items.flags, spawns.freshLocal,
           cur.manifest, waveN, stepNow)
         val (next, archived) = timed("front.next")(
           frontierPhase(tier, front, wave, jobs, spawns, stepNow))
@@ -934,9 +954,13 @@ final class CrawlEngine(
   }
 
   /** Fetch+extract the wave; the fetch job lands its own outcomes. Returns
-    * the landed raw table (read back byte-free by every later scan).
+    * the step's ONE tier decision (see EngineConfig.driverCollectMaxRows),
+    * made from the wave size alone: a driver-sized wave's fetch write also
+    * returns the byte-free outcome metadata as an observed metric — one
+    * Spark job, no read of the landed table — and a larger wave gets the
+    * landed raw table, read back byte-free by every later scan.
     */
-  private def fetchPhase(wave: Dataset[CrawlJob], waveN: Long, stepNow: Int): DataFrame = {
+  private def fetchPhase(wave: Dataset[CrawlJob], waveN: Long, stepNow: Int): Tier = {
     // Rebalance the SELECTED wave before fetching (see EngineConfig
     // .fetchSplits): cheap exchange of byte-free rows, caps the placement
     // tail that otherwise sets the fetch stage's wall clock.
@@ -952,21 +976,39 @@ final class CrawlEngine(
     }
     val waveFetch = wave.repartition(fetchParts,
       col("host"), pmod(col("urlKey"), lit(cfg.fetchSplits)))
+    val outcomes = FetchStage.run(waveFetch, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
+      cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits))
     // The fetch job WRITES its outcomes as it produces them: payload bytes
     // flow scraper → parquet inside the fetching task (uncompressed — the
     // payloads are already PNG/JPEG-compressed) and never occupy executor
-    // memory past that task. Every later pass re-reads the landed table
+    // memory past that task. The distributed tier re-reads the landed table
     // column-pruned (the byte column is top-level — see StepOutcome), so
     // "plan the rest of the superstep" costs narrow scans, not a multi-GB
     // in-memory checkpoint. The dir is invisible to readers until the
     // snapshot commit (readers filter to committed steps).
     val rawPath = s"$rawDir/step=$stepNow"
-    timed("fetch")(
-      stateWrite(FetchStage.run(waveFetch, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
-          cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits)))
-        .mode("overwrite").option("compression", "uncompressed")
-        .parquet(rawPath))
-    spark.read.schema(outcomeSchema).parquet(rawPath)
+    def land(ds: Dataset[StepOutcome]): Unit = timed("fetch")(
+      stateWrite(ds).mode("overwrite").option("compression", "uncompressed").parquet(rawPath))
+    if (waveN <= driverRows) {
+      // The observed metric travels as a task-result accumulator, which
+      // Spark merges once per result partition: a retried fetch task adds
+      // its rows once, and a lost or doubled merge fails the count check.
+      val obs = Observation()
+      land(outcomes.observe(obs, collect_list(metaStruct).as("meta")))
+      val row = try Await.result(obs.future, ObservedMetaWait) catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          s"step $stepNow: the fetch write returned without its observed outcome " +
+            s"metadata within $ObservedMetaWait")
+      }
+      // sorted by job: the merge order of task results is not deterministic
+      val meta = row.getSeq[Row](0).iterator.map(metaOf).toArray.sortBy(_.job.urlKey)
+      require(meta.length == waveN,
+        s"step $stepNow: ${meta.length} observed outcomes for a wave of $waveN jobs")
+      DriverTier(meta)
+    } else {
+      land(outcomes)
+      DistributedTier(spark.read.schema(outcomeSchema).parquet(rawPath))
+    }
   }
 
   /** Every outcome's spawn candidates — its spawned jobs plus a redirect
@@ -975,9 +1017,9 @@ final class CrawlEngine(
     * over the spawned op's query, worker.js:281-292, route.js:31-37; a
     * throwing template drops the job, where the reference fails it), then
     * canonicalized, host-split and keyed by the native expressions. The
-    * driver tier evaluates it inside its one outcome collect, so the
-    * canonicalization runs in that job's tasks; the distributed tier
-    * explodes it.
+    * driver tier evaluates it inside the fetch write's observed metric (see
+    * [[metaStruct]]), so the canonicalization runs in the fetch tasks; the
+    * distributed tier explodes it.
     */
   private val spawnCands: Column = {
     val routesLocal = routesBc // a field in the closure would serialize `this`
@@ -1004,15 +1046,26 @@ final class CrawlEngine(
       s("query").as("query")))
   }
 
-  /** The driver tier's one collect: the wave's byte-free outcome metadata. */
-  private def collectMeta(outcomes: DataFrame): Array[OutcomeMeta] =
-    outcomes
-      .select(col("job"), col("status"), col("action"), col("hasNextPage"),
-        col("newState"), size(col("spawned")).as("nSpawned"), spawnCands.as("spawns"),
-        expr("transform(items, (it, i) -> named_struct(" +
-          "'_1', i, '_2', it.key, '_3', coalesce(it.image_id, ''), " +
-          "'_4', it.phash))").as("itemMeta"))
-      .as[OutcomeMeta].collect()
+  /** One wave outcome's [[OutcomeMeta]] as a struct column of the fetch
+    * stage's output — the driver tier's observed metric is its list. */
+  private val metaStruct: Column =
+    struct(col("job"), col("status"), col("action"), col("hasNextPage"),
+      col("newState"), size(col("spawned")).as("nSpawned"), spawnCands.as("spawns"),
+      expr("transform(items, (it, i) -> named_struct(" +
+        "'_1', i, '_2', it.key, '_3', coalesce(it.image_id, ''), " +
+        "'_4', it.phash))").as("itemMeta"))
+
+  /** An observed [[metaStruct]] row → [[OutcomeMeta]]: one encoder pair over
+    * the struct's analyzed type, built at the engine's first driver-tier
+    * step. */
+  private lazy val metaOf: Row => OutcomeMeta = {
+    val t = spark.emptyDataset[StepOutcome].select(metaStruct.as("m")).schema("m")
+      .dataType.asInstanceOf[StructType]
+    val toInternal = ExpressionEncoder(t).createSerializer()
+    val toMeta = ExpressionEncoder[OutcomeMeta]()
+      .resolveAndBind(DataTypeUtils.toAttributes(t)).createDeserializer()
+    r => toMeta(toInternal(r))
+  }
 
   private def metaDf(rows: Array[(String, Long)]): DataFrame = rows.toSeq.toDF("key", "phash")
 
@@ -1055,8 +1108,7 @@ final class CrawlEngine(
   // would let the landed item's phash differ from the one recorded in the
   // item-meta state, corrupting later near-dup votes and breaking
   // resume-identical parity.
-  private def itemsPhase(tier: Tier, outcomes: DataFrame, cur: Issued,
-      stepNow: Int): ItemDecisions = tier match {
+  private def itemsPhase(tier: Tier, cur: Issued, stepNow: Int): ItemDecisions = tier match {
     case DriverTier(meta) =>
       val existing = existingItemMeta(cur, mirror = true)
       // (srcJob, pos, key, image_id, phash)
@@ -1087,7 +1139,7 @@ final class CrawlEngine(
       ItemDecisions(Left(flagBySrc),
         if (suppressedKeys.isEmpty) None else Some(suppressedKeys.toSeq.toDF("key")),
         next, existing.toOption.toSeq)
-    case DistributedTier =>
+    case DistributedTier(outcomes) =>
       // same outputs, no driver state. The suppressed plan reads only stable
       // inputs (the landed raw table + the item-meta checkpoint), so the
       // background commit re-executes it safely.
@@ -1160,10 +1212,10 @@ final class CrawlEngine(
   // -- spawned jobs: dedup (min routeId per key) → robots → seen-set -------
   // A distributed wave's frontier is a Dataset: a driver array holds at
   // most driverRows rows, so every wave off one runs the driver tier.
-  private def spawnsPhase(tier: Tier, outcomes: DataFrame, front: Frontier, cur: Issued,
+  private def spawnsPhase(tier: Tier, front: Frontier, cur: Issued,
       stepNow: Int): Spawns = ((tier, front): @unchecked) match {
     case (DriverTier(meta), _) =>
-      // driver probe of the collected candidates + driver-merged bloom insert
+      // driver probe of the observed candidates + driver-merged bloom insert
       val cand = meta.iterator.flatMap(_.spawns).toArray.groupBy(_.urlKey)
         .valuesIterator.map(_.minBy(_.routeId))
         .filter(c => Robots.allowedLocal(c.url, c.host, robotsRules)).toArray
@@ -1206,7 +1258,7 @@ final class CrawlEngine(
       // one bloom file per version, as seed() writes it
       Spawns(spark.createDataset(fresh.toSeq), Some(fresh),
         spark.createDataset(merged.toSeq).coalesce(1), Some(merged), Nil)
-    case (DistributedTier, Right(frontDs)) =>
+    case (DistributedTier(outcomes), Right(frontDs)) =>
       // cogroup bloom probe, then an exact semi-join on the maybe-seen keys
       val cands = outcomes.select(explode(spawnCands).as("c")).select(col("c.*"))
       val allowed = Robots.allowed(minRoutePerKey(cands), robotsRules).localCheckpoint(true)
@@ -1254,8 +1306,7 @@ final class CrawlEngine(
     * stop+4xx/5xx outcomes. A distributed step drops both, and the
     * log-based paths take over — identical values, a few extra jobs.
     */
-  private def jobStatePhase(tier: Tier, outcomes: DataFrame,
-      flags: Either[Map[Long, (Long, Long)], DataFrame],
+  private def jobStatePhase(tier: Tier, flags: Either[Map[Long, (Long, Long)], DataFrame],
       freshLocal: Option[Array[CrawlJob]], cur: SnapshotStore.Manifest, waveN: Long,
       stepNow: Int): JobUpdates = {
     // locals only in executor closures — capturing fields would serialize `this`
@@ -1283,7 +1334,7 @@ final class CrawlEngine(
         val upd = rows.map(_._1)
         JobUpdates(spark.createDataset(upd.toSeq).coalesce(1),
           spark.createDataset(rows.map(_._2).toSeq).coalesce(1).toDF(), Some(upd), next)
-      case (DistributedTier, Right(flagDf), _) =>
+      case (DistributedTier(outcomes), Right(flagDf), _) =>
         // a byte-free projection of the landed outcomes, flags left-joined
         val metaFlagged = outcomes
           .join(flagDf.withColumnRenamed("srcJob", "jk"), col("job.urlKey") === col("jk"), "left")
@@ -1326,7 +1377,7 @@ final class CrawlEngine(
     val (touched: Seq[String], waveKeys: Either[Array[Long], DataFrame]) = tier match {
       case DriverTier(meta) =>
         (meta.map(_.job.host).toSeq, Left(meta.map(_.job.urlKey).sorted))
-      case DistributedTier =>
+      case _: DistributedTier =>
         (if (hostDelay.isEmpty) Nil
          else wave.select(col("host")).distinct()
            .filter(col("host").isin(hostDelay.keys.toSeq: _*)).as[String].collect().toSeq,

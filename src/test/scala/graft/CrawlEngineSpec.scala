@@ -7,9 +7,9 @@ import graft.model.{CrawlJob, RobotsRule}
 import graft.state.SnapshotStore
 import graft.state.SnapshotStore.Totals
 
-/** Shared recorder for the rate-limiter test: fetch-start events as
-  * (partitionId, host, nanoTime). local[N] executors share the JVM, so a
-  * static concurrent queue observes every task's fetches.
+/** Shared recorder for the rate-limiter and commit-failure tests:
+  * fetch-start events as (partitionId, host, nanoTime). local[N] executors
+  * share the JVM, so a static concurrent queue observes every task's fetches.
   */
 object PaceRecorder {
   val events = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long)]()
@@ -24,13 +24,21 @@ final class PacedFetcher(inner: graft.fetch.Fetcher) extends graft.fetch.Fetcher
   }
 }
 
+object CrawlEngineSpec {
+  /** The suite's corpus. */
+  val corpus = CorpusSpec(hosts = 2, listPages = 3, detailsPerList = 4)
+  /** The suite's engine settings, keeping every snapshot version. */
+  def retainAll(dir: String): EngineConfig = EngineConfig(statePath = dir, hostBudget = 2,
+    retainSnapshots = 1000, bloomPartitions = 4, bloomCapacityPerShard = 1 << 16)
+}
+
 /** End-to-end engine invariants — the Spark re-expression of the reference's
   * engine/worker test suite (reference: test/worker.js:90-100 pagination to
   * finish, test/nest.js:56-114 concurrency cap, test/item.js:43-66 upsert).
   */
 class CrawlEngineSpec extends SparkSpec {
 
-  val spec = CorpusSpec(hosts = 2, listPages = 3, detailsPerList = 4)
+  val spec = CrawlEngineSpec.corpus
   lazy val fetcher = new CorpusFetcher(SyntheticCorpus.buildLocal(spec))
   lazy val routes = SiteRoutes.registry(spec)
 
@@ -301,7 +309,7 @@ class CrawlEngineSpec extends SparkSpec {
     val modes = Seq(("background", Nil), ("synchronous", Seq(noop)))
     for ((mode, listeners) <- modes) withClue(s"$mode commit: ") {
       val dir = tmpDir(s"engine-commitfail-$mode")
-      def engine = new CrawlEngine(spark, routes, fetcher, Nil,
+      def engine = new CrawlEngine(spark, routes, new PacedFetcher(fetcher), Nil,
         EngineConfig(statePath = dir, hostBudget = 2,
           bloomPartitions = 4, bloomCapacityPerShard = 1 << 16), listeners = listeners)
       val e = engine
@@ -311,8 +319,16 @@ class CrawlEngineSpec extends SparkSpec {
       val blocker = new java.io.File(s"$dir/logs/fetchlog")
       blocker.getParentFile.mkdirs()
       assert(blocker.createNewFile())
-      if (listeners.isEmpty) assert(e.step(), "the first step found no work")
-      intercept[Exception](e.step())
+      if (listeners.isEmpty) {
+        assert(e.step(), "the first step found no work")
+        // once the background commit has failed, the next step throws
+        // before its fetch: no fetcher call, no raw outcome dir of step 1
+        e.commitSettled()
+        val fetches = PaceRecorder.events.size
+        intercept[Exception](e.step())
+        assert(PaceRecorder.events.size == fetches, "the step fetched after a failed commit")
+        assert(!new java.io.File(s"$dir/items_raw/step=1").exists, "a raw outcome dir of step 1")
+      } else intercept[Exception](e.step())
       // with the cause gone, the engine stays poisoned: no later step may
       // commit a version over the missing one
       assert(blocker.delete())
@@ -325,6 +341,88 @@ class CrawlEngineSpec extends SparkSpec {
       assert(resumedSum == straightSum, s"$resumedSum vs $straightSum")
       assert(itemsOf(r) == itemsOf(b), "resumed items differ from the straight run")
       assert(logOf(r) == logOf(b), "resumed fetch log differs from the straight run")
+    }
+  }
+
+  test("every driver-tier step runs one foreground Spark job: the fetch write") {
+    // jobs carry the test thread's local properties; the background commit's
+    // run in the graft-commit pool
+    val sc = spark.sparkContext
+    val stepKey = "graft.spec.step"
+    val foreground = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("spark.scheduler.pool") != "graft-commit")
+            Option(p.getProperty(stepKey)).foreach(s => foreground.add(s.toInt))
+        }
+    }
+    val eng = newEngine(tmpDir("engine-jobs"))
+    eng.seed(SyntheticCorpus.seeds(spec))
+    sc.addSparkListener(listener)
+    val ran =
+      try Iterator.from(0).takeWhile { i =>
+        sc.setLocalProperty(stepKey, i.toString)
+        try eng.step() finally sc.setLocalProperty(stepKey, null)
+      }.size
+      finally {
+        eng.currentVersion // lands the last commit
+        org.apache.spark.graftspec.BusAccess.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    val perStep = foreground.asScala.groupBy(identity).map { case (i, js) => i -> js.size }
+    assert(ran > 3, s"only $ran steps")
+    // the fetch write returns the outcome metadata, so no second job
+    // re-reads the landed table
+    for (i <- 0 until ran)
+      assert(perStep.getOrElse(i, 0) == 1, s"step() #$i ran ${perStep.getOrElse(i, 0)} jobs")
+  }
+
+  test("fetch-task retries (local[4,3]) land and observe every outcome once") {
+    // a child JVM: task retries need a local[N,F] master, and the suite's
+    // session is local[4]
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dirR = tmpDir("engine-retried")
+    val out = s"$dirR.summary"
+    val log = new java.io.File(s"$dirR.log")
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(a => a.startsWith("--add-opens") || a.startsWith("-D")).toSeq
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ jvm ++
+      Seq("-cp", sys.props("java.class.path"), "graft.TaskRetryCrawl", dirR, out)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log).start()
+    val done = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
+    if (!done) proc.destroyForcibly()
+    def logTail = scala.io.Source.fromFile(log).getLines().toSeq.takeRight(40).mkString("\n")
+    // the engine's count check (observed outcomes == wave rows) would fail
+    // the child's crawl
+    assert(done && proc.exitValue == 0, s"child crawl failed:\n$logTail")
+    val Array(steps, fetched, items, dead, thrown) =
+      scala.io.Source.fromFile(out).mkString.trim.split(" ").map(_.toLong)
+    assert(thrown > 0, "no fetch task failed")
+
+    val dirU = tmpDir("engine-unretried")
+    val u = new CrawlEngine(spark, routes, fetcher, Nil, CrawlEngineSpec.retainAll(dirU))
+    u.seed(SyntheticCorpus.seeds(spec))
+    val uSum = u.run()
+    assert(RunSummary(steps.toInt, fetched, items, dead) == uSum)
+    val r = newEngine(dirR)
+    assert(itemsOf(r) == itemsOf(u), "items differ from the uninterrupted run")
+    assert(logOf(r) == logOf(u), "fetch log differs from the uninterrupted run")
+    // the raw outcome rows: one per fetch, with the same item counts
+    def raw(dir: String) = spark.read.parquet(s"$dir/items_raw")
+      .selectExpr("step", "job.urlKey", "size(items)").as[(Int, Long, Int)]
+      .collect().sorted.toSeq
+    assert(raw(dirR) == raw(dirU), "raw outcome rows differ from the uninterrupted run")
+    assert(raw(dirR).map(t => (t._1, t._2)).distinct.size == logOf(u).size)
+    // every committed version's manifest, byte for byte
+    val v = u.currentVersion.get
+    assert(r.currentVersion.contains(v))
+    for (i <- 0 to v) {
+      def manifest(dir: String) = graft.state.StateIO.readString(s"$dir/v=$i/_snapshot.json")
+      assert(manifest(dirR) == manifest(dirU), s"v$i manifest differs")
     }
   }
 
