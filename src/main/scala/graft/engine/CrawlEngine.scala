@@ -76,14 +76,19 @@ object CrawlEngine {
       newState: Map[String, String], nSpawned: Int, spawns: Seq[SpawnCand],
       itemMeta: Seq[(Int, String, String, Long)])
 
-  /** The plans a superstep runs, chosen once per step from its wave size
-    * (see [[EngineConfig.driverCollectMaxRows]]). */
+  /** The superstep body a wave runs, chosen once per step from its wave
+    * size by `fetchPhase` (see [[EngineConfig.driverCollectMaxRows]]); the
+    * superstep forks on it once, into `driverStep` or `distributedStep`. */
   private[engine] sealed trait Tier
   /** A driver-sized wave, with its outcome metadata observed by the fetch
-    * write: the step's one foreground Spark job. */
+    * write (the step's one foreground Spark job): `driverStep` decides items,
+    * spawns, job state and the next frontier in driver passes over arrays,
+    * maps and sets. */
   private[engine] final case class DriverTier(meta: Array[OutcomeMeta]) extends Tier
-  /** A larger wave: Dataset plans over the landed raw `outcomes` table, no
-    * per-step driver state. */
+  /** A larger wave: `distributedStep` runs Dataset plans over the landed raw
+    * `outcomes` table, with no per-step driver state. Its frontier is always
+    * a Dataset: a driver array holds at most the driver bound's rows, so
+    * every wave off one is driver-sized. */
   private[engine] final case class DistributedTier(outcomes: DataFrame) extends Tier
 
   /** A pending frontier: a driver array or a Dataset. */
@@ -123,33 +128,6 @@ object CrawlEngine {
       frontier: Option[Frontier],
       itemMeta: Option[Either[Array[(String, Long)], DataFrame]],
       shards: Option[Array[BloomShard]])
-
-  /** A step's item decisions: per-source created/updated flags (a driver map
-    * on the driver tier, a (srcJob, created, updated) DataFrame on the
-    * distributed tier), the step's suppressed keys — the equality-delete
-    * rows the commit persists so readers drop them from the already-landed
-    * raw outcomes — the next item meta, and checkpoints to release after
-    * the commit.
-    */
-  private[engine] final case class ItemDecisions(
-      flags: Either[Map[Long, (Long, Long)], DataFrame],
-      suppressed: Option[DataFrame], meta: Either[Array[(String, Long)], DataFrame],
-      release: Seq[Dataset[_]])
-
-  /** A step's fresh jobs (never seen before; the same rows as an array when
-    * the driver tier built them), the next bloom version (as driver shards
-    * on the driver tier), and checkpoints to release after the commit.
-    */
-  private[engine] final case class Spawns(fresh: Dataset[CrawlJob],
-      freshLocal: Option[Array[CrawlJob]], bloom: Dataset[BloomShard],
-      shards: Option[Array[BloomShard]], release: Seq[Dataset[_]])
-
-  /** The wave's job-state rewrite and the step's fetch log (both tiers run
-    * [[CrawlEngine.advance]] / [[CrawlEngine.logRow]]); the rewritten rows
-    * as an array on the driver tier; the next version's manifest.
-    */
-  private[engine] final case class JobUpdates(updated: Dataset[CrawlJob], log: DataFrame,
-      updatedLocal: Option[Array[CrawlJob]], manifest: SnapshotStore.Manifest)
 
   /** Job-state transition for one fetched job — the reference worker's
     * post-job bookkeeping (pagination worker.js:223-233, finish 137-142,
@@ -329,49 +307,62 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
 /** The BSP superstep crawl driver — the engine's analogue of the reference's
   * worker pool + poll loop (reference: src/nest.js:47-61, src/worker.js:86-162).
   *
-  * Each superstep (one call to [[step]]) runs these phases:
+  * Each superstep (one call to [[step]]) runs the shared phases
   *
-  *  1. politeness-scheduled wave off the frontier (shuffle 1: by salted host;
-  *     a driver-array sort while the frontier is driver-sized)
-  *  2. `mapPartitions` fetch+extract, which WRITES its own outcomes (items
-  *     + payload bytes) to the raw step table as it fetches — narrow,
-  *     embarrassingly parallel, and the only pass that ever touches bytes
-  *  3. item decisions over byte-free scans of the landed outcomes: winner
-  *     pick + created/updated flags (shuffle 2: by item key) and phash
-  *     near-dup suppression, persisted as equality-delete keys
-  *  4. spawned-job dedup: bloom probe → exact anti-join on the survivors
-  *     (shuffle 3: by urlKey)
-  *  5. job-state + fetch-log rewrite of the wave, the next frontier, and the
-  *     atomic snapshot commit (pipelined — overlaps the next superstep's
-  *     wave + fetch)
+  *  1. clean: stale step dirs of an uncommitted step are swept
+  *  2. wave: the politeness-scheduled wave off the frontier (a driver-array
+  *     sort while the frontier is driver-sized, else shuffle 1: by salted
+  *     host), jumping the clock past an empty one
+  *  3. poison check: a background commit that has already failed stops the
+  *     step before it fetches
+  *  4. fetch: `mapPartitions` fetch+extract, which WRITES its own outcomes
+  *     (items + payload bytes) to the raw step table as it fetches —
+  *     narrow, embarrassingly parallel, and the only pass that ever touches
+  *     bytes — and picks the step's tier from the wave size alone
+  *     ([[EngineConfig.driverCollectMaxRows]] / 1024 rows)
   *
-  * Three shuffles per superstep, NONE carrying image bytes: payloads go
-  * scraper → parquet inside the fetch task and are only re-read by item
-  * consumers (merge-on-read). Every commit is a resume point: [[resume]]
-  * continues from the latest snapshot with identical results (kill-safe via
-  * the store's atomic rename).
+  * and then ONE straight-line body for that tier:
   *
-  * Two tiers, chosen once per step from the wave size by one bound
-  * ([[EngineConfig.driverCollectMaxRows]] / 1024 rows): a driver-sized
-  * wave's fetch write returns its byte-free outcome metadata as an observed
-  * metric, and phases 3–5 run as driver passes over it (with the frontier a
-  * driver array while it fits the same bound) — one foreground Spark job
-  * per superstep; a larger wave runs the Dataset plans above. A
-  * driver-array frontier also carries its finished jobs, so a step whose
+  *  - `driverStep` (a driver-sized wave): the fetch write returns the
+  *    wave's byte-free outcome metadata as an observed metric, and the item
+  *    decisions (winner pick, created/updated flags, phash near-dup
+  *    suppression), spawn dedup (driver bloom probe → exact check of the
+  *    positives), job state, fetch log and next frontier are driver passes
+  *    over arrays, maps and sets — one foreground Spark job per superstep
+  *    while the frontier is a driver array (it is while it fits the same
+  *    bound);
+  *  - `distributedStep` (a larger wave): the same decisions as Dataset plans
+  *    over byte-free scans of the landed outcomes — winner pick + flags
+  *    (shuffle 2: by item key), banded suppression, cogroup bloom probe →
+  *    exact anti-join (shuffle 3: by urlKey) — with no per-step driver
+  *    state.
+  *
+  * Both bodies share the job-state transition ([[CrawlEngine.advance]]),
+  * the fetch-log row ([[CrawlEngine.logRow]]), the item-meta reads, the
+  * crawl-delay bump and the Dataset-frontier rewrite, and both end in
+  * [[commitPhase]]: the atomic snapshot commit of the next version,
+  * pipelined so it overlaps the next superstep's wave + fetch. No shuffle
+  * carries image bytes: payloads go scraper → parquet inside the fetch task
+  * and are only re-read by item consumers (merge-on-read). Every commit is
+  * a resume point: [[resume]] continues from the latest snapshot with
+  * identical results (kill-safe via the store's atomic rename).
+  *
+  * A driver-array frontier also carries its finished jobs, so a step whose
   * frontier fits the bound writes no archive; they are flushed in one batch
   * when it would outgrow the bound (see `archiveDir`). A frontier that
   * leaves the driver array (it outgrew the bound, or the engine resumed
   * mid-crawl) stays a Dataset for the rest of the run and archives its
-  * finished jobs every step. Each
-  * manifest records the exact pending count and run totals while the
-  * driver tier keeps them, so resuming a drained crawl runs no Spark job.
+  * finished jobs every step; its driver-sized waves still run
+  * `driverStep`. Each manifest records the exact pending count and run
+  * totals while the driver tier keeps them, so resuming a drained crawl
+  * runs no Spark job.
   *
   * The engine's in-memory state is ONE immutable value per issued version
   * (`Issued`: the manifest, plus the frontier, item meta and bloom shards
-  * the next step would otherwise read back from the snapshot). Each phase
-  * reads the committed value and returns its own part; the superstep
-  * assembles the next value and assigns it once — when its background
-  * commit is issued, or after its synchronous commit has landed.
+  * the next step would otherwise read back from the snapshot). A tier body
+  * reads the committed value and assembles the next one, which
+  * [[commitPhase]] assigns once — when its background commit is issued, or
+  * after its synchronous commit has landed.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -894,16 +885,16 @@ final class CrawlEngine(
         // a background commit that has already failed poisons the engine
         // before this step fetches (awaiting a completed future never blocks)
         if (commitInFlight.exists(_.isCompleted)) awaitCommit()
-        val tier = fetchPhase(wave, waveN, stepNow)
-        val items = timed("items")(itemsPhase(tier, cur, stepNow))
-        val spawns = timed("spawn")(spawnsPhase(tier, front, cur, stepNow))
-        val jobs = jobStatePhase(tier, items.flags, spawns.freshLocal,
-          cur.manifest, waveN, stepNow)
-        val (next, archived) = timed("front.next")(
-          frontierPhase(tier, front, wave, jobs, spawns, stepNow))
-        commitPhase(Issued(jobs.manifest, Some(next), Some(items.meta), spawns.shards), next,
-          jobs.log, items.suppressed, archived, spawns.bloom,
-          Seq(wave) ++ items.release ++ spawns.release ++ cur.frontier.flatMap(_.toOption))
+        // the checkpoints this step's writes may read, freed once they land
+        val release = Seq(wave) ++ cur.frontier.flatMap(_.toOption)
+        fetchPhase(wave, waveN, stepNow) match {
+          case DriverTier(meta) => driverStep(cur, front, waveN, stepNow, meta, release)
+          case DistributedTier(outcomes) =>
+            require(front.isRight, s"step $stepNow: a distributed wave of $waveN jobs " +
+              s"off a driver-array frontier (at most $driverRows rows, so its waves are " +
+              "driver-sized)")
+            distributedStep(cur, front.toOption.get, wave, waveN, stepNow, outcomes, release)
+        }
         true
     }
   }
@@ -1097,92 +1088,6 @@ final class CrawlEngine(
   private def checkpointMeta(existing: Option[DataFrame], added: DataFrame): DataFrame =
     existing.fold(added)(_.unionByName(added)).localCheckpoint(true)
 
-  // -- items (raw outcomes + equality deletes; merge-on-read) -------------
-  // The bytes are already landed; this phase only DECIDES — winner pick,
-  // created-vs-updated flags, phash near-dup suppression — and persists the
-  // decisions as small byte-free side outputs (the winner pick is re-derived
-  // deterministically at read time; suppression lands as the step's
-  // equality-delete keys). Both tiers pick one winner per key by the ONE
-  // canonical ordering (srcJob, image_id, pos) — identical to the read-side
-  // ranking window in readItemDeltas; a divergent tiebreak (e.g. phash)
-  // would let the landed item's phash differ from the one recorded in the
-  // item-meta state, corrupting later near-dup votes and breaking
-  // resume-identical parity.
-  private def itemsPhase(tier: Tier, cur: Issued, stepNow: Int): ItemDecisions = tier match {
-    case DriverTier(meta) =>
-      val existing = existingItemMeta(cur, mirror = true)
-      // (srcJob, pos, key, image_id, phash)
-      val itemTups = meta.iterator.flatMap(r => r.itemMeta.iterator
-        .map(m => (r.job.urlKey, m._1, m._2, m._3, m._4))).toArray
-      val (suppressedKeys, existedKeys) = Items.suppressAndSeenSets(
-        itemTups.map(t => (t._1, t._3, t._4, t._5)),
-        if (itemTups.isEmpty) None else Some(existing), cfg.phashThreshold)
-      val winners: Map[String, (Long, String, Int, Long)] = itemTups
-        .filterNot(t => suppressedKeys(t._3)).groupBy(_._3).map {
-          case (k, rows) => k -> rows.iterator.map(r => (r._1, r._4, r._2, r._5))
-            .minBy(t => (t._1, t._2, t._3))
-        }
-      val flagBySrc: Map[Long, (Long, Long)] = winners.groupBy(_._2._1).map {
-        case (src, ws) =>
-          val created = ws.count { case (k, _) => !existedKeys(k) }
-          src -> (created.toLong, (ws.size - created).toLong)
-      }
-      // the item meta backing the next step's suppression: the driver
-      // mirror while the merged rows fit, else the DataFrame twin
-      val added = winners.iterator.map { case (k, w) => (k, w._4) }.toArray
-      val next = existing match {
-        case Left(old) if old.length.toLong + added.length <= cfg.driverCollectMaxRows =>
-          Left(old ++ added)
-        case _ =>
-          Right(checkpointMeta(Some(existing.fold(metaDf, identity)), metaDf(added)))
-      }
-      ItemDecisions(Left(flagBySrc),
-        if (suppressedKeys.isEmpty) None else Some(suppressedKeys.toSeq.toDF("key")),
-        next, existing.toOption.toSeq)
-    case DistributedTier(outcomes) =>
-      // same outputs, no driver state. The suppressed plan reads only stable
-      // inputs (the landed raw table + the item-meta checkpoint), so the
-      // background commit re-executes it safely.
-      val existing: Option[DataFrame] = existingItemMeta(cur, mirror = false) match {
-        case Left(a) if a.isEmpty => None
-        case Left(a) => Some(metaDf(a).localCheckpoint(true))
-        case Right(df) => Some(df)
-      }
-      val incoming = outcomes
-        .select(col("job.urlKey").as("srcJob"), posexplode(expr(
-          "transform(items, it -> named_struct(" +
-            "'key', it.key, 'image_id', it.image_id, 'phash', it.phash))"))
-          .as(Seq("pos", "it")))
-        .select(col("srcJob"), col("pos"), col("it.key").as("key"),
-          coalesce(col("it.image_id"), lit("")).as("image_id"),
-          col("it.phash").as("phash"))
-      val suppressed = Items.suppressedKeyDf(incoming, existing, cfg.phashThreshold)
-      val win = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key"))
-        .orderBy(col("srcJob").asc, col("image_id").asc, col("pos").asc)
-      // reused by the flag agg and the item-meta update → checkpoint once
-      val winners = incoming.join(suppressed, Seq("key"), "left_anti")
-        .withColumn("rn", row_number().over(win))
-        .filter(col("rn") === 1).drop("rn")
-        .localCheckpoint(true)
-      val winnersFlagged = existing match {
-        case Some(ex) => winners.join(
-          ex.select(col("key")).distinct().withColumn("existed", lit(true)),
-          Seq("key"), "left")
-        case None => winners.withColumn("existed", lit(false))
-      }
-      val flagDf = winnersFlagged.groupBy(col("srcJob"))
-        .agg(
-          sum(when(coalesce(col("existed"), lit(false)), 0L).otherwise(1L))
-            .as("created"),
-          sum(when(coalesce(col("existed"), lit(false)), 1L).otherwise(0L))
-            .as("updated"))
-      ItemDecisions(Right(flagDf),
-        if (cfg.phashThreshold < 0) None else Some(suppressed),
-        Right(checkpointMeta(existing, winners.select(col("key"), col("phash")))),
-        Seq(winners) ++ existing)
-  }
-
   /** Frontier jobs, entering at `createdStep` with their route's priority,
     * from (urlKey, url, host, routeId, query) rows (seeds and spawns). */
   private def toJobs(df: DataFrame, createdStep: Int): Dataset[CrawlJob] = {
@@ -1209,13 +1114,101 @@ final class CrawlEngine(
     shards.map(sh => byPid.get(sh.pid).map(BloomSeen.insertLocal(sh, _)).getOrElse(sh))
   }
 
-  // -- spawned jobs: dedup (min routeId per key) → robots → seen-set -------
-  // A distributed wave's frontier is a Dataset: a driver array holds at
-  // most driverRows rows, so every wave off one runs the driver tier.
-  private def spawnsPhase(tier: Tier, front: Frontier, cur: Issued,
-      stepNow: Int): Spawns = ((tier, front): @unchecked) match {
-    case (DriverTier(meta), _) =>
-      // driver probe of the observed candidates + driver-merged bloom insert
+  /** Robots crawl-delay: the step from which each delayed host among the
+    * wave's `touched` hosts may be fetched again. */
+  private def hostNext(touched: Iterable[String], stepNow: Int): Map[String, Int] =
+    touched.iterator.filter(hostDelay.contains).map(h => h -> (stepNow + hostDelay(h))).toMap
+
+  /** The next Dataset frontier — the frontier's `untouched` pending rows, the
+    * wave's `updated` pending rows and the `fresh` jobs, crawl-delay bumped
+    * to `delayed` (see [[hostNext]]) — checkpointed, and the finished rows
+    * of `untouched` and `updated`, which it flushes to the archive this
+    * step (see [[archiveDir]]), so it carries none. Both tiers run it over
+    * a Dataset frontier.
+    */
+  private def datasetFrontier(untouched: Dataset[CrawlJob], updated: Dataset[CrawlJob],
+      fresh: Dataset[CrawlJob], delayed: Map[String, Int])
+      : (Frontier, Option[Dataset[CrawlJob]]) = {
+    val pending = untouched.filter(!col("state.finished"))
+      .unionByName(updated.filter(!col("state.finished")))
+      .unionByName(fresh)
+    val bumped =
+      if (delayed.isEmpty) pending
+      else {
+        val nextLit = typedLit(delayed)
+        pending.toDF()
+          .withColumn("notBeforeStep",
+            when(element_at(nextLit, col("host")).isNotNull,
+              greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
+            .otherwise(col("notBeforeStep")))
+          .as[CrawlJob]
+      }
+    (Right(bumped.localCheckpoint(true)),
+     Some(untouched.filter(col("state.finished"))
+       .unionByName(updated.filter(col("state.finished")))))
+  }
+
+  // -- the two superstep bodies -------------------------------------------
+  // Items (raw outcomes + equality deletes; merge-on-read): the bytes are
+  // already landed, so a body only DECIDES — winner pick, created-vs-updated
+  // flags, phash near-dup suppression — and persists the decisions as small
+  // byte-free side outputs (the winner pick is re-derived deterministically
+  // at read time; suppression lands as the step's equality-delete keys).
+  // Both tiers pick one winner per key by the ONE canonical ordering
+  // (srcJob, image_id, pos) — identical to the read-side ranking window in
+  // readItemDeltas; a divergent tiebreak (e.g. phash) would let the landed
+  // item's phash differ from the one recorded in the item-meta state,
+  // corrupting later near-dup votes and breaking resume-identical parity.
+  // Spawned jobs: dedup (min routeId per key) → robots → bloom probe →
+  // exact seen check on the bloom-positive keys. Job state and fetch log:
+  // both tiers run [[CrawlEngine.advance]] / [[CrawlEngine.logRow]] per
+  // outcome.
+
+  /** The driver tier's body: items, spawns, job state, fetch log and the
+    * next frontier as driver passes over the wave's observed outcome
+    * metadata, then [[commitPhase]]. It runs no Spark job unless the
+    * frontier or the item meta is a Dataset (or outgrows the bound), a
+    * bloom-positive spawn misses the frontier (the archive probe), or it
+    * reads state back from the snapshot (a resumed engine's first step).
+    * Run accounting stays
+    * exact while the committed manifest has it: pending = pending − wave +
+    * continuing jobs + fresh jobs; fetched = Σ wave sizes; items = Σ created
+    * flags (a key is "created" exactly once); dead letters = the
+    * stop+4xx/5xx outcomes.
+    */
+  private def driverStep(cur: Issued, front: Frontier, waveN: Long, stepNow: Int,
+      meta: Array[OutcomeMeta], release: Seq[Dataset[_]]): Unit = {
+    val (flagBySrc, suppressedKeys, itemMeta, existing) = timed("items") {
+      val existing = existingItemMeta(cur, mirror = true)
+      // (srcJob, pos, key, image_id, phash)
+      val itemTups = meta.iterator.flatMap(r => r.itemMeta.iterator
+        .map(m => (r.job.urlKey, m._1, m._2, m._3, m._4))).toArray
+      val (suppressedKeys, existedKeys) = Items.suppressAndSeenSets(
+        itemTups.map(t => (t._1, t._3, t._4, t._5)),
+        if (itemTups.isEmpty) None else Some(existing), cfg.phashThreshold)
+      val winners: Map[String, (Long, String, Int, Long)] = itemTups
+        .filterNot(t => suppressedKeys(t._3)).groupBy(_._3).map {
+          case (k, rows) => k -> rows.iterator.map(r => (r._1, r._4, r._2, r._5))
+            .minBy(t => (t._1, t._2, t._3))
+        }
+      val flagBySrc: Map[Long, (Long, Long)] = winners.groupBy(_._2._1).map {
+        case (src, ws) =>
+          val created = ws.count { case (k, _) => !existedKeys(k) }
+          src -> (created.toLong, (ws.size - created).toLong)
+      }
+      // the item meta backing the next step's suppression: the driver
+      // mirror while the merged rows fit, else a checkpointed DataFrame
+      val added = winners.iterator.map { case (k, w) => (k, w._4) }.toArray
+      val itemMeta = existing match {
+        case Left(old) if old.length.toLong + added.length <= cfg.driverCollectMaxRows =>
+          Left(old ++ added)
+        case _ =>
+          Right(checkpointMeta(Some(existing.fold(metaDf, identity)), metaDf(added)))
+      }
+      (flagBySrc, suppressedKeys, itemMeta, existing)
+    }
+
+    val (fresh, shards) = timed("spawn") {
       val cand = meta.iterator.flatMap(_.spawns).toArray.groupBy(_.urlKey)
         .valuesIterator.map(_.minBy(_.routeId))
         .filter(c => Robots.allowedLocal(c.url, c.host, robotsRules)).toArray
@@ -1254,11 +1247,112 @@ final class CrawlEngine(
         CrawlJob(c.urlKey, c.url, c.host, c.routeId,
           priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
           query = c.query, createdStep = stepNow + 1, notBeforeStep = stepNow + 1))
-      val merged = insertLocal(shards, fresh.map(_.urlKey))
-      // one bloom file per version, as seed() writes it
-      Spawns(spark.createDataset(fresh.toSeq), Some(fresh),
-        spark.createDataset(merged.toSeq).coalesce(1), Some(merged), Nil)
-    case (DistributedTier(outcomes), Right(frontDs)) =>
+      (fresh, insertLocal(shards, fresh.map(_.urlKey)))
+    }
+
+    val cont = meta.count(r => r.action == "retry" || (r.action == "ok" && r.hasNextPage))
+    val dead = meta.count(r => r.status >= 400 && r.action == "stop")
+    val manifest = SnapshotStore.Manifest(cur.manifest.version + 1, stepNow, waveN,
+      cur.manifest.pending.map(_ - waveN + cont + fresh.length),
+      cur.manifest.totals.map(t => SnapshotStore.Totals(t.fetched + waveN,
+        t.items + flagBySrc.valuesIterator.map(_._1).sum, t.deadLettered + dead)))
+    val (upd, log) = meta.map { r =>
+      val (c, u) = flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))
+      val tdel = routes.get(r.job.routeId).map(_.transitionDelay).getOrElse(0)
+      (CrawlEngine.advance(r.job, r.action, r.hasNextPage, r.newState,
+          r.nSpawned, c, u, stepNow, tdel, cfg.retryBackoffSteps),
+        CrawlEngine.logRow(stepNow, r.job, r.status, r.action,
+          r.hasNextPage, r.nSpawned, c, u))
+    }.unzip
+
+    val (next, archived) = timed("front.next") {
+      val delayed = hostNext(meta.map(_.job.host), stepNow)
+      front match {
+        case Left(f) =>
+          // the fetch stage maps wave rows 1:1 to outcomes, so the updated
+          // rows carry every wave key
+          val inWave = upd.iterator.map(_.urlKey).toSet
+          val a = (f.iterator.filterNot(j => inWave(j.urlKey)) ++
+            upd.iterator ++ fresh.iterator)
+            .map(j => delayed.get(j.host) match {
+              case Some(n) if !j.state.finished && n > j.notBeforeStep =>
+                j.copy(notBeforeStep = n)
+              case _ => j
+            }).toArray
+          // the array keeps its finished rows while it fits driverRows, else
+          // flushes them all; its pending rows stay the array while they fit
+          if (a.length <= driverRows) (Left(a), None)
+          else {
+            val (done, pending) = a.partition(_.state.finished)
+            (if (pending.length <= driverRows) Left(pending)
+             else Right(spark.createDataset(pending.toSeq).localCheckpoint(true)),
+             Option.when(done.nonEmpty)(spark.createDataset(done.toSeq)))
+          }
+        case Right(ds) =>
+          // the wave keys filter the frontier in one narrow scan
+          datasetFrontier(ds.filter(!urlKeyIn(upd.map(_.urlKey).sorted)),
+            spark.createDataset(upd.toSeq).coalesce(1), spark.createDataset(fresh.toSeq),
+            delayed)
+      }
+    }
+    // one bloom file per version, as seed() writes it
+    commitPhase(Issued(manifest, Some(next), Some(itemMeta), Some(shards)), next,
+      spark.createDataset(log.toSeq).coalesce(1).toDF(),
+      Option.when(suppressedKeys.nonEmpty)(suppressedKeys.toSeq.toDF("key")), archived,
+      spark.createDataset(shards.toSeq).coalesce(1), release ++ existing.toOption)
+  }
+
+  /** The distributed tier's body: items, spawns, job state, fetch log and the
+    * next frontier as Dataset plans over the landed raw `outcomes`, with no
+    * per-step driver state, then [[commitPhase]]. Its manifest drops the
+    * exact pending count and totals, and the log-based paths take over —
+    * identical values, a few extra jobs. The suppressed plan reads only
+    * stable inputs (the landed raw table + the item-meta checkpoint), so the
+    * background commit re-executes it safely.
+    */
+  private def distributedStep(cur: Issued, front: Dataset[CrawlJob], wave: Dataset[CrawlJob],
+      waveN: Long, stepNow: Int, outcomes: DataFrame, release: Seq[Dataset[_]]): Unit = {
+    val (flagDf, suppressed, itemMeta, itemRelease) = timed("items") {
+      val existing: Option[DataFrame] = existingItemMeta(cur, mirror = false) match {
+        case Left(a) if a.isEmpty => None
+        case Left(a) => Some(metaDf(a).localCheckpoint(true))
+        case Right(df) => Some(df)
+      }
+      val incoming = outcomes
+        .select(col("job.urlKey").as("srcJob"), posexplode(expr(
+          "transform(items, it -> named_struct(" +
+            "'key', it.key, 'image_id', it.image_id, 'phash', it.phash))"))
+          .as(Seq("pos", "it")))
+        .select(col("srcJob"), col("pos"), col("it.key").as("key"),
+          coalesce(col("it.image_id"), lit("")).as("image_id"),
+          col("it.phash").as("phash"))
+      val suppressed = Items.suppressedKeyDf(incoming, existing, cfg.phashThreshold)
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("key"))
+        .orderBy(col("srcJob").asc, col("image_id").asc, col("pos").asc)
+      // reused by the flag agg and the item-meta update → checkpoint once
+      val winners = incoming.join(suppressed, Seq("key"), "left_anti")
+        .withColumn("rn", row_number().over(win))
+        .filter(col("rn") === 1).drop("rn")
+        .localCheckpoint(true)
+      val winnersFlagged = existing match {
+        case Some(ex) => winners.join(
+          ex.select(col("key")).distinct().withColumn("existed", lit(true)),
+          Seq("key"), "left")
+        case None => winners.withColumn("existed", lit(false))
+      }
+      val flagDf = winnersFlagged.groupBy(col("srcJob"))
+        .agg(
+          sum(when(coalesce(col("existed"), lit(false)), 0L).otherwise(1L))
+            .as("created"),
+          sum(when(coalesce(col("existed"), lit(false)), 1L).otherwise(0L))
+            .as("updated"))
+      (flagDf, Option.when(cfg.phashThreshold >= 0)(suppressed),
+        checkpointMeta(existing, winners.select(col("key"), col("phash"))),
+        Seq(winners) ++ existing)
+    }
+
+    val (fresh, bloom, spawnRelease) = timed("spawn") {
       // cogroup bloom probe, then an exact semi-join on the maybe-seen keys
       val cands = outcomes.select(explode(spawnCands).as("c")).select(col("c.*"))
       val allowed = Robots.allowed(minRoutePerKey(cands), robotsRules).localCheckpoint(true)
@@ -1278,13 +1372,13 @@ final class CrawlEngine(
       // the archive's partition column, so dynamic partition pruning can
       // drop non-matching bucket dirs before the scan.
       val seenEver = readArchive(cur.manifest.step) match {
-        case Some(a) => frontDs.select(col("urlKey"))
+        case Some(a) => front.select(col("urlKey"))
           .unionByName(a
             .join(broadcast(maybeSeen.select(col("urlKey"),
               pmod(col("urlKey"), lit(ArchiveBuckets)).cast("int").as("bucket"))),
               Seq("bucket", "urlKey"), "left_semi")
             .select(col("urlKey")))
-        case None => frontDs.select(col("urlKey"))
+        case None => front.select(col("urlKey"))
       }
       val seenConfirmed = seenEver
         .join(broadcast(maybeSeen.select(col("urlKey"))), Seq("urlKey"), "left_semi")
@@ -1293,151 +1387,59 @@ final class CrawlEngine(
       val fresh = toJobs(definitelyNew.unionByName(confirmedNew), stepNow + 1)
         .localCheckpoint(true)
       probed.unpersist()
-      Spawns(fresh, None,
-        BloomSeen.insert(bloom, fresh.map(_.urlKey), cfg.bloomPartitions), None,
+      (fresh, BloomSeen.insert(bloom, fresh.map(_.urlKey), cfg.bloomPartitions),
         Seq(allowed, fresh))
-  }
+    }
 
-  /** The wave's job-state rewrite and fetch log, and the next version's
-    * manifest. Run accounting is exact off the driver tier's outcome
-    * metadata while the committed manifest has it: pending = pending − wave
-    * + continuing jobs + fresh jobs; fetched = Σ wave sizes; items = Σ
-    * created flags (a key is "created" exactly once); dead letters = the
-    * stop+4xx/5xx outcomes. A distributed step drops both, and the
-    * log-based paths take over — identical values, a few extra jobs.
-    */
-  private def jobStatePhase(tier: Tier, flags: Either[Map[Long, (Long, Long)], DataFrame],
-      freshLocal: Option[Array[CrawlJob]], cur: SnapshotStore.Manifest, waveN: Long,
-      stepNow: Int): JobUpdates = {
-    // locals only in executor closures — capturing fields would serialize `this`
+    // a byte-free projection of the landed outcomes, flags left-joined;
+    // locals only in executor closures — capturing fields would serialize
+    // `this`
     val routesLocal = routesBc
     val backoff = cfg.retryBackoffSteps
-    def manifest(pending: Option[Long], totals: Option[SnapshotStore.Totals]) =
-      SnapshotStore.Manifest(cur.version + 1, stepNow, waveN, pending, totals)
-    ((tier, flags, freshLocal): @unchecked) match {
-      case (DriverTier(meta), Left(flagBySrc), Some(fresh)) =>
-        val cont = meta.count(r => r.action == "retry" || (r.action == "ok" && r.hasNextPage))
-        val dead = meta.count(r => r.status >= 400 && r.action == "stop")
-        val next = manifest(cur.pending.map(_ - waveN + cont + fresh.length),
-          cur.totals.map(t => SnapshotStore.Totals(t.fetched + waveN,
-            t.items + flagBySrc.valuesIterator.map(_._1).sum, t.deadLettered + dead)))
-        // one driver loop → local relations: no re-scan of the landed table
-        // for the state rewrite, the fetch-log write OR the archive write
-        val rows = meta.map { r =>
-          val (c, u) = flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))
-          val tdel = routes.get(r.job.routeId).map(_.transitionDelay).getOrElse(0)
-          (CrawlEngine.advance(r.job, r.action, r.hasNextPage, r.newState,
-              r.nSpawned, c, u, stepNow, tdel, backoff),
-            CrawlEngine.logRow(stepNow, r.job, r.status, r.action,
-              r.hasNextPage, r.nSpawned, c, u))
-        }
-        val upd = rows.map(_._1)
-        JobUpdates(spark.createDataset(upd.toSeq).coalesce(1),
-          spark.createDataset(rows.map(_._2).toSeq).coalesce(1).toDF(), Some(upd), next)
-      case (DistributedTier(outcomes), Right(flagDf), _) =>
-        // a byte-free projection of the landed outcomes, flags left-joined
-        val metaFlagged = outcomes
-          .join(flagDf.withColumnRenamed("srcJob", "jk"), col("job.urlKey") === col("jk"), "left")
-          .select(col("job").as("_1"), col("status").as("_2"), col("action").as("_3"),
-            col("hasNextPage").as("_4"), col("newState").as("_5"),
-            size(col("spawned")).as("_6"), coalesce(col("created"), lit(0L)).as("_7"),
-            coalesce(col("updated"), lit(0L)).as("_8"))
-          .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)]
-        val upd = metaFlagged.map {
-          case (job, _, action, hasNextPage, newState, nSpawned, created, updated) =>
-            val tdel = routesLocal.value.get(job.routeId)
-              .map(_.transitionDelay).getOrElse(0)
-            CrawlEngine.advance(job, action, hasNextPage, newState,
-              nSpawned, created, updated, stepNow, tdel, backoff)
-        }
-        val log = metaFlagged.map {
-          case (job, status, action, hasNext, _, nSpawned, created, updated) =>
-            CrawlEngine.logRow(stepNow, job, status, action, hasNext,
-              nSpawned, created, updated)
-        }.toDF()
-        JobUpdates(upd, log, None, manifest(None, None))
+    val metaFlagged = outcomes
+      .join(flagDf.withColumnRenamed("srcJob", "jk"), col("job.urlKey") === col("jk"), "left")
+      .select(col("job").as("_1"), col("status").as("_2"), col("action").as("_3"),
+        col("hasNextPage").as("_4"), col("newState").as("_5"),
+        size(col("spawned")).as("_6"), coalesce(col("created"), lit(0L)).as("_7"),
+        coalesce(col("updated"), lit(0L)).as("_8"))
+      .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)]
+    val upd = metaFlagged.map {
+      case (job, _, action, hasNextPage, newState, nSpawned, created, updated) =>
+        val tdel = routesLocal.value.get(job.routeId)
+          .map(_.transitionDelay).getOrElse(0)
+        CrawlEngine.advance(job, action, hasNextPage, newState,
+          nSpawned, created, updated, stepNow, tdel, backoff)
     }
+    val log = metaFlagged.map {
+      case (job, status, action, hasNext, _, nSpawned, created, updated) =>
+        CrawlEngine.logRow(stepNow, job, status, action, hasNext,
+          nSpawned, created, updated)
+    }.toDF()
+
+    val (next, archived) = timed("front.next") {
+      // the delayed-host universe is the robots rules table (tiny by
+      // design), so the touched∩delayed set collects at ANY wave size
+      val touched =
+        if (hostDelay.isEmpty) Nil
+        else wave.select(col("host")).distinct()
+          .filter(col("host").isin(hostDelay.keys.toSeq: _*)).as[String].collect().toSeq
+      // the wave anti-joins the frontier (strategy left to Catalyst)
+      datasetFrontier(front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
+        .as[CrawlJob], upd, fresh, hostNext(touched, stepNow))
+    }
+    commitPhase(Issued(SnapshotStore.Manifest(cur.manifest.version + 1, stepNow, waveN,
+        None, None), Some(next), Some(Right(itemMeta)), None),
+      next, log, suppressed, archived, bloom, release ++ itemRelease ++ spawnRelease)
   }
 
-  /** The next frontier — the frontier's untouched rows, the wave's updates
-    * and the fresh jobs, crawl-delay bumped — and the finished rows it
-    * flushes to the archive this step (see [[archiveDir]]). A driver array
-    * keeps its finished rows while the merged array fits [[driverRows]]; an
-    * array that would not fit, and any Dataset frontier, flush all of
-    * theirs. The pending rows stay the driver array while they fit, else
-    * they are checkpointed. Returns the next frontier and the archive rows
-    * (None: no flush).
-    */
-  private def frontierPhase(tier: Tier, front: Frontier, wave: Dataset[CrawlJob],
-      jobs: JobUpdates, spawns: Spawns, stepNow: Int)
-      : (Frontier, Option[Dataset[CrawlJob]]) = {
-    // robots crawl-delay: bump hosts fetched this wave. The delayed-host
-    // universe is the robots rules table (tiny by design), so the touched∩
-    // delayed set collects driver-side at ANY wave size.
-    val (touched: Seq[String], waveKeys: Either[Array[Long], DataFrame]) = tier match {
-      case DriverTier(meta) =>
-        (meta.map(_.job.host).toSeq, Left(meta.map(_.job.urlKey).sorted))
-      case _: DistributedTier =>
-        (if (hostDelay.isEmpty) Nil
-         else wave.select(col("host")).distinct()
-           .filter(col("host").isin(hostDelay.keys.toSeq: _*)).as[String].collect().toSeq,
-          Right(wave.select(col("urlKey"))))
-    }
-    val hostNext: Map[String, Int] = touched.distinct.filter(hostDelay.contains)
-      .map(h => h -> (stepNow + hostDelay(h))).toMap
-    // a driver array's wave ran the driver tier (see spawnsPhase)
-    ((front, jobs.updatedLocal, spawns.freshLocal): @unchecked) match {
-      case (Left(f), Some(upd), Some(fr)) =>
-        // an array pass: the fetch stage maps wave rows 1:1 to outcomes,
-        // so the updated rows carry every wave key
-        val inWave = upd.iterator.map(_.urlKey).toSet
-        val a = (f.iterator.filterNot(j => inWave(j.urlKey)) ++
-          upd.iterator ++ fr.iterator)
-          .map(j => hostNext.get(j.host) match {
-            case Some(n) if !j.state.finished && n > j.notBeforeStep =>
-              j.copy(notBeforeStep = n)
-            case _ => j
-          }).toArray
-        if (a.length <= driverRows) (Left(a), None)
-        else {
-          val (done, pending) = a.partition(_.state.finished)
-          (if (pending.length <= driverRows) Left(pending)
-           else Right(spark.createDataset(pending.toSeq).localCheckpoint(true)),
-           Option.when(done.nonEmpty)(spark.createDataset(done.toSeq)))
-        }
-      case (Right(ds), _, _) =>
-        // driver-tier wave keys filter the frontier in one narrow scan;
-        // a distributed wave anti-joins it (strategy left to Catalyst)
-        val untouched = waveKeys.fold(
-          keys => ds.filter(!urlKeyIn(keys)),
-          keys => ds.join(keys, Seq("urlKey"), "left_anti").as[CrawlJob])
-        val frontier2 = untouched.filter(!col("state.finished"))
-          .unionByName(jobs.updated.filter(!col("state.finished")))
-          .unionByName(spawns.fresh)
-        val bumped =
-          if (hostNext.isEmpty) frontier2
-          else {
-            val nextLit = typedLit(hostNext)
-            frontier2.toDF()
-              .withColumn("notBeforeStep",
-                when(element_at(nextLit, col("host")).isNotNull,
-                  greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
-                .otherwise(col("notBeforeStep")))
-              .as[CrawlJob]
-          }
-        // the frontier's carried finished rows (a resumed or spilled
-        // driver array) and the wave's, so the next one carries none
-        (Right(bumped.localCheckpoint(true)),
-         Some(untouched.filter(col("state.finished"))
-           .unionByName(jobs.updated.filter(col("state.finished")))))
-    }
-  }
-
-  /** Issue the step's snapshot commit of `next` (pipelined unless listeners
-    * wait on it) and make `next` the issued value. `frontier` = next's
-    * frontier; `archived` = the finished rows the frontier flushed this
-    * step, if it flushed; `release` = checkpoints the writes read, freed
-    * once they land.
+  /** The end of both superstep bodies: issue the step's snapshot commit of
+    * `next` (pipelined unless listeners wait on it) and make `next` the
+    * issued value. The step's writes: `frontier` = next's frontier (a
+    * driver array becomes one local relation here); `log` = the step's
+    * fetch log; `suppressed` = its equality-delete keys, if any; `archived`
+    * = the finished rows the frontier flushed this step, if it flushed;
+    * `bloom` = the next bloom version. `release` = checkpoints the writes
+    * read, freed once they land.
     */
   private def commitPhase(next: Issued, frontier: Frontier, log: DataFrame,
       suppressed: Option[DataFrame], archived: Option[Dataset[CrawlJob]],
@@ -1559,7 +1561,7 @@ final class CrawlEngine(
 
   private def summary(steps: Int): RunSummary = timed("summary") {
     // the issued manifest's exact totals when it has them (zero Spark jobs
-    // — see jobStatePhase); else one pass over the fetch log (count ==
+    // — see driverStep); else one pass over the fetch log (count ==
     // fetched: one row per fetch; dead letters are the stop+4xx/5xx rows)
     // and the item count off the issued item meta when it has one —
     // LWW-resolved count == distinct delta keys, no window over the full

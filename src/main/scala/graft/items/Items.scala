@@ -54,20 +54,17 @@ object Items {
       hotBucketCap: Int = 256): (Set[String], Set[String]) = {
     if (incoming.isEmpty) return (Set.empty, Set.empty)
 
-    def band(ph: Long, b: Int): Int = ((ph >>> (b * 8)) & 255L).toInt
-    def bucket(b: Int, v: Int): Int = (b << 8) | v
-
     // hot-bucket counts over ALL incoming band rows (duplicates included,
     // matching bandedCols over the raw incoming frame)
     val counts = new scala.collection.mutable.HashMap[Int, Int]()
     if (t >= 0) for ((_, _, _, ph) <- incoming; b <- 0 until 8)
-      counts.updateWith(bucket(b, band(ph, b)))(c => Some(c.getOrElse(0) + 1))
+      counts.updateWith(bucket(b, ph))(c => Some(c.getOrElse(0) + 1))
     val hot: Set[Int] = counts.collect { case (bk, c) if c > hotBucketCap => bk }.toSet
 
     // probe side: per incoming row, its non-hot band buckets
     val probe = new scala.collection.mutable.HashMap[Int, List[(String, Long)]]()
     if (t >= 0) for ((_, k, _, ph) <- incoming; b <- 0 until 8) {
-      val bk = bucket(b, band(ph, b))
+      val bk = bucket(b, ph)
       if (!hot(bk)) probe.updateWith(bk)(l => Some((k, ph) :: l.getOrElse(Nil)))
     }
 
@@ -84,13 +81,7 @@ object Items {
         java.util.Arrays.stream(incoming.asInstanceOf[Array[AnyRef]]).parallel()
           .forEach { row =>
             val (_, bKey, _, bPh) = row.asInstanceOf[(Long, String, String, Long)]
-            var b = 0
-            while (b < 8) {
-              for ((incKey, incPh) <- probe.getOrElse(bucket(b, band(bPh, b)), Nil))
-                if (java.lang.Long.bitCount(incPh ^ bPh) <= t && bKey < incKey)
-                  res.add(incKey)
-              b += 1
-            }
+            probeNear(probe, bPh, t)(incKey => if (bKey < incKey) res.add(incKey))
           }
         import scala.jdk.CollectionConverters._
         res.asScala.toSet
@@ -102,19 +93,11 @@ object Items {
       case Some(Left(exArr)) =>
         // driver-resident existing meta (the engine's item-meta mirror):
         // the same probe the mapPartitions closure below runs, with zero
-        // Spark jobs — identical math, pinned by the engine's path-parity
-        // tests
+        // Spark jobs
         val sup = Set.newBuilder[String]
         val seen = Set.newBuilder[String]
         for ((oldKey, oldPh) <- exArr) {
-          if (t >= 0) {
-            var b = 0
-            while (b < 8) {
-              for ((k, ph) <- probe.getOrElse(bucket(b, band(oldPh, b)), Nil))
-                if (java.lang.Long.bitCount(ph ^ oldPh) <= t) sup += k
-              b += 1
-            }
-          }
+          if (t >= 0) probeNear(probe, oldPh, t)(sup += _)
           if (incKeys.contains(oldKey)) seen += oldKey
         }
         (sup.result(), seen.result())
@@ -128,24 +111,39 @@ object Items {
           .mapPartitions { it =>
             val pm = probeBc.value
             val ik = incKeysBc.value
-            it.flatMap { case (oldKey, oldPh) =>
-              val dupHits =
-                if (tL < 0) Iterator.empty
-                else (0 until 8).iterator.flatMap { b =>
-                  pm.getOrElse((b << 8) | (((oldPh >>> (b * 8)) & 255L)).toInt, Nil)
-                    .iterator
-                    .collect { case (k, ph)
-                      if java.lang.Long.bitCount(ph ^ oldPh) <= tL => (false, k) }
-                }
-              val seenHit =
-                if (ik.contains(oldKey)) Iterator((true, oldKey)) else Iterator.empty
-              dupHits ++ seenHit
+            val sup = scala.collection.mutable.HashSet.empty[String]
+            val seen = scala.collection.mutable.HashSet.empty[String]
+            it.foreach { case (oldKey, oldPh) =>
+              if (tL >= 0) probeNear(pm, oldPh, tL)(sup += _)
+              if (ik.contains(oldKey)) seen += oldKey
             }
+            sup.iterator.map((false, _)) ++ seen.iterator.map((true, _))
           }.distinct().collect()
         (tagged.collect { case (false, k) => k }.toSet,
           tagged.collect { case (true, k) => k }.toSet)
     }
     (inBatch ++ vsExisting, seenKeys)
+  }
+
+  /** Band bucket `b` of a phash: the band index and its 8-bit value. */
+  private def bucket(b: Int, ph: Long): Int = (b << 8) | ((ph >>> (b * 8)) & 255L).toInt
+
+  /** The near-dup probe of [[suppressAndSeenSets]]: calls `hit` with the key
+    * of every probe-side row in one of `ph`'s 8 band buckets whose phash is
+    * within hamming `t` of `ph` (once per shared bucket). A callback, so
+    * the probe allocates nothing per hit.
+    */
+  private def probeNear(probe: scala.collection.Map[Int, List[(String, Long)]], ph: Long,
+      t: Int)(hit: String => Unit): Unit = {
+    var b = 0
+    while (b < 8) {
+      var l = probe.getOrElse(bucket(b, ph), Nil)
+      while (l.nonEmpty) {
+        if (java.lang.Long.bitCount(l.head._2 ^ ph) <= t) hit(l.head._1)
+        l = l.tail
+      }
+      b += 1
+    }
   }
 
   /** Key-set core of the near-duplicate suppression, usable at ANY incoming

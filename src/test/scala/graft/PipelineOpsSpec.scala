@@ -239,7 +239,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("q55: duplicated docs drive the per-source n-gram dup rate to 1000") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q55").toString
+    val dir = tmpDir("q55")
     Seq(
       (0L, "a b c d", "en", "dup_src", 7L),
       (1L, "a b c d", "en", "dup_src", 7L), // exact dup of doc 0

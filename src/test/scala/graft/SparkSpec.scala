@@ -23,8 +23,35 @@ object SparkTestSession {
   }
 }
 
+/** Temporary dirs of the test JVM, deleted by one shutdown hook when it
+  * exits. A child JVM a test launches gets its dirs from the parent, which
+  * waits for it, so it has finished before they go.
+  */
+object TmpDirs {
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A new temporary dir, deleted at JVM exit together with the sibling
+    * files named after it (`<dir>.<suffix>`, e.g. a child JVM's log). */
+  def create(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    created.add(dir)
+    dir.toString
+  }
+
+  private def deleteRec(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRec))
+    f.delete()
+  }
+
+  Runtime.getRuntime.addShutdownHook(new Thread(() => created.forEach { dir =>
+    Option(dir.getParent.toFile.listFiles()).foreach(_.iterator
+      .filter(_.getName.startsWith(s"${dir.getFileName}."))
+      .foreach(deleteRec))
+    deleteRec(dir.toFile)
+  }))
+}
+
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  def tmpDir(prefix: String): String = TmpDirs.create(prefix)
 }
