@@ -4,18 +4,21 @@ import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Observation, Row,
   SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.corpus.CorpusRow
 import graft.fetch.{CorpusFetcher, FetchStage, Fetcher, StepOutcome}
 import graft.frontier.{BloomSeen, BloomShard, Politeness}
 import graft.items.Items
 import graft.model._
 import graft.robots.Robots
-import graft.state.SnapshotStore
+import graft.state.{SnapshotStore, StateIO}
 
 /** A permanently-failed fetch (retries exhausted or a 4xx "stop") — the
   * reference throws and abandons the job (src/spider.js:239-244); we land it
@@ -273,7 +276,8 @@ case class EngineConfig(
       * (item keys, job state, and the spawn candidates, canonicalized inside
       * the fetch tasks) as an observed metric, which feeds driver passes for
       * the item decisions, spawn dedup, job state, fetch log and frontier —
-      * one foreground Spark job per superstep. The 1024× headroom
+      * one foreground Spark job per superstep, and the driver writes the
+      * tables it holds at the commit. The 1024× headroom
       * covers what a page emits: breaching the bound from there needs more
       * than 1024 items or links per page on average. A pending frontier of
       * at most the same row count is a driver array, so the politeness
@@ -328,7 +332,8 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *    decisions (winner pick, created/updated flags, phash near-dup
   *    suppression), spawn dedup (driver bloom probe → exact check of the
   *    positives), job state, fetch log and next frontier are driver passes
-  *    over arrays, maps and sets — one foreground Spark job per superstep
+  *    over arrays, maps and sets, and the driver writes the state tables it
+  *    holds at the commit — one Spark job per superstep, commit included,
   *    while the frontier is a driver array (it is while it fits the same
   *    bound);
   *  - `distributedStep` (a larger wave): the same decisions as Dataset plans
@@ -378,9 +383,10 @@ final class CrawlEngine(
 
   private val store = new SnapshotStore(cfg.statePath)
 
-  /** Run two independent Spark actions on concurrent threads and await both
-    * (failures propagate). Superstep writes have no mutual dependencies, so
-    * their planning/scheduling/IO latencies overlap instead of chaining.
+  /** Run independent writes (Spark actions or driver writes) on concurrent
+    * threads and await them all (failures propagate). Superstep writes have
+    * no mutual dependencies, so their planning/scheduling/IO latencies
+    * overlap instead of chaining.
     */
   private def inParallel(fs: (() => Unit)*): Unit = {
     import scala.concurrent.Future
@@ -498,12 +504,16 @@ final class CrawlEngine(
 
   // ---- state table IO -------------------------------------------------
 
+  private val jobEnc = ExpressionEncoder[CrawlJob]()
+  private val shardEnc = ExpressionEncoder[BloomShard]()
+  private val logEnc = ExpressionEncoder[FetchLog]()
+
   // explicit schemas skip per-read footer-inference jobs (one driver-side
   // Spark job per read.parquet call otherwise — material at superstep rate)
-  private val jobSchema = org.apache.spark.sql.Encoders.product[CrawlJob].schema
-  private val shardSchema = org.apache.spark.sql.Encoders.product[BloomShard].schema
+  private val jobSchema = jobEnc.schema
+  private val shardSchema = shardEnc.schema
   private val itemSchema = org.apache.spark.sql.Encoders.product[ImageItem].schema
-  private val fetchLogSchema = org.apache.spark.sql.Encoders.product[FetchLog].schema
+  private val fetchLogSchema = logEnc.schema
   private def dropStep(t: org.apache.spark.sql.types.StructType) =
     org.apache.spark.sql.types.StructType(t.filterNot(_.name == "step"))
 
@@ -561,6 +571,53 @@ final class CrawlEngine(
     */
   private def stateWrite[T](ds: Dataset[T]): DataFrameWriter[T] =
     ds.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+
+  // Driver-held tables (driver-array frontier, bloom shards, fetch log,
+  // equality deletes, an array's archive flush) are written by the driver
+  // itself ([[StateIO.writeRows]]): no Spark job and no Dataset. Through
+  // Spark each of these few-dozen-row tables is one job of 0.07–0.40 s that
+  // runs into the next superstep and delays its fetch write (crawl_deep, 4
+  // vCPUs: 3–4 such jobs per step), plus a `createDataset` of ~15–20 ms on
+  // the main thread. The encoders (defined with the schemas above) are
+  // built once; each write makes its own serializer, which is not
+  // thread-safe (a commit writes from several threads).
+  private def writeLocal[T](enc: ExpressionEncoder[T], xs: Iterable[T], dir: String): Unit = {
+    val toRow = enc.createSerializer()
+    StateIO.writeRows(spark, enc.schema, xs.iterator.map(toRow), dir)
+  }
+
+  /** The step's fetch log into its step dir, without the `step` column (the
+    * dir name carries it, as a Spark partitioned write leaves it). */
+  private def writeLogLocal(log: Array[FetchLog], step: Int): Unit = {
+    val schema = dropStep(fetchLogSchema)
+    val noStep = UnsafeProjection.create(schema.map(f =>
+      BoundReference(fetchLogSchema.fieldIndex(f.name), f.dataType, f.nullable)))
+    val toRow = logEnc.createSerializer()
+    StateIO.writeRows(spark, schema,
+      log.iterator.map(l => noStep(toRow(l))), s"${logDir("fetchlog")}/step=$step")
+  }
+
+  /** [[writeArchive]] for a driver array's flush: one file per bucket dir. */
+  private def writeArchiveLocal(finished: Array[CrawlJob], step: Int): Unit = {
+    val stepDir = s"$archiveDir/step=$step"
+    StateIO.deleteRec(stepDir)
+    finished.groupBy(j => bucketOf(j.urlKey)).foreach { case (b, js) =>
+      writeLocal(jobEnc, js, s"$stepDir/bucket=$b")
+    }
+  }
+
+  /** One write of a version's commit, handed the version's staging dir: the
+    * versioned tables (frontier, bloom) go under it, the step-partitioned
+    * side tables (fetch log, equality deletes, archive) to their step dirs.
+    */
+  private type StateWrite = String => Unit
+
+  /** The write of a next frontier: a driver array by the driver, a Dataset
+    * by Spark. */
+  private def frontierWrite(f: Frontier): StateWrite = f match {
+    case Left(a) => dir => writeLocal(jobEnc, a, s"$dir/frontier")
+    case Right(ds) => dir => stateWrite(ds).parquet(s"$dir/frontier")
+  }
 
   private def writeArchive(finished: DataFrame, step: Int): Unit = {
     // Repartition ON the bucket column first: without it every input task
@@ -795,22 +852,20 @@ final class CrawlEngine(
     issued = Some(if (seeds.size <= math.max(1L, driverRows)) {
       // small-seed fast path: ONE Spark job evaluates the (local-relation)
       // canon/dedup/robots plan; the bloom shards are built driver-side and
-      // both state tables land coalesced. The v0 value ALSO holds the
+      // the driver writes both state tables. The v0 value ALSO holds the
       // frontier (the driver array when it fits driverRows) and the shards,
       // so step 1 never re-reads the v0 snapshot.
       val jobsArr = jobs.collect()
       val shards = insertLocal(BloomSeen
         .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp),
         jobsArr.map(_.urlKey))
-      val frontierDs = spark.createDataset(jobsArr.toSeq).coalesce(1)
       store.commit(0, manifest(jobsArr.length)) { dir =>
-        inParallel(
-          () => stateWrite(frontierDs).parquet(s"$dir/frontier"),
-          () => stateWrite(spark.createDataset(shards.toSeq).coalesce(1))
-            .parquet(s"$dir/bloom"))
+        writeLocal(jobEnc, jobsArr, s"$dir/frontier")
+        writeLocal(shardEnc, shards, s"$dir/bloom")
       }
       Issued(manifest(jobsArr.length),
-        Some(if (jobsArr.length <= driverRows) Left(jobsArr) else Right(frontierDs)),
+        Some(if (jobsArr.length <= driverRows) Left(jobsArr)
+             else Right(spark.createDataset(jobsArr.toSeq).coalesce(1))),
         itemMeta, Some(shards))
     } else {
       val jobsP = jobs.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1121,14 +1176,14 @@ final class CrawlEngine(
 
   /** The next Dataset frontier — the frontier's `untouched` pending rows, the
     * wave's `updated` pending rows and the `fresh` jobs, crawl-delay bumped
-    * to `delayed` (see [[hostNext]]) — checkpointed, and the finished rows
-    * of `untouched` and `updated`, which it flushes to the archive this
-    * step (see [[archiveDir]]), so it carries none. Both tiers run it over
-    * a Dataset frontier.
+    * to `delayed` (see [[hostNext]]) — checkpointed, and the write of the
+    * finished rows of `untouched` and `updated` to the archive dir of
+    * `stepNow`, which it flushes every step (see [[archiveDir]]), so it
+    * carries none. Both tiers run it over a Dataset frontier.
     */
   private def datasetFrontier(untouched: Dataset[CrawlJob], updated: Dataset[CrawlJob],
-      fresh: Dataset[CrawlJob], delayed: Map[String, Int])
-      : (Frontier, Option[Dataset[CrawlJob]]) = {
+      fresh: Dataset[CrawlJob], delayed: Map[String, Int], stepNow: Int)
+      : (Frontier, StateWrite) = {
     val pending = untouched.filter(!col("state.finished"))
       .unionByName(updated.filter(!col("state.finished")))
       .unionByName(fresh)
@@ -1143,9 +1198,9 @@ final class CrawlEngine(
             .otherwise(col("notBeforeStep")))
           .as[CrawlJob]
       }
-    (Right(bumped.localCheckpoint(true)),
-     Some(untouched.filter(col("state.finished"))
-       .unionByName(updated.filter(col("state.finished")))))
+    val finished = untouched.filter(col("state.finished"))
+      .unionByName(updated.filter(col("state.finished")))
+    (Right(bumped.localCheckpoint(true)), _ => writeArchive(finished.toDF(), stepNow))
   }
 
   // -- the two superstep bodies -------------------------------------------
@@ -1166,7 +1221,8 @@ final class CrawlEngine(
 
   /** The driver tier's body: items, spawns, job state, fetch log and the
     * next frontier as driver passes over the wave's observed outcome
-    * metadata, then [[commitPhase]]. It runs no Spark job unless the
+    * metadata, then [[commitPhase]] with driver writes of the tables it
+    * holds. It runs no Spark job, its commit included, unless the
     * frontier or the item meta is a Dataset (or outgrows the bound), a
     * bloom-positive spawn misses the frontier (the archive probe), or it
     * reads state back from the snapshot (a resumed engine's first step).
@@ -1286,20 +1342,25 @@ final class CrawlEngine(
             val (done, pending) = a.partition(_.state.finished)
             (if (pending.length <= driverRows) Left(pending)
              else Right(spark.createDataset(pending.toSeq).localCheckpoint(true)),
-             Option.when(done.nonEmpty)(spark.createDataset(done.toSeq)))
+             Option.when(done.nonEmpty)((_: String) => writeArchiveLocal(done, stepNow)))
           }
         case Right(ds) =>
           // the wave keys filter the frontier in one narrow scan
-          datasetFrontier(ds.filter(!urlKeyIn(upd.map(_.urlKey).sorted)),
+          val (n, archive) = datasetFrontier(ds.filter(!urlKeyIn(upd.map(_.urlKey).sorted)),
             spark.createDataset(upd.toSeq).coalesce(1), spark.createDataset(fresh.toSeq),
-            delayed)
+            delayed, stepNow)
+          (n, Some(archive))
       }
     }
-    // one bloom file per version, as seed() writes it
-    commitPhase(Issued(manifest, Some(next), Some(itemMeta), Some(shards)), next,
-      spark.createDataset(log.toSeq).coalesce(1).toDF(),
-      Option.when(suppressedKeys.nonEmpty)(suppressedKeys.toSeq.toDF("key")), archived,
-      spark.createDataset(shards.toSeq).coalesce(1), release ++ existing.toOption)
+    // the driver writes every table it holds; one file each, as seed() writes
+    val deletes = Option.when(suppressedKeys.nonEmpty)((_: String) =>
+      StateIO.writeRows(spark, suppressedSchema,
+        suppressedKeys.iterator.map(k => InternalRow(UTF8String.fromString(k))),
+        s"$suppressedDir/step=$stepNow"))
+    commitPhase(Issued(manifest, Some(next), Some(itemMeta), Some(shards)),
+      Seq[StateWrite](frontierWrite(next), _ => writeLogLocal(log, stepNow),
+        dir => writeLocal(shardEnc, shards, s"$dir/bloom")) ++ archived ++ deletes,
+      spark.createDataset(log.toSeq), release ++ existing.toOption)
   }
 
   /** The distributed tier's body: items, spawns, job state, fetch log and the
@@ -1416,7 +1477,7 @@ final class CrawlEngine(
           nSpawned, created, updated)
     }.toDF()
 
-    val (next, archived) = timed("front.next") {
+    val (next, archive) = timed("front.next") {
       // the delayed-host universe is the robots rules table (tiny by
       // design), so the touched∩delayed set collects at ANY wave size
       val touched =
@@ -1425,30 +1486,33 @@ final class CrawlEngine(
           .filter(col("host").isin(hostDelay.keys.toSeq: _*)).as[String].collect().toSeq
       // the wave anti-joins the frontier (strategy left to Catalyst)
       datasetFrontier(front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
-        .as[CrawlJob], upd, fresh, hostNext(touched, stepNow))
+        .as[CrawlJob], upd, fresh, hostNext(touched, stepNow), stepNow)
     }
+    val deletes = suppressed.map(sup => (_: String) =>
+      stateWrite(sup.coalesce(1)).mode("overwrite").parquet(s"$suppressedDir/step=$stepNow"))
     commitPhase(Issued(SnapshotStore.Manifest(cur.manifest.version + 1, stepNow, waveN,
         None, None), Some(next), Some(Right(itemMeta)), None),
-      next, log, suppressed, archived, bloom, release ++ itemRelease ++ spawnRelease)
+      Seq[StateWrite](frontierWrite(next),
+        _ => stateWrite(log.drop("step").coalesce(1)).mode("overwrite")
+          .parquet(s"${logDir("fetchlog")}/step=$stepNow"),
+        dir => stateWrite(bloom).parquet(s"$dir/bloom"), archive) ++ deletes,
+      log.as[FetchLog], release ++ itemRelease ++ spawnRelease)
   }
 
   /** The end of both superstep bodies: issue the step's snapshot commit of
     * `next` (pipelined unless listeners wait on it) and make `next` the
-    * issued value. The step's writes: `frontier` = next's frontier (a
-    * driver array becomes one local relation here); `log` = the step's
-    * fetch log; `suppressed` = its equality-delete keys, if any; `archived`
-    * = the finished rows the frontier flushed this step, if it flushed;
-    * `bloom` = the next bloom version. `release` = checkpoints the writes
-    * read, freed once they land.
+    * issued value. `writes` = the step's writes: next's frontier, the
+    * step's fetch log, the next bloom version, its equality-delete keys if
+    * any and the archive if the frontier flushed — by the driver on the
+    * driver tier, by Spark on the distributed tier. `stepLog` = the step's
+    * fetch log for listeners, built only when there are some. `release` =
+    * checkpoints the writes read, freed once they land.
     */
-  private def commitPhase(next: Issued, frontier: Frontier, log: DataFrame,
-      suppressed: Option[DataFrame], archived: Option[Dataset[CrawlJob]],
-      bloom: Dataset[BloomShard], release: Seq[Dataset[_]]): Unit = {
+  private def commitPhase(next: Issued, writes: Seq[StateWrite],
+      stepLog: => Dataset[FetchLog], release: Seq[Dataset[_]]): Unit = {
     val (v, stepNow) = (next.manifest.version, next.manifest.step)
-    val frontierOut = frontier.fold(a => spark.createDataset(a.toSeq).coalesce(1), identity)
-    // The superstep writes (fetch log, frontier, bloom, equality deletes,
-    // and the archive on a step that flushed) are independent plans over
-    // already-checkpointed inputs — submitted from parallel threads so
+    // The superstep writes are independent — driver writes, or Spark plans
+    // over already-checkpointed inputs — run from parallel threads so
     // planning + scheduling + small-file IO overlap (Spark job submission
     // is thread-safe by design). Atomicity
     // is unchanged: nothing is visible until the manifest rename, and stale
@@ -1465,16 +1529,7 @@ final class CrawlEngine(
     // one is in flight.
     timed("commit.await")(awaitCommit())
     def commitWork(): Unit = {
-      store.commit(v, next.manifest) { dir =>
-        inParallel(Seq(
-          Some(() => stateWrite(log.drop("step").coalesce(1)).mode("overwrite")
-            .parquet(s"${logDir("fetchlog")}/step=$stepNow")),
-          Some(() => stateWrite(frontierOut).parquet(s"$dir/frontier")),
-          Some(() => stateWrite(bloom).parquet(s"$dir/bloom")),
-          archived.map(a => () => writeArchive(a.toDF(), stepNow)),
-          suppressed.map(sup => () => stateWrite(sup.coalesce(1)).mode("overwrite")
-            .parquet(s"$suppressedDir/step=$stepNow"))).flatten: _*)
-      }
+      store.commit(v, next.manifest)(dir => inParallel(writes.map(w => () => w(dir)): _*))
       store.expire(v - cfg.retainSnapshots + 1)
     }
     if (listeners.nonEmpty) {
@@ -1483,8 +1538,8 @@ final class CrawlEngine(
       // `next` is issued once it has landed
       timed("commit")(latchFailure(commitWork()))
       issued = Some(next)
-      val stepLog = log.as[FetchLog]
-      listeners.foreach(_.onStepCommitted(stepNow, stepLog))
+      val log = stepLog
+      listeners.foreach(_.onStepCommitted(stepNow, log))
       release.foreach(_.unpersist())
     } else {
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -1495,7 +1550,9 @@ final class CrawlEngine(
         // fetch instead of queueing ahead of them (FIFO would hand the
         // commit every slot first, serializing the "overlap"). Under the
         // default FIFO mode this property is inert — the commit still runs,
-        // just without slot sharing. Benches/clusters should set FAIR.
+        // just without slot sharing. Benches/clusters should set FAIR. Only
+        // a distributed-tier commit (or a Dataset frontier's) runs jobs: a
+        // driver-array step's commit is all driver writes.
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft-commit")
         try {
           timed("commit.bg")(commitWork())

@@ -2,6 +2,14 @@ package graft.state
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** All engine state IO goes through the Hadoop `FileSystem` API, so the
   * state root works unchanged on any Spark-reachable store — local disk in
@@ -82,5 +90,64 @@ private[graft] object StateIO {
       val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
       new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
     } finally in.close()
+  }
+
+  /** Write `rows` of `schema` as ONE parquet file under `dir`
+    * (`part-00000-<uuid>-c000.<codec>.parquet`, the name a one-task Spark
+    * write gives it) from the calling thread — no Spark job. `dir` is
+    * replaced: deleted first when it exists, as a Spark "overwrite" write
+    * does. Empty `rows` still write one file, carrying the schema, as Spark
+    * does for an empty Dataset.
+    *
+    * The file is the one `Dataset.write.parquet` writes for the same rows:
+    * rows go through Spark's own `ParquetWriteSupport` (schema conversion,
+    * value writers, Spark's row-metadata footer key), configured by the four
+    * keys Spark's `ParquetUtils.prepareWrite` sets for it, with the
+    * session's parquet codec. That couples this writer to a Spark-internal
+    * class; `StateIOSpec` pins its files against Spark-written ones (rows
+    * and footer schema). A file in the way of `dir` fails the write with an
+    * `IOException`. A write that fails leaves no file; only its first
+    * exception is thrown, later ones are added to it as suppressed.
+    */
+  def writeRows(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
+      dir: String): Unit = {
+    val sqlConf = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, sqlConf.writeLegacyParquetFormat.toString)
+    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      sqlConf.parquetOutputTimestampType.toString)
+    conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key,
+      sqlConf.parquetFieldIdWriteEnabled.toString)
+    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
+      sqlConf.parquetAnnotateVariantLogicalType.toString)
+    ParquetWriteSupport.setSchema(schema, conf)
+    val codec = CompressionCodecName.valueOf(
+      new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName)
+    val d = new Path(dir)
+    val f = d.getFileSystem(conf)
+    if (f.exists(d)) f.delete(d, true)
+    val file = new Path(d,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${codec.getExtension}.parquet")
+    val w = new RowWriter(file).withConf(conf).withCompressionCodec(codec).build()
+    // no partial file: a closed writer leaves a readable file holding only
+    // the rows written so far, where Spark's aborted task leaves none
+    def discard(e: Throwable): Nothing = {
+      try f.delete(file, false) catch { case c: Throwable => e.addSuppressed(c) }
+      throw e
+    }
+    try rows.foreach(w.write)
+    catch {
+      case e: Throwable =>
+        try w.close() catch { case c: Throwable => e.addSuppressed(c) }
+        discard(e)
+    }
+    try w.close() catch { case e: Throwable => discard(e) }
+  }
+
+  private final class RowWriter(file: Path)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    override def self(): RowWriter = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
   }
 }

@@ -379,6 +379,34 @@ class CrawlEngineSpec extends SparkSpec {
       assert(perStep.getOrElse(i, 0) == 1, s"step() #$i ran ${perStep.getOrElse(i, 0)} jobs")
   }
 
+  test("a driver-tier crawl runs one Spark job per step in any pool: its commits run none") {
+    // every job from the first step() until the last commit has landed,
+    // the background commits' graft-commit pool included
+    val sc = spark.sparkContext
+    val pools = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        pools.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.scheduler.pool"))).getOrElse("default"))
+    }
+    val eng = newEngine(tmpDir("engine-alljobs"))
+    eng.seed(SyntheticCorpus.seeds(spec))
+    org.apache.spark.graftspec.BusAccess.drain(sc) // the seed's jobs are not counted
+    sc.addSparkListener(listener)
+    val ran =
+      try Iterator.continually(eng.step()).takeWhile(identity).size
+      finally {
+        eng.currentVersion // lands the last commit
+        org.apache.spark.graftspec.BusAccess.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    assert(ran > 3, s"only $ran steps")
+    // the fetch write is each step's one job; the driver writes the commit
+    assert(pools.size == ran, s"$ran steps ran ${pools.size} jobs, pools: " +
+      pools.asScala.groupBy(identity).map { case (p, js) => s"$p ${js.size}" }.mkString(", "))
+  }
+
   test("fetch-task retries (local[4,3]) land and observe every outcome once") {
     // a child JVM: task retries need a local[N,F] master, and the suite's
     // session is local[4]
