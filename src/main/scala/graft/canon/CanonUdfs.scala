@@ -7,8 +7,8 @@ import org.apache.spark.unsafe.Platform
   *
   * URL keys are the built-in `xxhash64` (codegen'd, seed 42) of the
   * canonical string; [[urlKeyScala]] reproduces the identical value
-  * driver-side (same XXH64 implementation Spark uses) so sketches built in
-  * plain Scala agree with keys computed in the plan.
+  * driver-side (same XXH64 implementation Spark uses) so the engine's seed
+  * keys and the oracle's agree with keys computed in the plan.
   */
 object CanonUdfs {
 

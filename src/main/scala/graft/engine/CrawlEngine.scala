@@ -287,8 +287,8 @@ case class EngineConfig(
       * per superstep 5 → 2, before the metadata collect was folded into the
       * fetch write; the Dataset wave alone had been a 3-stage
       * collect of 0.3–0.7 s per 1.1–1.9 s superstep). The same row bound
-      * picks the seed's single-collect path and narrows a step's shuffle
-      * width to its pending count.
+      * narrows a step's shuffle width to its pending count, and keeps a v0
+      * frontier that fits as the seed's driver array.
       *
       * Larger waves run the DISTRIBUTED tier: anti-joins, banded
       * suppression, windowed winners, flag joins and the cogroup bloom
@@ -493,8 +493,6 @@ final class CrawlEngine(
     try body
     finally { restore(aqeKey, prevA); restore(spKey, prevS) }
   }
-
-  private def withEngineConf[T](body: => T): T = withStepConf(None)(body)
 
   private val routesBc = spark.sparkContext.broadcast(routes)
   private val fetcherBc = spark.sparkContext.broadcast(fetcher)
@@ -815,7 +813,8 @@ final class CrawlEngine(
 
   /** Initialize snapshot v0 from seed (routeId, url) pairs — the analogue of
     * `nest.queue(routeKey, url)` (reference: src/nest.js:86-97):
-    * canonicalize, dedup, robots-filter, land as the v0 frontier.
+    * canonicalize, dedup, robots-filter, land as the v0 frontier. A null
+    * route id or URL, or a state path that holds a crawl, throws first.
     */
   def seed(seeds: Seq[(String, String)]): Unit =
     seedResolved(seeds.map { case (r, u) => (r, u, Map.empty[String, String]) })
@@ -828,58 +827,43 @@ final class CrawlEngine(
     */
   def seedQueries(seeds: Seq[(String, Map[String, String])]): Unit =
     seedResolved(seeds.map { case (r, q) =>
-      val route = routes.getOrElse(r,
-        throw new IllegalArgumentException(s"Route $r does not exist"))
-      (r, route.urlTemplate(q), q)
+      // a null route id is rejected, with its entry, by seedResolved
+      (r, if (r == null) null else routes.getOrElse(r,
+        throw new IllegalArgumentException(s"Route $r does not exist")).urlTemplate(q), q)
     })
 
-  private def seedResolved(seeds: Seq[(String, String, Map[String, String])]): Unit =
-    withEngineConf {
-    awaitCommit()
-    issued = None
-    val seedJobs = seeds.toDF("routeId", "rawUrl", "query")
-      .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
-      .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
-      .withColumn("urlKey", xxhash64(col("url")))
-    val allowedSeeds = Robots.allowed(minRoutePerKey(seedJobs.drop("rawUrl")), robotsRules)
-    val jobs = toJobs(allowedSeeds, 0)
-    def manifest(n: Long) = SnapshotStore.Manifest(0, -1, 0L,
-      pending = Some(n), totals = Some(SnapshotStore.Totals(0L, 0L, 0L)))
-    // no item rows exist before step 0 (unless a compacted base does): the
-    // empty item meta spares step 0 the read of the delta dirs
-    val itemMeta = Option.when(latestBaseStep < 0)(Left(Array.empty[(String, Long)]))
-    // synchronous commits — the v0 value is committed once assigned
-    issued = Some(if (seeds.size <= math.max(1L, driverRows)) {
-      // small-seed fast path: ONE Spark job evaluates the (local-relation)
-      // canon/dedup/robots plan; the bloom shards are built driver-side and
-      // the driver writes both state tables. The v0 value ALSO holds the
-      // frontier (the driver array when it fits driverRows) and the shards,
-      // so step 1 never re-reads the v0 snapshot.
-      val jobsArr = jobs.collect()
-      val shards = insertLocal(BloomSeen
-        .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp),
-        jobsArr.map(_.urlKey))
-      store.commit(0, manifest(jobsArr.length)) { dir =>
-        writeLocal(jobEnc, jobsArr, s"$dir/frontier")
-        writeLocal(shardEnc, shards, s"$dir/bloom")
-      }
-      Issued(manifest(jobsArr.length),
-        Some(if (jobsArr.length <= driverRows) Left(jobsArr)
-             else Right(spark.createDataset(jobsArr.toSeq).coalesce(1))),
-        itemMeta, Some(shards))
-    } else {
-      val jobsP = jobs.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = jobsP.count()
-      val bloom = BloomSeen.insert(
-        BloomSeen.empty(spark, cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp),
-        jobsP.map(_.urlKey), cfg.bloomPartitions)
-      store.commit(0, manifest(n)) { dir =>
-        stateWrite(jobsP).parquet(s"$dir/frontier")
-        stateWrite(bloom).parquet(s"$dir/bloom")
-      }
-      jobsP.unpersist()
-      Issued(manifest(n), None, itemMeta, None)
-    })
+  /** The seeds are a driver `Seq`, so they are keyed (by the functions the
+    * native expressions call), admitted ([[admit]]) and written by the
+    * driver: no Spark job. */
+  private def seedResolved(seeds: Seq[(String, String, Map[String, String])]): Unit = {
+    seeds.iterator.zipWithIndex.foreach { case ((r, u, q), i) =>
+      if (r == null || u == null) throw new IllegalArgumentException(
+        s"seed entry $i (routeId $r, url $u, query $q) has a null route id or URL")
+    }
+    // v0 starts a crawl: under an earlier crawl's later versions it would be
+    // shadowed by them (and their step dirs swept by the first step), and an
+    // earlier items base would hide the new crawl's items
+    currentVersion.map(v => s"snapshot version v$v")
+      .orElse(Option.when(StateIO.listNames(itemsBaseDir).nonEmpty)("a compacted items base"))
+      .foreach(held => throw new IllegalStateException(s"seed() onto ${cfg.statePath}, " +
+        s"which holds $held; resume() it, or seed a fresh state path"))
+    val jobs = admit(seeds.iterator.map { case (r, u, q) =>
+      val url = graft.canon.UrlCanon.canonicalize(u)
+      SpawnCand(graft.canon.CanonUdfs.urlKeyScala(url), url, graft.canon.UrlCanon.host(url),
+        r, q)
+    }, createdStep = 0)(_ => Set.empty)
+    val shards = insertLocal(BloomSeen
+      .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp), jobs.map(_.urlKey))
+    val manifest = SnapshotStore.Manifest(0, -1, 0L,
+      pending = Some(jobs.length), totals = Some(SnapshotStore.Totals(0L, 0L, 0L)))
+    store.commit(0, manifest) { dir =>
+      writeLocal(jobEnc, jobs, s"$dir/frontier")
+      writeLocal(shardEnc, shards, s"$dir/bloom")
+    }
+    // committed once assigned: the frontier while it fits driverRows (else
+    // step 1 reads it back), no item rows (none exist before step 0), shards
+    issued = Some(Issued(manifest, Option.when(jobs.length <= driverRows)(Left(jobs)),
+      Some(Left(Array.empty)), Some(shards)))
   }
 
   /** The issued value of a fresh engine over an existing store (resume):
@@ -1143,8 +1127,23 @@ final class CrawlEngine(
   private def checkpointMeta(existing: Option[DataFrame], added: DataFrame): DataFrame =
     existing.fold(added)(_.unionByName(added)).localCheckpoint(true)
 
+  /** Seeds or a driver-tier wave's spawns admitted as jobs entering at
+    * `createdStep`: the lowest routeId per key, robots-allowed, minus the keys
+    * `seen` returns, with their route's priority (the distributed tier's
+    * plans: [[minRoutePerKey]], `Robots.allowed`, [[toJobs]]). */
+  private def admit(cands: Iterator[SpawnCand], createdStep: Int)(
+      seen: Array[Long] => Set[Long]): Array[CrawlJob] = {
+    val cand = cands.toArray.groupBy(_.urlKey).valuesIterator.map(_.minBy(_.routeId))
+      .filter(c => Robots.allowedLocal(c.url, c.host, robotsRules)).toArray
+    val old = seen(cand.map(_.urlKey))
+    cand.filterNot(c => old(c.urlKey)).map(c =>
+      CrawlJob(c.urlKey, c.url, c.host, c.routeId,
+        priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
+        query = c.query, createdStep = createdStep, notBeforeStep = createdStep))
+  }
+
   /** Frontier jobs, entering at `createdStep` with their route's priority,
-    * from (urlKey, url, host, routeId, query) rows (seeds and spawns). */
+    * from the distributed tier's (urlKey, url, host, routeId, query) rows. */
   private def toJobs(df: DataFrame, createdStep: Int): Dataset[CrawlJob] = {
     val prioByRoute = typedLit(routes.map { case (k, r) => k -> r.priority })
     df.withColumn("priority", coalesce(element_at(prioByRoute, col("routeId")), lit(50)))
@@ -1265,24 +1264,20 @@ final class CrawlEngine(
     }
 
     val (fresh, shards) = timed("spawn") {
-      val cand = meta.iterator.flatMap(_.spawns).toArray.groupBy(_.urlKey)
-        .valuesIterator.map(_.minBy(_.routeId))
-        .filter(c => Robots.allowedLocal(c.url, c.host, robotsRules)).toArray
       val shards = cur.shards.getOrElse(readBloom(cur.manifest.version).collect())
-      val keys = cand.map(_.urlKey)
-      val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
-      val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
-      // Exact check only on the bloom-positive sliver (true hits + fpp·new):
-      // the active frontier is the driver array (with the finished jobs it
-      // carries) or a column scan on urlKey, never shuffled; only the keys
-      // it misses go to the archive leg, which prunes to their bucket
-      // partitions (archiveProbePlan — PlanSpec-asserted), so a probe of k
-      // keys touches ≤ min(k, ArchiveBuckets) buckets of the all-jobs-ever
-      // table, not every archived key. Reading the archive awaits any
-      // in-flight commit (it appends a step dir) — usually a no-op since the
-      // commit overlapped the whole fetch; a step whose positives all sit in
-      // the frontier never touches it.
-      val seen: Set[Long] =
+      val fresh = admit(meta.iterator.flatMap(_.spawns), stepNow + 1) { keys =>
+        val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
+        val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
+        // Exact check only on the bloom-positive sliver (true hits + fpp·new):
+        // the active frontier is the driver array (with the finished jobs it
+        // carries) or a column scan on urlKey, never shuffled; only the keys
+        // it misses go to the archive leg, which prunes to their bucket
+        // partitions (archiveProbePlan — PlanSpec-asserted), so a probe of k
+        // keys touches ≤ min(k, ArchiveBuckets) buckets of the all-jobs-ever
+        // table, not every archived key. Reading the archive awaits any
+        // in-flight commit (it appends a step dir) — usually a no-op since the
+        // commit overlapped the whole fetch; a step whose positives all sit in
+        // the frontier never touches it.
         if (pos.isEmpty) Set.empty
         else {
           val posSorted = pos.toArray.sorted
@@ -1299,10 +1294,7 @@ final class CrawlEngine(
               .map(_.as[Long].collect().toSet).getOrElse(Set.empty[Long])
           }
         }
-      val fresh = cand.filterNot(c => seen(c.urlKey)).map(c =>
-        CrawlJob(c.urlKey, c.url, c.host, c.routeId,
-          priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
-          query = c.query, createdStep = stepNow + 1, notBeforeStep = stepNow + 1))
+      }
       (fresh, insertLocal(shards, fresh.map(_.urlKey)))
     }
 
@@ -1586,7 +1578,7 @@ final class CrawlEngine(
     * the LIVE item set only — superseded versions no longer vote (the
     * live-set semantics; pre-compaction scans see all delta rows).
     */
-  def compactItems(): Unit = withEngineConf {
+  def compactItems(): Unit = withStepConf(None) {
     awaitCommit()
     // compaction switches suppression to live-set semantics (superseded
     // versions no longer vote) — drop the all-delta-rows item meta

@@ -1,7 +1,7 @@
 package graft.frontier
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.util.sketch.BloomFilter
 
 /** One shard of the partitioned URL-seen bloom filter. Shard ownership is
@@ -26,15 +26,8 @@ object BloomSeen {
     bos.toByteArray
   }
 
-  /** P empty shards sized `capacityPerShard` each. */
-  def empty(spark: SparkSession, partitions: Int, capacityPerShard: Long,
-      fpp: Double = 0.01): Dataset[BloomShard] = {
-    import spark.implicits._
-    spark.range(partitions)
-      .map(p => BloomShard(p.toInt, serialize(BloomFilter.create(capacityPerShard, fpp))))
-  }
-
-  /** Driver-side twin of [[empty]] (small-seed fast path). */
+  /** P empty shards sized `capacityPerShard` each, built on the driver (the
+    * seed's v0 sketch). */
   def emptyLocal(partitions: Int, capacityPerShard: Long,
       fpp: Double = 0.01): Array[BloomShard] =
     Array.tabulate(partitions)(p =>

@@ -407,6 +407,113 @@ class CrawlEngineSpec extends SparkSpec {
       pools.asScala.groupBy(identity).map { case (p, js) => s"$p ${js.size}" }.mkString(", "))
   }
 
+  test("seed() runs no Spark job, and both tier bounds write the same v0") {
+    // every job in any pool from the start of seed() to its return
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def seeded(name: String, tweak: EngineConfig => EngineConfig): String = {
+      val dir = tmpDir(name)
+      val e = new CrawlEngine(spark, routes, fetcher, Nil, tweak(CrawlEngineSpec.retainAll(dir)))
+      org.apache.spark.graftspec.BusAccess.drain(sc)
+      jobs.set(0)
+      sc.addSparkListener(listener)
+      try e.seed(SyntheticCorpus.seeds(spec))
+      finally {
+        org.apache.spark.graftspec.BusAccess.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      assert(jobs.get == 0, s"$name: seed() ran ${jobs.get} Spark jobs")
+      dir
+    }
+    val default = seeded("engine-seed-default", identity)
+    val forced = seeded("engine-seed-dist", _.copy(driverCollectMaxRows = 0L))
+    def frontierRows(dir: String) = snapshotAndArchive(dir, 0)._1.sortBy(_.urlKey)
+    def shardBytes(dir: String) = {
+      import spark.implicits._
+      spark.read.parquet(s"$dir/v=0/bloom").as[graft.frontier.BloomShard].collect()
+        .map(s => (s.pid, s.sketch.toSeq)).sortBy(_._1).toSeq
+    }
+    assert(frontierRows(default).map(_.url).sorted ==
+      SyntheticCorpus.seeds(spec).map(s => graft.canon.UrlCanon.canonicalize(s._2)).sorted)
+    assert(frontierRows(default) == frontierRows(forced), "v0 frontier rows differ")
+    assert(shardBytes(default).size == 4)
+    assert(shardBytes(default) == shardBytes(forced), "v0 bloom shards differ")
+  }
+
+  /** Every file under `dir`, by relative path, with its bytes. */
+  def filesOf(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readAllBytes(p).toSeq)
+      .toMap
+    finally walk.close()
+  }
+
+  test("seed() onto a used state path throws and leaves every file as it was") {
+    val dir = tmpDir("engine-reseed")
+    val a = newEngine(dir, maxSteps = 3)
+    a.seed(SyntheticCorpus.seeds(spec))
+    a.run()
+    a.compactItems()
+    val v = a.currentVersion.get
+    assert(v == 3, s"latest version v$v")
+    val before = filesOf(dir)
+    val seeds = Seq[(String, CrawlEngine => Unit)](
+      ("seed", _.seed(SyntheticCorpus.seeds(spec))),
+      ("seedQueries", _.seedQueries(SyntheticCorpus.seedQueries(spec))))
+    for ((name, seedIt) <- seeds) {
+      val e = intercept[IllegalStateException](seedIt(newEngine(dir)))
+      assert(e.getMessage.contains(s"v$v") && e.getMessage.contains("resume()"),
+        s"$name: ${e.getMessage}")
+    }
+    assert(filesOf(dir) == before, "a rejected seed changed the state path")
+    // a compacted items base alone also holds a crawl's items
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("v="))
+      .foreach(d => graft.state.StateIO.deleteRec(d.getPath))
+    val e = intercept[IllegalStateException](newEngine(dir).seed(SyntheticCorpus.seeds(spec)))
+    assert(e.getMessage.contains("items base"), e.getMessage)
+  }
+
+  test("seed() and seedQueries() reject a null route id or URL before any write, " +
+      "and enqueue an empty URL") {
+    val listing = SyntheticCorpus.LISTING
+    val url = spec.listUrl(0, 1)
+    val nullTemplate = routes.updated(listing, routes(listing).copy(urlTemplate = _ => null))
+    val cases = Seq[(String, Map[String, graft.model.RouteSpec], CrawlEngine => Unit)](
+      ("seed, null url", routes, _.seed(Seq(listing -> url, listing -> null))),
+      ("seed, null route id", routes, _.seed(Seq(listing -> url, (null, url)))),
+      ("seedQueries, null route id", routes,
+        _.seedQueries(Seq(listing -> Map("host" -> "h0.test"), (null, Map.empty)))),
+      ("seedQueries, template returns null", nullTemplate,
+        _.seedQueries(Seq(listing -> Map("host" -> "h0.test")))))
+    for ((name, rs, seedIt) <- cases) {
+      val dir = tmpDir("engine-seed-null")
+      val e = intercept[IllegalArgumentException](seedIt(new CrawlEngine(spark, rs, fetcher,
+        Nil, EngineConfig(statePath = dir, bloomPartitions = 4,
+          bloomCapacityPerShard = 1 << 16))))
+      // the message names the entry: its position and values
+      val entry = if (name.contains("template")) "entry 0" else "entry 1"
+      assert(e.getMessage.contains(entry) && e.getMessage.contains("null"),
+        s"$name: ${e.getMessage}")
+      assert(filesOf(dir).isEmpty, s"$name: wrote ${filesOf(dir).keys.mkString(", ")}")
+    }
+    // an empty URL is still enqueued, keyed as the native expressions key it
+    val e = newEngine(tmpDir("engine-seed-empty"))
+    e.seed(Seq(listing -> ""))
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    import spark.implicits._
+    val key = Seq("").toDF("u")
+      .select(xxhash64(graft.canon.CanonUdfs.canon_url(col("u")))).as[Long].head()
+    val Array(j) = e.frontier.collect()
+    assert((j.url, j.host, j.routeId, j.urlKey) == (("", "", listing, key)), j)
+  }
+
   test("fetch-task retries (local[4,3]) land and observe every outcome once") {
     // a child JVM: task retries need a local[N,F] master, and the suite's
     // session is local[4]

@@ -29,7 +29,9 @@ import graft.fetch.CorpusFetcher
   * writes their files. It crawls through the engine's public API only and
   * reads the state tables as plain parquet.
   *
-  * Usage: `sbt "Test/runMain graft.ManifestDump <outDir>"`.
+  * Usage: `sbt "Test/runMain graft.ManifestDump <outDir>"`, into an
+  * `<outDir>` that does not exist yet: `seed()` refuses a state path that
+  * already holds a crawl.
   */
 object ManifestDump {
   /** A value as a line fragment that does not depend on map order. */
