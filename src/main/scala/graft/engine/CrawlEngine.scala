@@ -9,7 +9,9 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.corpus.CorpusRow
@@ -80,21 +82,26 @@ object CrawlEngine {
       itemMeta: Seq[(Int, String, String, Long)])
 
   /** The superstep body a wave runs, chosen once per step from its wave
-    * size by `fetchPhase` (see [[EngineConfig.driverCollectMaxRows]]); the
-    * superstep forks on it once, into `driverStep` or `distributedStep`. */
+    * size (see [[EngineConfig.driverCollectMaxRows]]): `wavePhase` holds a
+    * driver-sized wave as a driver array and a larger one as a Dataset, and
+    * `fetchPhase` returns the tier, on which the superstep forks once, into
+    * `driverStep` or `distributedStep`. */
   private[engine] sealed trait Tier
   /** A driver-sized wave, with its outcome metadata observed by the fetch
-    * write (the step's one foreground Spark job): `driverStep` decides items,
-    * spawns, job state and the next frontier in driver passes over arrays,
-    * maps and sets. */
+    * write — the step's one foreground Spark job, one stage, run from the
+    * engine's one analyzed fetch plan (see `fetchPlan`): `driverStep` decides
+    * items, spawns, job state and the next frontier in driver passes over
+    * arrays, maps and sets. */
   private[engine] final case class DriverTier(meta: Array[OutcomeMeta]) extends Tier
-  /** A larger wave: `distributedStep` runs Dataset plans over the landed raw
-    * `outcomes` table, with no per-step driver state. Its frontier is always
-    * a Dataset: a driver array holds at most the driver bound's rows, so
-    * every wave off one is driver-sized. */
-  private[engine] final case class DistributedTier(outcomes: DataFrame) extends Tier
+  /** A larger wave (its checkpointed Dataset): `distributedStep` runs Dataset
+    * plans over the landed raw `outcomes` table, with no per-step driver
+    * state. Its frontier is always a Dataset: a driver array holds at most
+    * the driver bound's rows, so every wave off one is driver-sized. */
+  private[engine] final case class DistributedTier(wave: Dataset[CrawlJob], outcomes: DataFrame)
+      extends Tier
 
-  /** A pending frontier: a driver array or a Dataset. */
+  /** A pending frontier or a politeness wave: a driver array while it fits
+    * the driver bound, else a Dataset. */
   private[engine] type Frontier = Either[Array[CrawlJob], Dataset[CrawlJob]]
 
   /** The engine's in-memory state at its latest issued version (the commit
@@ -217,9 +224,11 @@ object CrawlEngine {
   private val FetchTaskFactor = 32
   private val FetchPagesPerTask = 128
   /** How long the driver tier waits, once its fetch write has returned, for
-    * the write's observed outcome metadata. Spark completes an observation
-    * from its listener bus, a moment after the write; a write whose metric
-    * never arrives fails the step instead of hanging it.
+    * the write's observed outcome metadata. The engine registers each step's
+    * `Observation` itself, under the fresh observation id its rebound fetch
+    * plan carries (see `fetchPlan`); Spark completes it from its listener
+    * bus, a moment after the write. A write whose metric never arrives fails
+    * the step instead of hanging it.
     */
   private val ObservedMetaWait = Duration(60, "s")
 }
@@ -244,8 +253,9 @@ case class EngineConfig(
       * (required for the sequential budget take), but leaving the FETCH on
       * that placement makes stage wall = the unluckiest partition's host
       * count (measured ~1.7× mean at 450 hosts / 32 partitions). The wave is
-      * byte-free metadata, so one extra exchange splitting each host into
-      * `fetchSplits` chunks is ~free and caps the tail.
+      * byte-free metadata, so placing each host's jobs in `fetchSplits`
+      * chunks is ~free and caps the tail: the driver places a driver-sized
+      * wave itself, a larger one takes one exchange.
       *
       * DEFAULT 1: splitting a host across k tasks means up to k simultaneous
       * connections to that host with no inter-request delay — a weaker
@@ -277,7 +287,11 @@ case class EngineConfig(
       * the fetch tasks) as an observed metric, which feeds driver passes for
       * the item decisions, spawn dedup, job state, fetch log and frontier —
       * one foreground Spark job per superstep, and the driver writes the
-      * tables it holds at the commit. The 1024× headroom
+      * tables it holds at the commit. That job runs one stage: the engine
+      * analyzes the fetch write's plan once and rebinds it to each wave,
+      * which the driver places in its fetch partitions itself (no exchange;
+      * on a traced crawl_deep, 4 vCPUs, this cut a steady step's time before
+      * the job from ~260 ms to ~140 ms). The 1024× headroom
       * covers what a page emits: breaching the bound from there needs more
       * than 1024 items or links per page on average. A pending frontier of
       * at most the same row count is a driver array, so the politeness
@@ -327,7 +341,9 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *
   * and then ONE straight-line body for that tier:
   *
-  *  - `driverStep` (a driver-sized wave): the fetch write returns the
+  *  - `driverStep` (a driver-sized wave): the fetch write — the engine's
+  *    one analyzed fetch plan, rebound to the wave as the driver placed it,
+  *    so one stage — returns the
   *    wave's byte-free outcome metadata as an observed metric, and the item
   *    decisions (winner pick, created/updated flags, phash near-dup
   *    suppression), spawn dedup (driver bloom probe → exact check of the
@@ -925,45 +941,54 @@ final class CrawlEngine(
         // before this step fetches (awaiting a completed future never blocks)
         if (commitInFlight.exists(_.isCompleted)) awaitCommit()
         // the checkpoints this step's writes may read, freed once they land
-        val release = Seq(wave) ++ cur.frontier.flatMap(_.toOption)
+        val release = wave.toSeq ++ cur.frontier.flatMap(_.toOption)
         fetchPhase(wave, waveN, stepNow) match {
           case DriverTier(meta) => driverStep(cur, front, waveN, stepNow, meta, release)
-          case DistributedTier(outcomes) =>
+          case DistributedTier(w, outcomes) =>
             require(front.isRight, s"step $stepNow: a distributed wave of $waveN jobs " +
               s"off a driver-array frontier (at most $driverRows rows, so its waves are " +
               "driver-sized)")
-            distributedStep(cur, front.toOption.get, wave, waveN, stepNow, outcomes, release)
+            distributedStep(cur, front.toOption.get, w, waveN, stepNow, outcomes, release)
         }
         true
     }
   }
 
   /** The politeness wave at the first step ≥ `s` with eligible work, with
-    * its size and that step; None when no work remains.
+    * its size and that step; None when no work remains. A driver-sized wave
+    * is a driver array (the driver tier's fetch input), a larger one its
+    * checkpointed Dataset.
     */
-  private def wavePhase(front: Frontier, s: Int): Option[(Dataset[CrawlJob], Long, Int)] = {
+  private def wavePhase(front: Frontier, s: Int): Option[(Frontier, Long, Int)] = {
     // A driver frontier ⇒ the driver wave (the same sequential take as the
-    // Dataset plan) as a local relation. Otherwise: localCheckpoint (eager)
-    // on the shared wave truncates lineage so every downstream action
-    // analyzes a shallow scan instead of re-planning the whole superstep
-    // tree — catalyst planning time was ~half of each superstep's wall
-    // clock before this (measured via SparkListener) — plus a cheap count.
-    def build(atStep: Int): (Dataset[CrawlJob], Long) = front match {
+    // Dataset plan). Otherwise: localCheckpoint (eager) on the shared wave
+    // truncates lineage so every downstream action analyzes a shallow scan
+    // instead of re-planning the whole superstep tree — catalyst planning
+    // time was ~half of each superstep's wall clock before this (measured
+    // via SparkListener) — plus a cheap count; a driver-sized wave is then
+    // collected from the checkpoint, so both frontiers feed the driver tier
+    // the same array.
+    def build(atStep: Int): (Frontier, Long) = front match {
       case Left(a) =>
         val w = Politeness.waveLocal(a, atStep, cfg.hostBudget, routeCaps,
           cfg.disabledRoutes, hooks.jobFilter)
-        (spark.createDataset(w.toSeq), w.length.toLong)
+        (Left(w), w.length.toLong)
       case Right(ds) =>
         val w = Politeness.wave(ds, atStep, cfg.hostBudget, routeCaps,
           cfg.disabledRoutes, SaltBuckets, hooks.jobFilter).localCheckpoint(true)
-        (w, w.count())
+        val n = w.count()
+        if (n > driverRows) (Right(w), n)
+        else {
+          val a = if (n == 0) Array.empty[CrawlJob] else w.collect()
+          w.unpersist()
+          (Left(a), n)
+        }
     }
     val (wave, waveN) = timed("wave")(build(s))
     if (waveN > 0) return Some((wave, waveN, s))
     // Nothing eligible *now*, but retry-backoff / crawl-delay jobs may be
     // waiting on a future step — jump the clock to the earliest one (the
     // analogue of the reference worker's idle poll-sleep, worker.js:108-110).
-    wave.unpersist()
     val pending: Option[Int] = front match {
       case Left(a) => a.iterator
         .filter(j => !j.state.finished && !cfg.disabledRoutes(j.routeId))
@@ -979,20 +1004,26 @@ final class CrawlEngine(
     // nxt <= s: no forward progress possible
     pending.filter(_ > s).flatMap { nxt =>
       val (w2, n2) = build(nxt)
-      if (n2 > 0) Some((w2, n2, nxt)) else { w2.unpersist(); None }
+      Option.when(n2 > 0)((w2, n2, nxt))
     }
   }
 
   /** Fetch+extract the wave; the fetch job lands its own outcomes. Returns
     * the step's ONE tier decision (see EngineConfig.driverCollectMaxRows),
-    * made from the wave size alone: a driver-sized wave's fetch write also
-    * returns the byte-free outcome metadata as an observed metric — one
-    * Spark job, no read of the landed table — and a larger wave gets the
-    * landed raw table, read back byte-free by every later scan.
+    * made from the wave size alone (`wavePhase` holds a driver-sized wave as
+    * an array):
+    *  - a driver-sized wave runs the engine's one analyzed fetch plan
+    *    ([[fetchPlan]]), rebound to the wave placed on the driver
+    *    (`FetchStage.placed`): one Spark job of one stage, with no exchange,
+    *    whose write also returns the byte-free outcome metadata as an
+    *    observed metric — no read of the landed table;
+    *  - a larger wave is repartitioned and fetched by a Dataset plan built
+    *    for the step (two stages), and gets the landed raw table, read back
+    *    byte-free by every later scan.
     */
-  private def fetchPhase(wave: Dataset[CrawlJob], waveN: Long, stepNow: Int): Tier = {
-    // Rebalance the SELECTED wave before fetching (see EngineConfig
-    // .fetchSplits): cheap exchange of byte-free rows, caps the placement
+  private def fetchPhase(wave: Frontier, waveN: Long, stepNow: Int): Tier = {
+    // Place the SELECTED wave by (host, split) before fetching (see
+    // EngineConfig.fetchSplits): byte-free rows, and the placement caps the
     // tail that otherwise sets the fetch stage's wall clock.
     val fetchParts = {
       val base = spark.sessionState.conf.numShufflePartitions
@@ -1004,10 +1035,6 @@ final class CrawlEngine(
       val floor = math.max(1L, math.min(base.toLong, waveN)).toInt
       math.max(floor, math.min(base * FetchTaskFactor, byWave))
     }
-    val waveFetch = wave.repartition(fetchParts,
-      col("host"), pmod(col("urlKey"), lit(cfg.fetchSplits)))
-    val outcomes = FetchStage.run(waveFetch, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
-      cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits))
     // The fetch job WRITES its outcomes as it produces them: payload bytes
     // flow scraper → parquet inside the fetching task (uncompressed — the
     // payloads are already PNG/JPEG-compressed) and never occupy executor
@@ -1017,29 +1044,50 @@ final class CrawlEngine(
     // in-memory checkpoint. The dir is invisible to readers until the
     // snapshot commit (readers filter to committed steps).
     val rawPath = s"$rawDir/step=$stepNow"
-    def land(ds: Dataset[StepOutcome]): Unit = timed("fetch")(
+    def land(ds: Dataset[_]): Unit = timed("fetch")(
       stateWrite(ds).mode("overwrite").option("compression", "uncompressed").parquet(rawPath))
-    if (waveN <= driverRows) {
-      // The observed metric travels as a task-result accumulator, which
-      // Spark merges once per result partition: a retried fetch task adds
-      // its rows once, and a lost or doubled merge fails the count check.
-      val obs = Observation()
-      land(outcomes.observe(obs, collect_list(metaStruct).as("meta")))
-      val row = try Await.result(obs.future, ObservedMetaWait) catch {
-        case _: TimeoutException => throw new IllegalStateException(
-          s"step $stepNow: the fetch write returned without its observed outcome " +
-            s"metadata within $ObservedMetaWait")
-      }
-      // sorted by job: the merge order of task results is not deterministic
-      val meta = row.getSeq[Row](0).iterator.map(metaOf).toArray.sortBy(_.job.urlKey)
-      require(meta.length == waveN,
-        s"step $stepNow: ${meta.length} observed outcomes for a wave of $waveN jobs")
-      DriverTier(meta)
-    } else {
-      land(outcomes)
-      DistributedTier(spark.read.schema(outcomeSchema).parquet(rawPath))
+    wave match {
+      case Left(jobs) =>
+        // The observed metric travels as a task-result accumulator, which
+        // Spark merges once per result partition: a retried fetch task adds
+        // its rows once, and a lost or doubled merge fails the count check.
+        val obs = Observation()
+        land(PlanBridge.rebind(spark, fetchPlan,
+          FetchStage.placed(spark.sparkContext, jobs, fetchParts, cfg.fetchSplits), obs))
+        val row = try Await.result(obs.future, ObservedMetaWait) catch {
+          case _: TimeoutException => throw new IllegalStateException(
+            s"step $stepNow: the fetch write returned without its observed outcome " +
+              s"metadata within $ObservedMetaWait")
+        }
+        // sorted by job: the merge order of task results is not deterministic
+        val meta = row.getSeq[Row](0).iterator.map(metaOf).toArray.sortBy(_.job.urlKey)
+        require(meta.length == waveN,
+          s"step $stepNow: ${meta.length} observed outcomes for a wave of $waveN jobs")
+        DriverTier(meta)
+      case Right(ds) =>
+        land(fetchOf(ds.repartition(fetchParts,
+          col("host"), pmod(col("urlKey"), lit(cfg.fetchSplits)))))
+        DistributedTier(ds, spark.read.schema(outcomeSchema).parquet(rawPath))
     }
   }
+
+  /** The fetch stage over a placed wave, as both tiers run it. */
+  private def fetchOf(wave: Dataset[CrawlJob]): Dataset[StepOutcome] =
+    FetchStage.run(wave, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
+      cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits))
+
+  /** The driver tier's fetch write, analyzed once per engine (at its first
+    * driver-tier step): an RDD leaf of wave jobs → `FetchStage.run` →
+    * `observe(collect_list(metaStruct))`. Each step rebinds it
+    * (`PlanBridge.rebind`) to its placed wave and a fresh observation, so a
+    * step builds no Dataset: on crawl_deep (8 hosts × 3 listings × 8 pages,
+    * 4 vCPUs) building and analyzing the step's Dataset plan — the wave's
+    * local relation, its repartition, the fetch stage and the observation —
+    * took ~115 ms of the ~200 ms before the fetch job started.
+    */
+  private lazy val fetchPlan: LogicalPlan =
+    fetchOf(spark.createDataset(spark.sparkContext.emptyRDD[CrawlJob]))
+      .observe("meta", collect_list(metaStruct).as("meta")).queryExecution.analyzed
 
   /** Every outcome's spawn candidates — its spawned jobs plus a redirect
     * target — as array<SpawnCand>: unknown routes dropped, query-templated
@@ -1086,11 +1134,11 @@ final class CrawlEngine(
         "'_4', it.phash))").as("itemMeta"))
 
   /** An observed [[metaStruct]] row → [[OutcomeMeta]]: one encoder pair over
-    * the struct's analyzed type, built at the engine's first driver-tier
-    * step. */
+    * the struct's type in [[fetchPlan]]'s analyzed metric, built at the
+    * engine's first driver-tier step. */
   private lazy val metaOf: Row => OutcomeMeta = {
-    val t = spark.emptyDataset[StepOutcome].select(metaStruct.as("m")).schema("m")
-      .dataType.asInstanceOf[StructType]
+    val t = fetchPlan.collectFirst { case c: CollectMetrics => c.metrics.head.dataType }
+      .collect { case ArrayType(m: StructType, _) => m }.get
     val toInternal = ExpressionEncoder(t).createSerializer()
     val toMeta = ExpressionEncoder[OutcomeMeta]()
       .resolveAndBind(DataTypeUtils.toAttributes(t)).createDeserializer()

@@ -1,7 +1,14 @@
 package graft.fetch
 
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Pmod}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model._
 
 /** Outcome of one job's fetch+extract in a superstep. `action` encodes the
@@ -42,11 +49,13 @@ object StepOutcome {
 
 /** The fetch+extract superstep stage — the engine's only imperative kernel.
   *
-  * Runs as `mapPartitions` over the politeness-scheduled wave. The engine
-  * repartitions the wave by (host, urlKey % fetchSplits) first (see
-  * [[graft.engine.EngineConfig.fetchSplits]]): at the default splits=1 each
-  * host's fetches land in one task (serialized — strongest politeness); at
-  * splits=k a host spans up to k concurrent tasks (benches opt in). Each
+  * Runs as `mapPartitions` over the politeness-scheduled wave, placed by
+  * (host, urlKey % fetchSplits) first (see
+  * [[graft.engine.EngineConfig.fetchSplits]]; [[placed]] on the driver for
+  * a driver-sized wave, a repartition for a larger one): at the default
+  * splits=1 each host's fetches land in one task (serialized — strongest
+  * politeness); at splits=k a host spans up to k concurrent tasks (benches
+  * opt in). Each
   * task fetches its partition's URLs (per-partition client in production;
   * corpus lookup here) and applies the route's scraper (the reference's
   * UDTF-like user surface: one page → many items + many jobs,
@@ -55,6 +64,26 @@ object StepOutcome {
   * `pickBy(identity)` quirk (falsy-valued open-schema fields dropped).
   */
 object FetchStage {
+
+  /** The wave as an RDD of `parts` fetch partitions, each job in the
+    * partition `wave.repartition(parts, col("host"), pmod(col("urlKey"),
+    * lit(splits)))` sends it to: Spark's `HashPartitioning` id (Murmur3 with
+    * seed 42 over host and `pmod(urlKey, splits)`, then `pmod` by `parts`),
+    * evaluated on the driver, so the fetch runs with no exchange. Each
+    * (host, split) group lands in exactly one fetch task, as it does after
+    * the repartition; `FetchPlacementSpec` pins the two equal.
+    */
+  def placed(sc: SparkContext, wave: Array[CrawlJob], parts: Int, splits: Int)
+      : RDD[CrawlJob] = {
+    val pid = HashPartitioning(Seq(BoundReference(0, StringType, nullable = true),
+      Pmod(BoundReference(1, LongType, nullable = false), Literal(splits.toLong))), parts)
+      .partitionIdExpression
+    val groups = wave.groupBy(j =>
+      pid.eval(InternalRow(UTF8String.fromString(j.host), j.urlKey)).asInstanceOf[Int])
+    // one element per slice: partition i holds exactly group i
+    sc.parallelize(Seq.tabulate(parts)(groups.getOrElse(_, Array.empty[CrawlJob])), parts)
+      .flatMap(_.iterator)
+  }
 
   def run(
       wave: Dataset[CrawlJob],

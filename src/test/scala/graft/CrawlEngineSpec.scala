@@ -407,6 +407,78 @@ class CrawlEngineSpec extends SparkSpec {
       pools.asScala.groupBy(identity).map { case (p, js) => s"$p ${js.size}" }.mkString(", "))
   }
 
+  test("a driver-tier step's fetch job runs one stage; a distributed fetch keeps its exchange") {
+    // every foreground job's stage count, and the fetch write's (the one job
+    // named for the raw-table write, `parquet at CrawlEngine.scala`)
+    val sc = spark.sparkContext
+    def jobStages(tweak: EngineConfig => EngineConfig): (Int, Seq[(Int, Boolean)]) = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).forall(_.getProperty("spark.scheduler.pool") != "graft-commit"))
+            jobs.add((e.stageInfos.size,
+              e.stageInfos.exists(_.name.startsWith("parquet at CrawlEngine.scala"))))
+      }
+      val eng = new CrawlEngine(spark, routes, fetcher, Nil,
+        tweak(CrawlEngineSpec.retainAll(tmpDir("engine-stages"))))
+      eng.seed(SyntheticCorpus.seeds(spec))
+      org.apache.spark.graftspec.BusAccess.drain(sc)
+      sc.addSparkListener(listener)
+      val ran =
+        try Iterator.continually(eng.step()).takeWhile(identity).size
+        finally {
+          eng.currentVersion // lands the last commit
+          org.apache.spark.graftspec.BusAccess.drain(sc)
+          sc.removeSparkListener(listener)
+        }
+      import scala.jdk.CollectionConverters._
+      (ran, jobs.asScala.toSeq)
+    }
+    val (ranD, driver) = jobStages(identity)
+    assert(ranD > 3 && driver.size == ranD, s"$ranD steps ran ${driver.size} jobs")
+    assert(driver.forall(_ == ((1, true))), s"driver-tier fetch jobs (stages, write): $driver")
+    val (ranX, dist) = jobStages(_.copy(driverCollectMaxRows = 0L))
+    val fetches = dist.filter(_._2)
+    assert(fetches.size == ranX, s"$ranX distributed steps ran ${fetches.size} fetch writes")
+    assert(fetches.forall(_._1 == 2), s"distributed fetch writes' stages: ${fetches.map(_._1)}")
+  }
+
+  test("two engines on one session, stepped alternately, each land what they land alone") {
+    // different sites, fetchers and budgets: a fetch plan or an observation
+    // that crossed engines would fetch the other site's pages or return the
+    // other wave's outcomes
+    val specB = CorpusSpec(hosts = 3, listPages = 2, detailsPerList = 3, imgW = 32, imgH = 32)
+    val fetcherB = new CorpusFetcher(SyntheticCorpus.buildLocal(specB))
+    def engine(name: String, b: Boolean) = {
+      val cfg = CrawlEngineSpec.retainAll(tmpDir(name)).copy(hostBudget = if (b) 1 else 2)
+      val e =
+        if (b) new CrawlEngine(spark, SiteRoutes.registry(specB), fetcherB, Nil, cfg)
+        else new CrawlEngine(spark, routes, fetcher, Nil, cfg)
+      e.seed(SyntheticCorpus.seeds(if (b) specB else spec))
+      e
+    }
+    val (a, b) = (engine("engine-pair-a", b = false), engine("engine-pair-b", b = true))
+    var (moreA, moreB, rounds) = (true, true, 0)
+    while (moreA || moreB) {
+      if (moreA) moreA = a.step()
+      if (moreB) moreB = b.step()
+      rounds += 1
+    }
+    assert(rounds > 4, s"only $rounds alternating rounds")
+    // b landed its own site: every live page, one of each near-dup pair
+    // suppressed (a plan shared across engines would fetch with a's fetcher)
+    val liveB = (0L until specB.totalDetails).filter(_ % specB.deadMod != 7).toSet
+    val pairsB = liveB.count(id => id % specB.nearDupMod == 3 && liveB(id - 1))
+    assert(itemsOf(b).size == liveB.size - pairsB, s"engine b: ${itemsOf(b).size} items")
+    for ((e, isB) <- Seq((a, false), (b, true))) {
+      val alone = engine(s"engine-alone-$isB", isB)
+      alone.run()
+      assert(frontierOf(e) == frontierOf(alone), s"engine ${if (isB) "b" else "a"}: frontier")
+      assert(logOf(e) == logOf(alone), s"engine ${if (isB) "b" else "a"}: fetch log")
+      assert(itemsOf(e) == itemsOf(alone), s"engine ${if (isB) "b" else "a"}: items")
+    }
+  }
+
   test("seed() runs no Spark job, and both tier bounds write the same v0") {
     // every job in any pool from the start of seed() to its return
     val sc = spark.sparkContext
