@@ -1,17 +1,14 @@
 package graft.engine
 
-import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.Await
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Observation, Row,
-  SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
-import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.corpus.CorpusRow
@@ -64,17 +61,18 @@ object CrawlEngine {
   }
 
   /** A spawned job (or redirect target) after URL resolution and
-    * canonicalization — the element type of the engine's spawn Column. */
-  private[engine] case class SpawnCand(urlKey: Long, url: String, host: String,
+    * canonicalization — the element type of [[spawnCands]] and of
+    * [[spawnsOf]]. */
+  private[graft] case class SpawnCand(urlKey: Long, url: String, host: String,
       routeId: String, query: Map[String, String])
 
-  /** Byte-free per-outcome metadata — the driver tier's envelope, returned
-    * by the fetch write itself as an observed metric (see `fetchPhase`); it
-    * feeds the item decisions, spawn dedup, job-state updates, fetch log,
-    * archive rows and frontier, so the driver tier never reads the landed
-    * raw table back. `nSpawned` is the scraper's raw spawn count (the job
-    * stat), `spawns` its canonical candidates; `itemMeta` rows are (pos,
-    * key, image_id, phash).
+  /** Byte-free per-outcome metadata — the driver tier's envelope, built by
+    * the fetch task that lands the outcome ([[metaOf]]) and returned as the
+    * task's result (see `fetchPhase`); it feeds the item decisions, spawn
+    * dedup, job-state updates, fetch log, archive rows and frontier, so the
+    * driver tier never reads the landed raw table back. `nSpawned` is the
+    * scraper's raw spawn count (the job stat), `spawns` its canonical
+    * candidates; `itemMeta` rows are (pos, key, image_id, phash).
     */
   private[engine] case class OutcomeMeta(
       job: CrawlJob, status: Int, action: String, hasNextPage: Boolean,
@@ -87,11 +85,12 @@ object CrawlEngine {
     * `fetchPhase` returns the tier, on which the superstep forks once, into
     * `driverStep` or `distributedStep`. */
   private[engine] sealed trait Tier
-  /** A driver-sized wave, with its outcome metadata observed by the fetch
-    * write — the step's one foreground Spark job, one stage, run from the
-    * engine's one analyzed fetch plan (see `fetchPlan`): `driverStep` decides
-    * items, spawns, job state and the next frontier in driver passes over
-    * arrays, maps and sets. */
+  /** A driver-sized wave, with the outcome metadata its fetch tasks
+    * returned — the step's one foreground Spark job, one stage: a `runJob`
+    * over the wave as the driver placed it, whose tasks land their own
+    * outcome files (see `fetchPhase`): `driverStep` decides items, spawns,
+    * job state and the next frontier in driver passes over arrays, maps and
+    * sets. */
   private[engine] final case class DriverTier(meta: Array[OutcomeMeta]) extends Tier
   /** A larger wave (its checkpointed Dataset): `distributedStep` runs Dataset
     * plans over the landed raw `outcomes` table, with no per-step driver
@@ -223,14 +222,102 @@ object CrawlEngine {
     */
   private val FetchTaskFactor = 32
   private val FetchPagesPerTask = 128
-  /** How long the driver tier waits, once its fetch write has returned, for
-    * the write's observed outcome metadata. The engine registers each step's
-    * `Observation` itself, under the fresh observation id its rebound fetch
-    * plan carries (see `fetchPlan`); Spark completes it from its listener
-    * bus, a moment after the write. A write whose metric never arrives fails
-    * the step instead of hanging it.
+
+  /** Every outcome's spawn candidates — its spawned jobs plus a redirect
+    * target — as array<SpawnCand>: unknown routes dropped, query-templated
+    * URLs built through the route's template (reference `route.getUrl(job)`
+    * over the spawned op's query, worker.js:281-292, route.js:31-37; a
+    * throwing template drops the job, where the reference fails it), then
+    * canonicalized, host-split and keyed by the native expressions. The
+    * distributed tier explodes it over the landed outcomes; [[spawnsOf]] is
+    * the same resolution in Scala, and `SpawnParitySpec` pins the two equal.
     */
-  private val ObservedMetaWait = Duration(60, "s")
+  private[graft] def spawnCands(routesBc: Broadcast[Map[String, RouteSpec]]): Column = {
+    val resolveUrl = udf((rid: String, u: String, q: Map[String, String]) =>
+      resolveUrlOf(routesBc.value, rid, u, q))
+    def spawn(rid: Column, url: Column, q: Column) =
+      struct(rid.as("routeId"), url.as("url"), q.as("query"))
+    val raw = concat(
+      transform(col("spawned"), s => spawn(s("routeId"), s("url"), s("query"))),
+      filter(array(spawn(col("job.routeId"),
+          expr(s"substring(action, ${Redirect.length + 1})"),
+          typedLit(Map.empty[String, String]))),
+        _ => col("action").startsWith(Redirect)))
+    val resolved = transform(
+      filter(raw, s => s("routeId").isin(routesBc.value.keys.toSeq: _*)),
+      s => spawn(s("routeId"), resolveUrl(s("routeId"), s("url"), s("query")), s("query")))
+    val canonical = transform(filter(resolved, s => s("url") =!= ""),
+      s => spawn(s("routeId"), graft.canon.CanonUdfs.canon_url(s("url")), s("query")))
+    transform(canonical, s => struct(xxhash64(s("url")).as("urlKey"), s("url").as("url"),
+      graft.canon.CanonUdfs.url_host(s("url")).as("host"), s("routeId").as("routeId"),
+      s("query").as("query")))
+  }
+
+  private val Redirect = "redirect:"
+
+  /** A spawn's URL: its own when it has one, else its route's template over
+    * its query; "" when the template throws. */
+  private def resolveUrlOf(routes: Map[String, RouteSpec], rid: String, u: String,
+      q: Map[String, String]): String =
+    if (u != null && u.nonEmpty) u
+    else try routes(rid).urlTemplate(Option(q).getOrElse(Map.empty))
+    catch { case _: Exception => "" }
+
+  /** [[spawnCands]] of one outcome, resolved in Scala by the functions the
+    * native expressions call (the route template, `UrlCanon.canonicalize`,
+    * `UrlCanon.host`, `CanonUdfs.urlKeyScala`), in the same order: the
+    * driver tier's fetch tasks resolve their outcomes' spawns with it. */
+  private[graft] def spawnsOf(routes: Map[String, RouteSpec], o: StepOutcome)
+      : Seq[SpawnCand] = {
+    val redirect =
+      if (o.action != null && o.action.startsWith(Redirect))
+        Iterator((o.job.routeId, o.action.substring(Redirect.length), Map.empty[String, String]))
+      else Iterator.empty
+    (o.spawned.iterator.map(s => (s.routeId, s.url, s.query)) ++ redirect)
+      .filter { case (rid, _, _) => rid != null && routes.contains(rid) }
+      .map { case (rid, u, q) => (rid, resolveUrlOf(routes, rid, u, q), q) }
+      .collect { case (rid, u, q) if u != null && u.nonEmpty =>
+        val url = graft.canon.UrlCanon.canonicalize(u)
+        SpawnCand(graft.canon.CanonUdfs.urlKeyScala(url), url, graft.canon.UrlCanon.host(url),
+          rid, q)
+      }.toSeq
+  }
+
+  /** One fetched outcome's [[OutcomeMeta]]. */
+  private def metaOf(routes: Map[String, RouteSpec], o: StepOutcome): OutcomeMeta =
+    OutcomeMeta(o.job, o.status, o.action, o.hasNextPage, o.newState, o.spawned.size,
+      spawnsOf(routes, o), o.items.iterator.zipWithIndex.map { case (it, i) =>
+        (i, it.key, Option(it.image_id).getOrElse(""), it.phash)
+      }.toSeq)
+
+  /** One driver-tier fetch task: it fetches its partition of the wave
+    * (`fetch`, [[FetchStage.kernel]]), writes the outcomes as one
+    * uncompressed parquet file under `staging/<task attempt id>/`, named as
+    * Spark names part `partitionId` of a write whose job id is `uuid`, and
+    * returns that file with its outcomes' [[OutcomeMeta]]. As in Spark's
+    * file writes, an empty partition other than partition 0 writes no file,
+    * and partition 0 always writes one (carrying the schema when empty).
+    * `sink` is the raw table's write spec and row encoder, broadcast once
+    * per engine.
+    */
+  private def landTask(fetch: Iterator[CrawlJob] => Iterator[StepOutcome],
+      routes: Broadcast[Map[String, RouteSpec]],
+      sink: Broadcast[(StateIO.WriteSpec, ExpressionEncoder[StepOutcome])],
+      staging: String, uuid: String)
+      : (TaskContext, Iterator[CrawlJob]) => (Option[String], Array[OutcomeMeta]) = {
+    (ctx, jobs) =>
+      val outcomes = fetch(jobs)
+      if (ctx.partitionId() != 0 && !outcomes.hasNext) (None, Array.empty)
+      else {
+        val (spec, enc) = sink.value
+        val reg = routes.value
+        val toRow = enc.createSerializer()
+        val meta = Array.newBuilder[OutcomeMeta]
+        val file = s"$staging/${ctx.taskAttemptId()}/${spec.fileName(ctx.partitionId(), uuid)}"
+        StateIO.writeFile(spec, outcomes.map { o => meta += metaOf(reg, o); toRow(o) }, file)
+        (Some(file), meta.result())
+      }
+  }
 }
 
 case class EngineConfig(
@@ -282,16 +369,18 @@ case class EngineConfig(
       * its two superstep tiers.
       *
       * A wave of at most `driverCollectMaxRows / 1024` rows runs the DRIVER
-      * tier: the fetch write returns the wave's byte-free outcome metadata
-      * (item keys, job state, and the spawn candidates, canonicalized inside
-      * the fetch tasks) as an observed metric, which feeds driver passes for
-      * the item decisions, spawn dedup, job state, fetch log and frontier —
-      * one foreground Spark job per superstep, and the driver writes the
-      * tables it holds at the commit. That job runs one stage: the engine
-      * analyzes the fetch write's plan once and rebinds it to each wave,
-      * which the driver places in its fetch partitions itself (no exchange;
-      * on a traced crawl_deep, 4 vCPUs, this cut a steady step's time before
-      * the job from ~260 ms to ~140 ms). The 1024× headroom
+      * tier: its fetch tasks land their outcome files and return the wave's
+      * byte-free outcome metadata (item keys, job state, and the spawn
+      * candidates, canonicalized inside the fetch tasks) as their results,
+      * which feed driver passes for the item decisions, spawn dedup, job
+      * state, fetch log and frontier — one foreground Spark job per
+      * superstep, and the driver writes the tables it holds at the commit.
+      * That job is a plain `runJob` of one stage over the wave as the driver
+      * placed it in its fetch partitions (no exchange, no SQL plan; on a
+      * traced crawl_deep, 4 vCPUs, a steady step's time before the job went
+      * ~260 ms → ~140 ms when the driver placed the wave and rebound one
+      * analyzed plan, and ~120 ms → ~9 ms when the SQL write path went).
+      * The 1024× headroom
       * covers what a page emits: breaching the bound from there needs more
       * than 1024 items or links per page on average. A pending frontier of
       * at most the same row count is a driver array, so the politeness
@@ -333,7 +422,7 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *     host), jumping the clock past an empty one
   *  3. poison check: a background commit that has already failed stops the
   *     step before it fetches
-  *  4. fetch: `mapPartitions` fetch+extract, which WRITES its own outcomes
+  *  4. fetch: fetch+extract tasks (`FetchStage.kernel`) that WRITE their own outcomes
   *     (items + payload bytes) to the raw step table as it fetches —
   *     narrow, embarrassingly parallel, and the only pass that ever touches
   *     bytes — and picks the step's tier from the wave size alone
@@ -341,10 +430,10 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *
   * and then ONE straight-line body for that tier:
   *
-  *  - `driverStep` (a driver-sized wave): the fetch write — the engine's
-  *    one analyzed fetch plan, rebound to the wave as the driver placed it,
-  *    so one stage — returns the
-  *    wave's byte-free outcome metadata as an observed metric, and the item
+  *  - `driverStep` (a driver-sized wave): the fetch — one `runJob` of one
+  *    stage over the wave as the driver placed it, whose tasks write their
+  *    own outcome files — returns the wave's byte-free outcome metadata as
+  *    the tasks' results, and the item
   *    decisions (winner pick, created/updated flags, phash near-dup
   *    suppression), spawn dedup (driver bloom probe → exact check of the
   *    positives), job state, fetch log and next frontier are driver passes
@@ -513,6 +602,29 @@ final class CrawlEngine(
   private val routesBc = spark.sparkContext.broadcast(routes)
   private val fetcherBc = spark.sparkContext.broadcast(fetcher)
   private val hooksBc = spark.sparkContext.broadcast(hooks)
+  /** Per-task min-gap between fetch starts to one host: the engine-wide
+    * [[EngineConfig.hostMinDelayMs]] × the tasks a host spans. */
+  private val perTaskHostGapMs = cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits)
+  /** The fetch of one task's partition of a placed wave, as both tiers run it. */
+  private val fetchKernel =
+    FetchStage.kernel(routesBc, fetcherBc, hooksBc, cfg.forceDynamic, perTaskHostGapMs)
+  /** When the engine's last fetch job ended (`System.nanoTime`); see [[paced]]. */
+  private var lastFetchEnd: Option[Long] = None
+
+  /** Run a fetch job no sooner than [[perTaskHostGapMs]] after the previous
+    * one ended. Each fetch task's token bucket starts empty, so this carries
+    * the host pacing across supersteps: without it, two fetches of one host
+    * in fetch partition 0 of successive driver-tier steps started 73.5 ms
+    * apart under an 80 ms per-task gap (`CrawlEngineSpec`'s pacing test,
+    * 4 vCPUs). With pacing off (the default) it never waits.
+    */
+  private def paced[T](fetch: => T): T = {
+    if (perTaskHostGapMs > 0) lastFetchEnd.foreach { end =>
+      val waitNs = end + perTaskHostGapMs * 1000000L - System.nanoTime()
+      if (waitNs > 0) Thread.sleep(waitNs / 1000000L, (waitNs % 1000000L).toInt)
+    }
+    try fetch finally lastFetchEnd = Some(System.nanoTime())
+  }
   private val routeCaps: Map[String, Int] = routes.map { case (k, r) => k -> r.concurrency }
   private val hostDelay: Map[String, Int] = Robots.delayByHost(robotsRules)
 
@@ -691,8 +803,13 @@ final class CrawlEngine(
   }
   private def logDir(name: String) = s"${cfg.statePath}/logs/$name"
 
-  private val outcomeSchema =
-    org.apache.spark.sql.Encoders.product[graft.fetch.StepOutcome].schema
+  private val outcomeEnc = ExpressionEncoder[StepOutcome]()
+  private val outcomeSchema = outcomeEnc.schema
+  /** The raw outcome table's write spec (uncompressed: the payloads are
+    * already PNG/JPEG-compressed) and row encoder, broadcast once per engine
+    * for the driver tier's fetch tasks (see `landTask`). */
+  private val rawSinkBc = spark.sparkContext.broadcast(
+    (StateIO.writeSpec(spark, outcomeSchema, Map("compression" -> "uncompressed")), outcomeEnc))
   private val suppressedSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("key",
       org.apache.spark.sql.types.StringType)))
@@ -934,7 +1051,7 @@ final class CrawlEngine(
     Seq(rawDir, suppressedDir, archiveDir, logDir("fetchlog"))
       .foreach(cleanStale(_, committed))
     val front = cur.frontier.getOrElse(Right(readFrontier(v)))
-    wavePhase(front, committed + 1) match {
+    wavePhase(front, committed + 1, cur.manifest.pending.exists(_ <= driverRows)) match {
       case None => false
       case Some((wave, waveN, stepNow)) =>
         // a background commit that has already failed poisons the engine
@@ -957,31 +1074,41 @@ final class CrawlEngine(
   /** The politeness wave at the first step ≥ `s` with eligible work, with
     * its size and that step; None when no work remains. A driver-sized wave
     * is a driver array (the driver tier's fetch input), a larger one its
-    * checkpointed Dataset.
+    * checkpointed Dataset. `fits`: the frontier's exact pending count is
+    * known and at most `driverRows`, so every wave off it is driver-sized.
     */
-  private def wavePhase(front: Frontier, s: Int): Option[(Frontier, Long, Int)] = {
+  private def wavePhase(front: Frontier, s: Int, fits: Boolean)
+      : Option[(Frontier, Long, Int)] = {
     // A driver frontier ⇒ the driver wave (the same sequential take as the
-    // Dataset plan). Otherwise: localCheckpoint (eager) on the shared wave
-    // truncates lineage so every downstream action analyzes a shallow scan
-    // instead of re-planning the whole superstep tree — catalyst planning
-    // time was ~half of each superstep's wall clock before this (measured
-    // via SparkListener) — plus a cheap count; a driver-sized wave is then
-    // collected from the checkpoint, so both frontiers feed the driver tier
-    // the same array.
+    // Dataset plan). A Dataset frontier whose pending count fits the bound ⇒
+    // one collect of the wave plan (a resumed crawl_deep-shaped step ran
+    // three jobs here before: checkpoint, count, collect). Otherwise:
+    // localCheckpoint (eager) on the shared wave truncates lineage so every
+    // downstream action analyzes a shallow scan instead of re-planning the
+    // whole superstep tree — catalyst planning time was ~half of each
+    // superstep's wall clock before this (measured via SparkListener) —
+    // plus a cheap count; a driver-sized wave is then collected from the
+    // checkpoint, so both frontiers feed the driver tier the same array.
     def build(atStep: Int): (Frontier, Long) = front match {
       case Left(a) =>
         val w = Politeness.waveLocal(a, atStep, cfg.hostBudget, routeCaps,
           cfg.disabledRoutes, hooks.jobFilter)
         (Left(w), w.length.toLong)
       case Right(ds) =>
-        val w = Politeness.wave(ds, atStep, cfg.hostBudget, routeCaps,
-          cfg.disabledRoutes, SaltBuckets, hooks.jobFilter).localCheckpoint(true)
-        val n = w.count()
-        if (n > driverRows) (Right(w), n)
-        else {
-          val a = if (n == 0) Array.empty[CrawlJob] else w.collect()
-          w.unpersist()
-          (Left(a), n)
+        val plan = Politeness.wave(ds, atStep, cfg.hostBudget, routeCaps,
+          cfg.disabledRoutes, SaltBuckets, hooks.jobFilter)
+        if (fits) {
+          val a = plan.collect()
+          (Left(a), a.length.toLong)
+        } else {
+          val w = plan.localCheckpoint(true)
+          val n = w.count()
+          if (n > driverRows) (Right(w), n)
+          else {
+            val a = if (n == 0) Array.empty[CrawlJob] else w.collect()
+            w.unpersist()
+            (Left(a), n)
+          }
         }
     }
     val (wave, waveN) = timed("wave")(build(s))
@@ -1012,11 +1139,15 @@ final class CrawlEngine(
     * the step's ONE tier decision (see EngineConfig.driverCollectMaxRows),
     * made from the wave size alone (`wavePhase` holds a driver-sized wave as
     * an array):
-    *  - a driver-sized wave runs the engine's one analyzed fetch plan
-    *    ([[fetchPlan]]), rebound to the wave placed on the driver
-    *    (`FetchStage.placed`): one Spark job of one stage, with no exchange,
-    *    whose write also returns the byte-free outcome metadata as an
-    *    observed metric — no read of the landed table;
+    *  - a driver-sized wave is placed on the driver (`FetchStage.placed`)
+    *    and fetched by one `runJob` of one stage, with no exchange and no
+    *    SQL plan: each task writes its outcomes' file ([[landTask]]) and
+    *    returns their byte-free metadata, and the driver promotes the files
+    *    of the attempts whose results Spark kept (`StateIO.promote`) — no
+    *    read of the landed table. Through Spark's SQL write path (plan
+    *    optimization, `explainString`, codegen, the file committer's setup)
+    *    the same write spent ~120–130 ms of a steady crawl_deep step's
+    *    ~140 ms before its job started (4 vCPUs, stack-sampled);
     *  - a larger wave is repartitioned and fetched by a Dataset plan built
     *    for the step (two stages), and gets the landed raw table, read back
     *    byte-free by every later scan.
@@ -1044,105 +1175,29 @@ final class CrawlEngine(
     // in-memory checkpoint. The dir is invisible to readers until the
     // snapshot commit (readers filter to committed steps).
     val rawPath = s"$rawDir/step=$stepNow"
-    def land(ds: Dataset[_]): Unit = timed("fetch")(
-      stateWrite(ds).mode("overwrite").option("compression", "uncompressed").parquet(rawPath))
     wave match {
       case Left(jobs) =>
-        // The observed metric travels as a task-result accumulator, which
-        // Spark merges once per result partition: a retried fetch task adds
-        // its rows once, and a lost or doubled merge fails the count check.
-        val obs = Observation()
-        land(PlanBridge.rebind(spark, fetchPlan,
-          FetchStage.placed(spark.sparkContext, jobs, fetchParts, cfg.fetchSplits), obs))
-        val row = try Await.result(obs.future, ObservedMetaWait) catch {
-          case _: TimeoutException => throw new IllegalStateException(
-            s"step $stepNow: the fetch write returned without its observed outcome " +
-              s"metadata within $ObservedMetaWait")
-        }
-        // sorted by job: the merge order of task results is not deterministic
-        val meta = row.getSeq[Row](0).iterator.map(metaOf).toArray.sortBy(_.job.urlKey)
+        // Spark hands back one result per partition, the successful
+        // attempt's: only those attempts' files are promoted into the step
+        // dir, and a lost or doubled result fails the count check.
+        val staging = s"$rawPath/_staging"
+        val task = landTask(fetchKernel, routesBc, rawSinkBc, staging,
+          java.util.UUID.randomUUID().toString)
+        StateIO.deleteRec(rawPath)
+        val landed = timed("fetch")(paced(spark.sparkContext.runJob(
+          FetchStage.placed(spark.sparkContext, jobs, fetchParts, cfg.fetchSplits), task)))
+        StateIO.promote(staging, landed.toSeq.flatMap(_._1), rawPath)
+        // sorted by job, so the decisions do not depend on the placement
+        val meta = landed.flatMap(_._2).sortBy(_.job.urlKey)
         require(meta.length == waveN,
-          s"step $stepNow: ${meta.length} observed outcomes for a wave of $waveN jobs")
+          s"step $stepNow: ${meta.length} returned outcomes for a wave of $waveN jobs")
         DriverTier(meta)
       case Right(ds) =>
-        land(fetchOf(ds.repartition(fetchParts,
-          col("host"), pmod(col("urlKey"), lit(cfg.fetchSplits)))))
+        timed("fetch")(paced(stateWrite(ds.repartition(fetchParts,
+            col("host"), pmod(col("urlKey"), lit(cfg.fetchSplits))).mapPartitions(fetchKernel))
+          .mode("overwrite").option("compression", "uncompressed").parquet(rawPath)))
         DistributedTier(ds, spark.read.schema(outcomeSchema).parquet(rawPath))
     }
-  }
-
-  /** The fetch stage over a placed wave, as both tiers run it. */
-  private def fetchOf(wave: Dataset[CrawlJob]): Dataset[StepOutcome] =
-    FetchStage.run(wave, routesBc, fetcherBc, hooksBc, cfg.forceDynamic,
-      cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits))
-
-  /** The driver tier's fetch write, analyzed once per engine (at its first
-    * driver-tier step): an RDD leaf of wave jobs → `FetchStage.run` →
-    * `observe(collect_list(metaStruct))`. Each step rebinds it
-    * (`PlanBridge.rebind`) to its placed wave and a fresh observation, so a
-    * step builds no Dataset: on crawl_deep (8 hosts × 3 listings × 8 pages,
-    * 4 vCPUs) building and analyzing the step's Dataset plan — the wave's
-    * local relation, its repartition, the fetch stage and the observation —
-    * took ~115 ms of the ~200 ms before the fetch job started.
-    */
-  private lazy val fetchPlan: LogicalPlan =
-    fetchOf(spark.createDataset(spark.sparkContext.emptyRDD[CrawlJob]))
-      .observe("meta", collect_list(metaStruct).as("meta")).queryExecution.analyzed
-
-  /** Every outcome's spawn candidates — its spawned jobs plus a redirect
-    * target — as array<SpawnCand>: unknown routes dropped, query-templated
-    * URLs built through the route's template (reference `route.getUrl(job)`
-    * over the spawned op's query, worker.js:281-292, route.js:31-37; a
-    * throwing template drops the job, where the reference fails it), then
-    * canonicalized, host-split and keyed by the native expressions. The
-    * driver tier evaluates it inside the fetch write's observed metric (see
-    * [[metaStruct]]), so the canonicalization runs in the fetch tasks; the
-    * distributed tier explodes it.
-    */
-  private val spawnCands: Column = {
-    val routesLocal = routesBc // a field in the closure would serialize `this`
-    val resolveUrl = udf((rid: String, u: String, q: Map[String, String]) =>
-      if (u != null && u.nonEmpty) u
-      else try routesLocal.value(rid).urlTemplate(Option(q).getOrElse(Map.empty))
-      catch { case _: Exception => "" })
-    def spawn(rid: Column, url: Column, q: Column) =
-      struct(rid.as("routeId"), url.as("url"), q.as("query"))
-    val redirect = "redirect:"
-    val raw = concat(
-      transform(col("spawned"), s => spawn(s("routeId"), s("url"), s("query"))),
-      filter(array(spawn(col("job.routeId"),
-          expr(s"substring(action, ${redirect.length + 1})"),
-          typedLit(Map.empty[String, String]))),
-        _ => col("action").startsWith(redirect)))
-    val resolved = transform(
-      filter(raw, s => s("routeId").isin(routes.keys.toSeq: _*)),
-      s => spawn(s("routeId"), resolveUrl(s("routeId"), s("url"), s("query")), s("query")))
-    val canonical = transform(filter(resolved, s => s("url") =!= ""),
-      s => spawn(s("routeId"), graft.canon.CanonUdfs.canon_url(s("url")), s("query")))
-    transform(canonical, s => struct(xxhash64(s("url")).as("urlKey"), s("url").as("url"),
-      graft.canon.CanonUdfs.url_host(s("url")).as("host"), s("routeId").as("routeId"),
-      s("query").as("query")))
-  }
-
-  /** One wave outcome's [[OutcomeMeta]] as a struct column of the fetch
-    * stage's output — the driver tier's observed metric is its list. */
-  private val metaStruct: Column =
-    struct(col("job"), col("status"), col("action"), col("hasNextPage"),
-      col("newState"), size(col("spawned")).as("nSpawned"), spawnCands.as("spawns"),
-      expr("transform(items, (it, i) -> named_struct(" +
-        "'_1', i, '_2', it.key, '_3', coalesce(it.image_id, ''), " +
-        "'_4', it.phash))").as("itemMeta"))
-
-  /** An observed [[metaStruct]] row → [[OutcomeMeta]]: one encoder pair over
-    * the struct's type in [[fetchPlan]]'s analyzed metric, built at the
-    * engine's first driver-tier step. */
-  private lazy val metaOf: Row => OutcomeMeta = {
-    val t = fetchPlan.collectFirst { case c: CollectMetrics => c.metrics.head.dataType }
-      .collect { case ArrayType(m: StructType, _) => m }.get
-    val toInternal = ExpressionEncoder(t).createSerializer()
-    val toMeta = ExpressionEncoder[OutcomeMeta]()
-      .resolveAndBind(DataTypeUtils.toAttributes(t)).createDeserializer()
-    r => toMeta(toInternal(r))
   }
 
   private def metaDf(rows: Array[(String, Long)]): DataFrame = rows.toSeq.toDF("key", "phash")
@@ -1267,8 +1322,8 @@ final class CrawlEngine(
   // outcome.
 
   /** The driver tier's body: items, spawns, job state, fetch log and the
-    * next frontier as driver passes over the wave's observed outcome
-    * metadata, then [[commitPhase]] with driver writes of the tables it
+    * next frontier as driver passes over the outcome metadata the wave's
+    * fetch tasks returned, then [[commitPhase]] with driver writes of the tables it
     * holds. It runs no Spark job, its commit included, unless the
     * frontier or the item meta is a Dataset (or outgrows the bound), a
     * bloom-positive spawn misses the frontier (the archive probe), or it
@@ -1455,7 +1510,7 @@ final class CrawlEngine(
 
     val (fresh, bloom, spawnRelease) = timed("spawn") {
       // cogroup bloom probe, then an exact semi-join on the maybe-seen keys
-      val cands = outcomes.select(explode(spawnCands).as("c")).select(col("c.*"))
+      val cands = outcomes.select(explode(spawnCands(routesBc)).as("c")).select(col("c.*"))
       val allowed = Robots.allowed(minRoutePerKey(cands), robotsRules).localCheckpoint(true)
       val bloom = readBloom(cur.manifest.version)
       val probed = BloomSeen.probe(bloom,

@@ -3,7 +3,6 @@ package graft.fetch
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Pmod}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -49,10 +48,12 @@ object StepOutcome {
 
 /** The fetch+extract superstep stage — the engine's only imperative kernel.
   *
-  * Runs as `mapPartitions` over the politeness-scheduled wave, placed by
-  * (host, urlKey % fetchSplits) first (see
-  * [[graft.engine.EngineConfig.fetchSplits]]; [[placed]] on the driver for
-  * a driver-sized wave, a repartition for a larger one): at the default
+  * One per-partition function ([[kernel]]) over the politeness-scheduled
+  * wave, placed by (host, urlKey % fetchSplits) first (see
+  * [[graft.engine.EngineConfig.fetchSplits]]): a driver-sized wave is
+  * placed on the driver ([[placed]]) and fetched by the tasks of one
+  * `runJob`, which write their outcomes themselves; a larger one is
+  * repartitioned and fetched in `mapPartitions`. At the default
   * splits=1 each host's fetches land in one task (serialized — strongest
   * politeness); at splits=k a host spans up to k concurrent tasks (benches
   * opt in). Each
@@ -85,74 +86,74 @@ object FetchStage {
       .flatMap(_.iterator)
   }
 
-  def run(
-      wave: Dataset[CrawlJob],
+  /** One fetch task's work over its partition of the wave: each job's
+    * outcome, in wave order. Both tiers run it — the distributed tier in
+    * `mapPartitions`, the driver tier's tasks directly — so the fetch is
+    * written once.
+    */
+  def kernel(
       routes: Broadcast[Map[String, RouteSpec]],
       fetcher: Broadcast[Fetcher],
       hooks: Broadcast[WorkerHooks],
-      forceDynamic: Boolean = false,
+      forceDynamic: Boolean,
       /** per-TASK min-gap (ms) between fetch starts to one host — the
         * engine passes hostMinDelayMs × fetchSplits so the aggregate
         * host rate stays bounded when a host spans several tasks (see
         * [[graft.engine.EngineConfig.hostMinDelayMs]]). 0 = off. */
-      perTaskHostGapMs: Long = 0L): Dataset[StepOutcome] = {
-    val spark = wave.sparkSession
-    import spark.implicits._
-    wave.mapPartitions { jobs =>
-      val reg = routes.value
-      val f = fetcher.value
-      val hk = hooks.value
-      // worker.initialize: once per fetch task, before its first job
-      // (reference: src/worker.js:57-65); lazily so empty partitions skip it
-      lazy val initialized = { hk.initialize.foreach(_.apply()); true }
-      // per-task token bucket: last fetch-start nanos per host. Bounded by
-      // the distinct hosts in this task's slice of the wave (politeness-
-      // bounded), cleared with the task.
-      val lastStart = scala.collection.mutable.HashMap.empty[String, Long]
-      def paceHost(host: String): Unit = if (perTaskHostGapMs > 0) {
-        val gapNs = perTaskHostGapMs * 1000000L
-        lastStart.get(host).foreach { last =>
-          val waitNs = last + gapNs - System.nanoTime()
-          if (waitNs > 0)
-            Thread.sleep(waitNs / 1000000L, (waitNs % 1000000L).toInt)
-        }
-        lastStart(host) = System.nanoTime()
+      perTaskHostGapMs: Long): Iterator[CrawlJob] => Iterator[StepOutcome] = { jobs =>
+    val reg = routes.value
+    val f = fetcher.value
+    val hk = hooks.value
+    // worker.initialize: once per fetch task, before its first job
+    // (reference: src/worker.js:57-65); lazily so empty partitions skip it
+    lazy val initialized = { hk.initialize.foreach(_.apply()); true }
+    // per-task token bucket: last fetch-start nanos per host. Bounded by
+    // the distinct hosts in this task's slice of the wave (politeness-
+    // bounded), cleared with the task.
+    val lastStart = scala.collection.mutable.HashMap.empty[String, Long]
+    def paceHost(host: String): Unit = if (perTaskHostGapMs > 0) {
+      val gapNs = perTaskHostGapMs * 1000000L
+      lastStart.get(host).foreach { last =>
+        val waitNs = last + gapNs - System.nanoTime()
+        if (waitNs > 0)
+          Thread.sleep(waitNs / 1000000L, (waitNs % 1000000L).toInt)
       }
-      jobs.map { job =>
-        require(initialized)
-        reg.get(job.routeId) match {
-          case None =>
-            // unknown route: reference warns + skips (worker.js:284-287)
-            StepOutcome(job, -1, "stop", Nil, Nil, Nil, hasNextPage = false, Map.empty)
-          case Some(route) =>
-            // custom process bypasses fetch+scrape (worker.js:195-199)
-            hk.process.flatMap(p => p(job)) match {
-              case Some(res) =>
-                val scraped = sanitize(res, job.routeId)
-                StepOutcome.split(job, 200, "ok", scraped.items, scraped.jobs,
-                  scraped.hasNextPage, scraped.state)
-              case None =>
-                val effUrl = route.paginate(job.url, job.state.currentPage)
-                paceHost(job.host)
-                // static vs dynamic dispatch (reference spider.js:52,185)
-                val page =
-                  if (route.dynamic || forceDynamic) f.fetchDynamic(effUrl, job.errorCount)
-                  else f.fetch(effUrl, job.errorCount)
-                val status = route.checkStatus(page)
-                if (status >= 400) {
-                  val action = route.onError(status, job.errorCount) match {
-                    case ErrorAction.Retry if job.errorCount < route.retryCount => "retry"
-                    case ErrorAction.Redirect(u) => s"redirect:$u"
-                    case _ => "stop"
-                  }
-                  StepOutcome(job, status, action, Nil, Nil, Nil, hasNextPage = false, Map.empty)
-                } else {
-                  val scraped = sanitize(route.scraper(page), job.routeId)
-                  StepOutcome.split(job, status, "ok", scraped.items, scraped.jobs,
-                    scraped.hasNextPage, scraped.state)
+      lastStart(host) = System.nanoTime()
+    }
+    jobs.map { job =>
+      require(initialized)
+      reg.get(job.routeId) match {
+        case None =>
+          // unknown route: reference warns + skips (worker.js:284-287)
+          StepOutcome(job, -1, "stop", Nil, Nil, Nil, hasNextPage = false, Map.empty)
+        case Some(route) =>
+          // custom process bypasses fetch+scrape (worker.js:195-199)
+          hk.process.flatMap(p => p(job)) match {
+            case Some(res) =>
+              val scraped = sanitize(res, job.routeId)
+              StepOutcome.split(job, 200, "ok", scraped.items, scraped.jobs,
+                scraped.hasNextPage, scraped.state)
+            case None =>
+              val effUrl = route.paginate(job.url, job.state.currentPage)
+              paceHost(job.host)
+              // static vs dynamic dispatch (reference spider.js:52,185)
+              val page =
+                if (route.dynamic || forceDynamic) f.fetchDynamic(effUrl, job.errorCount)
+                else f.fetch(effUrl, job.errorCount)
+              val status = route.checkStatus(page)
+              if (status >= 400) {
+                val action = route.onError(status, job.errorCount) match {
+                  case ErrorAction.Retry if job.errorCount < route.retryCount => "retry"
+                  case ErrorAction.Redirect(u) => s"redirect:$u"
+                  case _ => "stop"
                 }
-            }
-        }
+                StepOutcome(job, status, action, Nil, Nil, Nil, hasNextPage = false, Map.empty)
+              } else {
+                val scraped = sanitize(route.scraper(page), job.routeId)
+                StepOutcome.split(job, status, "ok", scraped.items, scraped.jobs,
+                  scraped.hasNextPage, scraped.state)
+              }
+          }
       }
     }
   }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** All engine state IO goes through the Hadoop `FileSystem` API, so the
   * state root works unchanged on any Spark-reachable store — local disk in
@@ -92,25 +93,24 @@ private[graft] object StateIO {
     } finally in.close()
   }
 
-  /** Write `rows` of `schema` as ONE parquet file under `dir`
-    * (`part-00000-<uuid>-c000.<codec>.parquet`, the name a one-task Spark
-    * write gives it) from the calling thread — no Spark job. `dir` is
-    * replaced: deleted first when it exists, as a Spark "overwrite" write
-    * does. Empty `rows` still write one file, carrying the schema, as Spark
-    * does for an empty Dataset.
-    *
-    * The file is the one `Dataset.write.parquet` writes for the same rows:
-    * rows go through Spark's own `ParquetWriteSupport` (schema conversion,
-    * value writers, Spark's row-metadata footer key), configured by the four
-    * keys Spark's `ParquetUtils.prepareWrite` sets for it, with the
-    * session's parquet codec. That couples this writer to a Spark-internal
-    * class; `StateIOSpec` pins its files against Spark-written ones (rows
-    * and footer schema). A file in the way of `dir` fails the write with an
-    * `IOException`. A write that fails leaves no file; only its first
-    * exception is thrown, later ones are added to it as suppressed.
+  /** What a parquet write of `schema` needs besides its rows: the Hadoop
+    * conf carrying the four keys Spark's `ParquetUtils.prepareWrite` sets
+    * for `ParquetWriteSupport` and the row schema, and the codec. Built on
+    * the driver from the session; serializable, so an engine builds one per
+    * table and broadcasts it once for its tasks' writes ([[writeFile]]).
     */
-  def writeRows(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
-      dir: String): Unit = {
+  final case class WriteSpec(conf: SerializableConfiguration, codec: CompressionCodecName) {
+    /** The name Spark gives part `part` of a write whose job id is `uuid`. */
+    def fileName(part: Int, uuid: String): String =
+      f"part-$part%05d-$uuid-c000${codec.getExtension}.parquet"
+  }
+
+  /** The [[WriteSpec]] of `schema` under the session's parquet settings;
+    * `options` are the write's data source options (`compression`
+    * overrides the session codec, as in `DataFrameWriter.option`).
+    */
+  def writeSpec(spark: SparkSession, schema: StructType,
+      options: Map[String, String] = Map.empty): WriteSpec = {
     val sqlConf = spark.sessionState.conf
     val conf = spark.sessionState.newHadoopConf()
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, sqlConf.writeLegacyParquetFormat.toString)
@@ -121,18 +121,27 @@ private[graft] object StateIO {
     conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
       sqlConf.parquetAnnotateVariantLogicalType.toString)
     ParquetWriteSupport.setSchema(schema, conf)
-    val codec = CompressionCodecName.valueOf(
-      new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName)
-    val d = new Path(dir)
-    val f = d.getFileSystem(conf)
-    if (f.exists(d)) f.delete(d, true)
-    val file = new Path(d,
-      s"part-00000-${java.util.UUID.randomUUID()}-c000${codec.getExtension}.parquet")
-    val w = new RowWriter(file).withConf(conf).withCompressionCodec(codec).build()
+    WriteSpec(new SerializableConfiguration(conf),
+      CompressionCodecName.valueOf(new ParquetOptions(options, sqlConf).compressionCodecClassName))
+  }
+
+  /** Write `rows` as the parquet file `file` under `spec`, from the calling
+    * thread — the driver's or a task's. The file is the one Spark's parquet
+    * write gives the same rows: rows go through Spark's own
+    * `ParquetWriteSupport` (schema conversion, value writers, Spark's
+    * row-metadata footer key). That couples this writer to a Spark-internal
+    * class; `StateIOSpec` pins its files against Spark-written ones (rows
+    * and footer schema). A write that fails leaves no file; only its first
+    * exception is thrown, later ones are added to it as suppressed.
+    */
+  def writeFile(spec: WriteSpec, rows: Iterator[InternalRow], file: String): Unit = {
+    val p = new Path(file)
+    val f = p.getFileSystem(spec.conf.value)
+    val w = new RowWriter(p).withConf(spec.conf.value).withCompressionCodec(spec.codec).build()
     // no partial file: a closed writer leaves a readable file holding only
     // the rows written so far, where Spark's aborted task leaves none
     def discard(e: Throwable): Nothing = {
-      try f.delete(file, false) catch { case c: Throwable => e.addSuppressed(c) }
+      try f.delete(p, false) catch { case c: Throwable => e.addSuppressed(c) }
       throw e
     }
     try rows.foreach(w.write)
@@ -142,6 +151,40 @@ private[graft] object StateIO {
         discard(e)
     }
     try w.close() catch { case e: Throwable => discard(e) }
+  }
+
+  /** Write `rows` of `schema` as ONE parquet file under `dir`
+    * (`part-00000-<uuid>-c000.<codec>.parquet`, the name a one-task Spark
+    * write gives it) from the calling thread — no Spark job — with the
+    * session's parquet codec ([[writeSpec]], [[writeFile]]). `dir` is
+    * replaced: deleted first when it exists, as a Spark "overwrite" write
+    * does. Empty `rows` still write one file, carrying the schema, as Spark
+    * does for an empty Dataset. A file in the way of `dir` fails the write
+    * with an `IOException`.
+    */
+  def writeRows(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
+      dir: String): Unit = {
+    val spec = writeSpec(spark, schema)
+    deleteRec(dir)
+    writeFile(spec, rows, s"$dir/${spec.fileName(0, java.util.UUID.randomUUID().toString)}")
+  }
+
+  /** Land a task-written table: move each of the `winners` (files under
+    * `staging`, one per task that succeeded) into `dir` under its own name,
+    * then delete `staging` with whatever else is in it — files of attempts
+    * that failed, or lost to another attempt of their task. Only the driver
+    * knows which attempt's result Spark kept, so this runs on the driver
+    * once the job has ended.
+    */
+  def promote(staging: String, winners: Seq[String], dir: String): Unit = {
+    val d = new Path(dir)
+    val f = fs(d)
+    winners.foreach { w =>
+      val s = new Path(w)
+      if (!f.rename(s, new Path(d, s.getName)))
+        throw new java.io.IOException(s"rename $w -> $dir failed")
+    }
+    deleteRec(staging)
   }
 
   private final class RowWriter(file: Path)

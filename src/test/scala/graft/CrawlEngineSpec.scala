@@ -24,6 +24,19 @@ final class PacedFetcher(inner: graft.fetch.Fetcher) extends graft.fetch.Fetcher
   }
 }
 
+/** Stage ids of the stages that ran a fetch. */
+object FetchStages {
+  val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+}
+
+/** Delegating fetcher that records the stage each fetch runs in. */
+final class StageRecordingFetcher(inner: graft.fetch.Fetcher) extends graft.fetch.Fetcher {
+  override def fetch(url: String, attempt: Int): graft.model.FetchedPage = {
+    FetchStages.ids.add(org.apache.spark.TaskContext.get().stageId())
+    inner.fetch(url, attempt)
+  }
+}
+
 object CrawlEngineSpec {
   /** The suite's corpus. */
   val corpus = CorpusSpec(hosts = 2, listPages = 3, detailsPerList = 4)
@@ -409,15 +422,17 @@ class CrawlEngineSpec extends SparkSpec {
 
   test("a driver-tier step's fetch job runs one stage; a distributed fetch keeps its exchange") {
     // every foreground job's stage count, and the fetch write's (the one job
-    // named for the raw-table write, `parquet at CrawlEngine.scala`)
+    // named for the raw-table write: `runJob at CrawlEngine.scala` on the
+    // driver tier, `parquet at CrawlEngine.scala` on the distributed tier)
     val sc = spark.sparkContext
-    def jobStages(tweak: EngineConfig => EngineConfig): (Int, Seq[(Int, Boolean)]) = {
+    def jobStages(tweak: EngineConfig => EngineConfig, fetchCall: String)
+        : (Int, Seq[(Int, Boolean)]) = {
       val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]()
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           if (Option(e.properties).forall(_.getProperty("spark.scheduler.pool") != "graft-commit"))
             jobs.add((e.stageInfos.size,
-              e.stageInfos.exists(_.name.startsWith("parquet at CrawlEngine.scala"))))
+              e.stageInfos.exists(_.name.startsWith(s"$fetchCall at CrawlEngine.scala"))))
       }
       val eng = new CrawlEngine(spark, routes, fetcher, Nil,
         tweak(CrawlEngineSpec.retainAll(tmpDir("engine-stages"))))
@@ -434,13 +449,50 @@ class CrawlEngineSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       (ran, jobs.asScala.toSeq)
     }
-    val (ranD, driver) = jobStages(identity)
+    val (ranD, driver) = jobStages(identity, "runJob")
     assert(ranD > 3 && driver.size == ranD, s"$ranD steps ran ${driver.size} jobs")
     assert(driver.forall(_ == ((1, true))), s"driver-tier fetch jobs (stages, write): $driver")
-    val (ranX, dist) = jobStages(_.copy(driverCollectMaxRows = 0L))
+    val (ranX, dist) = jobStages(_.copy(driverCollectMaxRows = 0L), "parquet")
     val fetches = dist.filter(_._2)
     assert(fetches.size == ranX, s"$ranX distributed steps ran ${fetches.size} fetch writes")
     assert(fetches.forall(_._1 == 2), s"distributed fetch writes' stages: ${fetches.map(_._1)}")
+  }
+
+  test("a resumed driver-sized step builds its wave off the Dataset frontier in one job") {
+    // a resumed engine reads its frontier back as a Dataset; the manifest's
+    // exact pending count fits the driver bound, so the wave is one collect.
+    // The fetch job is the one whose stage ran a fetch; the wave's jobs are
+    // the step's foreground jobs before it.
+    val sc = spark.sparkContext
+    val dir = tmpDir("engine-resume-wave")
+    val a = newEngine(dir, maxSteps = 3)
+    a.seed(SyntheticCorpus.seeds(spec))
+    a.run()
+    assert(manifestOf(dir, 3).pending.exists(_ > 0), "nothing left to resume")
+    FetchStages.ids.clear()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[Int])]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.scheduler.pool") != "graft-commit"))
+          jobs.add((e.jobId, e.stageIds))
+    }
+    val r = new CrawlEngine(spark, routes, new StageRecordingFetcher(fetcher), Nil,
+      EngineConfig(statePath = dir, hostBudget = 2, bloomPartitions = 4,
+        bloomCapacityPerShard = 1 << 16))
+    org.apache.spark.graftspec.BusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try assert(r.step())
+    finally {
+      r.currentVersion // lands the commit
+      org.apache.spark.graftspec.BusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val all = jobs.asScala.toSeq
+    val fetchJobs = all.filter(_._2.exists(FetchStages.ids.contains)).map(_._1)
+    assert(fetchJobs.size == 1, s"fetch jobs $fetchJobs of $all")
+    val waveJobs = all.count(_._1 < fetchJobs.head)
+    assert(waveJobs == 1, s"the resumed step's wave ran $waveJobs Spark jobs")
   }
 
   test("two engines on one session, stepped alternately, each land what they land alone") {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalacheck.Gen
 import graft.fetch.FetchStage
 import graft.model.CrawlJob
@@ -10,8 +8,7 @@ import graft.model.CrawlJob
 /** The driver tier's fetch input: the driver places a wave's jobs in the
   * fetch partitions the distributed tier's repartition sends them to, so
   * each (host, split) group still lands in exactly one fetch task (the
-  * politeness contract `hostMinDelayMs` pacing rests on); and the rebind of
-  * the engine's analyzed fetch plan fails loudly on a plan it does not fit.
+  * politeness contract `hostMinDelayMs` pacing rests on).
   */
 class FetchPlacementSpec extends SparkSpec with PropHelper {
 
@@ -49,26 +46,5 @@ class FetchPlacementSpec extends SparkSpec with PropHelper {
       if (driver.map(_._2).distinct.length > 1) multiTask += 1
     } finally spark.conf.set(aqe, prev)
     assert(multiTask > 10, s"only $multiTask waves spread over several fetch tasks")
-  }
-
-  test("a rebind that misses the RDD leaf or the observed metric throws, naming Spark") {
-    val rows = spark.sparkContext.parallelize(Seq(1L))
-    def rebind(ds: org.apache.spark.sql.Dataset[_]) =
-      PlanBridge.rebind(spark, ds.queryExecution.analyzed, rows, Observation())
-    import spark.implicits._
-    val leaf = spark.createDataset(spark.sparkContext.emptyRDD[Long])
-    val observed = leaf.observe("m", count(lit(1)))
-    for (ds <- Seq(spark.range(3), leaf, observed.union(observed),
-        spark.range(3).observe("m", count(lit(1))))) {
-      val e = intercept[IllegalStateException](rebind(ds))
-      assert(e.getMessage.contains(s"Spark ${spark.version}"), e.getMessage)
-    }
-    // the template shape rebinds, and its metric reaches the observation
-    val obs = Observation()
-    val df = PlanBridge.rebind(spark, observed.queryExecution.analyzed,
-      spark.sparkContext.parallelize(Seq(1L, 2L, 3L), 2), obs)
-    assert(df.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    assert(scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(60, "s")).getLong(0) == 3L)
   }
 }

@@ -17,11 +17,11 @@ import graft.fetch.CorpusFetcher
   *    then `resume()`d by a fresh engine.
   *
   * Then it writes `<outDir>/rows/<run>.txt` for each run: every row of the
-  * run's small state tables — each version's frontier and bloom shards, and
-  * every step dir of the fetch log, the equality deletes and the archive —
-  * as one line `<table dir> <row>`, sorted, with map entries sorted and
-  * binary values (the bloom sketches) as their SHA-256. The raw outcome
-  * table (`items_raw`) is left out.
+  * run's state tables — each version's frontier and bloom shards, and every
+  * step dir of the raw outcome table (`items_raw`), the fetch log, the
+  * equality deletes and the archive — as one line `<table dir> <row>`,
+  * sorted, with map entries sorted and binary values (the bloom sketches,
+  * the item payloads) as their SHA-256.
   *
   * Two builds that crawl alike leave byte-identical `_snapshot.json` files
   * and row dumps, so comparing the trees of two builds checks that a change
@@ -51,7 +51,7 @@ object ManifestDump {
     def tableDirs(d: java.io.File): Seq[java.io.File] = {
       val kids = Option(d.listFiles()).toSeq.flatten
       (if (kids.exists(_.getName.endsWith(".parquet"))) Seq(d) else Nil) ++
-        kids.filter(k => k.isDirectory && k.getName != "items_raw").flatMap(tableDirs)
+        kids.filter(_.isDirectory).flatMap(tableDirs)
     }
     val lines = tableDirs(root).flatMap { d =>
       val table = root.toPath.relativize(d.toPath).toString

@@ -7,15 +7,18 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.engine.FetchLog
+import graft.fetch.StepOutcome
 import graft.frontier.BloomShard
-import graft.model.{CrawlJob, JobState, JobStats}
+import graft.model.{CrawlJob, ImageItem, JobState, JobStats, SpawnedJob}
 import graft.state.StateIO
 
 /** [[StateIO.writeRows]] — the driver-side parquet writer of the engine's
-  * small state tables — against Spark's own parquet write of the same rows:
-  * the rows read back equal through the engine's explicit schemas, and the
-  * footers carry the same parquet schema and Spark row metadata. This pins
-  * the writer's coupling to Spark's `ParquetWriteSupport`.
+  * small state tables — and [[StateIO.writeFile]] in a task — the driver
+  * tier's raw outcome files — against Spark's own parquet write of the same
+  * rows: the rows read back equal through the engine's explicit schemas, and
+  * the footers carry the same parquet schema and Spark row metadata. This
+  * pins the writer's coupling to Spark's `ParquetWriteSupport`. Also
+  * [[StateIO.promote]], which lands only the winning task attempts' files.
   */
 class StateIOSpec extends SparkSpec {
   import spark.implicits._
@@ -116,5 +119,58 @@ class StateIOSpec extends SparkSpec {
     val e = intercept[IllegalStateException](StateIO.writeRows(spark, jobSchema, rows, dir))
     assert(e eq boom)
     assert(Option(new java.io.File(dir).listFiles()).toSeq.flatten.isEmpty)
+  }
+
+  private val outcomes = Seq(
+    StepOutcome(jobs.head, 200, "ok",
+      Seq(ImageItem("k1", "n", "content", "http://a/1", "detail", 3, 0, "img-1",
+          Array.emptyByteArray, 8, 6, "png", "a caption", -5L, Map("p" -> "v")),
+        ImageItem("k2", "", "content", "", "detail", 0, 0, null, Array.emptyByteArray,
+          0, 0, "jpeg", "", Long.MaxValue)),
+      Seq(Array[Byte](-119, 80, 78, 71, 0, 1, 2), Array.emptyByteArray),
+      Seq(SpawnedJob("detail", "http://b/1"), SpawnedJob("listing", null, Map("page" -> "2"))),
+      hasNextPage = true, Map("cursor" -> "c2", "n" -> "")),
+    StepOutcome(jobs(1), 503, "retry", Nil, Nil, Nil, hasNextPage = false, Map.empty),
+    StepOutcome(jobs(2), 301, "redirect:http://c/", Nil, Nil, Nil, hasNextPage = false, null))
+
+  test("a task-written raw outcome file reads back like Spark's uncompressed write") {
+    val enc = ExpressionEncoder[StepOutcome]()
+    val spec = StateIO.writeSpec(spark, enc.schema, Map("compression" -> "uncompressed"))
+    val sink = spark.sparkContext.broadcast((spec, enc))
+    val name = spec.fileName(0, java.util.UUID.randomUUID().toString)
+    assert(name.matches("part-00000-[0-9a-f-]{36}-c000\\.parquet"), name)
+    val inTask = s"${tmpDir("stateio-task")}/t"
+    val viaSpark = s"${tmpDir("stateio-task-spark")}/t"
+    spark.sparkContext.parallelize(outcomes, 1).foreachPartition { it =>
+      val (sp, e) = sink.value
+      StateIO.writeFile(sp, it.map(e.createSerializer()), s"$inTask/$name")
+    }
+    outcomes.toDS().coalesce(1).write.option("compression", "uncompressed").parquet(viaSpark)
+    def read(dir: String): Seq[String] = spark.read.schema(enc.schema).parquet(dir)
+      .select(org.apache.spark.sql.functions.to_json(org.apache.spark.sql.functions.struct("*")))
+      .as[String].collect().toSeq
+    assert(read(inTask) == outcomes.toDS().toDF()
+      .select(org.apache.spark.sql.functions.to_json(org.apache.spark.sql.functions.struct("*")))
+      .as[String].collect().toSeq)
+    assert(read(inTask) == read(viaSpark))
+    assert(read(inTask).head.contains("iVBORwABAg=="), "payload bytes not landed")
+    assert(footer(inTask)._2 != null, "no Spark row metadata")
+    assert(footer(inTask) == footer(viaSpark))
+  }
+
+  test("promote lands only the winning attempt's file and drops the staging dir") {
+    val dir = s"${tmpDir("stateio-promote")}/step=3"
+    val staging = s"$dir/_staging"
+    val spec = StateIO.writeSpec(spark, jobSchema)
+    val name = spec.fileName(0, java.util.UUID.randomUUID().toString)
+    val toRow = ExpressionEncoder[CrawlJob]().createSerializer()
+    // attempts 0 and 1 of partition 0 both wrote; Spark kept attempt 1's result
+    StateIO.writeFile(spec, jobs.take(1).iterator.map(toRow), s"$staging/0/$name")
+    StateIO.writeFile(spec, jobs.drop(1).iterator.map(toRow), s"$staging/1/$name")
+    StateIO.promote(staging, Seq(s"$staging/1/$name"), dir)
+    assert(parquetFiles(dir).map(_.getName) == Seq(name))
+    assert(!new java.io.File(staging).exists(), "staging dir left behind")
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq(s".$name.crc", name))
+    assert(spark.read.schema(jobSchema).parquet(dir).as[CrawlJob].collect().toSeq == jobs.drop(1))
   }
 }
