@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.corpus.CorpusRow
 import graft.fetch.{CorpusFetcher, FetchStage, Fetcher, StepOutcome}
@@ -61,8 +60,7 @@ object CrawlEngine {
   }
 
   /** A spawned job (or redirect target) after URL resolution and
-    * canonicalization — the element type of [[spawnCands]] and of
-    * [[spawnsOf]]. */
+    * canonicalization (see [[spawnsOf]]). */
   private[graft] case class SpawnCand(urlKey: Long, url: String, host: String,
       routeId: String, query: Map[String, String])
 
@@ -223,36 +221,6 @@ object CrawlEngine {
   private val FetchTaskFactor = 32
   private val FetchPagesPerTask = 128
 
-  /** Every outcome's spawn candidates — its spawned jobs plus a redirect
-    * target — as array<SpawnCand>: unknown routes dropped, query-templated
-    * URLs built through the route's template (reference `route.getUrl(job)`
-    * over the spawned op's query, worker.js:281-292, route.js:31-37; a
-    * throwing template drops the job, where the reference fails it), then
-    * canonicalized, host-split and keyed by the native expressions. The
-    * distributed tier explodes it over the landed outcomes; [[spawnsOf]] is
-    * the same resolution in Scala, and `SpawnParitySpec` pins the two equal.
-    */
-  private[graft] def spawnCands(routesBc: Broadcast[Map[String, RouteSpec]]): Column = {
-    val resolveUrl = udf((rid: String, u: String, q: Map[String, String]) =>
-      resolveUrlOf(routesBc.value, rid, u, q))
-    def spawn(rid: Column, url: Column, q: Column) =
-      struct(rid.as("routeId"), url.as("url"), q.as("query"))
-    val raw = concat(
-      transform(col("spawned"), s => spawn(s("routeId"), s("url"), s("query"))),
-      filter(array(spawn(col("job.routeId"),
-          expr(s"substring(action, ${Redirect.length + 1})"),
-          typedLit(Map.empty[String, String]))),
-        _ => col("action").startsWith(Redirect)))
-    val resolved = transform(
-      filter(raw, s => s("routeId").isin(routesBc.value.keys.toSeq: _*)),
-      s => spawn(s("routeId"), resolveUrl(s("routeId"), s("url"), s("query")), s("query")))
-    val canonical = transform(filter(resolved, s => s("url") =!= ""),
-      s => spawn(s("routeId"), graft.canon.CanonUdfs.canon_url(s("url")), s("query")))
-    transform(canonical, s => struct(xxhash64(s("url")).as("urlKey"), s("url").as("url"),
-      graft.canon.CanonUdfs.url_host(s("url")).as("host"), s("routeId").as("routeId"),
-      s("query").as("query")))
-  }
-
   private val Redirect = "redirect:"
 
   /** A spawn's URL: its own when it has one, else its route's template over
@@ -263,17 +231,24 @@ object CrawlEngine {
     else try routes(rid).urlTemplate(Option(q).getOrElse(Map.empty))
     catch { case _: Exception => "" }
 
-  /** [[spawnCands]] of one outcome, resolved in Scala by the functions the
-    * native expressions call (the route template, `UrlCanon.canonicalize`,
-    * `UrlCanon.host`, `CanonUdfs.urlKeyScala`), in the same order: the
-    * driver tier's fetch tasks resolve their outcomes' spawns with it. */
-  private[graft] def spawnsOf(routes: Map[String, RouteSpec], o: StepOutcome)
-      : Seq[SpawnCand] = {
+  /** One outcome's spawn candidates — its spawned jobs plus a redirect
+    * target, from the outcome's route id, action and spawns alone (never its
+    * items or payloads): unknown routes dropped, query-templated URLs built
+    * through the route's template (reference `route.getUrl(job)` over the
+    * spawned op's query, worker.js:281-292, route.js:31-37; a throwing
+    * template drops the job, where the reference fails it), then
+    * canonicalized, host-split and keyed by the functions the native
+    * `canon_url`, `url_host` and `xxhash64` expressions call. The driver
+    * tier's fetch tasks and the distributed tier's candidate scan
+    * ([[CrawlEngine#spawnCandidates]]) both resolve with it.
+    */
+  private[graft] def spawnsOf(routes: Map[String, RouteSpec], routeId: String,
+      action: String, spawned: Seq[SpawnedJob]): Seq[SpawnCand] = {
     val redirect =
-      if (o.action != null && o.action.startsWith(Redirect))
-        Iterator((o.job.routeId, o.action.substring(Redirect.length), Map.empty[String, String]))
+      if (action != null && action.startsWith(Redirect))
+        Iterator((routeId, action.substring(Redirect.length), Map.empty[String, String]))
       else Iterator.empty
-    (o.spawned.iterator.map(s => (s.routeId, s.url, s.query)) ++ redirect)
+    (spawned.iterator.map(s => (s.routeId, s.url, s.query)) ++ redirect)
       .filter { case (rid, _, _) => rid != null && routes.contains(rid) }
       .map { case (rid, u, q) => (rid, resolveUrlOf(routes, rid, u, q), q) }
       .collect { case (rid, u, q) if u != null && u.nonEmpty =>
@@ -283,10 +258,34 @@ object CrawlEngine {
       }.toSeq
   }
 
+  /** Spawn admission, the one kernel both tiers run: per urlKey the
+    * candidate of the lowest (routeId, source, position) — `source` the
+    * spawning job's urlKey and `position` the spawn's index among that
+    * job's candidates, so a tie on the route (the same URL spawned by two
+    * pages with different query maps) admits the same `query` on either
+    * tier and in every run — kept when robots allow it, as a job entering
+    * at `createdStep` with its route's priority. The seen check is the
+    * caller's: the driver tier probes its driver-held bloom shards, the
+    * distributed tier runs the kernel inside the cogroup of each bloom
+    * shard with the candidates it owns (`BloomSeen.pidOf`), so every
+    * candidate of a key meets in one group.
+    */
+  private[graft] def admitted(cands: Iterator[(Long, Int, SpawnCand)],
+      routes: Map[String, RouteSpec], rules: Seq[RobotsRule], createdStep: Int)
+      : Array[CrawlJob] =
+    cands.toArray.groupBy(_._3.urlKey).valuesIterator
+      .map(_.minBy { case (src, pos, c) => (c.routeId, src, pos) }._3)
+      .filter(c => Robots.allowedLocal(c.url, c.host, rules))
+      .map(c => CrawlJob(c.urlKey, c.url, c.host, c.routeId,
+        priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
+        query = c.query, createdStep = createdStep, notBeforeStep = createdStep))
+      .toArray
+
   /** One fetched outcome's [[OutcomeMeta]]. */
   private def metaOf(routes: Map[String, RouteSpec], o: StepOutcome): OutcomeMeta =
     OutcomeMeta(o.job, o.status, o.action, o.hasNextPage, o.newState, o.spawned.size,
-      spawnsOf(routes, o), o.items.iterator.zipWithIndex.map { case (it, i) =>
+      spawnsOf(routes, o.job.routeId, o.action, o.spawned),
+      o.items.iterator.zipWithIndex.map { case (it, i) =>
         (i, it.key, Option(it.image_id).getOrElse(""), it.phash)
       }.toSeq)
 
@@ -443,11 +442,14 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *    bound);
   *  - `distributedStep` (a larger wave): the same decisions as Dataset plans
   *    over byte-free scans of the landed outcomes — winner pick + flags
-  *    (shuffle 2: by item key), banded suppression, cogroup bloom probe →
-  *    exact anti-join (shuffle 3: by urlKey) — with no per-step driver
-  *    state.
+  *    (shuffle 2: by item key), banded suppression, spawn admission in a
+  *    cogroup of each bloom shard with the candidates it owns (shuffle 3:
+  *    by shard) → exact anti-join of the bloom positives — with no per-step
+  *    driver state.
   *
-  * Both bodies share the job-state transition ([[CrawlEngine.advance]]),
+  * Both bodies share the spawn resolution and admission
+  * ([[CrawlEngine.spawnsOf]], [[CrawlEngine.admitted]]; seeds are admitted
+  * by the same kernel), the job-state transition ([[CrawlEngine.advance]]),
   * the fetch-log row ([[CrawlEngine.logRow]]), the item-meta reads, the
   * crawl-delay bump and the Dataset-frontier rewrite, and both end in
   * [[commitPhase]]: the atomic snapshot commit of the next version,
@@ -602,6 +604,10 @@ final class CrawlEngine(
   private val routesBc = spark.sparkContext.broadcast(routes)
   private val fetcherBc = spark.sparkContext.broadcast(fetcher)
   private val hooksBc = spark.sparkContext.broadcast(hooks)
+  /** The robots rules, driver-sized by design (`delayByHost` holds them
+    * too): the distributed spawn kernel filters its candidates against
+    * them where they are, so no candidate is shuffled for robots. */
+  private val rulesBc = spark.sparkContext.broadcast(robotsRules)
   /** Per-task min-gap between fetch starts to one host: the engine-wide
     * [[EngineConfig.hostMinDelayMs]] × the tasks a host spans. */
   private val perTaskHostGapMs = cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits)
@@ -790,6 +796,21 @@ final class CrawlEngine(
         .select(col("urlKey")).filter(inPos(col("urlKey")))
     }
 
+  /** The distributed tier's spawn candidates: each landed outcome's source
+    * job, route id, action and spawns — never its items or payloads
+    * (PlanSpec asserts the scan's `ReadSchema`) — resolved by
+    * [[CrawlEngine.spawnsOf]], with the source job's urlKey and the spawn's
+    * position for the admission kernel's tiebreak. */
+  private[graft] def spawnCandidates(outcomes: DataFrame): Dataset[(Long, Int, SpawnCand)] = {
+    val routesLocal = routesBc
+    outcomes.select(col("job.urlKey"), col("job.routeId"), col("action"), col("spawned"))
+      .as[(Long, String, String, Seq[SpawnedJob])]
+      .flatMap { case (src, rid, action, spawned) =>
+        spawnsOf(routesLocal.value, rid, action, spawned).iterator.zipWithIndex
+          .map { case (c, i) => (src, i, c) }
+      }
+  }
+
   /** `urlKey ∈ sorted` as a broadcast binary-search filter over a Dataset
     * frontier. Kept over an anti-/semi-join against a local relation of
     * the keys: the join's broadcast exchange runs one more Spark job per
@@ -966,8 +987,9 @@ final class CrawlEngine(
     })
 
   /** The seeds are a driver `Seq`, so they are keyed (by the functions the
-    * native expressions call), admitted ([[admit]]) and written by the
-    * driver: no Spark job. */
+    * native expressions call), admitted (the spawn kernel,
+    * [[CrawlEngine.admitted]], a seed's position its tiebreak) and written
+    * by the driver: no Spark job. */
   private def seedResolved(seeds: Seq[(String, String, Map[String, String])]): Unit = {
     seeds.iterator.zipWithIndex.foreach { case ((r, u, q), i) =>
       if (r == null || u == null) throw new IllegalArgumentException(
@@ -980,11 +1002,11 @@ final class CrawlEngine(
       .orElse(Option.when(StateIO.listNames(itemsBaseDir).nonEmpty)("a compacted items base"))
       .foreach(held => throw new IllegalStateException(s"seed() onto ${cfg.statePath}, " +
         s"which holds $held; resume() it, or seed a fresh state path"))
-    val jobs = admit(seeds.iterator.map { case (r, u, q) =>
+    val jobs = admitted(seeds.iterator.zipWithIndex.map { case ((r, u, q), i) =>
       val url = graft.canon.UrlCanon.canonicalize(u)
-      SpawnCand(graft.canon.CanonUdfs.urlKeyScala(url), url, graft.canon.UrlCanon.host(url),
-        r, q)
-    }, createdStep = 0)(_ => Set.empty)
+      (0L, i, SpawnCand(graft.canon.CanonUdfs.urlKeyScala(url), url,
+        graft.canon.UrlCanon.host(url), r, q))
+    }, routes, robotsRules, createdStep = 0)
     val shards = insertLocal(BloomSeen
       .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp), jobs.map(_.urlKey))
     val manifest = SnapshotStore.Manifest(0, -1, 0L,
@@ -1230,42 +1252,6 @@ final class CrawlEngine(
   private def checkpointMeta(existing: Option[DataFrame], added: DataFrame): DataFrame =
     existing.fold(added)(_.unionByName(added)).localCheckpoint(true)
 
-  /** Seeds or a driver-tier wave's spawns admitted as jobs entering at
-    * `createdStep`: the lowest routeId per key, robots-allowed, minus the keys
-    * `seen` returns, with their route's priority (the distributed tier's
-    * plans: [[minRoutePerKey]], `Robots.allowed`, [[toJobs]]). */
-  private def admit(cands: Iterator[SpawnCand], createdStep: Int)(
-      seen: Array[Long] => Set[Long]): Array[CrawlJob] = {
-    val cand = cands.toArray.groupBy(_.urlKey).valuesIterator.map(_.minBy(_.routeId))
-      .filter(c => Robots.allowedLocal(c.url, c.host, robotsRules)).toArray
-    val old = seen(cand.map(_.urlKey))
-    cand.filterNot(c => old(c.urlKey)).map(c =>
-      CrawlJob(c.urlKey, c.url, c.host, c.routeId,
-        priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
-        query = c.query, createdStep = createdStep, notBeforeStep = createdStep))
-  }
-
-  /** Frontier jobs, entering at `createdStep` with their route's priority,
-    * from the distributed tier's (urlKey, url, host, routeId, query) rows. */
-  private def toJobs(df: DataFrame, createdStep: Int): Dataset[CrawlJob] = {
-    val prioByRoute = typedLit(routes.map { case (k, r) => k -> r.priority })
-    df.withColumn("priority", coalesce(element_at(prioByRoute, col("routeId")), lit(50)))
-      .select(col("urlKey").as("_1"), col("url").as("_2"), col("host").as("_3"),
-        col("routeId").as("_4"), col("priority").cast("int").as("_5"),
-        col("query").as("_6"))
-      .as[(Long, String, String, String, Int, Map[String, String])]
-      .map { case (k, u, h, r, p, q) =>
-        CrawlJob(k, u, h, r, priority = p, query = q,
-          createdStep = createdStep, notBeforeStep = createdStep)
-      }
-  }
-
-  /** One row per urlKey — the lowest routeId's. */
-  private def minRoutePerKey(df: DataFrame): DataFrame = df
-    .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
-      .partitionBy(col("urlKey")).orderBy(col("routeId"))))
-    .filter(col("rn") === 1).drop("rn")
-
   private def insertLocal(shards: Array[BloomShard], keys: Array[Long]): Array[BloomShard] = {
     val byPid = keys.groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
     shards.map(sh => byPid.get(sh.pid).map(BloomSeen.insertLocal(sh, _)).getOrElse(sh))
@@ -1316,9 +1302,10 @@ final class CrawlEngine(
   // readItemDeltas; a divergent tiebreak (e.g. phash) would let the landed
   // item's phash differ from the one recorded in the item-meta state,
   // corrupting later near-dup votes and breaking resume-identical parity.
-  // Spawned jobs: dedup (min routeId per key) → robots → bloom probe →
-  // exact seen check on the bloom-positive keys. Job state and fetch log:
-  // both tiers run [[CrawlEngine.advance]] / [[CrawlEngine.logRow]] per
+  // Spawned jobs: both tiers run the admission kernel
+  // ([[CrawlEngine.admitted]]: lowest route per key → robots → job), probe
+  // the bloom and check the bloom-positive keys exactly. Job state and fetch
+  // log: both tiers run [[CrawlEngine.advance]] / [[CrawlEngine.logRow]] per
   // outcome.
 
   /** The driver tier's body: items, spawns, job state, fetch log and the
@@ -1368,7 +1355,10 @@ final class CrawlEngine(
 
     val (fresh, shards) = timed("spawn") {
       val shards = cur.shards.getOrElse(readBloom(cur.manifest.version).collect())
-      val fresh = admit(meta.iterator.flatMap(_.spawns), stepNow + 1) { keys =>
+      val cand = admitted(meta.iterator.flatMap(m => m.spawns.iterator.zipWithIndex
+        .map { case (c, i) => (m.job.urlKey, i, c) }), routes, robotsRules, stepNow + 1)
+      val old: Set[Long] = {
+        val keys = cand.map(_.urlKey)
         val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
         val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
         // Exact check only on the bloom-positive sliver (true hits + fpp·new):
@@ -1398,6 +1388,7 @@ final class CrawlEngine(
           }
         }
       }
+      val fresh = cand.filterNot(j => old(j.urlKey))
       (fresh, insertLocal(shards, fresh.map(_.urlKey)))
     }
 
@@ -1509,19 +1500,24 @@ final class CrawlEngine(
     }
 
     val (fresh, bloom, spawnRelease) = timed("spawn") {
-      // cogroup bloom probe, then an exact semi-join on the maybe-seen keys
-      val cands = outcomes.select(explode(spawnCands(routesBc)).as("c")).select(col("c.*"))
-      val allowed = Robots.allowed(minRoutePerKey(cands), robotsRules).localCheckpoint(true)
+      // the spawn kernel in each bloom shard's group, probing that one
+      // shard, then an exact semi-join on the maybe-seen keys; locals only
+      // in executor closures, since capturing fields would serialize `this`
+      val (routesLocal, rulesLocal, p, created) =
+        (routesBc, rulesBc, cfg.bloomPartitions, stepNow + 1)
       val bloom = readBloom(cur.manifest.version)
-      val probed = BloomSeen.probe(bloom,
-          allowed.select(col("urlKey")).as[Long], cfg.bloomPartitions)
-        .toDF("urlKey", "might").persist(StorageLevel.MEMORY_AND_DISK)
-      val definitelyNew = allowed.join(
-        broadcast(probed.filter(!col("might")).drop("might")),
-        Seq("urlKey"), "left_semi")
-      val maybeSeen = allowed.join(
-        broadcast(probed.filter(col("might")).drop("might")),
-        Seq("urlKey"), "left_semi")
+      val probed = spawnCandidates(outcomes)
+        .groupByKey(c => BloomSeen.pidOf(c._3.urlKey, p))
+        .cogroup(bloom.groupByKey(_.pid)) { (_, cs, ss) =>
+          if (cs.isEmpty) Iterator.empty
+          else {
+            val jobs = CrawlEngine.admitted(cs, routesLocal.value, rulesLocal.value, created)
+            jobs.iterator.zip(BloomSeen.probeLocal(ss.toArray, jobs.map(_.urlKey), p).iterator)
+          }
+        }.localCheckpoint(true)
+      def jobs(might: Boolean) =
+        probed.filter(col("_2") === might).select(col("_1.*")).as[CrawlJob]
+      val maybeSeen = jobs(might = true)
       // readBloom above already awaited the commit — the archive dirs up to
       // the committed step are fully landed. The archive leg joins on
       // (bucket, urlKey) against the broadcast maybe-seen keys: bucket is
@@ -1538,13 +1534,11 @@ final class CrawlEngine(
       }
       val seenConfirmed = seenEver
         .join(broadcast(maybeSeen.select(col("urlKey"))), Seq("urlKey"), "left_semi")
-      val confirmedNew = maybeSeen.join(
-        broadcast(seenConfirmed), Seq("urlKey"), "left_anti")
-      val fresh = toJobs(definitelyNew.unionByName(confirmedNew), stepNow + 1)
+      val confirmedNew = maybeSeen.join(broadcast(seenConfirmed), Seq("urlKey"), "left_anti")
+      val fresh = jobs(might = false).unionByName(confirmedNew.as[CrawlJob])
         .localCheckpoint(true)
-      probed.unpersist()
       (fresh, BloomSeen.insert(bloom, fresh.map(_.urlKey), cfg.bloomPartitions),
-        Seq(allowed, fresh))
+        Seq(probed, fresh))
     }
 
     // a byte-free projection of the landed outcomes, flags left-joined;

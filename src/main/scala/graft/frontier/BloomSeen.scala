@@ -34,8 +34,8 @@ object BloomSeen {
       BloomShard(p, serialize(BloomFilter.create(capacityPerShard, fpp))))
 
   /** Fold `keys` into their shards. Runs as a cogroup keyed on pid — each
-    * task deserializes one sketch, bulk-inserts its co-partitioned keys, and
-    * re-serializes; shards with no new keys pass through untouched.
+    * group folds its co-partitioned keys into its one shard with
+    * [[insertLocal]]; shards with no new keys pass through untouched.
     */
   def insert(shards: Dataset[BloomShard], keys: Dataset[Long], partitions: Int): Dataset[BloomShard] = {
     val spark = shards.sparkSession
@@ -45,17 +45,16 @@ object BloomSeen {
       .cogroup(keys.groupByKey(k => pidOf(k, p))) { (pid, ss, ks) =>
         val shard = ss.toSeq.headOption.getOrElse(
           throw new IllegalStateException(s"missing bloom shard $pid"))
-        if (ks.isEmpty) Iterator(shard)
-        else {
-          val bf = deserialize(shard.sketch)
-          ks.foreach(bf.putLong)
-          Iterator(BloomShard(pid, serialize(bf)))
-        }
+        Iterator(if (ks.isEmpty) shard else insertLocal(shard, ks.toArray))
       }
   }
 
-  /** Driver-side probe over locally-held shards (small-frontier fast path):
-    * each shard is deserialized once; result is aligned with `keys`.
+  /** Probe: mightContain per key, aligned with `keys`, over the shards
+    * held here — the driver tier's whole sketch, or the one shard a
+    * distributed spawn group owns. Each shard is deserialized once.
+    * Definite negatives are certainly unseen and skip the exact check;
+    * positives (incl. false positives at `fpp`) go on to it — the filter
+    * is a pre-filter, never authoritative.
     */
   def probeLocal(shards: Array[BloomShard], keys: Array[Long],
       partitions: Int): Array[Boolean] = {
@@ -63,7 +62,8 @@ object BloomSeen {
     keys.map(k => byPid(pidOf(k, partitions)).mightContainLong(k))
   }
 
-  /** Driver-side single-shard insert (small-frontier fast path). */
+  /** Fold `keys` into one shard (the driver tier's insert, and each group
+    * of [[insert]]'s cogroup). */
   def insertLocal(shard: BloomShard, keys: Array[Long]): BloomShard = {
     val bf = deserialize(shard.sketch)
     keys.foreach(bf.putLong)
@@ -75,22 +75,4 @@ object BloomSeen {
     */
   def estimatedShardBytes(capacity: Long, fpp: Double): Long =
     (math.ceil(-capacity * math.log(fpp) / (math.log(2) * math.log(2))) / 8).toLong + 32
-
-  /** Probe: (key, mightContain). Definite negatives are certainly unseen and
-    * skip the exact anti-join; positives (incl. false positives at `fpp`) go
-    * on to the exact check — the filter is a pre-filter, never authoritative.
-    */
-  def probe(shards: Dataset[BloomShard], keys: Dataset[Long], partitions: Int): Dataset[(Long, Boolean)] = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val p = partitions
-    keys.groupByKey(k => pidOf(k, p))
-      .cogroup(shards.groupByKey(_.pid)) { (_, ks, ss) =>
-        if (ks.isEmpty) Iterator.empty
-        else {
-          val bf = ss.toSeq.headOption.map(s => deserialize(s.sketch))
-          ks.map(k => (k, bf.exists(_.mightContainLong(k))))
-        }
-      }
-  }
 }

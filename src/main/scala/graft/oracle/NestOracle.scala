@@ -61,7 +61,7 @@ final class NestOracle(
     val matches = robotsRules.filter(r => r.host == host && path.startsWith(r.pathPrefix))
     if (matches.isEmpty) true
     else {
-      // longest prefix wins; disallow wins length ties (matches Robots.allowed)
+      // longest prefix wins; disallow wins length ties (as Robots.allowedLocal)
       val best = matches.minBy(r => (-r.pathPrefix.length, r.allow))
       best.allow
     }

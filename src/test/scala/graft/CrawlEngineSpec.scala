@@ -458,6 +458,43 @@ class CrawlEngineSpec extends SparkSpec {
     assert(fetches.forall(_._1 == 2), s"distributed fetch writes' stages: ${fetches.map(_._1)}")
   }
 
+  test("a forced-distributed step runs at most 16 foreground Spark jobs") {
+    // every job outside the background commit's pool, per step() call (this
+    // crawl: 14 in the first step, then 16). The spawn phase's share is the
+    // checkpoint of the admission kernel's cogroup with the bloom shards and
+    // the exact check of its positives; a probe kept apart from the
+    // admitted rows costs broadcast semi-joins to join them back
+    val sc = spark.sparkContext
+    val stepKey = "graft.spec.step"
+    val foreground = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("spark.scheduler.pool") != "graft-commit")
+            Option(p.getProperty(stepKey)).foreach(s => foreground.add(s.toInt))
+        }
+    }
+    val eng = new CrawlEngine(spark, routes, fetcher, Nil,
+      CrawlEngineSpec.retainAll(tmpDir("engine-dist-jobs")).copy(driverCollectMaxRows = 0L))
+    eng.seed(SyntheticCorpus.seeds(spec))
+    org.apache.spark.graftspec.BusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    val ran =
+      try Iterator.from(0).takeWhile { i =>
+        sc.setLocalProperty(stepKey, i.toString)
+        try eng.step() finally sc.setLocalProperty(stepKey, null)
+      }.size
+      finally {
+        eng.currentVersion // lands the last commit
+        org.apache.spark.graftspec.BusAccess.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    val perStep = (0 until ran).map(i => foreground.asScala.count(_ == i))
+    assert(ran > 3, s"only $ran steps")
+    assert(perStep.forall(_ <= 16), s"foreground jobs per step: ${perStep.mkString(", ")}")
+  }
+
   test("a resumed driver-sized step builds its wave off the Dataset frontier in one job") {
     // a resumed engine reads its frontier back as a Dataset; the manifest's
     // exact pending count fits the driver bound, so the wave is one collect.
@@ -496,9 +533,9 @@ class CrawlEngineSpec extends SparkSpec {
   }
 
   test("two engines on one session, stepped alternately, each land what they land alone") {
-    // different sites, fetchers and budgets: a fetch plan or an observation
-    // that crossed engines would fetch the other site's pages or return the
-    // other wave's outcomes
+    // different sites, fetchers and budgets: a fetch kernel, broadcast or
+    // task result that crossed engines would fetch the other site's pages or
+    // return the other wave's outcomes
     val specB = CorpusSpec(hosts = 3, listPages = 2, detailsPerList = 3, imgW = 32, imgH = 32)
     val fetcherB = new CorpusFetcher(SyntheticCorpus.buildLocal(specB))
     def engine(name: String, b: Boolean) = {
@@ -518,7 +555,7 @@ class CrawlEngineSpec extends SparkSpec {
     }
     assert(rounds > 4, s"only $rounds alternating rounds")
     // b landed its own site: every live page, one of each near-dup pair
-    // suppressed (a plan shared across engines would fetch with a's fetcher)
+    // suppressed (a fetch kernel shared across engines would fetch with a's fetcher)
     val liveB = (0L until specB.totalDetails).filter(_ % specB.deadMod != 7).toSet
     val pairsB = liveB.count(id => id % specB.nearDupMod == 3 && liveB(id - 1))
     assert(itemsOf(b).size == liveB.size - pairsB, s"engine b: ${itemsOf(b).size} items")
@@ -655,7 +692,7 @@ class CrawlEngineSpec extends SparkSpec {
     val done = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
     if (!done) proc.destroyForcibly()
     def logTail = scala.io.Source.fromFile(log).getLines().toSeq.takeRight(40).mkString("\n")
-    // the engine's count check (observed outcomes == wave rows) would fail
+    // the engine's count check (returned outcomes == wave rows) would fail
     // the child's crawl
     assert(done && proc.exitValue == 0, s"child crawl failed:\n$logTail")
     val Array(steps, fetched, items, dead, thrown) =
@@ -868,6 +905,38 @@ class CrawlEngineSpec extends SparkSpec {
     assert(ia.sameElements(ib), "compacted run items differ from straight run")
     // no state write (seed, fetch, commit, compaction) leaves a _SUCCESS marker
     assert(successMarkers(dirA).isEmpty, successMarkers(dirA).take(3))
+  }
+
+  test("a URL spawned on one route with different queries: both tiers admit the same query") {
+    // every listing page also spawns one shared URL twice, each query naming
+    // the page's host and the spawn's order: in the first step the listings
+    // of both hosts spawn it, a tie on (urlKey, routeId) that the lowest
+    // source job urlKey, then the lowest spawn position, breaks
+    val shared = s"http://${spec.hostName(0)}/img/shared"
+    val base = routes(SyntheticCorpus.LISTING)
+    val tied = routes.updated(SyntheticCorpus.LISTING, base.copy(scraper = page => {
+      val r = base.scraper(page)
+      if (page.status != 200) r
+      else r.copy(jobs = r.jobs ++ Seq("1", "2").map(n => graft.model.SpawnedJob(
+        SyntheticCorpus.DETAIL, shared, Map("from" -> page.host, "n" -> n))))
+    }))
+    def admittedQuery(tweak: EngineConfig => EngineConfig): Map[String, String] = {
+      val e = new CrawlEngine(spark, tied, fetcher, Nil,
+        tweak(CrawlEngineSpec.retainAll(tmpDir("engine-tie"))))
+      e.seed(SyntheticCorpus.seeds(spec))
+      e.run()
+      val Array(j) = e.frontier.filter(_.url == shared).collect()
+      j.query
+    }
+    val driver = admittedQuery(identity)
+    val distributed = admittedQuery(_.copy(driverCollectMaxRows = 0L))
+    // the seeds are the first step's listing jobs: the lowest key's host
+    val firstHost = SyntheticCorpus.seeds(spec).map { case (_, u) =>
+      val url = graft.canon.UrlCanon.canonicalize(u)
+      (graft.canon.CanonUdfs.urlKeyScala(url), graft.canon.UrlCanon.host(url))
+    }.min._2
+    assert(driver == Map("from" -> firstHost, "n" -> "1"), driver)
+    assert(distributed == driver, s"distributed tier admitted $distributed, driver tier $driver")
   }
 
   test("robots: disallowed prefix blocks, crawl-delay throttles") {

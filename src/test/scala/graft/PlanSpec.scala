@@ -173,6 +173,44 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("the distributed spawn scan of the raw outcome table reads no items and no payloads") {
+    // the distributed tier's spawn candidates need each outcome's source
+    // job, action and spawns; its items and their payload bytes stay on disk
+    import spark.implicits._
+    import graft.corpus._
+    import graft.engine.{CrawlEngine, EngineConfig}
+    import graft.fetch.{CorpusFetcher, StepOutcome}
+    import graft.model.{ImageItem, SpawnedJob}
+    val spec = CorpusSpec(hosts = 1, listPages = 1, detailsPerList = 1)
+    val eng = new CrawlEngine(spark, SiteRoutes.registry(spec),
+      new CorpusFetcher(SyntheticCorpus.buildLocal(spec)), Nil,
+      EngineConfig(statePath = tmpDir("plan-spawn-state"), bloomPartitions = 4,
+        bloomCapacityPerShard = 1 << 16))
+    val item = ImageItem("k", "n", "content", "l", "detail", 1, 0, "0",
+      Array[Byte](1, 2, 3), 1, 1, "png", "c", 42L)
+    val out = StepOutcome.split(
+      CrawlJob(1L, "http://h.test/", "h.test", SyntheticCorpus.LISTING),
+      200, "ok", Seq(item), Seq(SpawnedJob(SyntheticCorpus.DETAIL, "http://h.test/d")),
+      hasNextPage = false, Map.empty)
+    val raw = tmpDir("spawnscan")
+    spark.createDataset(Seq(out)).write.mode("overwrite").parquet(raw)
+    val cands = eng.spawnCandidates(spark.read.parquet(raw))
+    assert(cands.collect().map(_._3.url).toSeq == Seq("http://h.test/d"))
+    // the scan's ReadSchema, unabridged (the plan string cuts it at 100 chars)
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val exec = cands.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scans = exec.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, exec.toString.take(800))
+    val readSchema = scans.head.requiredSchema
+    assert(readSchema.fieldNames.toSeq == Seq("job", "action", "spawned"), readSchema.treeString)
+    // nested pruning drops the job's own counters too (`job.stats.items`)
+    assert(!readSchema.catalogString.contains("items"), readSchema.treeString)
+  }
+
   test("q49 prefix scan: the only unpartitioned window sits above the g2 aggregate") {
     // The scale hazard of a distributed prefix sum is a Window with no
     // partitionSpec over the FULL doc relation (one task, n rows). The

@@ -1,16 +1,18 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, xxhash64}
+import graft.canon.CanonUdfs.{canon_url, url_host}
 import graft.engine.CrawlEngine
 import graft.fetch.StepOutcome
 import graft.model.{CrawlJob, FetchedPage, RouteSpec, ScrapeResult, SpawnedJob}
 
-/** The two spawn resolvers agree: [[CrawlEngine.spawnsOf]], which the driver
-  * tier's fetch tasks run in Scala, yields the same candidates in the same
-  * order as the [[CrawlEngine.spawnCands]] column the distributed tier
-  * explodes — over hostile spawns: unknown and null routes, templates that
-  * throw or return null or "", redirects, empty and query-only spawns,
-  * non-ASCII and malformed URLs.
+/** The spawn resolver keys as Spark does: [[CrawlEngine.spawnsOf]], which
+  * both tiers run in Scala, yields the candidates of the spawns it resolves,
+  * in order, with the url, urlKey and host that Spark's native
+  * `canon_url(u)`, `xxhash64(canon_url(u))` and `url_host(canon_url(u))`
+  * give the same resolved URLs — over hostile spawns: unknown and null
+  * routes, templates that throw or return null or "", redirects, empty and
+  * query-only spawns, non-ASCII and malformed URLs.
   */
 class SpawnParitySpec extends SparkSpec {
   import spark.implicits._
@@ -63,15 +65,44 @@ class SpawnParitySpec extends SparkSpec {
     StepOutcome(job("listing"), 500, "retry", Nil, Nil, Nil, hasNextPage = false, Map.empty),
     StepOutcome(job("detail"), 200, "ok", Nil, Nil, Nil, hasNextPage = true, Map("k" -> "v")))
 
-  test("the Scala spawn resolver equals the spawnCands column, in order") {
-    val bc = spark.sparkContext.broadcast(routes)
-    val viaColumn = outcomes.toDS().coalesce(1).select(CrawlEngine.spawnCands(bc))
-      .collect().toSeq.map(_.getSeq[Row](0).map(r =>
-        (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
-          Option(r.getMap[String, String](4)).map(_.toMap).orNull)))
-    val viaScala = outcomes.map(o => CrawlEngine.spawnsOf(routes, o)
-      .map(c => (c.urlKey, c.url, c.host, c.routeId, c.query)))
-    assert(viaScala == viaColumn)
+  /** One outcome's resolved spawns as (routeId, URL, query) before
+    * canonicalization: its spawned jobs, then a redirect target, on a known
+    * route; an empty or null URL is built by the route's template, and a
+    * spawn whose URL stays empty or null (the template threw or returned
+    * null or "") is dropped. */
+  private def resolved(o: StepOutcome): Seq[(String, String, Map[String, String])] = {
+    val redirect = Option(o.action).filter(_.startsWith("redirect:"))
+      .map(a => SpawnedJob(o.job.routeId, a.stripPrefix("redirect:")))
+    (o.spawned ++ redirect).filter(s => s.routeId != null && routes.contains(s.routeId))
+      .map { s =>
+        val u =
+          if (s.url != null && s.url.nonEmpty) s.url
+          else try routes(s.routeId).urlTemplate(Option(s.query).getOrElse(Map.empty))
+          catch { case _: Exception => "" }
+        (s.routeId, u, s.query)
+      }
+      .filter(s => s._2 != null && s._2.nonEmpty)
+  }
+
+  test("the Scala spawn resolver equals Spark's native canon_url, xxhash64 and url_host, " +
+      "in order") {
+    val raw = outcomes.map(resolved)
+    // (outcome, spawn) → (urlKey, url, host) by the native expressions
+    val native = raw.zipWithIndex
+      .flatMap { case (rs, i) => rs.zipWithIndex.map { case (s, j) => (i, j, s._2) } }
+      .toDF("o", "s", "u").select(col("o"), col("s"), canon_url(col("u")).as("url"))
+      .select(col("o"), col("s"), xxhash64(col("url")), col("url"), url_host(col("url")))
+      .as[(Int, Int, Long, String, String)].collect()
+      .map(t => (t._1, t._2) -> (t._3, t._4, t._5)).toMap
+    val viaNative = raw.zipWithIndex.map { case (rs, i) =>
+      rs.zipWithIndex.map { case ((rid, _, q), j) =>
+        val (k, url, host) = native((i, j))
+        (k, url, host, rid, q)
+      }
+    }
+    val viaScala = outcomes.map(o => CrawlEngine.spawnsOf(routes, o.job.routeId, o.action,
+        o.spawned).map(c => (c.urlKey, c.url, c.host, c.routeId, c.query)))
+    assert(viaScala == viaNative)
     // the hostile set reaches every branch: kept, dropped and templated
     val kept = viaScala.head
     assert(kept.nonEmpty && kept.size < hostile.size, kept)
