@@ -84,8 +84,7 @@ class SpawnParitySpec extends SparkSpec {
       .filter(s => s._2 != null && s._2.nonEmpty)
   }
 
-  test("the Scala spawn resolver equals Spark's native canon_url, xxhash64 and url_host, " +
-      "in order") {
+  test("spawnsOf equals Spark's native canon_url, xxhash64 and url_host, in order") {
     val raw = outcomes.map(resolved)
     // (outcome, spawn) → (urlKey, url, host) by the native expressions
     val native = raw.zipWithIndex
