@@ -259,27 +259,44 @@ object CrawlEngine {
   }
 
   /** Spawn admission, the one kernel both tiers run: per urlKey the
-    * candidate of the lowest (routeId, source, position) — `source` the
-    * spawning job's urlKey and `position` the spawn's index among that
-    * job's candidates, so a tie on the route (the same URL spawned by two
-    * pages with different query maps) admits the same `query` on either
-    * tier and in every run — kept when robots allow it, as a job entering
-    * at `createdStep` with its route's priority. The seen check is the
-    * caller's: the driver tier probes its driver-held bloom shards, the
-    * distributed tier runs the kernel inside the cogroup of each bloom
-    * shard with the candidates it owns (`BloomSeen.pidOf`), so every
-    * candidate of a key meets in one group.
+    * candidate of the lowest (routeId, source, position) ([[firstSpawn]]) —
+    * `source` the spawning job's urlKey and `position` the spawn's index
+    * among that job's candidates, so a tie on the route (the same URL
+    * spawned by two pages with different query maps) admits the same
+    * `query` on either tier and in every run — kept when robots allow it,
+    * as a job entering at `createdStep` with its route's priority
+    * ([[spawnJob]]). `rules` are the robots rules by host. The seen check is
+    * the caller's: the driver tier runs this over its outcomes and probes
+    * its driver-held bloom shards; the distributed tier reduces its
+    * candidates with [[firstSpawn]] per urlKey, then runs [[spawnJob]] and
+    * the probe in the cogroup of each bloom shard with the keys it owns
+    * (`BloomSeen.pidOf`).
     */
   private[graft] def admitted(cands: Iterator[(Long, Int, SpawnCand)],
-      routes: Map[String, RouteSpec], rules: Seq[RobotsRule], createdStep: Int)
-      : Array[CrawlJob] =
-    cands.toArray.groupBy(_._3.urlKey).valuesIterator
-      .map(_.minBy { case (src, pos, c) => (c.routeId, src, pos) }._3)
-      .filter(c => Robots.allowedLocal(c.url, c.host, rules))
-      .map(c => CrawlJob(c.urlKey, c.url, c.host, c.routeId,
+      routes: Map[String, RouteSpec], rules: Map[String, Seq[RobotsRule]], createdStep: Int)
+      : Array[CrawlJob] = {
+    val first = scala.collection.mutable.HashMap.empty[Long, (Long, Int, SpawnCand)]
+    cands.foreach(c => first.updateWith(c._3.urlKey)(b => Some(b.fold(c)(firstSpawn(_, c)))))
+    // an immutable HashMap iterates in key-hash order, whatever the order of the candidates
+    scala.collection.immutable.HashMap.from(first).valuesIterator
+      .flatMap(c => spawnJob(c._3, routes, rules, createdStep)).toArray
+  }
+
+  /** The admission kernel's pick of two candidates of one urlKey: the lower
+    * (routeId, source, position), `a` on a tie. */
+  private[graft] def firstSpawn(a: (Long, Int, SpawnCand), b: (Long, Int, SpawnCand))
+      : (Long, Int, SpawnCand) = {
+    val r = a._3.routeId.compareTo(b._3.routeId)
+    if (r < 0 || r == 0 && (a._1 < b._1 || a._1 == b._1 && a._2 <= b._2)) a else b
+  }
+
+  /** A picked candidate's job, when its host's robots rules allow it. */
+  private[graft] def spawnJob(c: SpawnCand, routes: Map[String, RouteSpec],
+      rules: Map[String, Seq[RobotsRule]], createdStep: Int): Option[CrawlJob] =
+    Option.when(Robots.allowedLocal(c.url, c.host, rules.getOrElse(c.host, Nil)))(
+      CrawlJob(c.urlKey, c.url, c.host, c.routeId,
         priority = routes.get(c.routeId).map(_.priority).getOrElse(50),
         query = c.query, createdStep = createdStep, notBeforeStep = createdStep))
-      .toArray
 
   /** One fetched outcome's [[OutcomeMeta]]. */
   private def metaOf(routes: Map[String, RouteSpec], o: StepOutcome): OutcomeMeta =
@@ -442,10 +459,10 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *    bound);
   *  - `distributedStep` (a larger wave): the same decisions as Dataset plans
   *    over byte-free scans of the landed outcomes — winner pick + flags
-  *    (shuffle 2: by item key), banded suppression, spawn admission in a
-  *    cogroup of each bloom shard with the candidates it owns (shuffle 3:
-  *    by shard) → exact anti-join of the bloom positives — with no per-step
-  *    driver state.
+  *    (shuffle 2: by item key), banded suppression, spawn admission as the
+  *    kernel's pick reduced per urlKey, then a cogroup of each bloom shard
+  *    with the candidates it owns (shuffle 3: by shard) → exact anti-join
+  *    of the bloom positives — with no per-step driver state.
   *
   * Both bodies share the spawn resolution and admission
   * ([[CrawlEngine.spawnsOf]], [[CrawlEngine.admitted]]; seeds are admitted
@@ -604,10 +621,12 @@ final class CrawlEngine(
   private val routesBc = spark.sparkContext.broadcast(routes)
   private val fetcherBc = spark.sparkContext.broadcast(fetcher)
   private val hooksBc = spark.sparkContext.broadcast(hooks)
-  /** The robots rules, driver-sized by design (`delayByHost` holds them
-    * too): the distributed spawn kernel filters its candidates against
-    * them where they are, so no candidate is shuffled for robots. */
-  private val rulesBc = spark.sparkContext.broadcast(robotsRules)
+  /** The robots rules by host, driver-sized by design (`delayByHost` holds
+    * them too): the spawn kernel filters each candidate against its own
+    * host's rules, and the distributed tier's groups read them broadcast
+    * where they are, so no candidate is shuffled for robots. */
+  private val rulesByHost = robotsRules.groupBy(_.host)
+  private val rulesBc = spark.sparkContext.broadcast(rulesByHost)
   /** Per-task min-gap between fetch starts to one host: the engine-wide
     * [[EngineConfig.hostMinDelayMs]] × the tasks a host spans. */
   private val perTaskHostGapMs = cfg.hostMinDelayMs.toLong * math.max(1, cfg.fetchSplits)
@@ -1006,7 +1025,7 @@ final class CrawlEngine(
       val url = graft.canon.UrlCanon.canonicalize(u)
       (0L, i, SpawnCand(graft.canon.CanonUdfs.urlKeyScala(url), url,
         graft.canon.UrlCanon.host(url), r, q))
-    }, routes, robotsRules, createdStep = 0)
+    }, routes, rulesByHost, createdStep = 0)
     val shards = insertLocal(BloomSeen
       .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, BloomFpp), jobs.map(_.urlKey))
     val manifest = SnapshotStore.Manifest(0, -1, 0L,
@@ -1303,7 +1322,7 @@ final class CrawlEngine(
   // item's phash differ from the one recorded in the item-meta state,
   // corrupting later near-dup votes and breaking resume-identical parity.
   // Spawned jobs: both tiers run the admission kernel
-  // ([[CrawlEngine.admitted]]: lowest route per key → robots → job), probe
+  // ([[CrawlEngine.firstSpawn]] per key → robots → job), probe
   // the bloom and check the bloom-positive keys exactly. Job state and fetch
   // log: both tiers run [[CrawlEngine.advance]] / [[CrawlEngine.logRow]] per
   // outcome.
@@ -1356,11 +1375,10 @@ final class CrawlEngine(
     val (fresh, shards) = timed("spawn") {
       val shards = cur.shards.getOrElse(readBloom(cur.manifest.version).collect())
       val cand = admitted(meta.iterator.flatMap(m => m.spawns.iterator.zipWithIndex
-        .map { case (c, i) => (m.job.urlKey, i, c) }), routes, robotsRules, stepNow + 1)
+        .map { case (c, i) => (m.job.urlKey, i, c) }), routes, rulesByHost, stepNow + 1)
       val old: Set[Long] = {
-        val keys = cand.map(_.urlKey)
-        val might = BloomSeen.probeLocal(shards, keys, cfg.bloomPartitions)
-        val pos = keys.iterator.zip(might.iterator).collect { case (k, true) => k }.toSet
+        val pos = cand.iterator.map(_.urlKey)
+          .filter(BloomSeen.probeLocal(shards, cfg.bloomPartitions)).toSet
         // Exact check only on the bloom-positive sliver (true hits + fpp·new):
         // the active frontier is the driver array (with the finished jobs it
         // carries) or a column scan on urlKey, never shuffled; only the keys
@@ -1500,19 +1518,23 @@ final class CrawlEngine(
     }
 
     val (fresh, bloom, spawnRelease) = timed("spawn") {
-      // the spawn kernel in each bloom shard's group, probing that one
-      // shard, then an exact semi-join on the maybe-seen keys; locals only
-      // in executor closures, since capturing fields would serialize `this`
+      // the spawn kernel: one candidate per urlKey (reduced map-side first,
+      // so no group holds a key's every spawn), then robots and the job in
+      // each bloom shard's group, streamed past that one shard's probe; then
+      // an exact semi-join on the maybe-seen keys. Locals only in executor
+      // closures, since capturing fields would serialize `this`
       val (routesLocal, rulesLocal, p, created) =
         (routesBc, rulesBc, cfg.bloomPartitions, stepNow + 1)
       val bloom = readBloom(cur.manifest.version)
       val probed = spawnCandidates(outcomes)
+        .groupByKey(_._3.urlKey).reduceGroups(CrawlEngine.firstSpawn _).map(_._2)
         .groupByKey(c => BloomSeen.pidOf(c._3.urlKey, p))
         .cogroup(bloom.groupByKey(_.pid)) { (_, cs, ss) =>
           if (cs.isEmpty) Iterator.empty
           else {
-            val jobs = CrawlEngine.admitted(cs, routesLocal.value, rulesLocal.value, created)
-            jobs.iterator.zip(BloomSeen.probeLocal(ss.toArray, jobs.map(_.urlKey), p).iterator)
+            val might = BloomSeen.probeLocal(ss.toArray, p)
+            cs.flatMap(c => CrawlEngine.spawnJob(c._3, routesLocal.value, rulesLocal.value, created))
+              .map(j => (j, might(j.urlKey)))
           }
         }.localCheckpoint(true)
       def jobs(might: Boolean) =

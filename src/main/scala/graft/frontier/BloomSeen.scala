@@ -49,17 +49,16 @@ object BloomSeen {
       }
   }
 
-  /** Probe: mightContain per key, aligned with `keys`, over the shards
-    * held here — the driver tier's whole sketch, or the one shard a
-    * distributed spawn group owns. Each shard is deserialized once.
-    * Definite negatives are certainly unseen and skip the exact check;
-    * positives (incl. false positives at `fpp`) go on to it — the filter
-    * is a pre-filter, never authoritative.
+  /** Probe: mightContain of a key, over the shards held here — the driver
+    * tier's whole sketch, or the one shard a distributed spawn group owns.
+    * Each shard is deserialized once, when the probe is made. Definite
+    * negatives are certainly unseen and skip the exact check; positives
+    * (incl. false positives at `fpp`) go on to it — the filter is a
+    * pre-filter, never authoritative.
     */
-  def probeLocal(shards: Array[BloomShard], keys: Array[Long],
-      partitions: Int): Array[Boolean] = {
+  def probeLocal(shards: Array[BloomShard], partitions: Int): Long => Boolean = {
     val byPid = shards.map(sh => sh.pid -> deserialize(sh.sketch)).toMap
-    keys.map(k => byPid(pidOf(k, partitions)).mightContainLong(k))
+    k => byPid(pidOf(k, partitions)).mightContainLong(k)
   }
 
   /** Fold `keys` into one shard (the driver tier's insert, and each group

@@ -17,7 +17,8 @@ object Robots {
     * `scheme://authority`; a URL without `scheme://` is all path) against
     * its host's rules — the longest matching prefix wins, a disallow wins an
     * equal-length tie, no matching rule ⇒ allowed. Both tiers' spawn
-    * admission ([[graft.engine.CrawlEngine.admitted]]) filters with it;
+    * admission ([[graft.engine.CrawlEngine.spawnJob]]) filters with it,
+    * passing only the URL's host's rules;
     * `RobotsSpec` pins the cases and OracleParitySpec's robots tests the
     * crawls.
     */

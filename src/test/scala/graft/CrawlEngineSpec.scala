@@ -357,9 +357,11 @@ class CrawlEngineSpec extends SparkSpec {
     }
   }
 
-  test("every driver-tier step runs one foreground Spark job: the fetch write") {
-    // jobs carry the test thread's local properties; the background commit's
-    // run in the graft-commit pool
+  /** Seed `eng` and crawl it to the end; the foreground Spark jobs (every
+    * job outside the background commit's pool) each step() call ran.
+    * Jobs carry the test thread's local properties; the background
+    * commit's run in the graft-commit pool. */
+  def foregroundJobsPerStep(eng: CrawlEngine): Seq[Int] = {
     val sc = spark.sparkContext
     val stepKey = "graft.spec.step"
     val foreground = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
@@ -370,8 +372,8 @@ class CrawlEngineSpec extends SparkSpec {
             Option(p.getProperty(stepKey)).foreach(s => foreground.add(s.toInt))
         }
     }
-    val eng = newEngine(tmpDir("engine-jobs"))
     eng.seed(SyntheticCorpus.seeds(spec))
+    org.apache.spark.graftspec.BusAccess.drain(sc)
     sc.addSparkListener(listener)
     val ran =
       try Iterator.from(0).takeWhile { i =>
@@ -384,12 +386,16 @@ class CrawlEngineSpec extends SparkSpec {
         sc.removeSparkListener(listener)
       }
     import scala.jdk.CollectionConverters._
-    val perStep = foreground.asScala.groupBy(identity).map { case (i, js) => i -> js.size }
-    assert(ran > 3, s"only $ran steps")
+    (0 until ran).map(i => foreground.asScala.count(_ == i))
+  }
+
+  test("every driver-tier step runs one foreground Spark job: the fetch write") {
+    val perStep = foregroundJobsPerStep(newEngine(tmpDir("engine-jobs")))
+    assert(perStep.size > 3, s"only ${perStep.size} steps")
     // the fetch write returns the outcome metadata, so no second job
     // re-reads the landed table
-    for (i <- 0 until ran)
-      assert(perStep.getOrElse(i, 0) == 1, s"step() #$i ran ${perStep.getOrElse(i, 0)} jobs")
+    for ((n, i) <- perStep.zipWithIndex)
+      assert(n == 1, s"step() #$i ran $n jobs")
   }
 
   test("a driver-tier crawl runs one Spark job per step in any pool: its commits run none") {
@@ -459,39 +465,13 @@ class CrawlEngineSpec extends SparkSpec {
   }
 
   test("a forced-distributed step runs at most 16 foreground Spark jobs") {
-    // every job outside the background commit's pool, per step() call (this
-    // crawl: 14 in the first step, then 16). The spawn phase's share is the
-    // checkpoint of the admission kernel's cogroup with the bloom shards and
-    // the exact check of its positives; a probe kept apart from the
+    // this crawl: 14 in the first step, then 16. The spawn phase's share is
+    // the checkpoint of the admission kernel's cogroup with the bloom shards
+    // and the exact check of its positives; a probe kept apart from the
     // admitted rows costs broadcast semi-joins to join them back
-    val sc = spark.sparkContext
-    val stepKey = "graft.spec.step"
-    val foreground = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          if (p.getProperty("spark.scheduler.pool") != "graft-commit")
-            Option(p.getProperty(stepKey)).foreach(s => foreground.add(s.toInt))
-        }
-    }
-    val eng = new CrawlEngine(spark, routes, fetcher, Nil,
-      CrawlEngineSpec.retainAll(tmpDir("engine-dist-jobs")).copy(driverCollectMaxRows = 0L))
-    eng.seed(SyntheticCorpus.seeds(spec))
-    org.apache.spark.graftspec.BusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    val ran =
-      try Iterator.from(0).takeWhile { i =>
-        sc.setLocalProperty(stepKey, i.toString)
-        try eng.step() finally sc.setLocalProperty(stepKey, null)
-      }.size
-      finally {
-        eng.currentVersion // lands the last commit
-        org.apache.spark.graftspec.BusAccess.drain(sc)
-        sc.removeSparkListener(listener)
-      }
-    import scala.jdk.CollectionConverters._
-    val perStep = (0 until ran).map(i => foreground.asScala.count(_ == i))
-    assert(ran > 3, s"only $ran steps")
+    val perStep = foregroundJobsPerStep(new CrawlEngine(spark, routes, fetcher, Nil,
+      CrawlEngineSpec.retainAll(tmpDir("engine-dist-jobs")).copy(driverCollectMaxRows = 0L)))
+    assert(perStep.size > 3, s"only ${perStep.size} steps")
     assert(perStep.forall(_ <= 16), s"foreground jobs per step: ${perStep.mkString(", ")}")
   }
 

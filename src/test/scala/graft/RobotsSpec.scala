@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.CrawlEngine
 import graft.model.RobotsRule
 import graft.robots.Robots.allowedLocal
 
@@ -45,5 +46,18 @@ class RobotsSpec extends AnyFunSuite {
     assert(allowedLocal("h.test/a/x", "h.test", rules))
     assert(allowedLocal("mailto:x@h.test", "h.test", rules))
     assert(!allowedLocal("/a/", "h.test", rules))
+  }
+
+  test("the spawn kernel checks a candidate against its own host's rules only") {
+    val rules = Seq(rule("a.test", "/x/", allow = false), rule("b.test", "/y/", allow = false))
+    def cand(host: String, path: String) = {
+      val url = s"http://$host$path"
+      (0L, 0, CrawlEngine.SpawnCand(url.hashCode.toLong, url, host, "r", Map.empty))
+    }
+    val jobs = CrawlEngine.admitted(Iterator(cand("a.test", "/x/1"), cand("a.test", "/y/1"),
+      cand("b.test", "/x/1"), cand("b.test", "/y/1"), cand("c.test", "/x/1")),
+      Map.empty, rules.groupBy(_.host), createdStep = 1)
+    assert(jobs.map(_.url).sorted.toSeq ==
+      Seq("http://a.test/y/1", "http://b.test/x/1", "http://c.test/x/1"))
   }
 }

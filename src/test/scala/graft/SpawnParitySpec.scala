@@ -113,4 +113,19 @@ class SpawnParitySpec extends SparkSpec {
     assert(viaScala(2).map(_._2) == Seq("https://shop.example/d/"), viaScala(2))
     assert(viaScala(3).isEmpty, viaScala(3))
   }
+
+  test("the admission kernel picks the lowest (route, source, position) in any order") {
+    // the distributed tier reduces a key's candidates in shuffle order
+    def cand(rid: String, src: Long, pos: Int) = (src, pos,
+      CrawlEngine.SpawnCand(1L, "http://a.test/", "a.test", rid, Map("from" -> s"$rid/$src/$pos")))
+    val cands = Seq(cand("b", 1L, 0), cand("a", 5L, 2), cand("a", 3L, 7), cand("a", 3L, 4),
+      cand("a", 3L, 9), cand("c", -9L, 0))
+    val best = cand("a", 3L, 4)
+    for (order <- cands.permutations) {
+      assert(order.reduce(CrawlEngine.firstSpawn) == best, order)
+      assert(order.reduceRight(CrawlEngine.firstSpawn) == best, order)
+      val Array(j) = CrawlEngine.admitted(order.iterator, Map.empty, Map.empty, createdStep = 2)
+      assert(j.routeId == "a" && j.query == best._3.query, j)
+    }
+  }
 }
