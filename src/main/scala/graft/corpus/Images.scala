@@ -208,8 +208,8 @@ object Images {
     * unrelated images within hamming 5-6, and LSH bands so hot that the
     * candidate join exploded quadratically); the DCT spectrum keeps ~32 bits
     * of entropy on the same corpus. Robust to JPEG re-encode (≤ a few bits).
-    * Near-dup suppression joins on 8-bit bands of this value and verifies
-    * with `bit_count(xor) ≤ t` (see [[graft.items.Items]]).
+    * Near-dup suppression buckets rows by 8-bit bands of this value and
+    * verifies with `bitCount(xor) ≤ t` ([[graft.items.Items.suppressInBucket]]).
     */
   def phash(img: BufferedImage): Long = {
     val N = 32

@@ -409,9 +409,9 @@ case class EngineConfig(
       * narrows a step's shuffle width to its pending count, and keeps a v0
       * frontier that fits as the seed's driver array.
       *
-      * Larger waves run the DISTRIBUTED tier: anti-joins, banded
-      * suppression, windowed winners, flag joins and the cogroup bloom
-      * probe — same results, no per-step driver state, so a 10^6-host
+      * Larger waves run the DISTRIBUTED tier: anti-joins, band-bucket
+      * and bloom-shard cogroups, per-key reduces and flag joins running
+      * the driver tier's kernels — same results, no per-step driver state, so a 10^6-host
       * frontier degrades to slower supersteps instead of a driver OOM.
       * The item-meta mirror stays on the driver while it has at most
       * `driverCollectMaxRows` rows. Tests force 0 to pin the distributed
@@ -458,15 +458,17 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *    while the frontier is a driver array (it is while it fits the same
   *    bound);
   *  - `distributedStep` (a larger wave): the same decisions as Dataset plans
-  *    over byte-free scans of the landed outcomes — winner pick + flags
-  *    (shuffle 2: by item key), banded suppression, spawn admission as the
+  *    over byte-free scans of the landed outcomes — near-dup suppression
+  *    per band bucket, the winner reduced per item key + flags (shuffle 2:
+  *    by bucket, then by item key), spawn admission as the
   *    kernel's pick reduced per urlKey, then a cogroup of each bloom shard
   *    with the candidates it owns (shuffle 3: by shard) → exact anti-join
   *    of the bloom positives — with no per-step driver state.
   *
-  * Both bodies share the spawn resolution and admission
-  * ([[CrawlEngine.spawnsOf]], [[CrawlEngine.admitted]]; seeds are admitted
-  * by the same kernel), the job-state transition ([[CrawlEngine.advance]]),
+  * Both bodies share the item kernels ([[Items.firstItem]], [[Items.suppressInBucket]]),
+  * the spawn resolution and admission ([[CrawlEngine.spawnsOf]],
+  * [[CrawlEngine.admitted]]; seeds are admitted by the same kernel), the
+  * job-state transition ([[CrawlEngine.advance]]),
   * the fetch-log row ([[CrawlEngine.logRow]]), the item-meta reads, the
   * crawl-delay bump and the Dataset-frontier rewrite, and both end in
   * [[commitPhase]]: the atomic snapshot commit of the next version,
@@ -830,6 +832,19 @@ final class CrawlEngine(
       }
   }
 
+  /** The distributed tier's incoming items (srcJob, pos, key, image_id or
+    * "", phash): no other item field and no payload is read (PlanSpec
+    * asserts the scan's `ReadSchema`). */
+  private[graft] def incomingItems(outcomes: DataFrame)
+      : Dataset[(Long, Int, String, String, Long)] =
+    outcomes
+      .select(col("job.urlKey").as("srcJob"), posexplode(arrays_zip(
+          col("items.key"), col("items.image_id"), col("items.phash"))).as(Seq("pos", "it")))
+      .select(col("srcJob"), col("pos"), col("it.key").as("key"),
+        coalesce(col("it.image_id"), lit("")).as("image_id"),
+        col("it.phash").as("phash"))
+      .as[(Long, Int, String, String, Long)]
+
   /** `urlKey ∈ sorted` as a broadcast binary-search filter over a Dataset
     * frontier. Kept over an anti-/semi-join against a local relation of
     * the keys: the join's broadcast exchange runs one more Spark job per
@@ -870,8 +885,8 @@ final class CrawlEngine(
 
   /** Item deltas, reconstructed at READ time from the raw outcome table:
     * per (step, key) the winning row — lowest (srcJob, image_id, position),
-    * the same deterministic pick the write-side made when deltas were
-    * pre-filtered — minus that step's equality-deleted (suppressed) keys.
+    * the winner kernel's pick ([[Items.firstItem]]) — minus that step's
+    * equality-deleted (suppressed) keys.
     * Payload bytes are re-zipped from the split `itemBytes` column, so a
     * byte-free caller (e.g. the suppression meta scan) never reads them.
     */
@@ -1316,9 +1331,10 @@ final class CrawlEngine(
   // flags, phash near-dup suppression — and persists the decisions as small
   // byte-free side outputs (the winner pick is re-derived deterministically
   // at read time; suppression lands as the step's equality-delete keys).
-  // Both tiers pick one winner per key by the ONE canonical ordering
-  // (srcJob, image_id, pos) — identical to the read-side ranking window in
-  // readItemDeltas; a divergent tiebreak (e.g. phash) would let the landed
+  // Both tiers run the near-dup kernel per band bucket and pick one winner
+  // per key with the winner kernel (lowest (srcJob, image_id, pos)) — the
+  // read-side ranking window in readItemDeltas orders the same way; a
+  // divergent tiebreak (e.g. phash) would let the landed
   // item's phash differ from the one recorded in the item-meta state,
   // corrupting later near-dup votes and breaking resume-identical parity.
   // Spawned jobs: both tiers run the admission kernel
@@ -1350,11 +1366,9 @@ final class CrawlEngine(
       val (suppressedKeys, existedKeys) = Items.suppressAndSeenSets(
         itemTups.map(t => (t._1, t._3, t._4, t._5)),
         if (itemTups.isEmpty) None else Some(existing), cfg.phashThreshold)
-      val winners: Map[String, (Long, String, Int, Long)] = itemTups
-        .filterNot(t => suppressedKeys(t._3)).groupBy(_._3).map {
-          case (k, rows) => k -> rows.iterator.map(r => (r._1, r._4, r._2, r._5))
-            .minBy(t => (t._1, t._2, t._3))
-        }
+      val winners: Map[String, (Long, Int, String, String, Long)] = itemTups
+        .filterNot(t => suppressedKeys(t._3)).groupBy(_._3)
+        .map { case (k, rows) => k -> rows.reduce(Items.firstItem) }
       val flagBySrc: Map[Long, (Long, Long)] = winners.groupBy(_._2._1).map {
         case (src, ws) =>
           val created = ws.count { case (k, _) => !existedKeys(k) }
@@ -1362,7 +1376,7 @@ final class CrawlEngine(
       }
       // the item meta backing the next step's suppression: the driver
       // mirror while the merged rows fit, else a checkpointed DataFrame
-      val added = winners.iterator.map { case (k, w) => (k, w._4) }.toArray
+      val added = winners.iterator.map { case (k, w) => (k, w._5) }.toArray
       val itemMeta = existing match {
         case Left(old) if old.length.toLong + added.length <= cfg.driverCollectMaxRows =>
           Left(old ++ added)
@@ -1483,22 +1497,14 @@ final class CrawlEngine(
         case Left(a) => Some(metaDf(a).localCheckpoint(true))
         case Right(df) => Some(df)
       }
-      val incoming = outcomes
-        .select(col("job.urlKey").as("srcJob"), posexplode(expr(
-          "transform(items, it -> named_struct(" +
-            "'key', it.key, 'image_id', it.image_id, 'phash', it.phash))"))
-          .as(Seq("pos", "it")))
-        .select(col("srcJob"), col("pos"), col("it.key").as("key"),
-          coalesce(col("it.image_id"), lit("")).as("image_id"),
-          col("it.phash").as("phash"))
-      val suppressed = Items.suppressedKeyDf(incoming, existing, cfg.phashThreshold)
-      val win = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key"))
-        .orderBy(col("srcJob").asc, col("image_id").asc, col("pos").asc)
-      // reused by the flag agg and the item-meta update → checkpoint once
+      val incoming = incomingItems(outcomes)
+      val suppressed = Items.suppressedKeyDf(incoming.toDF(), existing, cfg.phashThreshold)
+      // the winner kernel per key (reduced map-side first); reused by the
+      // flag agg and the item-meta update → checkpoint once
       val winners = incoming.join(suppressed, Seq("key"), "left_anti")
-        .withColumn("rn", row_number().over(win))
-        .filter(col("rn") === 1).drop("rn")
+        .select(incoming.columns.map(col): _*).as[(Long, Int, String, String, Long)]
+        .groupByKey(_._3).reduceGroups(Items.firstItem _).map(_._2)
+        .toDF("srcJob", "pos", "key", "image_id", "phash")
         .localCheckpoint(true)
       val winnersFlagged = existing match {
         case Some(ex) => winners.join(

@@ -85,4 +85,41 @@ class NearDupParitySpec extends SparkSpec {
       hotBucketCap = Int.MaxValue)
     assert(noGuard("hp1") && noGuard(hot(3)._1))
   }
+
+  test("duplicate incoming rows count toward the hot-bucket guard on every path") {
+    import spark.implicits._
+    val r = new scala.util.Random(20261021L)
+    // 257 copies of one (key, phash) from different source jobs make each of
+    // its 8 buckets hot on their own
+    val dupPh = r.nextLong()
+    val copies = (0 until 257).map(i => (i.toLong, "m-dup", "", dupPh))
+    // near-dups within hamming 6: the incoming one flips bands 0-2, the
+    // existing one bands 5-7, so they share only the copies' buckets (3, 4)
+    def flip(ph: Long, bands: Seq[Int]): Long =
+      bands.foldLeft(ph)((p, b) => p ^ (1L << (b * 8 + r.nextInt(8))))
+    val nearIn = (1000L, "z-in", "", flip(dupPh, 0 to 2))
+    val nearEx = ("e-ex", flip(dupPh, 5 to 7))
+    val incoming = (copies :+ nearIn).toArray
+    val incDf = incoming.toSeq.map(x => (x._2, x._4)).toDF("key", "phash")
+    val existing = Array(nearEx)
+    val exDf = existing.toSeq.toDF("key", "phash")
+    def paths(ex: Boolean, cap: Int): Set[String] = {
+      val (supL, _) = Items.suppressAndSeenSets(incoming,
+        Option.when(ex)(Left(existing)), 6, cap)
+      val (supR, _) = Items.suppressAndSeenSets(incoming,
+        Option.when(ex)(Right(exDf)), 6, cap)
+      val supDf = Items.suppressedKeyDf(incDf, Option.when(ex)(exDf), 6, cap)
+        .as[String].collect().toSet
+      sameKeys(supL, supR, s"existing=$ex cap=$cap: array vs DataFrame suppressed sets")
+      sameKeys(supL, supDf, s"existing=$ex cap=$cap: suppressAndSeenSets vs suppressedKeyDf")
+      supL
+    }
+    // the guard: neither near-dup pair is found through the hot buckets
+    assert(paths(ex = true, 256).isEmpty)
+    assert(paths(ex = false, 256).isEmpty)
+    // without it: the incoming near-dup by the lower-keyed copies, the
+    // copies by the existing near-dup
+    assert(paths(ex = false, Int.MaxValue) == Set("z-in"))
+    assert(paths(ex = true, Int.MaxValue) == Set("m-dup", "z-in"))
+  }
 }

@@ -145,8 +145,15 @@ class PlanSpec extends SparkSpec {
     // (e.g. a scan that touches the payload) re-reads the wave's gigabytes
     // once per planning pass at scale.
     import spark.implicits._
-    import graft.fetch.StepOutcome
+    import graft.corpus._
+    import graft.engine.{CrawlEngine, EngineConfig}
+    import graft.fetch.{CorpusFetcher, StepOutcome}
     import graft.model.ImageItem
+    val spec = CorpusSpec(hosts = 1, listPages = 1, detailsPerList = 1)
+    val eng = new CrawlEngine(spark, SiteRoutes.registry(spec),
+      new CorpusFetcher(SyntheticCorpus.buildLocal(spec)), Nil,
+      EngineConfig(statePath = tmpDir("plan-items-state"), bloomPartitions = 4,
+        bloomCapacityPerShard = 1 << 16))
     val item = ImageItem("k", "n", "content", "l", "detail", 1, 0, "0",
       Array[Byte](1, 2, 3), 1, 1, "png", "c", 42L)
     val out = StepOutcome.split(
@@ -154,11 +161,9 @@ class PlanSpec extends SparkSpec {
       200, "ok", Seq(item), Nil, hasNextPage = false, Map.empty)
     val raw = tmpDir("rawscan")
     spark.createDataset(Seq(out)).write.mode("overwrite").parquet(raw)
-    // the engine's item-meta projection shape (CrawlEngine.itemMetaDf)
-    val meta = spark.read.parquet(raw)
-      .select(col("job.urlKey").as("srcJob"), explode(expr(
-        "transform(items, it -> named_struct('key', it.key, 'phash', it.phash))"))
-        .as("it"))
+    // the distributed tier's incoming items, typed as the engine reads them
+    val meta = eng.incomingItems(spark.read.parquet(raw))
+    assert(meta.collect().toSeq == Seq((1L, 0, "k", "0", 42L)))
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val plan = meta.queryExecution.executedPlan match {
@@ -170,6 +175,11 @@ class PlanSpec extends SparkSpec {
     scans.foreach { s =>
       assert(!s.requiredSchema.fieldNames.contains("itemBytes"),
         s"payload column read by item-meta scan: ${s.requiredSchema.treeString}")
+      // nested pruning keeps only the fields the item decisions read
+      assert(s.requiredSchema.catalogString ==
+        "struct<job:struct<urlKey:bigint>," +
+          "items:array<struct<key:string,image_id:string,phash:bigint>>>",
+        s.requiredSchema.treeString)
     }
   }
 
